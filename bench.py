@@ -751,7 +751,7 @@ def _multi_sink_probe(spark, sf_dir: str) -> dict:
                     (s.type, runner.sink_hook_for(cfg, s))
                     for s in cfg.all_sinks
                 ]
-                coll = runner.PointsCollection(spark, f"{root}/state", n_buckets=8)
+                coll = runner.PointsCollection(spark, f"{root}/state")
                 secs = []
                 all_parts: list[dict[str, float]] = []
                 for i in range(3):

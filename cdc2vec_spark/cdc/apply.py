@@ -229,6 +229,20 @@ def bucket_expr(key_cols: Sequence[str], n_buckets: int):
     return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
 
 
+def recover_buckets(path: str, col: str = BUCKET_COL) -> None:
+    """Promote any `<col>=<i>` partition a crash stranded under
+    `<path>.old/` (swap_buckets_commit between its two renames)."""
+    oldroot = path + ".old"
+    if os.path.isdir(oldroot):
+        for name in os.listdir(oldroot):
+            if name.startswith(f"{col}="):
+                dst = os.path.join(path, name)
+                if not os.path.exists(dst):  # crashed between the renames
+                    os.makedirs(path, exist_ok=True)
+                    os.rename(os.path.join(oldroot, name), dst)
+        shutil.rmtree(oldroot, ignore_errors=True)
+
+
 def read_bucketed_state(
     spark: SparkSession,
     path: str,
@@ -247,15 +261,7 @@ def read_bucketed_state(
     (10^4-10^5 dirs on an object store) that listing alone dominates a
     small batch, exactly the touched-file-set economy a Delta/Iceberg
     MERGE gets from its transaction log."""
-    oldroot = path + ".old"
-    if os.path.isdir(oldroot):
-        for name in os.listdir(oldroot):
-            if name.startswith(f"{col}="):
-                dst = os.path.join(path, name)
-                if not os.path.exists(dst):  # crashed between the renames
-                    os.makedirs(path, exist_ok=True)
-                    os.rename(os.path.join(oldroot, name), dst)
-        shutil.rmtree(oldroot, ignore_errors=True)
+    recover_buckets(path, col)
     if buckets is not None:
         dirs = [
             d

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from .cdc.envelope import OP_DELETE
 from .cdc.pipeline import run_batch
+from .cdc.segments import SegmentStore
 from .config import DEFAULT_CONFIG, EngineConfig, PipelineConfig, load_yaml
 from .embed.provider import get_provider
 from .streaming.source import read_file_stream
@@ -36,53 +37,40 @@ class PointsCollection:
     tombstone so a stale replayed upsert cannot resurrect a key — the
     same max-LSN-per-key merge contract as cdc.apply.ParquetCollection,
     holding sink-side points (id, vector, metadata) instead of row state
-    (types.go:15's Point). Hash-bucketed like ParquetCollection: a batch
-    reads and rewrites only the buckets holding its ids — O(batch +
-    touched_buckets × bucket_size) per flush, never O(state)."""
+    (types.go:15's Point).
 
-    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 64):
+    Stored as an append-only segment log (cdc.segments.SegmentStore):
+    a batch reduces itself to its winning event per id (final_events)
+    and writes that as one immutable segment — O(batch) per flush, the
+    state is never read on the write path. Size-tiered compaction
+    (fan-in 4) keeps O(log4(batches)) segments; read() and live() union
+    them and resolve last-write-wins with one window on id."""
+
+    cols = ("id", "vector", "metadata", "op", "lsn")
+
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.n_buckets = n_buckets
+        self.store = SegmentStore(spark, path, self.cols, self._resolve)
+
+    @staticmethod
+    def _resolve(pts: DataFrame) -> DataFrame:
+        return final_events(pts)
 
     def read(self) -> DataFrame | None:
-        from .cdc.apply import read_bucketed_state
-
-        return read_bucketed_state(self.spark, self.path)
+        return self.store.read()
 
     def apply_points(self, pts: DataFrame, _epoch_id: int | None = None) -> None:
-        from .cdc.apply import (
-            BUCKET_COL,
-            bucket_expr,
-            read_bucketed_state,
-            swap_buckets,
-        )
-
-        bexpr = bucket_expr(("id",), self.n_buckets)
-        cols = ["id", "vector", "metadata", "op", "lsn", BUCKET_COL]
-        ev = pts.withColumn(BUCKET_COL, bexpr).select(*cols)
-        touched = sorted(r[0] for r in ev.select(BUCKET_COL).distinct().collect())
-        if not touched:
-            return
-        # directory-level prune (read_bucketed_state docstring)
-        state = read_bucketed_state(self.spark, self.path, buckets=touched)
-        if state is not None:
-            ev = state.select(*cols).unionByName(ev)
-        ev = ev.repartition(len(touched), BUCKET_COL)
-        w = Window.partitionBy(BUCKET_COL, "id").orderBy(F.col("lsn").desc())
-        merged = ev.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-        swap_buckets(merged, self.path, touched)
+        self.store.append(pts)
 
     def live(self) -> DataFrame | None:
-        from .cdc.apply import BUCKET_COL
-
         df = self.read()
         if df is None:
             return None
-        return df.where(F.col("op") != OP_DELETE).drop("op", BUCKET_COL)
+        return df.where(F.col("op") != OP_DELETE).drop("op")
 
 
-class ChunkedPointsCollection:
+class ChunkedPointsCollection(PointsCollection):
     """Keyed points state for CHUNKED pipelines (build_points(chunk=...)):
     points arrive as (id='<base>#<k>', base_id, ...) and the correct
     merge is REPLACE-SET per base key, not per-id last-write-wins — a
@@ -91,58 +79,18 @@ class ChunkedPointsCollection:
 
     Mechanics: rows of one event share its lsn, so the merge keeps, per
     base_id, exactly the rows carrying the MAX lsn (all chunks of the
-    winning upsert, or the single tombstone of a winning delete).
-    Buckets hash base_id — all chunks of a key co-locate, so both the
-    pruned read and the rewrite stay O(batch + touched_buckets), and a
-    delete never needs to know how many chunks the key used to have
-    (the classic chunked-sync failure when sinks key by chunk id)."""
+    winning upsert, or the single tombstone of a winning delete) —
+    final_events_chunked, applied by the same segment log as
+    PointsCollection: on the batch before its write, in compactions and
+    on read. Every chunk of a key carries its base_id, so a delete never
+    needs to know how many chunks the key used to have (the classic
+    chunked-sync failure when sinks key by chunk id)."""
 
-    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 64):
-        self.spark = spark
-        self.path = path
-        self.n_buckets = n_buckets
+    cols = ("id", "base_id", "vector", "metadata", "op", "lsn")
 
-    def read(self) -> DataFrame | None:
-        from .cdc.apply import read_bucketed_state
-
-        return read_bucketed_state(self.spark, self.path)
-
-    def apply_points(self, pts: DataFrame, _epoch_id: int | None = None) -> None:
-        from .cdc.apply import (
-            BUCKET_COL,
-            bucket_expr,
-            read_bucketed_state,
-            swap_buckets,
-        )
-
-        bexpr = bucket_expr(("base_id",), self.n_buckets)
-        cols = ["id", "base_id", "vector", "metadata", "op", "lsn", BUCKET_COL]
-        ev = pts.withColumn(BUCKET_COL, bexpr).select(*cols)
-        touched = sorted(r[0] for r in ev.select(BUCKET_COL).distinct().collect())
-        if not touched:
-            return
-        state = read_bucketed_state(self.spark, self.path, buckets=touched)
-        if state is not None:
-            ev = state.select(*cols).unionByName(ev)
-        ev = ev.repartition(len(touched), BUCKET_COL)
-        w = Window.partitionBy(BUCKET_COL, "base_id")
-        # replace-set: keep the winning event's rows; dedup exact id
-        # replays within it (max-LSN rows of an idempotent re-apply)
-        merged = (
-            ev.withColumn("_mx", F.max("lsn").over(w))
-            .where(F.col("lsn") == F.col("_mx"))
-            .drop("_mx")
-            .dropDuplicates(["id", "lsn"])
-        )
-        swap_buckets(merged, self.path, touched)
-
-    def live(self) -> DataFrame | None:
-        from .cdc.apply import BUCKET_COL
-
-        df = self.read()
-        if df is None:
-            return None
-        return df.where(F.col("op") != OP_DELETE).drop("op", BUCKET_COL)
+    @staticmethod
+    def _resolve(pts: DataFrame) -> DataFrame:
+        return final_events_chunked(pts)
 
 
 def _provider_from(cfg: PipelineConfig | EngineConfig):
@@ -745,8 +693,9 @@ def _resolve_config(config: PipelineConfig | str | None):
 
 
 def _collection_for(spark: SparkSession, cfg, state_dir: str):
-    """The engine-native keyed store the config selects: rename-swap
-    protocol by default (local filesystems); ``sink.options.
+    """The engine-native keyed store the config selects: the
+    rename-published segment log by default (``swap``, local
+    filesystems); ``sink.options.
     state_protocol: manifest`` selects the object-store-safe
     manifest-generation commits (cdc/manifest.py); chunked configs get
     the replace-set collections."""
@@ -822,8 +771,9 @@ def boot(
 
     # per-batch engine metrics for /healthz (points_out via Observation:
     # the count piggybacks on the batch's own write actions — safe to
-    # read because every collection's apply_points starts with the
-    # touched-bucket collect, an action over the observed plan)
+    # read because every collection's apply_points runs an action over
+    # the observed plan: the segment write of the segment-log
+    # collections, the touched-bucket collect of the manifest ones)
     batch_metrics: dict = {}
 
     cfg_path = config if isinstance(config, str) else None
@@ -880,6 +830,8 @@ def boot(
                 "batch_wall_ms": round((_time.perf_counter() - t0) * 1000),
             }
         )
+        if isinstance(coll, PointsCollection):
+            batch_metrics["state_segments"] = len(coll.store.segments())
         if fobs:
             # per-stage surviving-row counts of the ingest filter chain
             # (cdc/filters.py) — consecutive stage deltas = drop

@@ -73,7 +73,7 @@ def _apply(spark, coll, rows, chunk=(8, 6)):
 
 
 def test_replace_set_semantics(spark, tmp_path):
-    coll = ChunkedPointsCollection(spark, str(tmp_path / "pts"), n_buckets=4)
+    coll = ChunkedPointsCollection(spark, str(tmp_path / "pts"))
     # batch 1: A long (3 chunks) + B short (1 chunk)
     _apply(spark, coll, [_doc("a", 10, 20), _doc("b", 11, 5)])
     live = {r["id"] for r in coll.live().collect()}
@@ -94,7 +94,7 @@ def test_replace_set_semantics(spark, tmp_path):
 
 
 def test_replay_and_stale_batch_are_noops(spark, tmp_path):
-    coll = ChunkedPointsCollection(spark, str(tmp_path / "pts"), n_buckets=4)
+    coll = ChunkedPointsCollection(spark, str(tmp_path / "pts"))
     batch1 = [_doc("a", 10, 20)]
     batch2 = [_doc("a", 20, 5, op="u")]
     _apply(spark, coll, batch1)

@@ -17,6 +17,7 @@ from cdc2vec_spark import runner
 from cdc2vec_spark.cdc.changelog import MAPPED, changes_df
 from cdc2vec_spark.cdc.transform import filter_mapped
 from cdc2vec_spark.cdc import apply as cdc_apply
+from cdc2vec_spark.cdc.segments import FAN_IN
 from cdc2vec_spark.streaming.source import write_chunks
 
 import pytest
@@ -55,6 +56,10 @@ def test_boot_end_to_end(spark, sf_dir, tmp_path):
         assert snap["points_out"] > 0
         assert snap["batch_wall_ms"] > 0
         assert snap["epoch"] >= 0
+        # at most four batches: level 0 compacted at the fourth, so one
+        # level of the segment log holds 1..FAN_IN-1 segments
+        assert 1 <= snap["state_segments"] < FAN_IN
+        assert snap["state_segments"] == len(coll.store.segments())
     finally:
         query.stop()
         server.shutdown()

@@ -4,8 +4,9 @@
 
 .PHONY: test test-fast integration oracle bench perfbench plans run run-pg demo demo-feed image up down lint
 
-# full suite (~10-13 min on local[32]); test-fast skips the streaming-
-# heavy files for a quick inner loop
+# the non-slow suite: pytest.ini deselects `slow` by default, so the
+# full suite is `python -m pytest tests/ -q -m ""`; test-fast also skips
+# the streaming-heavy files for a quick inner loop
 test:
 	python -m pytest tests/ -q
 

@@ -131,8 +131,8 @@ def _quiesce(spark) -> None:
     ~1.3x drift across UNCHANGED scan-stage queries in round 10. Clear
     the SQL cache, drop py4j refs (gc) and nudge the JVM so the
     ContextCleaner reaps dead RDD blocks. Deliberately does NOT touch
-    the graph-stage memo (dedup._GRAPH_STAGE_CACHE holds strong refs) —
-    the d9/d44/d46/d47/d48 family sharing one pair derivation is the
+    the session memo (it holds strong refs to the shared frames) — the
+    d9/d44/d46/d47/d48 family sharing one pair derivation is the
     intended execution model, not leakage."""
     import gc
 
@@ -146,6 +146,7 @@ def _quiesce(spark) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from cdc2vec_spark import session
     from cdc2vec_spark.session import get_spark
 
     import __spark_entry__ as entry_mod
@@ -226,10 +227,6 @@ def main() -> None:
     # derivation (and c16-c18 sharing one replayed state) is the
     # intended execution model, and the family members are not adjacent
     # in HEADLINE.
-    from cdc2vec_spark.cdc import delta_join as _dj_mod
-    from cdc2vec_spark.cdc import ivm as _ivm_mod
-    from cdc2vec_spark.operators import dedup as _dedup_mod
-
     for name in HEADLINE:
         fn = registry[name]
         # quiesce BETWEEN queries, never between a query's own reps —
@@ -249,12 +246,10 @@ def main() -> None:
 
     # retire phase 1's context: its block-manager state (leaked
     # localCheckpoint blocks, per-query persists from ~85 queries × 3
-    # reps) dies with it, so phase 2's probes start unpressured. The
-    # module memos hold DataFrames bound to the dead context — clear
-    # them before anything in phase 2 can touch them.
-    _dedup_mod.clear_graph_stage_cache()
-    _ivm_mod.clear_replay_cache()
-    _dj_mod.clear_join_cache()
+    # reps) dies with it, so phase 2's probes start unpressured. Release
+    # the session memo (unpersists, state dirs) while the context is
+    # still alive.
+    session.clear()
     spark.stop()
 
     # ---- PHASE 2: throughput probes + scale curve, fresh context.
@@ -807,7 +802,7 @@ def _neardup_report_probe(spark, sf_dir: str, registry) -> dict:
 
     from pyspark.sql import functions as F
 
-    from cdc2vec_spark.operators import dedup as _dedup
+    from cdc2vec_spark import session
     from cdc2vec_spark.operators.dedup import neardup_corpus
     from cdc2vec_spark.streaming.neardup import StreamingNearDup
 
@@ -844,8 +839,8 @@ def _neardup_report_probe(spark, sf_dir: str, registry) -> dict:
             secs.append(time.perf_counter() - t0)
         out["reports_refresh_secs"] = round(min(secs), 3)
         # the batch path: same five reports, full derivation (ONE shared
-        # pair/CC stage + five reads — dedup._graph_stage)
-        _dedup.clear_graph_stage_cache()
+        # pair/CC stage + five reads — dedup.neardup_*_shared)
+        session.clear()
         _quiesce(spark)
         t0 = time.perf_counter()
         for q in ("d9_keep_exact", "d46_dedup_clusters", "d48_cluster_split",
@@ -1063,9 +1058,7 @@ def _scale_curve(spark, registry) -> dict:
     dominates at sf0.1, which is itself evidence of headroom."""
     import shutil
 
-    from cdc2vec_spark.cdc import delta_join as _dj
-    from cdc2vec_spark.cdc import ivm as _ivm
-    from cdc2vec_spark.operators import dedup as _dedup
+    from cdc2vec_spark import session
 
     sf1 = _make_sf1(spark)
     out: dict[str, dict] = {}
@@ -1089,12 +1082,10 @@ def _scale_curve(spark, registry) -> dict:
         for name in _CURVE_OPS:
             fn = registry[name]
             # the curve measures each operator's OWN full derivation:
-            # clear the graph-stage AND ivm-replay memos so d9/d44 and
-            # c16 don't ride a pair set / replayed state a prior curve
-            # op (or the headline loop) left behind
-            _dedup.clear_graph_stage_cache()
-            _ivm.clear_replay_cache()
-            _dj.clear_join_cache()
+            # clear the session memo so d9/d44 and c16 don't ride a
+            # pair set / replayed state a prior curve op (or the headline
+            # loop) left behind
+            session.clear()
             _quiesce(spark)
             # untimed warm-up at the smallest SF: ops outside the
             # headline set (d18) would otherwise charge whole-session
@@ -1123,9 +1114,7 @@ def _scale_curve(spark, registry) -> dict:
                 tasks: list[int] = []
                 st = spark.sparkContext.statusTracker()
                 for _ in range(reps):
-                    _dedup.clear_graph_stage_cache()
-                    _ivm.clear_replay_cache()
-                    _dj.clear_join_cache()
+                    session.clear()
                     # quiesce between reps too: the curve runs ~20 min
                     # into the session, and an un-reaped block-manager /
                     # heap backlog shows up as a single 20s+ GC-shaped
@@ -1179,8 +1168,7 @@ def _replay_floor_probe(spark, registry) -> dict:
     latency itself swung 0.05→0.33 s/job within one round-13 builder
     session under co-tenant load, which is why the same code reads
     6.4s or 10s across sessions."""
-    from cdc2vec_spark.cdc import delta_join as _dj
-    from cdc2vec_spark.cdc import ivm as _ivm
+    from cdc2vec_spark import session
 
     st = spark.sparkContext.statusTracker()
     t0 = time.perf_counter()
@@ -1190,8 +1178,7 @@ def _replay_floor_probe(spark, registry) -> dict:
     out: dict = {"noop_job_secs": round(lat, 3)}
     for name in ("c16_incremental_distinct", "c19_incremental_join"):
         fn = registry[name]
-        _ivm.clear_replay_cache()
-        _dj.clear_join_cache()
+        session.clear()
         _quiesce(spark)
         j0 = set(st.getJobIdsForGroup(None) or [])
         t0 = time.perf_counter()

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import memo, state_dir
 from .apply import read_bucketed_state, swap_buckets
 from .envelope import OP_DELETE
 from .ivm import _read_epoch, _write_epoch
@@ -671,46 +672,19 @@ def dim_changes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ins.unionByName(upd).unionByName(dele)
 
 
-# one replayed view per (Spark app, sf_dir) — the ivm._replayed_* /
-# dedup._graph_stage memo discipline: the final maintained view is
-# identical under any batch partitioning (incremental≡recompute pinned
-# per batch in tests/test_delta_join.py), so the composite/bench pay
-# the replay once
-_JOIN_CACHE: dict = {}
-_JOIN_ATEXIT = False
-
-
-def _cleanup_join_cache() -> None:
-    import shutil
-
-    for _, root in _JOIN_CACHE.values():
-        shutil.rmtree(root, ignore_errors=True)
-    _JOIN_CACHE.clear()
-
-
-def clear_join_cache() -> None:
-    _cleanup_join_cache()
-
-
+# one replayed view per (Spark app, sf_dir) — the shared-state
+# discipline of the ivm replay and the dedup graph stage: the final
+# maintained view is identical under any batch partitioning
+# (incremental≡recompute pinned per batch in tests/test_delta_join.py),
+# so the composite/bench pay the replay once
 def _replayed_join_view(spark: SparkSession, sf_dir: str) -> IncrementalJoinView:
-    import atexit
     import shutil
-    import tempfile
 
     from . import transform
     from .changelog import MAPPED, changes_df
 
-    global _JOIN_ATEXIT
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _JOIN_CACHE if k[0] != app]:
-        _, old_root = _JOIN_CACHE.pop(stale)
-        shutil.rmtree(old_root, ignore_errors=True)
-    key = (app, sf_dir)
-    if key not in _JOIN_CACHE:
-        if not _JOIN_ATEXIT:
-            atexit.register(_cleanup_join_cache)
-            _JOIN_ATEXIT = True
-        root = tempfile.mkdtemp(prefix="ivm_join_")
+    def build() -> tuple[IncrementalJoinView, str]:
+        root = state_dir("ivm_join_")
         # ONE replayed instance serves both faces (the shared-state
         # discipline of c16/c17/c18): c19 reads the view, c20 reads the
         # composed join-aggregate maintained alongside it
@@ -724,24 +698,26 @@ def _replayed_join_view(spark: SparkSession, sf_dir: str) -> IncrementalJoinView
         lch = transform.filter_mapped(changes_df(spark, sf_dir), MAPPED).persist()
         rch = dim_changes_df(spark, sf_dir).persist()
         try:
-            # batched-epoch replay (round 15, VERDICT r14 ask #5): ONE
-            # full apply_batch over both whole logs. The maintained
-            # view/agg are identical under any batch partitioning of the
-            # same logs (incremental≡recompute pinned per batch on the
-            # undeferred path in tests/test_delta_join.py, including the
-            # randomized walks), and the old 3-deferred + 1-full loop's
-            # wall was its fixed protocol job count (replay_floor: 111
-            # jobs), not data. The full path still exercises the
-            # delta-join machinery end-to-end — fkidx build, dirty-key
-            # propagation, view rewrite, composed agg fold — against the
-            # whole log as one epoch; production streaming callers keep
-            # the unchanged per-batch contract.
+            # batched-epoch replay: ONE full apply_batch over both whole
+            # logs. The maintained view/agg are identical under any batch
+            # partitioning of the same logs (incremental≡recompute pinned
+            # per batch on the undeferred path in tests/test_delta_join.py,
+            # including the randomized walks), and a per-batch loop's wall
+            # is its fixed protocol job count, not data. The full path
+            # still exercises the delta-join machinery end-to-end — fkidx
+            # build, dirty-key propagation, view rewrite, composed agg
+            # fold — against the whole log as one epoch; production
+            # streaming callers keep the unchanged per-batch contract.
             ivj.apply_batch(lch, rch.withColumnRenamed("rlsn", "lsn"))
         finally:
             lch.unpersist()
             rch.unpersist()
-        _JOIN_CACHE[key] = (ivj, root)
-    return _JOIN_CACHE[key][0]
+        return ivj, root
+
+    return memo(
+        spark, ("join_view", sf_dir), build,
+        release=lambda v: shutil.rmtree(v[1], ignore_errors=True),
+    )[0]
 
 
 def c19_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:

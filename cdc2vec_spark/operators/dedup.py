@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..io import load_table, rebalance
+from ..session import memo
 
 # ------------------------------------------------- scoped AQE pin (shared)
 
@@ -1325,7 +1326,7 @@ def connected_components(
     )
 
 
-# ----------------- shared near-dup graph stage (VERDICT r10 ask #2) ----
+# ----------------- shared near-dup graph stage -------------------------
 #
 # Five reports read the SAME exact near-dup graph of the derived corpus —
 # d9_keep_exact (survivors), d44_pagerank (centrality), d46 (cluster
@@ -1341,24 +1342,6 @@ def connected_components(
 # are pinned to the graded defaults (0.5 / D2_MAX_DF) — the stage exists
 # for the audited family, not as a general cache.
 
-_GRAPH_STAGE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _graph_stage(spark: SparkSession, key: tuple, build) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _GRAPH_STAGE_CACHE if k[0] != app]:
-        # entries from a stopped SparkContext reference dead blocks
-        _GRAPH_STAGE_CACHE.pop(stale, None)
-    full = (app, *key)
-    if full not in _GRAPH_STAGE_CACHE:
-        _GRAPH_STAGE_CACHE[full] = build()
-    return _GRAPH_STAGE_CACHE[full]
-
-
-def clear_graph_stage_cache() -> None:
-    """Drop all memoized pair/label frames (tests, benchmarks)."""
-    _GRAPH_STAGE_CACHE.clear()
-
 
 def neardup_pairs_shared(
     spark: SparkSession, sf_dir: str, block: str = "source"
@@ -1373,7 +1356,7 @@ def neardup_pairs_shared(
             corpus = corpus.withColumn("_all", F.lit(1))
         return jaccard_pairs(corpus, block, "doc_id", 0.5, max_df=D2_MAX_DF)
 
-    return _graph_stage(spark, (sf_dir, block, "pairs"), build)
+    return memo(spark, ("neardup_graph", sf_dir, block, "pairs"), build)
 
 
 def neardup_labels_shared(
@@ -1381,9 +1364,9 @@ def neardup_labels_shared(
 ) -> DataFrame:
     """Converged connected-component labels over the shared pair set,
     computed once per (session, sf_dir, block)."""
-    return _graph_stage(
+    return memo(
         spark,
-        (sf_dir, block, "labels"),
+        ("neardup_graph", sf_dir, block, "labels"),
         lambda: connected_components(neardup_pairs_shared(spark, sf_dir, block)),
     )
 

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..io import load_table
+from ..session import memo
 
 
 def _normalized(mat: np.ndarray) -> np.ndarray:
@@ -276,32 +277,22 @@ def pq_topk_rerank(
 
 # --- graded rows-only entry ----------------------------------------------
 
-_PQ_CACHE: dict[tuple, tuple] = {}
-_PQ_CACHE_MAX = 4
-
-
-def clear_pq_cache() -> None:
-    while _PQ_CACHE:
-        _, (_, codes_df) = _PQ_CACHE.popitem()
-        codes_df.unpersist()
-
-
 def d3_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-compressed ANN variant of d3: ADC scan over 16-byte codes →
     exact rerank of 50 candidates. Rows-only oracle (quantized candidate
     recall is approximate by construction); tests/test_quantize.py pins
     rerank recall vs the exact scan and encode determinism."""
     e = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_CACHE:
-        while len(_PQ_CACHE) >= _PQ_CACHE_MAX:  # evict oldest
-            _, (_, old_codes) = _PQ_CACHE.pop(next(iter(_PQ_CACHE)))
-            old_codes.unpersist()
+
+    # trained once per (app, dataset), like the IVF index: query cost is
+    # the ADC scan + rerank, not codebook training
+    def build() -> tuple:
         cbs = pq_train(e, m=16, k=64)
-        _PQ_CACHE[key] = (cbs, pq_encode(e, cbs).persist())
-    else:  # LRU refresh
-        _PQ_CACHE[key] = _PQ_CACHE.pop(key)
-    cbs, codes = _PQ_CACHE[key]
+        return cbs, pq_encode(e, cbs).persist()
+
+    cbs, codes = memo(
+        spark, ("pq_codes", sf_dir), build, release=lambda v: v[1].unpersist()
+    )
     from .similarity import _query_vector
 
     qv = _query_vector(e, 0, "vec_id", "embedding")

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..io import load_table, rebalance
+from ..session import memo
 
 
 def _query_vector(
@@ -412,41 +413,26 @@ def ivf_topk_on_disk(
     )
 
 
-# Build-once index cache, keyed by (spark app, dataset): ANN query cost
-# is probe+rerank, not index construction — rebuilding per query would
-# misrepresent the operator at any scale. Entries are tiny persisted
-# DataFrames (one row per vector: id, vec, cell). Bounded: LRU-evicted
-# (unpersisted) beyond _IVF_CACHE_MAX so a long-lived service hopping
-# across datasets cannot accumulate pinned executor storage.
-_IVF_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-_IVF_CACHE_MAX = 4
-
-
-def clear_ivf_cache() -> None:
-    """Unpersist and drop every cached IVF index (explicit release for
-    long-lived processes)."""
-    while _IVF_INDEX_CACHE:
-        _, (cents, assigned) = _IVF_INDEX_CACHE.popitem()
-        cents.unpersist()
-        assigned.unpersist()
-
-
 def d3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN variant of d3. Rows-only oracle (approximate by construction);
     tests/test_similarity.py pins recall and the nprobe=all ≡ exact
     equivalence."""
     e = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_INDEX_CACHE:
-        while len(_IVF_INDEX_CACHE) >= _IVF_CACHE_MAX:  # evict oldest
-            oc, oa = _IVF_INDEX_CACHE.pop(next(iter(_IVF_INDEX_CACHE)))
-            oc.unpersist()
-            oa.unpersist()
+
+    # build-once index per (app, dataset): ANN query cost is probe+rerank,
+    # not index construction — rebuilding per query would misrepresent
+    # the operator at any scale. Entries are tiny persisted DataFrames
+    # (one row per vector: id, vec, cell).
+    def build() -> tuple[DataFrame, DataFrame]:
         cents, assigned = ivf_build(e)
-        _IVF_INDEX_CACHE[key] = (cents.persist(), assigned.persist())
-    else:  # LRU refresh
-        _IVF_INDEX_CACHE[key] = _IVF_INDEX_CACHE.pop(key)
-    return ivf_topk(e, query_vec_id=0, k=10, nprobe=4, index=_IVF_INDEX_CACHE[key])
+        return cents.persist(), assigned.persist()
+
+    def release(index: tuple[DataFrame, DataFrame]) -> None:
+        for df in index:
+            df.unpersist()
+
+    index = memo(spark, ("ivf_index", sf_dir), build, release)
+    return ivf_topk(e, query_vec_id=0, k=10, nprobe=4, index=index)
 
 
 # --- embedding-cosine near-dup ------------------------------------------

@@ -12,13 +12,27 @@ multi-executor cluster:
 - Arrow enabled for every pandas_udf / toPandas boundary.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
+
+It also owns the one memo for derived state that several reports read
+(shared pair sets, ANN indexes, replayed IVM states): ``memo`` /
+``clear``. Entries belong to the SparkContext that built them.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
+import shutil
+import tempfile
+from collections import OrderedDict
+from typing import Any, Callable, TypeVar
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -55,3 +69,77 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# LRU bound per memo namespace: a long-lived service hopping across
+# datasets must not accumulate pinned executor storage or state dirs
+MEMO_MAX = 4
+
+# (applicationId, namespace, *rest) -> (value, release)
+_MEMO: OrderedDict[tuple, tuple[Any, Callable[[Any], None] | None]] = OrderedDict()
+_STATE_DIRS: set[str] = set()
+
+
+def _drop(full_key: tuple, live_app: str | None) -> None:
+    value, release = _MEMO.pop(full_key)
+    if release is None:
+        return
+    if full_key[0] == live_app:
+        release(value)
+    else:
+        # built under a stopped SparkContext: unpersist raises (NPE in its
+        # dead BlockManagerMaster) and its blocks died with it, but file
+        # releases must still run
+        with contextlib.suppress(Py4JJavaError):
+            release(value)
+
+
+def memo(
+    spark: SparkSession,
+    key: tuple,
+    build: Callable[[], T],
+    release: Callable[[T], None] | None = None,
+) -> T:
+    """Return the value memoized under ``key`` for this SparkContext,
+    calling ``build()`` on a miss. ``key[0]`` names the caller's
+    namespace; each namespace keeps its ``MEMO_MAX`` most recently used
+    entries. ``release(value)`` runs when an entry is evicted, dropped
+    or cleared. Entries built under another applicationId reference a
+    dead context: they are dropped here and never returned."""
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _MEMO if k[0] != app]:
+        _drop(stale, app)
+    full = (app, *key)
+    if full in _MEMO:
+        _MEMO.move_to_end(full)
+        return _MEMO[full][0]
+    value = build()
+    _MEMO[full] = (value, release)
+    same_ns = [k for k in _MEMO if k[1] == key[0]]
+    for old in same_ns[:-MEMO_MAX]:
+        _drop(old, app)
+    return value
+
+
+def clear() -> None:
+    """Release and drop every memo entry (before ``spark.stop()``, in
+    tests and benchmarks)."""
+    sc = SparkContext._active_spark_context
+    live_app = sc.applicationId if sc is not None else None
+    while _MEMO:
+        _drop(next(iter(_MEMO)), live_app)
+
+
+def state_dir(prefix: str) -> str:
+    """A fresh temp dir for a memo entry's on-disk state. The entry's
+    ``release`` deletes it; whatever is left is deleted at process exit."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _STATE_DIRS.add(path)
+    return path
+
+
+@atexit.register
+def _remove_state_dirs() -> None:
+    # file deletes only: at exit the JVM may already be gone
+    for path in _STATE_DIRS:
+        shutil.rmtree(path, ignore_errors=True)

@@ -22,15 +22,15 @@ from cdc2vec_spark.cdc.delta_join import (
     IncrementalJoinView,
     c19_incremental_join,
     c20_incremental_join_agg,
-    clear_join_cache,
 )
 from cdc2vec_spark.cdc.ivm import _read_epoch, _write_epoch
+from cdc2vec_spark.session import clear
 from tests.conftest import SF0001, SF001
 
 
 @pytest.mark.parametrize("sf", [SF0001, SF001])
 def test_c19_matches_duckdb_oracle(spark, sf):
-    clear_join_cache()
+    clear()
     con = duckdb_conn(sf)
     problems = compare_one(
         spark, con, "c19_incremental_join", c19_incremental_join,
@@ -44,7 +44,7 @@ def test_c20_matches_duckdb_oracle(spark, sf):
     """c20 (round 13): the composed join-AGGREGATE face — per-tier live
     fact count + total title chars maintained delta-driven alongside the
     view, vs the batch GROUP BY over the joined LWW closures."""
-    clear_join_cache()
+    clear()
     con = duckdb_conn(sf)
     problems = compare_one(
         spark, con, "c20_incremental_join_agg", c20_incremental_join_agg,
@@ -64,7 +64,7 @@ def test_c19_exercises_dim_updates_and_deletes(spark, sf_dir):
     ch = dim_changes_df(spark, sf_dir)
     ops = {r["op"] for r in ch.select("op").distinct().collect()}
     assert ops == {"c", "u", "d"}, ops
-    clear_join_cache()
+    clear()
     view = c19_incremental_join(spark, sf_dir)
     authors = {r["author"] for r in view.select("author").distinct().collect()}
     deleted = {

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from cdc2vec_spark import session
 from cdc2vec_spark.operators import datacard, dedup, graph
 
 
@@ -33,7 +34,7 @@ def test_family_derives_pairs_and_labels_once(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(dedup, "jaccard_pairs", counting_pairs)
     monkeypatch.setattr(dedup, "connected_components", counting_cc)
-    dedup.clear_graph_stage_cache()
+    session.clear()
     try:
         for fn in (
             dedup.d9_keep_exact,
@@ -46,7 +47,7 @@ def test_family_derives_pairs_and_labels_once(spark, sf_dir, monkeypatch):
     finally:
         # frames built under the counting wrappers are real frames; only
         # the counters must not leak into later tests
-        dedup.clear_graph_stage_cache()
+        session.clear()
     assert calls == {"pairs": 2, "cc": 1}
 
 
@@ -55,7 +56,7 @@ def test_shared_stage_is_bit_identical_to_fresh_derivation(spark, sf_dir):
     """Every family answer through the shared stage equals the same
     report computed from a fresh, uncached derivation (the round-10
     per-query form)."""
-    dedup.clear_graph_stage_cache()
+    session.clear()
     shared = {
         "d9": _rows(dedup.d9_keep_exact(spark, sf_dir)),
         "d44": _rows(graph.d44_pagerank(spark, sf_dir)),
@@ -84,7 +85,7 @@ def test_cache_keys_are_session_and_input_scoped(spark, sf_dir):
     """Distinct (sf_dir, block) inputs get distinct cache entries; the
     same input returns the SAME frame object (the memoization that makes
     reuse free)."""
-    dedup.clear_graph_stage_cache()
+    session.clear()
     p1 = dedup.neardup_pairs_shared(spark, sf_dir)
     p2 = dedup.neardup_pairs_shared(spark, sf_dir)
     assert p1 is p2
@@ -92,4 +93,4 @@ def test_cache_keys_are_session_and_input_scoped(spark, sf_dir):
     assert g1 is not p1
     l1 = dedup.neardup_labels_shared(spark, sf_dir)
     assert l1 is dedup.neardup_labels_shared(spark, sf_dir)
-    dedup.clear_graph_stage_cache()
+    session.clear()

@@ -1360,21 +1360,30 @@ def test_quantiles_rejects_bad_qs(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_c16_c17_c18_share_one_replay(spark, sf_dir):
+def test_c16_c17_c18_share_one_replay(spark, sf_dir, monkeypatch):
     """The three report faces must pay the 4-batch replay ONCE per
     (session, sf_dir) — the dedup shared-graph-stage discipline: one
     stream maintains the state, many dashboards read it."""
+    from cdc2vec_spark import session
     from cdc2vec_spark.cdc import ivm
 
-    ivm.clear_replay_cache()
+    calls = {"apply": 0}
+    real_apply = ivm.IncrementalDistinctCount.apply_batch
+
+    def counting_apply(*a, **kw):
+        calls["apply"] += 1
+        return real_apply(*a, **kw)
+
+    monkeypatch.setattr(ivm.IncrementalDistinctCount, "apply_batch", counting_apply)
+    session.clear()
     try:
         a = ivm.c16_incremental_distinct(spark, sf_dir)
         b = ivm.c17_incremental_topk(spark, sf_dir)
         c = ivm.c18_incremental_quantiles(spark, sf_dir)
         assert a.count() > 0 and b.count() > 0 and c.count() > 0
-        assert len(ivm._REPLAY_BUILDS) == 1, ivm._REPLAY_BUILDS
     finally:
-        ivm.clear_replay_cache()
+        session.clear()
+    assert calls == {"apply": 1}
 
 
 @pytest.mark.slow

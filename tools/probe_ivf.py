@@ -41,6 +41,7 @@ def main() -> None:
 
     from cdc2vec_spark.io import load_table
     from cdc2vec_spark.operators import similarity as S
+    from cdc2vec_spark import session
     from cdc2vec_spark.session import get_spark
 
     spark = get_spark("probe_ivf")
@@ -107,7 +108,7 @@ def main() -> None:
     assigned.unpersist()
 
     # --- the exact bench shape (fresh cache; run 1 pays build+persist) ---
-    S.clear_ivf_cache()
+    session.clear()
     runs = []
     for _ in range(3):
         t0 = time.perf_counter()
@@ -115,7 +116,7 @@ def main() -> None:
         runs.append(round(time.perf_counter() - t0, 3))
     out["bench_shape_runs"] = runs
     out["bench_shape_min"] = min(runs)
-    S.clear_ivf_cache()
+    session.clear()
 
     print(json.dumps(out))
 

@@ -2,7 +2,7 @@
 # (/root/reference/Makefile: build/test/lint/run/run-pg) for the PySpark
 # engine, plus the bench/oracle targets this repo's grading loop uses.
 
-.PHONY: test test-fast integration oracle bench perfbench plans run run-pg demo demo-feed image up down lint
+.PHONY: test test-fast integration oracle bench perfbench perfbench-ab plans run run-pg demo demo-feed image up down lint
 
 # the non-slow suite: pytest.ini deselects `slow` by default, so the
 # full suite is `python -m pytest tests/ -q -m ""`; test-fast also skips
@@ -36,6 +36,14 @@ bench:
 perfbench:
 	python3 -m pytest perfbench/ -q
 	python3 perfbench/run.py --workload cdc_backfill --seed 1 --seconds 10 --trace 1
+
+# interleaved A/B of the repo benchmark: the checkout vs a parent revision,
+# e.g. make perfbench-ab PARENT=HEAD~1 WORKLOAD=corpus_ops SEEDS=1-5
+PARENT ?= HEAD
+WORKLOAD ?= cdc_backfill
+SEEDS ?= 2-11
+perfbench-ab:
+	python3 tools/perfbench_ab.py --parent $(PARENT) --workload $(WORKLOAD) --seeds $(SEEDS)
 
 plans:
 	python tools/dump_plans.py

@@ -291,6 +291,9 @@ def main() -> None:
     # emitted: a Python mock caps around 2k req/s, which would measure
     # the mock — cdc_changes_per_sec above already measures the full
     # embed pipeline at dim 768 with the in-process provider.)
+    # Not comparable with records from before the one-pass writer: since
+    # then FNV-1a id hashing runs inside the timed delivery and the
+    # bodies carry float32 text. The name is kept for the series.
     sink_rate = _sink_upsert_rate(spark)
     print(f"# sink_upserts_per_sec: {sink_rate}", file=sys.stderr)
     record("sink_upserts_per_sec", sink_rate)
@@ -461,7 +464,8 @@ def _mock_http_server(response: dict):
 def _sink_upsert_rate(spark, n: int = 20_000, dim: int = 768) -> int:
     """Points/s through the batched Qdrant HTTP writer against a local
     mock (BASELINE.md: reference does ~500-2,000 inserts/s with one
-    request per point)."""
+    request per point). The timed delivery hashes ids (fnv1a64_py) and
+    sends float32 vector text; point_bodies is built before the clock."""
     from pyspark.sql import functions as F
 
     from cdc2vec_spark.sinks import qdrant
@@ -474,18 +478,19 @@ def _sink_upsert_rate(spark, n: int = 20_000, dim: int = 768) -> int:
                 "vector"
             ),
             F.create_map(F.lit("pk"), F.col("id").cast("string")).alias("metadata"),
+            F.lit("c").alias("op"),
         )
         # 8 partitions, not 32: the measurement target is batched
         # delivery, and 32 concurrent PUTs contend on the single-process
         # Python mock's GIL (measured 10x swings); 8 writers keep the
         # mock out of the measurand
-        payloads = qdrant.upsert_payloads(pts).repartition(8).persist()
+        payloads = qdrant.point_bodies(pts).repartition(8).persist()
         payloads.count()  # materialize: time delivery, not payload build
         secs = []
         for _ in range(3):
             t0 = time.perf_counter()
             payloads.foreachPartition(
-                lambda rows: qdrant.write_partition_http(rows, url, "bench")
+                lambda rows: qdrant.deliver_partition_http(rows, url, "bench")
             )
             secs.append(time.perf_counter() - t0)
         payloads.unpersist()

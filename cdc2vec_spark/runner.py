@@ -140,8 +140,8 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
     """main.go:66-100 sink factory, config-driven: returns a per-batch
     delivery hook (points DataFrame → external sink) or None.
 
-    - ``qdrant``: batched foreachPartition PUT upserts + POST deletes
-      (FNV-1a id parity).
+    - ``qdrant``: one foreachPartition pass of batched PUT upserts +
+      POST deletes (FNV-1a id parity, float32 vectors).
     - ``milvus``: lazily ensure the collection (reference field/index
       constants), then batched REST v2 inserts + delete exprs.
     - ``ivf_index``: maintain a disk-resident incremental IVF ANN index
@@ -390,7 +390,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
             # whose final event is a delete must not be ingested at all.
             # After final_events the upsert/delete id sets are disjoint,
             # so hook ordering between the two calls cannot matter;
-            # deletes go first anyway to mirror the qdrant/milvus hooks.
+            # deletes go first anyway to mirror the chunked delivery hooks.
             fe = final_events(pts).localCheckpoint(eager=True)
             # retire deleted ids from index/docs/pairs (cheap no-op when
             # the batch carries no deletes: one tiny distinct-collect)
@@ -605,18 +605,13 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
                         rows, url, collection
                     )
                 )
-                ups = q.upsert_payloads(fin.where(F.col("op") != OP_DELETE))
-                ups.foreachPartition(
-                    lambda rows: q.write_partition_http(rows, url, collection)
-                )
-                return
-            fin = final_events(pts)
-            ups = q.upsert_payloads(fin.where(F.col("op") != OP_DELETE))
-            ups.foreachPartition(
-                lambda rows: q.write_partition_http(rows, url, collection)
-            )
-            fin.where(F.col("op") == OP_DELETE).select("id").foreachPartition(
-                lambda rows: q.delete_partition_http(rows, url, collection)
+                fin = fin.where(F.col("op") != OP_DELETE)
+            else:
+                fin = final_events(pts)
+            # after the reduction each id is routed to exactly one of
+            # upsert/delete, so one pass in any order delivers the batch
+            q.point_bodies(fin).foreachPartition(
+                lambda rows: q.deliver_partition_http(rows, url, collection)
             )
 
         return hook

@@ -35,6 +35,40 @@ from pyspark.sql import SparkSession
 T = TypeVar("T")
 
 
+# cgroup v2 and v1 memory limits; a file holding "max" (or absent) sets none
+CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def memory_limit_bytes(cgroup_files: tuple[str, ...] = CGROUP_MEMORY_LIMITS) -> int:
+    """Physical memory, or the container's cgroup memory limit if smaller."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in cgroup_files:
+        try:
+            with open(path) as f:
+                text = f.read().strip()
+        except OSError:
+            continue
+        if text.isdigit():
+            limit = min(limit, int(text))
+    return limit
+
+
+def driver_memory(mem_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    min(16g, 60% of ``mem_bytes``, by default ``memory_limit_bytes()``).
+    In local mode the driver JVM holds every task, and its RSS runs well
+    past the heap, so a 16g heap on a 15 GB host gets the JVM OOM-killed."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    if mem_bytes is None:
+        mem_bytes = memory_limit_bytes()
+    return f"{min(16 * 1024, int(mem_bytes * 0.6) >> 20)}m"
+
+
 def get_spark(
     app_name: str = "cdc2vec_spark",
     cpus: int | None = None,
@@ -62,7 +96,7 @@ def get_spark(
         # reader rejects; read as long and convert in io.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

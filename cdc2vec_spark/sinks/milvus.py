@@ -25,8 +25,9 @@ delivery guarantees; (c) per-partition pooled HTTP keeps the writer
 dependency-free on executors, which matters on a 1000-executor cluster
 (no pymilvus wheel distribution). A deployment that needs gRPC-only
 features (e.g. per-request consistency overrides) can wrap pymilvus
-behind the same three functions (ensure_collection, write_partition_http,
-delete_partition_http); the interface was shaped for that swap.
+behind this module's three writer functions (ensure_collection,
+write_partition_http, delete_partition_http); the interface was shaped
+for that swap.
 """
 
 from __future__ import annotations

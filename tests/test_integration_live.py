@@ -140,11 +140,10 @@ def test_qdrant_ensure_upsert_search_delete(spark):
     """ensure_collection / upsert / search / delete against a real
     Qdrant: the sink's payload shapes and FNV ids accepted end-to-end."""
     from cdc2vec_spark.sinks.qdrant import (
-        delete_partition_http,
+        deliver_partition_http,
         ensure_collection,
         fnv1a64_py,
-        upsert_payloads,
-        write_partition_http,
+        point_bodies,
     )
 
     _qdrant_up()
@@ -157,12 +156,12 @@ def test_qdrant_ensure_upsert_search_delete(spark):
         ensure_collection(QDRANT_URL, coll, dim=dim + 1)
 
     pts = spark.createDataFrame(
-        [("a", [1.0, 0.0, 0.0, 0.0], "A", 1),
-         ("b", [0.0, 1.0, 0.0, 0.0], "B", 1)],
-        "id string, vector array<float>, text string, lsn long",
+        [("a", [1.0, 0.0, 0.0, 0.0], {"text": "A"}, "c"),
+         ("b", [0.0, 1.0, 0.0, 0.0], {"text": "B"}, "c")],
+        "id string, vector array<float>, metadata map<string,string>, op string",
     )
-    rows = upsert_payloads(pts).collect()
-    write_partition_http(iter(rows), QDRANT_URL, coll)
+    rows = point_bodies(pts).collect()
+    deliver_partition_http(iter(rows), QDRANT_URL, coll)
 
     def _search(vec):
         req = urllib.request.Request(
@@ -178,8 +177,8 @@ def test_qdrant_ensure_upsert_search_delete(spark):
     assert top and top[0]["id"] == fnv1a64_py("a")
     assert top[0]["payload"]["ext_id"] == "a"
 
-    delete_partition_http(
-        iter([{"id": "a"}]), QDRANT_URL, coll
+    deliver_partition_http(
+        iter([{"id": "a", "op": "d", "body": None}]), QDRANT_URL, coll
     )
     top = _search([1.0, 0.0, 0.0, 0.0])
     assert not top or top[0]["payload"]["ext_id"] != "a"

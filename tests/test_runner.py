@@ -288,83 +288,6 @@ def test_points_collection_replay_idempotent(spark, tmp_path):
     assert list(live[0]["vector"]) == [0.0, 1.0]  # LWW picked lsn 2
 
 
-def test_sink_delivery_respects_intra_batch_event_order(spark):
-    """Round-5 ADVICE (medium): the hook must reduce a batch to the
-    max-LSN event per id and route each id to exactly ONE of
-    upsert/delete (pipeline.go applies events strictly in order).
-    Crafted single batch:
-      X: insert(lsn 1) then delete(lsn 2)   -> only a delete delivered
-      Y: delete(lsn 3) then insert(lsn 4)   -> only an upsert delivered
-      Z: upsert(lsn 5) then upsert(lsn 6)   -> exactly one upsert, lsn-6 vector
-    """
-    import http.server
-    import json as _json
-    import threading
-
-    from cdc2vec_spark.config import EngineConfig, PipelineConfig, SinkConfig
-    from cdc2vec_spark.sinks.qdrant import fnv1a64_py
-
-    upserted, deleted = [], []
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def _ok(self):
-            body = b'{"status":"ok"}'
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def do_PUT(self):
-            if not self.path.startswith("/collections/docs/points"):
-                self._ok()  # ensure_collection create
-                return
-            n = int(self.headers["Content-Length"])
-            upserted.extend(_json.loads(self.rfile.read(n))["points"])
-            self._ok()
-
-        def do_POST(self):
-            n = int(self.headers["Content-Length"])
-            deleted.extend(_json.loads(self.rfile.read(n))["points"])
-            self._ok()
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    url = f"http://127.0.0.1:{srv.server_address[1]}"
-
-    cfg = PipelineConfig(
-        engine=EngineConfig(vector_size=4),
-        sink=SinkConfig(type="qdrant", options={"url": url, "collection": "docs"}),
-    )
-    hook = runner.sink_hook_for(cfg)
-    assert hook is not None
-    rows = [
-        ("X", [0.1, 0.0, 0.0, 0.0], {"k": "x1"}, "c", "1"),
-        ("X", None, {}, "d", "2"),
-        ("Y", None, {}, "d", "3"),
-        ("Y", [0.2, 0.0, 0.0, 0.0], {"k": "y4"}, "c", "4"),
-        ("Z", [0.3, 0.0, 0.0, 0.0], {"k": "z5"}, "u", "5"),
-        ("Z", [0.4, 0.0, 0.0, 0.0], {"k": "z6"}, "u", "6"),
-    ]
-    pts = spark.createDataFrame(
-        rows,
-        "id string, vector array<float>, metadata map<string,string>, op string, lsn string",
-    ).repartition(4)  # spread events over partitions: ordering must not depend on partitioning
-    try:
-        hook(pts)
-    finally:
-        srv.shutdown()
-
-    ups = {p["payload"]["ext_id"]: p for p in upserted}
-    assert set(ups) == {"Y", "Z"}, f"upserted ids: {sorted(ups)}"
-    assert len(upserted) == 2  # one request-point per id, not per event
-    assert ups["Z"]["payload"]["k"] == "z6"  # max-LSN vector won
-    assert abs(ups["Z"]["vector"][0] - 0.4) < 1e-6
-    assert set(deleted) == {fnv1a64_py("X")}
-
-
 def test_boot_ivf_index_sink_with_pq(spark, sf_dir, tmp_path):
     """options.pq='4,16': the streamed index carries PQ codes and ADC
     search works end-to-end (vector_size 8 → m=4 sub-spaces of 2)."""

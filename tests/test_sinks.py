@@ -16,14 +16,6 @@ def test_fnv1a64_known_vectors():
     assert qdrant.fnv1a64_py("foobar") == 0x85944171F73967E8
 
 
-def test_fnv1a64_udf_matches_py(spark):
-    ids = ["public.documents:1", "public.documents:42", "x"]
-    df = spark.createDataFrame([(i,) for i in ids], "id string")
-    rows = df.select("id", qdrant.fnv1a64(F.col("id")).alias("h")).collect()
-    for r in rows:
-        assert int(r["h"]) == qdrant.fnv1a64_py(r["id"])
-
-
 def _points(spark):
     return spark.createDataFrame(
         [
@@ -48,15 +40,162 @@ def test_kafka_message_schema(spark):
     assert m2["op"] == "delete" and "vector" not in m2 or m2.get("vector") is None
 
 
-def test_qdrant_payloads(spark):
-    up = qdrant.upsert_payloads(_points(spark).where(F.col("op") != "d")).collect()
-    body = json.loads(up[0]["point_json"])
-    assert set(body) == {"id", "vector", "payload"}
+def test_qdrant_point_bodies(spark):
+    rows = {r["id"]: r for r in qdrant.point_bodies(_points(spark)).collect()}
+    up = rows["public.documents:1"]
+    assert up["op"] == "c"
+    body = json.loads(up["body"])
+    assert list(body) == ["vector", "payload"]  # the writer splices the id first
     assert body["payload"]["ext_id"] == "public.documents:1"
-    assert int(body["id"]) == qdrant.fnv1a64_py("public.documents:1")
-    de = qdrant.delete_payloads(_points(spark).where(F.col("op") == "d")).collect()
-    dbody = json.loads(de[0]["delete_json"])
-    assert int(dbody["points"][0]) == qdrant.fnv1a64_py("public.documents:2")
+    assert body["vector"] == pytest.approx([0.6, 0.8])
+    de = rows["public.documents:2"]
+    assert de["op"] == "d" and de["body"] is None
+
+
+def test_point_bodies_send_float32_vectors(spark):
+    """Vectors leave as float32 text (the reference sends []float32 and
+    Qdrant stores f32): every element parses back to exactly the float32
+    of the stored double, tiny and large magnitudes included."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    vecs = [rng.standard_normal(768) for _ in range(6)]
+    vecs[1] = vecs[1] * 1e-30
+    vecs[2] = vecs[2] * 1e30
+    vecs[3][:9] = [1e-42, -1e-45, 3e-39, 1.1754943508222875e-38, 3.4e38, -3.4e38, 0.0, 1.0, 1 / 3]
+    vecs[4] = vecs[4] / np.linalg.norm(vecs[4])
+    pts = spark.createDataFrame(
+        [(f"k{i}", [float(x) for x in v], {}, "c") for i, v in enumerate(vecs)],
+        "id string, vector array<double>, metadata map<string,string>, op string",
+    )
+    bodies = {r["id"]: r["body"] for r in qdrant.point_bodies(pts).collect()}
+    assert "0.33333334," in bodies["k3"]  # float32 text, not 0.3333333333333333
+    got = {k: json.loads(b)["vector"] for k, b in bodies.items()}
+    for i, v in enumerate(vecs):
+        sent = np.asarray(got[f"k{i}"], dtype=np.float64).astype(np.float32)
+        np.testing.assert_array_equal(sent, v.astype(np.float32))
+
+
+def _mock_qdrant():
+    """Records every (method, path, raw body) a sink writer sends and
+    answers 200; a GET (Qdrant's collection info) gets 501, so
+    ensure_collection falls through to its create PUT."""
+    import http.server
+    import threading
+
+    calls = []
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def _reply(self):
+            n = int(self.headers["Content-Length"])
+            raw = self.rfile.read(n)
+            calls.append((self.command, self.path, raw))
+            body = b'{"status":"ok"}'
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        do_PUT = _reply
+        do_POST = _reply
+
+        def log_message(self, *a):
+            pass
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv, f"http://127.0.0.1:{srv.server_address[1]}", calls
+
+
+def test_deliver_partition_http_one_pass():
+    """One pass over mixed final events: upserts as ≤max_points PUTs with
+    FNV-1a ids spliced in front of the body, deletes as ≤max_points
+    POSTs, no id in both."""
+    import re
+
+    rows = []
+    for i in range(10):
+        body = json.dumps({"vector": [i / 10, 0.5], "payload": {"ext_id": f"u{i}"}})
+        rows.append({"id": f"u{i}", "op": "u" if i % 2 else "c", "body": body})
+        if i < 6:
+            rows.append({"id": f"d{i}", "op": "d", "body": None})
+    srv, url, calls = _mock_qdrant()
+    try:
+        qdrant.deliver_partition_http(iter(rows), url, "docs", max_points=4)
+    finally:
+        srv.shutdown()
+    puts = [raw for m, p, raw in calls if m == "PUT"]
+    posts = [raw for m, p, raw in calls if m == "POST"]
+    assert {p for m, p, _ in calls if m == "PUT"} == {"/collections/docs/points?wait=true"}
+    assert {p for m, p, _ in calls if m == "POST"} == {
+        "/collections/docs/points/delete?wait=true"
+    }
+    put_points = [json.loads(raw)["points"] for raw in puts]
+    assert [len(b) for b in put_points] == [4, 4, 2]
+    sent = [pt for b in put_points for pt in b]
+    assert sorted(pt["payload"]["ext_id"] for pt in sent) == sorted(f"u{i}" for i in range(10))
+    for pt in sent:
+        assert pt["id"] == qdrant.fnv1a64_py(pt["payload"]["ext_id"])
+        assert list(pt) == ["id", "vector", "payload"]
+    prefixed = [int(x) for raw in puts for x in re.findall(rb'\{"id":(\d+),"vector":', raw)]
+    assert sorted(prefixed) == sorted(pt["id"] for pt in sent)
+    del_points = [json.loads(raw)["points"] for raw in posts]
+    assert [len(b) for b in del_points] == [4, 2]
+    deleted = {i for b in del_points for i in b}
+    assert deleted == {qdrant.fnv1a64_py(f"d{i}") for i in range(6)}
+    assert not deleted & {pt["id"] for pt in sent}
+
+
+def test_sink_delivery_respects_intra_batch_event_order(spark):
+    """Round-5 ADVICE (medium): the hook must reduce a batch to the
+    max-LSN event per id and route each id to exactly ONE of
+    upsert/delete (pipeline.go applies events strictly in order).
+    Crafted single batch:
+      X: insert(lsn 1) then delete(lsn 2)   -> only a delete delivered
+      Y: delete(lsn 3) then insert(lsn 4)   -> only an upsert delivered
+      Z: upsert(lsn 5) then upsert(lsn 6)   -> exactly one upsert, lsn-6 vector
+    """
+    from cdc2vec_spark import runner
+    from cdc2vec_spark.config import EngineConfig, PipelineConfig, SinkConfig
+    from cdc2vec_spark.sinks.qdrant import fnv1a64_py
+
+    srv, url, calls = _mock_qdrant()
+
+    cfg = PipelineConfig(
+        engine=EngineConfig(vector_size=4),
+        sink=SinkConfig(type="qdrant", options={"url": url, "collection": "docs"}),
+    )
+    hook = runner.sink_hook_for(cfg)
+    assert hook is not None
+    rows = [
+        ("X", [0.1, 0.0, 0.0, 0.0], {"k": "x1"}, "c", "1"),
+        ("X", None, {}, "d", "2"),
+        ("Y", None, {}, "d", "3"),
+        ("Y", [0.2, 0.0, 0.0, 0.0], {"k": "y4"}, "c", "4"),
+        ("Z", [0.3, 0.0, 0.0, 0.0], {"k": "z5"}, "u", "5"),
+        ("Z", [0.4, 0.0, 0.0, 0.0], {"k": "z6"}, "u", "6"),
+    ]
+    pts = spark.createDataFrame(
+        rows,
+        "id string, vector array<float>, metadata map<string,string>, op string, lsn string",
+    ).repartition(4)  # spread events over partitions: ordering must not depend on partitioning
+    try:
+        hook(pts)
+    finally:
+        srv.shutdown()
+
+    upserted = [
+        pt for m, path, raw in calls
+        if m == "PUT" and path == "/collections/docs/points?wait=true"
+        for pt in json.loads(raw)["points"]
+    ]
+    deleted = [i for m, _, raw in calls if m == "POST" for i in json.loads(raw)["points"]]
+    ups = {p["payload"]["ext_id"]: p for p in upserted}
+    assert set(ups) == {"Y", "Z"}, f"upserted ids: {sorted(ups)}"
+    assert len(upserted) == 2  # one request-point per id, not per event
+    assert ups["Z"]["payload"]["k"] == "z6"  # max-LSN vector won
+    assert abs(ups["Z"]["vector"][0] - 0.4) < 1e-6
+    assert set(deleted) == {fnv1a64_py("X")}
 
 
 def test_milvus_payloads(spark):
@@ -155,43 +294,23 @@ def test_qdrant_http_writer_end_to_end(spark):
     (qdrant.go:196-233 contract; ours batches the partition instead of one
     request per point). The mock runs in the driver; executor workers hit
     it over HTTP like a real Qdrant."""
-    import http.server
-    import json as _json
-    import threading
-
-    received = []
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def do_PUT(self):
-            assert self.path == "/collections/docs/points?wait=true"
-            n = int(self.headers["Content-Length"])
-            received.append(_json.loads(self.rfile.read(n)))
-            body = b'{"status":"ok"}'
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    url = f"http://127.0.0.1:{srv.server_address[1]}"
+    srv, url, calls = _mock_qdrant()
     try:
         pts = spark.createDataFrame(
             [
-                ("public.documents:1", [0.6, 0.8], {"table": "documents"}),
-                ("public.documents:2", [1.0, 0.0], {"table": "documents"}),
-                ("public.documents:3", [0.0, 1.0], {"table": "documents"}),
+                ("public.documents:1", [0.6, 0.8], {"table": "documents"}, "c"),
+                ("public.documents:2", [1.0, 0.0], {"table": "documents"}, "c"),
+                ("public.documents:3", [0.0, 1.0], {"table": "documents"}, "u"),
             ],
-            "id string, vector array<float>, metadata map<string,string>",
+            "id string, vector array<float>, metadata map<string,string>, op string",
         ).repartition(2)
-        payloads = qdrant.upsert_payloads(pts)
-        payloads.foreachPartition(
-            lambda rows: qdrant.write_partition_http(rows, url, "docs")
+        qdrant.point_bodies(pts).foreachPartition(
+            lambda rows: qdrant.deliver_partition_http(rows, url, "docs")
         )
-        sent = [p for batch in received for p in batch["points"]]
+        assert {(m, path) for m, path, _ in calls} == {
+            ("PUT", "/collections/docs/points?wait=true")
+        }
+        sent = [p for _, _, raw in calls for p in json.loads(raw)["points"]]
         assert len(sent) == 3
         assert {p["payload"]["ext_id"] for p in sent} == {
             "public.documents:1", "public.documents:2", "public.documents:3",
@@ -209,52 +328,32 @@ def test_sink_writers_chunk_oversized_partitions(spark):
     partition larger than max_points must be split across >1 request,
     with no row lost or duplicated — for the qdrant upsert/delete AND
     milvus insert/delete writers."""
-    import http.server
-    import json as _json
-    import threading
+    srv, url, calls = _mock_qdrant()
 
-    calls = []
+    def sent(suffix):
+        return [json.loads(raw) for _, p, raw in calls if p.endswith(suffix)]
 
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def _reply(self):
-            n = int(self.headers["Content-Length"])
-            calls.append((self.path, _json.loads(self.rfile.read(n))))
-            body = b'{"status":"ok","data":{}}'
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        do_PUT = _reply
-        do_POST = _reply
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    url = f"http://127.0.0.1:{srv.server_address[1]}"
     try:
         n = 10
         pts = spark.createDataFrame(
-            [(f"doc:{i}", [float(i), 1.0], {"pk": str(i)}) for i in range(n)],
-            "id string, vector array<float>, metadata map<string,string>",
+            [(f"doc:{i}", [float(i), 1.0], {"pk": str(i)}, "c") for i in range(n)],
+            "id string, vector array<float>, metadata map<string,string>, op string",
         ).coalesce(1)  # ONE partition of 10 rows, cap 4 → 3 requests
 
-        qdrant.upsert_payloads(pts).foreachPartition(
-            lambda rows: qdrant.write_partition_http(rows, url, "docs", max_points=4)
+        qdrant.point_bodies(pts).foreachPartition(
+            lambda rows: qdrant.deliver_partition_http(rows, url, "docs", max_points=4)
         )
-        bodies = [b["points"] for p, b in calls if p.endswith("/points?wait=true")]
+        bodies = [b["points"] for b in sent("/points?wait=true")]
         assert [len(b) for b in bodies] == [4, 4, 2]
         assert {pt["payload"]["ext_id"] for b in bodies for pt in b} == {
             f"doc:{i}" for i in range(n)
         }
 
         calls.clear()
-        pts.select("id").foreachPartition(
-            lambda rows: qdrant.delete_partition_http(rows, url, "docs", max_points=4)
+        pts.select("id", F.lit("d").alias("op")).foreachPartition(
+            lambda rows: qdrant.deliver_partition_http(rows, url, "docs", max_points=4)
         )
-        del_bodies = [b["points"] for p, b in calls if p.endswith("/points/delete?wait=true")]
+        del_bodies = [b["points"] for b in sent("/points/delete?wait=true")]
         assert [len(b) for b in del_bodies] == [4, 4, 2]
         assert {i for b in del_bodies for i in b} == {
             qdrant.fnv1a64_py(f"doc:{i}") for i in range(n)
@@ -264,7 +363,7 @@ def test_sink_writers_chunk_oversized_partitions(spark):
         milvus.insert_payloads(pts).foreachPartition(
             lambda rows: milvus.write_partition_http(rows, url, "docs", max_points=4)
         )
-        ins = [b["data"] for p, b in calls if p.endswith("/entities/insert")]
+        ins = [b["data"] for b in sent("/entities/insert")]
         assert [len(b) for b in ins] == [4, 4, 2]
         assert {d["id"] for b in ins for d in b} == {f"doc:{i}" for i in range(n)}
 
@@ -272,9 +371,9 @@ def test_sink_writers_chunk_oversized_partitions(spark):
         pts.select("id").foreachPartition(
             lambda rows: milvus.delete_partition_http(rows, url, "docs", max_points=4)
         )
-        dels = [b["filter"] for p, b in calls if p.endswith("/entities/delete")]
+        dels = [b["filter"] for b in sent("/entities/delete")]
         assert len(dels) == 3
-        got = {i for f in dels for i in _json.loads(f[len("id in "):])}
+        got = {i for f in dels for i in json.loads(f[len("id in "):])}
         assert got == {f"doc:{i}" for i in range(n)}
     finally:
         srv.shutdown()
@@ -347,21 +446,24 @@ def test_qdrant_writer_survives_transient_503(spark):
 
     from cdc2vec_spark.sinks import qdrant as q
 
-    seen = {"points": [], "fail_next": 0}
+    seen = {"PUT": [], "POST": [], "fail_next": {}}
 
     class Handler(http.server.BaseHTTPRequestHandler):
-        def do_PUT(self):
+        def _reply(self):
             body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
-            if seen["fail_next"] > 0:
-                seen["fail_next"] -= 1
+            if seen["fail_next"].get(self.command, 0) > 0:
+                seen["fail_next"][self.command] -= 1
                 self.send_response(503)
                 self.end_headers()
                 return
-            seen["points"].extend(json.loads(body)["points"])
+            seen[self.command].extend(json.loads(body)["points"])
             self.send_response(200)
             self.send_header("Content-Length", "2")
             self.end_headers()
             self.wfile.write(b"{}")
+
+        do_PUT = _reply
+        do_POST = _reply
 
         def log_message(self, *a):
             pass
@@ -370,11 +472,11 @@ def test_qdrant_writer_survives_transient_503(spark):
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     url = f"http://127.0.0.1:{srv.server_address[1]}"
     try:
-        pts = _points(spark)
-        payloads = q.upsert_payloads(pts).collect()
-        seen["fail_next"] = 1
-        q.write_partition_http(payloads, url, "c")
-        assert len(seen["points"]) == len(payloads)
+        rows = q.point_bodies(_points(spark)).collect()
+        seen["fail_next"] = {"PUT": 1, "POST": 1}
+        q.deliver_partition_http(rows, url, "c")
+        assert [p["payload"]["ext_id"] for p in seen["PUT"]] == ["public.documents:1"]
+        assert seen["POST"] == [q.fnv1a64_py("public.documents:2")]
     finally:
         srv.shutdown()
 

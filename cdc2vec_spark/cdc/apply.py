@@ -43,8 +43,10 @@ def swap_write(df: DataFrame, path: str) -> None:
     when `path` is missing — so the worst post-crash outcome is the
     pre-batch state (the batch replays from the checkpoint), never an
     empty store. Rename-based, so local-filesystem only: on object
-    stores (no rename) use cdc.manifest.ManifestCollection — the
-    manifest-generation commit protocol — or Delta/Iceberg MERGE."""
+    stores, state commits through cdc.manifest.ManifestStore
+    generations instead (ManifestCollection for row state; the keyed
+    point store, cdc.segments, always commits that way) — or
+    Delta/Iceberg MERGE."""
     swap_write_begin(df, path)
     swap_write_commit(path)
 

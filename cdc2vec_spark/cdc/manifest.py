@@ -3,17 +3,19 @@ never renames and never overwrites a data object.
 
 ``cdc.apply.swap_buckets`` is POSIX-rename based — correct on a local
 filesystem, impossible on S3/GCS/ABFS (object stores have no rename; a
-"rename" is copy+delete and is not atomic). This module is the standard
-object-store answer, the same design Delta Lake / Iceberg commit logs
-use, reduced to the engine's bucketed-state needs:
+"rename" is copy+delete and is not atomic). ``ManifestStore`` is the
+standard object-store answer, the same design Delta Lake / Iceberg
+commit logs use, reduced to a versioned map from integer keys to data
+directories. Two stores commit through it: ``ManifestCollection`` below
+(row state, keyed by hash bucket) and the keyed point store's segment
+log (``cdc.segments``, keyed by segment sequence number).
 
 - **Data objects are immutable and uniquely named.** Each commit writes
-  its merged buckets to a fresh ``data/commit-<version>-<nonce>/``
-  directory (``partitionBy(bucket)`` inside). Nothing ever rewrites or
-  renames an existing object — a crashed commit leaves an orphan
+  its data to a fresh directory under ``data/``. Nothing ever rewrites
+  or renames an existing object — a crashed commit leaves an orphan
   directory that no manifest references and GC later deletes.
 - **A commit IS one small manifest object.** ``_manifests/
-  manifest-<version>.json`` maps every bucket to the commit directory
+  manifest-<version>.json`` maps every key to the data directory
   holding its current rows. Object PUTs are atomic, which makes the
   manifest write the commit point: readers see either the old complete
   mapping or the new complete mapping, never a mix. Locally the file is
@@ -21,18 +23,18 @@ use, reduced to the engine's bucketed-state needs:
   yields invalid JSON, and readers simply fall back to the newest
   manifest that parses (writers then allocate past the torn version, so
   it is never reused).
-- **Readers assemble from the manifest**, grouping buckets by commit
-  directory: one pruned parquet read per referenced directory (the
-  bucket directory column prunes inside it), unioned. At most
-  ``n_buckets`` directories are ever referenced, and GC keeps the tail
-  short.
+- **Readers assemble from the manifest.** ``ManifestCollection`` groups
+  buckets by commit directory: one pruned parquet read per referenced
+  directory (the bucket directory column prunes inside it), unioned. At
+  most ``n_buckets`` directories are ever referenced, and GC keeps the
+  tail short.
 
-Note on the writer inside a commit directory: Spark's file committer may
-use its own task-temp renames while materializing ``data/commit-*/``.
-That is irrelevant to this protocol's atomicity — the directory is
-unreferenced until the manifest PUT, so even a completely non-atomic
-writer (e.g. the S3A magic committer, or plain uploads) is safe; a
-half-written directory is just an orphan.
+Note on the writer inside a data directory: Spark's file committer may
+use its own task-temp renames while materializing it. That is
+irrelevant to this protocol's atomicity — the directory is unreferenced
+until the manifest PUT, so even a completely non-atomic writer (e.g. the
+S3A magic committer, or plain uploads) is safe; a half-written
+directory is just an orphan.
 
 Single-writer by contract (a Structured Streaming query runs one
 foreachBatch at a time). Multi-writer would need a conditional-PUT /
@@ -65,8 +67,8 @@ _MANIFEST_RE = re.compile(r"^manifest-(\d{9})\.json$")
 
 
 class ManifestStore:
-    """The commit protocol alone: versioned bucket→directory mappings over
-    immutable commit directories. Knows nothing about merge semantics."""
+    """The commit protocol alone: versioned key→directory mappings over
+    immutable data directories. Knows nothing about merge semantics."""
 
     def __init__(self, path: str, keep_manifests: int = 10):
         self.path = path
@@ -332,108 +334,3 @@ class ManifestCollection:
         return df.where(F.col("op") != OP_DELETE).select(
             "pk", *[c for c in df.columns if c.startswith("after_")]
         )
-
-
-class ManifestPointsCollection:
-    """`runner.PointsCollection` semantics (sink-side points keyed by id,
-    max-LSN last-write-wins, delete tombstones) over the manifest commit
-    protocol — selected by ``sink.options.state_protocol: manifest`` for
-    object-store deployments."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        n_buckets: int = 64,
-        keep_manifests: int = 10,
-        auto_gc_every: int = 16,
-    ):
-        self.spark = spark
-        self.store = ManifestStore(path, keep_manifests=keep_manifests)
-        self.n_buckets = n_buckets
-        self.auto_gc_every = auto_gc_every
-
-    def read(self, as_of: int | None = None) -> DataFrame | None:
-        return _assemble(self.spark, self.store, as_of=as_of)
-
-    def apply_points(self, pts: DataFrame, _epoch_id: int | None = None) -> None:
-        from pyspark.sql.window import Window
-
-        bexpr = bucket_expr(("id",), self.n_buckets)
-        cols = ["id", "vector", "metadata", "op", "lsn", BUCKET_COL]
-        ev = pts.withColumn(BUCKET_COL, bexpr).select(*cols)
-        touched = sorted(r[0] for r in ev.select(BUCKET_COL).distinct().collect())
-        if not touched:
-            return
-        state = _assemble(self.spark, self.store, buckets=touched)
-        if state is not None:
-            ev = state.select(*cols).unionByName(ev)
-        ev = ev.repartition(len(touched), BUCKET_COL)
-        w = Window.partitionBy(BUCKET_COL, "id").orderBy(F.col("lsn").desc())
-        merged = (
-            ev.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        _commit(self.store, merged, touched, self.auto_gc_every)
-
-    def live(self, as_of: int | None = None) -> DataFrame | None:
-        df = self.read(as_of=as_of)
-        if df is None:
-            return None
-        return df.where(F.col("op") != OP_DELETE).drop("op", BUCKET_COL)
-
-
-class ManifestChunkedPointsCollection:
-    """`runner.ChunkedPointsCollection` semantics (REPLACE-SET per base
-    key: the winning event's whole chunk set, or the single tombstone of
-    a winning delete) over the manifest commit protocol — closes the
-    round-6 gap where chunked mode required `state_protocol: swap`.
-    Buckets hash ``base_id`` so all chunks of a key co-locate, exactly
-    like the swap variant."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        n_buckets: int = 64,
-        keep_manifests: int = 10,
-        auto_gc_every: int = 16,
-    ):
-        self.spark = spark
-        self.store = ManifestStore(path, keep_manifests=keep_manifests)
-        self.n_buckets = n_buckets
-        self.auto_gc_every = auto_gc_every
-
-    def read(self, as_of: int | None = None) -> DataFrame | None:
-        return _assemble(self.spark, self.store, as_of=as_of)
-
-    def apply_points(self, pts: DataFrame, _epoch_id: int | None = None) -> None:
-        from pyspark.sql.window import Window
-
-        bexpr = bucket_expr(("base_id",), self.n_buckets)
-        cols = ["id", "base_id", "vector", "metadata", "op", "lsn", BUCKET_COL]
-        ev = pts.withColumn(BUCKET_COL, bexpr).select(*cols)
-        touched = sorted(r[0] for r in ev.select(BUCKET_COL).distinct().collect())
-        if not touched:
-            return
-        state = _assemble(self.spark, self.store, buckets=touched)
-        if state is not None:
-            ev = state.select(*cols).unionByName(ev)
-        ev = ev.repartition(len(touched), BUCKET_COL)
-        w = Window.partitionBy(BUCKET_COL, "base_id")
-        # replace-set: keep the winning event's rows; dedup exact id
-        # replays within it (idempotent re-apply)
-        merged = (
-            ev.withColumn("_mx", F.max("lsn").over(w))
-            .where(F.col("lsn") == F.col("_mx"))
-            .drop("_mx")
-            .dropDuplicates(["id", "lsn"])
-        )
-        _commit(self.store, merged, touched, self.auto_gc_every)
-
-    def live(self, as_of: int | None = None) -> DataFrame | None:
-        df = self.read(as_of=as_of)
-        if df is None:
-            return None
-        return df.where(F.col("op") != OP_DELETE).drop("op", BUCKET_COL)

@@ -41,10 +41,13 @@ class PointsCollection:
 
     Stored as an append-only segment log (cdc.segments.SegmentStore):
     a batch reduces itself to its winning event per id (final_events)
-    and writes that as one immutable segment — O(batch) per flush, the
-    state is never read on the write path. Size-tiered compaction
-    (fan-in 4) keeps O(log4(batches)) segments; read() and live() union
-    them and resolve last-write-wins with one window on id."""
+    and writes that as one immutable segment, committed by publishing
+    the next manifest generation — O(batch) per flush, the state is
+    never read on the write path, and nothing is renamed, so the store
+    runs on local filesystems and object stores alike. Size-tiered
+    compaction (fan-in 4) keeps O(log4(batches)) segments; read() and
+    live() union them and resolve last-write-wins with one window on
+    id."""
 
     cols = ("id", "vector", "metadata", "op", "lsn")
 
@@ -57,14 +60,16 @@ class PointsCollection:
     def _resolve(pts: DataFrame) -> DataFrame:
         return final_events(pts)
 
-    def read(self) -> DataFrame | None:
-        return self.store.read()
+    def read(self, as_of: int | None = None) -> DataFrame | None:
+        """The state, or with ``as_of`` the state as it was at that
+        retained manifest generation (``store.manifests.versions()``)."""
+        return self.store.read(as_of)
 
     def apply_points(self, pts: DataFrame, _epoch_id: int | None = None) -> None:
         self.store.append(pts)
 
-    def live(self) -> DataFrame | None:
-        df = self.read()
+    def live(self, as_of: int | None = None) -> DataFrame | None:
+        df = self.read(as_of)
         if df is None:
             return None
         return df.where(F.col("op") != OP_DELETE).drop("op")
@@ -688,34 +693,12 @@ def _resolve_config(config: PipelineConfig | str | None):
 
 
 def _collection_for(spark: SparkSession, cfg, state_dir: str):
-    """The engine-native keyed store the config selects: the
-    rename-published segment log by default (``swap``, local
-    filesystems); ``sink.options.
-    state_protocol: manifest`` selects the object-store-safe
-    manifest-generation commits (cdc/manifest.py); chunked configs get
-    the replace-set collections."""
-    protocol = "swap"
-    if isinstance(cfg, PipelineConfig):
-        protocol = str(cfg.sink.options.get("state_protocol", "swap"))
+    """The engine-native keyed point store: the replace-set collection
+    for chunked configs, the per-id one otherwise. Both commit through
+    manifest generations (cdc/segments.py), so one store serves local
+    filesystems and object stores alike."""
     chunked = isinstance(cfg, PipelineConfig) and cfg.engine.chunk is not None
-    if protocol == "manifest":
-        from .cdc.manifest import (
-            ManifestChunkedPointsCollection,
-            ManifestPointsCollection,
-        )
-
-        return (
-            ManifestChunkedPointsCollection(spark, state_dir)
-            if chunked
-            else ManifestPointsCollection(spark, state_dir)
-        )
-    if protocol == "swap":
-        return (
-            ChunkedPointsCollection(spark, state_dir)
-            if chunked
-            else PointsCollection(spark, state_dir)
-        )
-    raise ValueError(f"unknown state_protocol: {protocol!r}")
+    return (ChunkedPointsCollection if chunked else PointsCollection)(spark, state_dir)
 
 
 def boot(
@@ -765,10 +748,9 @@ def boot(
     )
 
     # per-batch engine metrics for /healthz (points_out via Observation:
-    # the count piggybacks on the batch's own write actions — safe to
-    # read because every collection's apply_points runs an action over
-    # the observed plan: the segment write of the segment-log
-    # collections, the touched-bucket collect of the manifest ones)
+    # the count piggybacks on the batch's own write action — safe to
+    # read because apply_points always runs the segment write over the
+    # observed plan)
     batch_metrics: dict = {}
 
     cfg_path = config if isinstance(config, str) else None
@@ -823,10 +805,9 @@ def boot(
                 "epoch": epoch_id,
                 "points_out": int(obs.get.get("points_out", 0)),
                 "batch_wall_ms": round((_time.perf_counter() - t0) * 1000),
+                "state_segments": len(coll.store.segments()),
             }
         )
-        if isinstance(coll, PointsCollection):
-            batch_metrics["state_segments"] = len(coll.store.segments())
         if fobs:
             # per-stage surviving-row counts of the ingest filter chain
             # (cdc/filters.py) — consecutive stage deltas = drop

@@ -1,7 +1,8 @@
 """Manifest-generation commit protocol (object-store-safe state):
 equivalence with ParquetCollection, no data renames/overwrites ever,
 torn-manifest fallback, orphan-commit tolerance + GC, idempotent replay,
-and untouched commit directories staying byte-identical.
+untouched commit directories staying byte-identical, and the keyed
+point store of runner.boot committing one generation per micro-batch.
 """
 
 import json
@@ -180,41 +181,39 @@ def test_read_prunes_bucket_directories(spark, tmp_path):
     assert "PartitionFilters" in s
 
 
-def test_boot_with_manifest_protocol(spark, sf_dir, tmp_path):
-    """runner.boot with sink.options.state_protocol=manifest: the whole
-    pipeline commits through the object-store-safe store and the final
-    live set equals the swap-protocol boot's."""
+def test_boot_commits_one_generation_per_batch(spark, sf_dir, tmp_path):
+    """A default-config runner.boot commits its keyed point store through
+    manifest generations: one new generation per micro-batch (no
+    compaction within two), and the final live ids equal the batch
+    last-write-wins answer."""
     from cdc2vec_spark import runner
-    from cdc2vec_spark.config import DEFAULT_CONFIG, PipelineConfig, SinkConfig
     from cdc2vec_spark.streaming.source import write_chunks
 
     ch = filter_mapped(changes_df(spark, sf_dir), MAPPED)
     chunks = str(tmp_path / "chunks")
     write_chunks(ch, chunks, n_chunks=2, order_col="lsn")
-    cfg = PipelineConfig(
-        engine=DEFAULT_CONFIG,
-        sink=SinkConfig(type="", options={"state_protocol": "manifest"}),
-    )
     q, coll, _ = runner.boot(
         spark,
-        cfg,
+        None,
         changes_dir=chunks,
         changes_schema=ch.schema,
         state_dir=str(tmp_path / "state"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.processAllAvailable()
-    q.stop()
-    from cdc2vec_spark.cdc.manifest import ManifestPointsCollection
-
-    assert isinstance(coll, ManifestPointsCollection)
+    try:
+        q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert len(batches) == 2
+    assert coll.store.manifests.latest()[0] == len(batches)
+    assert coll.store.manifests.versions() == [1, 2]
     got = sorted(r["id"] for r in coll.live().select("id").collect())
     want = sorted(
         "public.documents:" + r["pk"]
         for r in apply.latest_state(ch).select("pk").collect()
     )
     assert got == want
-    assert coll.store.latest()[0] >= 2  # one manifest per micro-batch
 
 
 @pytest.mark.parametrize("n", [2])

@@ -11,13 +11,16 @@ from __future__ import annotations
 
 import os
 import random
+import re
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from cdc2vec_spark import runner
 from cdc2vec_spark.cdc import segments
 from cdc2vec_spark.cdc.apply import BUCKET_COL, bucket_expr, swap_buckets
+from cdc2vec_spark.cdc.manifest import ManifestStore, _commit
 
 PLAIN_DDL = (
     "id string, vector array<float>, metadata map<string,string>, "
@@ -78,8 +81,8 @@ def _stored(df):
     return sorted((r["id"], r["op"], r["lsn"]) for r in df.collect())
 
 
-def _live(coll):
-    df = coll.live()
+def _live(coll, as_of=None):
+    df = coll.live(as_of)
     if df is None:
         return []
     return sorted((r["id"], r["lsn"], tuple(r["vector"])) for r in df.collect())
@@ -149,47 +152,112 @@ def test_stale_upsert_cannot_resurrect_deleted_key(spark, tmp_path, fl):
     _assert_matches(coll, events)
 
 
-@FLAVORS
-def test_stranded_tmp_segment_is_ignored(spark, tmp_path, fl):
-    path = str(tmp_path / "pts")
-    coll = fl.cls(spark, path)
-    events = [fl.event("t:a", 5, "c"), fl.event("t:b", 6, "d")]
-    _apply(spark, fl, coll, events)
-    # a crashed write: a newer upsert that never got renamed in
-    _, rows = fl.event("t:b", 9, "u")
-    tmp = os.path.join(path, segments.TMP_PREFIX + "crashed")
-    spark.createDataFrame(rows, fl.ddl).write.parquet(tmp)
-    _assert_matches(coll, events)
-    events.append(fl.event("t:c", 7, "c"))
-    _apply(spark, fl, coll, events[-1:])
-    assert not os.path.exists(tmp)  # the next append swept it
-    _assert_matches(coll, events)
+def _files(root):
+    """Every data file under ``root`` with its size and mtime."""
+    return {
+        os.path.join(d, f): (os.path.getsize(os.path.join(d, f)),
+                             os.path.getmtime(os.path.join(d, f)))
+        for d, _, fs in os.walk(root)
+        for f in fs
+    }
 
 
 @FLAVORS
-def test_compaction_output_beside_its_inputs(spark, tmp_path, monkeypatch, fl):
-    """A crash after a compaction renamed its output in but before it
-    deleted its inputs leaves both; the state reads the same."""
-    path = str(tmp_path / "pts")
-    coll = fl.cls(spark, path)
-    monkeypatch.setattr(segments, "FAN_IN", 100)
-    events = []
-    for i in range(4):
+def test_no_rename_and_no_data_overwrite(spark, tmp_path, monkeypatch, fl):
+    """Appends and a compaction run with os.rename/os.replace/shutil.move
+    forbidden, and every segment file written stays byte-identical for
+    as long as it exists: a segment is committed by its manifest alone."""
+
+    def boom(*a, **k):  # pragma: no cover - failure path
+        raise AssertionError("rename/move used by the segment store")
+
+    monkeypatch.setattr(os, "rename", boom)
+    monkeypatch.setattr(os, "replace", boom)
+    monkeypatch.setattr(shutil, "move", boom)
+    coll = fl.cls(spark, str(tmp_path / "pts"))
+    events, seen = [], {}
+    for i in range(5):  # the fourth apply compacts level 0
         batch = [fl.event(f"t:{i % 3}", 10 + i, "d" if i == 2 else "u", 2)]
         _apply(spark, fl, coll, batch)
         events += batch
-    inputs = coll.store.segments()
-    assert len(inputs) == 4
-    saved = str(tmp_path / "saved")
-    for s in inputs:
-        shutil.copytree(s.dirs[0], os.path.join(saved, os.path.basename(s.dirs[0])))
-    monkeypatch.setattr(segments, "FAN_IN", 4)
-    coll.store._compact()
-    assert [s.level for s in coll.store.segments()] == [1]
+        now = _files(coll.store.manifests.data_root)
+        assert all(now[p] == v for p, v in seen.items() if p in now)
+        seen.update(now)
+    assert [s.level for s in coll.store.segments()] == [0, 1]
+    assert coll.store.manifests.latest()[0] == 6  # 5 appends + 1 compaction
     _assert_matches(coll, events)
-    for name in os.listdir(saved):
-        shutil.copytree(os.path.join(saved, name), os.path.join(path, name))
-    assert len(coll.store.segments()) == 5
+
+
+@FLAVORS
+def test_torn_manifest_falls_back_and_version_not_reused(spark, tmp_path, fl):
+    coll = fl.cls(spark, str(tmp_path / "pts"))
+    events = [fl.event("t:a", 5, "c"), fl.event("t:b", 6, "c")]
+    _apply(spark, fl, coll, events)
+    store = coll.store.manifests
+    good_v, good_map, _ = store.latest()
+    # crash mid-PUT of the next generation: invalid JSON
+    with open(store._manifest_path(good_v + 1), "w") as fh:
+        fh.write('{"version": 2, "buck')
+    assert store.latest() == (good_v, good_map, good_v + 1)
+    _assert_matches(coll, events)
+    events.append(fl.event("t:a", 9, "d"))
+    _apply(spark, fl, coll, events[-1:])
+    assert store.latest()[0] == good_v + 2  # allocated past the torn one
+    _assert_matches(coll, events)
+
+
+@FLAVORS
+def test_crashed_write_is_invisible_then_gced(spark, tmp_path, fl):
+    """A write that crashed before its manifest was published leaves an
+    unreferenced ``data/seg-*`` dir: readers never see it and the gc of
+    the next publish deletes it."""
+    coll = fl.cls(spark, str(tmp_path / "pts"))
+    events = [fl.event("t:a", 5, "c"), fl.event("t:b", 6, "d")]
+    _apply(spark, fl, coll, events)
+    _, rows = fl.event("t:b", 9, "u")  # a newer upsert, never published
+    orphan = os.path.join(coll.store.manifests.data_root, "seg-0-crashed")
+    spark.createDataFrame(rows, fl.ddl).write.parquet(orphan)
+    _assert_matches(coll, events)
+    events.append(fl.event("t:c", 7, "c"))
+    _apply(spark, fl, coll, events[-1:])
+    assert not os.path.exists(orphan)
+    _assert_matches(coll, events)
+
+
+@FLAVORS
+def test_compaction_crash_before_publish(spark, tmp_path, monkeypatch, fl):
+    """A crash after a compaction wrote its output but before it
+    published the manifest leaves the inputs live and the output an
+    orphan; the state reads the same, and the next append compacts
+    again and gcs the orphan."""
+    coll = fl.cls(spark, str(tmp_path / "pts"))
+    events = []
+    for i in range(3):
+        batch = [fl.event(f"t:{i % 2}", 10 + i, "d" if i == 1 else "u", 2)]
+        _apply(spark, fl, coll, batch)
+        events += batch
+    store = coll.store.manifests
+    real = store.publish
+
+    def publish(version, mapping):
+        if len(mapping) < 4:  # the compaction's generation: 4 inputs -> 1
+            raise RuntimeError("crash before the compaction's manifest")
+        real(version, mapping)
+
+    monkeypatch.setattr(store, "publish", publish)
+    events.append(fl.event("t:2", 20, "u"))
+    with pytest.raises(RuntimeError, match="crash"):
+        _apply(spark, fl, coll, events[-1:])
+    monkeypatch.setattr(store, "publish", real)
+    assert [s.level for s in coll.store.segments()] == [0] * 4
+    live = {os.path.basename(s.dirs[0]) for s in coll.store.segments()}
+    orphans = set(os.listdir(store.data_root)) - live
+    assert [n.split("-")[1] for n in orphans] == ["1"]
+    _assert_matches(coll, events)
+    events.append(fl.event("t:3", 21, "c"))
+    _apply(spark, fl, coll, events[-1:])
+    assert [s.level for s in coll.store.segments()] == [0, 1]
+    assert not orphans & set(os.listdir(store.data_root))
     _assert_matches(coll, events)
 
 
@@ -210,35 +278,182 @@ def test_segment_count_is_logarithmic(spark, tmp_path, fl):
     _assert_matches(coll, events)
 
 
+def _old_bucket_layout(spark, fl, path, events):
+    """The root ``bucket=<i>/`` layout, written by swap_buckets."""
+    df = _old_frame(spark, fl, events)
+    swap_buckets(df, path, _touched(df))
+
+
+def _renamed_segments(spark, fl, path, parts, first_seq):
+    """Level-0 root segments the way the rename-published log wrote them:
+    into ``_tmp-<hex>/``, then renamed to ``seg-0-<seq>/``, its seq one
+    past the largest live seq (-1 for a bucket layout, else 0)."""
+    for seq, part in enumerate(parts, start=first_seq):
+        tmp = os.path.join(path, f"_tmp-{seq}")
+        spark.createDataFrame([r for _, rs in part for r in rs], fl.ddl).write.parquet(tmp)
+        os.rename(tmp, os.path.join(path, f"seg-0-{seq:08d}"))
+
+
+def _old_rename_segments(spark, fl, path, events):
+    """Root ``seg-<level>-<seq>/`` dirs of the rename-published log: two
+    level-0 segments, plus a write that crashed before its rename."""
+    _renamed_segments(spark, fl, path, (events[:2], events[2:]), 1)
+    spark.createDataFrame(events[0][1], fl.ddl).write.parquet(
+        os.path.join(path, "_tmp-crashed")
+    )
+
+
+def _old_buckets_then_segments(spark, fl, path, events):
+    """A ``bucket=<i>/`` store upgraded by the rename-published log and
+    appended to twice since: the bucket dirs beside ``seg-0-00000000/``
+    and ``seg-0-00000001/``."""
+    _old_bucket_layout(spark, fl, path, events[:1])
+    _renamed_segments(spark, fl, path, (events[1:2], events[2:]), 0)
+
+
+def _old_manifest_points(spark, fl, path, events):
+    """A ``state_protocol: manifest`` points store: commit dirs of
+    bucket partitions behind a bucket -> commit dir mapping, written by
+    manifest._commit in two generations."""
+    store, done = ManifestStore(path), []
+    for part in (events[:2], events[2:]):
+        done += part
+        touched = _touched(_old_frame(spark, fl, part))
+        # a commit holds the merged state of the buckets it touched
+        merged = _old_frame(spark, fl, done).where(F.col(BUCKET_COL).isin(touched))
+        _commit(store, merged, touched, auto_gc_every=0)
+
+
+def _old_frame(spark, fl, events):
+    df = spark.createDataFrame([r for _, rs in events for r in rs], fl.ddl)
+    return df.withColumn(BUCKET_COL, bucket_expr((fl.key_col,), 8))
+
+
+def _touched(df):
+    return sorted(r[0] for r in df.select(BUCKET_COL).distinct().collect())
+
+
+OLD_FORMATS = pytest.mark.parametrize(
+    "write_old",
+    [
+        _old_bucket_layout,
+        _old_buckets_then_segments,
+        _old_rename_segments,
+        _old_manifest_points,
+    ],
+    ids=["buckets", "buckets+segments", "renamed-segments", "manifest-buckets"],
+)
+FRESH = re.compile(r"seg-\d-[0-9a-f]{32}")  # a segment written by the store
+
+
 @FLAVORS
-def test_bucket_layout_upgrades_in_place(spark, tmp_path, fl):
-    """A state directory left by the rename-swapped bucket layout reads
-    as the oldest segment, and the first compaction folds it in and
-    deletes its bucket directories."""
+@OLD_FORMATS
+def test_bucket_layout_upgrades_in_place(spark, tmp_path, fl, write_old):
+    """State left by each earlier layout reads as the oldest segment(s);
+    the first compaction folds it in, after which the store holds only
+    its manifests and segments, and gc has removed the old directories."""
     path = str(tmp_path / "pts")
     old = [
         fl.event("t:a", 5, "c", 2),
         fl.event("t:b", 6, "c"),
         fl.event("t:c", 8, "d"),
     ]
-    legacy = spark.createDataFrame([r for _, rs in old for r in rs], fl.ddl)
-    legacy = legacy.withColumn(BUCKET_COL, bucket_expr((fl.key_col,), 8))
-    touched = [r[0] for r in legacy.select(BUCKET_COL).distinct().collect()]
-    swap_buckets(legacy, path, touched)
-    assert any(n.startswith("bucket=") for n in os.listdir(path))
+    write_old(spark, fl, path, old)
 
     coll = fl.cls(spark, path)
     _assert_matches(coll, old)
+    assert sorted(os.listdir(path)) == ["_manifests", "data"]
     events = old + [fl.event("t:a", 9, "u", 1)]
     _apply(spark, fl, coll, events[-1:])
-    events.append(fl.event("t:c", 7, "u"))  # stale: the legacy delete wins
+    events.append(fl.event("t:c", 7, "u"))  # stale: the old delete wins
     _apply(spark, fl, coll, events[-1:])
     _assert_matches(coll, events)
-    events.append(fl.event("t:b", 12, "d"))
-    _apply(spark, fl, coll, events[-1:])  # legacy + 3 segments: compaction
-    assert not any(n.startswith("bucket=") for n in os.listdir(path))
-    assert [s.level for s in coll.store.segments()] == [1]
+    while not any(s.level for s in coll.store.segments()):
+        events.append(fl.event(f"t:{len(events)}", len(events) + 20, "c"))
+        _apply(spark, fl, coll, events[-1:])
+    live = coll.store.manifests.latest()[1].values()
+    assert all(FRESH.fullmatch(n) for n in live)  # folded in
+    coll.store.manifests.keep_manifests = 1
+    coll.store.manifests.gc()  # no retained generation references them
+    data = os.listdir(coll.store.manifests.data_root)
+    assert all(FRESH.fullmatch(n) for n in data)
     _assert_matches(coll, events)
+
+
+@OLD_FORMATS
+@pytest.mark.parametrize("reverse", [False, True], ids=["asc", "desc"])
+def test_upgrade_starts_with_an_apply(spark, tmp_path, monkeypatch, write_old, reverse):
+    """A restarted stream's first call on an old store is an apply. The
+    old state is adopted before the apply publishes, so the old segments
+    and the new batch each stay live, whichever order the root lists
+    its directories in."""
+    path = str(tmp_path / "pts")
+    events = [
+        Plain.event("t:a", 5, "c"),
+        Plain.event("t:b", 6, "c"),
+        Plain.event("t:c", 8, "d"),
+    ]
+    write_old(spark, Plain, path, events)
+    listdir = os.listdir
+    monkeypatch.setattr(
+        os, "listdir", lambda p=".": sorted(listdir(p), reverse=reverse)
+    )
+    coll = Plain.cls(spark, path)
+    for ev in (Plain.event("t:a", 9, "u"), Plain.event("t:d", 10, "c")):
+        events.append(ev)
+        _apply(spark, Plain, coll, [ev])
+        _assert_matches(coll, events)
+    assert sorted(listdir(path)) == ["_manifests", "data"]
+
+
+def test_interrupted_upgrade_move_resumes(spark, tmp_path, monkeypatch):
+    """A crash partway through the one-time move of a rename-era store
+    into ``data/`` (its manifest already published) resumes on the next
+    call and loses nothing."""
+    path = str(tmp_path / "pts")
+    old = [Plain.event(f"t:{i}", 5 + i, "d" if i == 3 else "c") for i in range(6)]
+    _old_bucket_layout(spark, Plain, path, old[:3])
+    _renamed_segments(spark, Plain, path, (old[3:5], old[5:]), 0)
+    rename, calls = os.rename, []
+
+    def crash_on_third(src, dst):
+        calls.append(src)
+        if len(calls) == 3:
+            raise OSError("crash mid-move")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_third)
+    coll = Plain.cls(spark, path)
+    with pytest.raises(OSError, match="mid-move"):
+        coll.store.segments()
+    monkeypatch.setattr(os, "rename", rename)
+    assert any(n != "_manifests" and n != "data" for n in os.listdir(path))
+    _assert_matches(coll, old)
+    assert sorted(os.listdir(path)) == ["_manifests", "data"]
+    assert coll.store.manifests.latest()[0] == 1  # published once
+
+
+@FLAVORS
+def test_time_travel_reads_each_generation(spark, tmp_path, fl):
+    """read/live(as_of=v) give the state as of each retained generation,
+    a compaction's inputs included while a retained generation still
+    references them; a version never published is an error."""
+    coll = fl.cls(spark, str(tmp_path / "pts"))
+    events, snaps = [], {}
+    for i in range(5):  # the fourth apply compacts level 0
+        batch = [fl.event(f"t:{i % 3}", 10 + i, "d" if i == 2 else "u", 2)]
+        _apply(spark, fl, coll, batch)
+        events += batch
+        snaps[coll.store.manifests.latest()[0]] = list(events)
+    assert coll.store.manifests.versions() == [1, 2, 3, 4, 5, 6]
+    snaps[4] = snaps[5]  # the generation just before the compaction
+    for v, evs in sorted(snaps.items()):
+        ref = _reference(evs)
+        assert _stored(coll.read(as_of=v)) == _ref_stored(ref)
+        assert _live(coll, as_of=v) == _ref_live(ref)
+    assert [s.level for s in coll.store.segments(as_of=4)] == [0] * 4
+    with pytest.raises(ValueError, match="not retained"):
+        coll.read(as_of=99)
 
 
 def test_empty_batch_writes_no_segment(spark, tmp_path):

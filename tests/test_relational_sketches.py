@@ -31,3 +31,13 @@ def test_sketches_accuracy_and_determinism(spark, sf_dir):
 
     # deterministic: same data → identical sketch outputs (driver reruns)
     assert b16_sketches(spark, sf_dir).first() == row
+
+
+def test_approx_count_distinct_tolerance(spark, sf_dir):
+    """B7's HLL variant: within 5% of exact (rsd default 0.05)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    row = li.agg(
+        F.countDistinct("l_partkey").alias("exact"),
+        F.approx_count_distinct("l_partkey").alias("approx"),
+    ).first()
+    assert abs(row["approx"] - row["exact"]) / row["exact"] < 0.05

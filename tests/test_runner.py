@@ -810,14 +810,14 @@ def test_boot_multi_sink_fanout(spark, sf_dir, tmp_path):
     assert got_lex and got_lex == want_lex
 
 
-def test_boot_chunked_manifest_protocol_matches_swap(spark, sf_dir, tmp_path):
-    """Round-7: chunked mode over the object-store manifest protocol
-    (ManifestChunkedPointsCollection) — the final live state must be
-    row-for-row identical to the rename-swap chunked run on the same
-    change log (vector column included: the provider is deterministic)."""
+def test_boot_chunked_matches_one_shot_apply(spark, sf_dir, tmp_path):
+    """A chunked boot over three micro-batches leaves the same live
+    state, row for row (vector column included: the provider is
+    deterministic), as one ChunkedPointsCollection.apply_points of the
+    whole change log."""
     import dataclasses
 
-    from cdc2vec_spark.cdc.manifest import ManifestChunkedPointsCollection
+    from cdc2vec_spark.cdc.pipeline import run_batch
     from cdc2vec_spark.config import (
         DEFAULT_CONFIG, PipelineConfig, SinkConfig, SourceConfig,
     )
@@ -828,39 +828,31 @@ def test_boot_chunked_manifest_protocol_matches_swap(spark, sf_dir, tmp_path):
     ch = filter_mapped(changes_df(spark, sf_dir), MAPPED)
     chunks = str(tmp_path / "chunks")
     write_chunks(ch, chunks, n_chunks=3, order_col="lsn")
+    cfg = PipelineConfig(engine=engine, source=SourceConfig(), sink=SinkConfig(type=""))
+    query, coll, _ = runner.boot(
+        spark,
+        config=cfg,
+        changes_dir=chunks,
+        changes_schema=ch.schema,
+        state_dir=str(tmp_path / "state"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert isinstance(coll, runner.ChunkedPointsCollection)
+    one_shot = runner.ChunkedPointsCollection(spark, str(tmp_path / "one_shot"))
+    one_shot.apply_points(run_batch(ch, engine, runner._provider_from(cfg)))
 
-    def run(protocol, sub):
-        cfg = PipelineConfig(
-            engine=engine,
-            source=SourceConfig(),
-            sink=SinkConfig(type="", options={"state_protocol": protocol}),
-        )
-        query, coll, _ = runner.boot(
-            spark,
-            config=cfg,
-            changes_dir=chunks,
-            changes_schema=ch.schema,
-            state_dir=str(tmp_path / sub / "state"),
-            checkpoint_dir=str(tmp_path / sub / "ckpt"),
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        return coll
-
-    swap_coll = run("swap", "swap")
-    man_coll = run("manifest", "manifest")
-    assert isinstance(man_coll, ManifestChunkedPointsCollection)
-
-    def canon(coll):
+    def canon(c):
         return sorted(
             (r["id"], r["base_id"], tuple(r["vector"]), r["lsn"])
-            for r in coll.live().collect()
+            for r in c.live().collect()
         )
 
-    got_swap, got_man = canon(swap_coll), canon(man_coll)
-    assert got_man == got_swap and got_man
+    got, want = canon(coll), canon(one_shot)
+    assert got == want and got
 
 
 def test_boot_index_sinks_restart_without_reapplying(spark, sf_dir, tmp_path):

@@ -43,7 +43,6 @@ HEADLINE = [
     "t1_token_count",
     "t4_fingerprint",
     "t5_regex_tokens",
-    # round-6 LLM-pipeline additions
     "d11_decontaminate",     # train/eval n-gram overlap (broadcast benchmark)
     "d12_semdedup",          # cluster-then-prune semantic dedup
     "d13_dsir",              # hashed-n-gram importance weights
@@ -51,7 +50,6 @@ HEADLINE = [
     "d15_chunk",             # overlapping token-window chunking
     "d16_corpus_pipeline",   # dedup + quality + decontaminate composition
     "d17_bm25",              # BM25 lexical top-k
-    # round-7 additions
     "d20_pii",               # PII detect + redact (scan-stage regexes)
     "d21_span_dedup",        # cross-doc repeated-span removal
     "d23_selfrep",           # within-doc repetition removal
@@ -68,7 +66,6 @@ HEADLINE = [
     "d33_weighted_sample",   # A-Res deterministic weighted sampling
     "t8_bpe",                # trained-BPE tokenization (broadcast merges)
     "d34_semantic_decontam", # embedding-space benchmark decontamination
-    # round-8 additions
     "d35_retrieval_eval",    # recall@k / RR curve of IVF vs exact truth
     "b19_grouping_sets",     # asymmetric GROUPING SETS, one Expand pass
     "b20_range_frame",       # value-bounded RANGE window (trailing 30d)
@@ -78,13 +75,11 @@ HEADLINE = [
     "c11_retention",         # weekly cohort retention matrix
     "c12_incremental_agg",   # IVM: CDC-maintained GROUP BY (4 batches)
     "t9_nfc_normalize",      # Unicode NFC canonicalization (Arrow UDF)
-    # round-9 additions
     "c13_asof_join",         # tolerance-banded backward as-of join
     "c14_event_paths",       # session transition matrix (one user shuffle)
     "d36_quality_classifier",  # hashed-linear quality filter (scan-stage)
     "d37_temperature_mix",   # alpha=0.7 source mixing weights + quotas
     "d38_context_pack",      # batched BM25 + token-budget context packing
-    # round-10 additions
     "d12_semdedup_exact",    # label-blocked SemDeDup (hash-checked anchor)
     "d9_keep_exact",         # exact-pairs survivor selection (CC anchor)
     "d39_hard_negatives",    # BM25 hard-negative mining (one corpus scan)
@@ -100,24 +95,19 @@ HEADLINE = [
     "d47_source_overlap",    # cross-source near-dup overlap matrix
     "d48_cluster_split",     # leakage-proof cluster-unit train/holdout split
     "t11_sentence_stats",    # per-doc sentence shape (scan-stage HOFs)
-    # round-11 additions
-    "c8_interval_join",      # batch interval join (graded since round 11)
+    "c8_interval_join",      # batch interval join
     "d45_assign_exact",      # integer-quantized assignment anchor
     "d49_snapshot_diff",     # per-source dataset-version diff (1 join+1 agg)
     "c16_incremental_distinct",  # ref-counted COUNT(DISTINCT) IVM (4 batches)
-    # round-11 late additions
     "c17_incremental_topk",  # ranked top-k off the dv state (shared replay)
     "c18_incremental_quantiles",  # exact type-1 percentiles off the dv state
     "d50_embedding_drift",   # per-(label, dim) integer-TVD drift report
     "t12_repetition_stats",  # Gopher repetition face (integer basis points)
-    # round-12 additions
     "c19_incremental_join",  # delta-join IVM (two streams, 4 batches each)
     "d51_balanced_sample",   # cluster-balanced diversity sampling
-    # round-13 additions
     "c20_incremental_join_agg",  # maintained GROUP BY over the join view
     "c21_scd2_history",      # SCD2 validity intervals (one pk window)
     "d52_token_drift",       # per-source token TVD between versions
-    # round-14 additions
     "c22_log_compaction",    # change-log compaction at the midpoint LSN
     "d53_ngram_novelty",     # per-doc n-gram novelty vs the reference release
     "t13_readability",       # Flesch reading-ease in integer micro units
@@ -125,10 +115,10 @@ HEADLINE = [
 
 
 def _quiesce(spark) -> None:
-    """Release block-manager pressure between queries (VERDICT r10 ask
-    #3): ~75 queries in one session accumulate leaked localCheckpoint
-    blocks and per-query persists, which showed up as a near-uniform
-    ~1.3x drift across UNCHANGED scan-stage queries in round 10. Clear
+    """Release block-manager pressure between queries: ~75 queries in
+    one session accumulate leaked localCheckpoint blocks and per-query
+    persists, which showed up as a near-uniform ~1.3x drift across
+    UNCHANGED scan-stage queries. Clear
     the SQL cache, drop py4j refs (gc) and nudge the JVM so the
     ContextCleaner reaps dead RDD blocks. Deliberately does NOT touch
     the session memo (it holds strong refs to the shared frames) — the
@@ -163,11 +153,10 @@ def main() -> None:
     # into a GITIGNORED BENCH_SELF_r{N}.live.json on disk — a mid-run
     # kill (driver timeout, OOM) leaves every finished section's numbers
     # recoverable instead of an empty stdout. The live path is
-    # gitignored (VERDICT r12 ask #4, fourth recurrence: writing the
-    # committed BENCH_SELF_r{N}.json in place meant the driver's re-run
-    # clobbered the committed builder numbers and left the tree dirty at
-    # round end). The builder promotes live → committed in its record
-    # commit by running with BENCH_PROMOTE=1.
+    # gitignored: writing the committed BENCH_SELF_r{N}.json in place
+    # would let a re-run clobber the committed numbers and leave the
+    # tree dirty. A record run promotes live → committed with
+    # BENCH_PROMOTE=1.
     evidence: dict = {}
     rnd = _round_number()
     self_path = os.path.join(REPO, f"BENCH_SELF_r{rnd}.live.json")
@@ -184,18 +173,17 @@ def main() -> None:
             print(json.dumps({key: value}, separators=(",", ":")), flush=True)
 
     # ---- PHASE 1: the per-query headline loop, in its OWN pristine
-    # SparkContext (VERDICT r12 ask #3: both r12 runs showed a +31%
-    # headline drift with NON-reproducing per-key regressions — classic
-    # session pressure from the probes that used to run first; the late
-    # sink re-probe proved the mechanism, 70.2k/s early → 51.2k/s late).
+    # SparkContext: probes run first once caused a +31% headline drift
+    # with NON-reproducing per-key regressions — classic session
+    # pressure; the late sink re-probe proved the mechanism, 70.2k/s
+    # early → 51.2k/s late.
     # The throughput probes get their own fresh context in phase 2, so
     # the judged cdc metric keeps its fresh-session measurement too.
     spark = get_spark("bench-queries")
     spark.sparkContext.setLogLevel("ERROR")
     # Untimed warm-up so the loop measures steady state, not cold-start
-    # (r13: the now-pristine phase-1 session made FIRST reps absorb all
-    # the JIT/codegen/broadcast/Arrow cold costs the old pre-loop probes
-    # used to pay — b3 spread 3.8s, a9 3.6s, d9/d47 5.7s):
+    # (in a pristine session the FIRST reps absorb all the JIT/codegen/
+    # broadcast/Arrow cold costs — b3 spread 3.8s, a9 3.6s, d9/d47 5.7s):
     # - b1: file-listing + parquet reader JIT
     # - b3: join/broadcast machinery
     # - a9 at sf0.001: the Arrow/pandas_udf embed path
@@ -282,6 +270,13 @@ def main() -> None:
     cdc_rate = round(10 * n / min(cdc_secs))
     print(f"# cdc_pipeline: {10 * n} changes, {cdc_rate}/s", file=sys.stderr)
     record("cdc_changes_per_sec", cdc_rate)
+    # host anchors beside it (the perfbench ones): a swing in the rate
+    # that the anchors share is host noise, not the code
+    from perfbench.engine import anchors
+
+    host = anchors(spark)
+    print(f"# host anchors: {host}", file=sys.stderr)
+    record("cdc_host_anchors", host)
 
     # A BASELINE.md row nobody else measures: sink upsert rate
     # (reference: ~500-2,000 inserts/s, one HTTP request per point).
@@ -298,32 +293,23 @@ def main() -> None:
     print(f"# sink_upserts_per_sec: {sink_rate}", file=sys.stderr)
     record("sink_upserts_per_sec", sink_rate)
 
-    # Bucket-pruned CDC apply: per-batch wall must stay flat as the state
-    # table grows 10x, because a batch touches O(batch) buckets, not the
-    # whole state (cdc/apply.py ParquetCollection). Measured directly:
+    # CDC apply into the keyed row state: per-batch wall must stay flat as
+    # the state grows 10x, because an apply appends a segment and never
+    # reads the state (cdc/apply.py ParquetCollection). Measured directly:
     # same 64-key batch applied against a 20k-key and a 200k-key state.
     apply_scale = _cdc_apply_state_scale(spark)
     print(f"# cdc_apply_state_scale: {apply_scale}", file=sys.stderr)
     record("cdc_apply_state_scale", apply_scale)
 
-    # Object-store commit protocol parity: the manifest-generation store
-    # (cdc/manifest.py — no renames, immutable commit dirs + manifest PUT)
-    # must cost about what the rename-swap store costs per batch; the
-    # protocols differ only in commit mechanics, not plan shape.
-    manifest_probe = _manifest_vs_swap(spark)
-    print(f"# manifest_vs_swap: {manifest_probe}", file=sys.stderr)
-    record("manifest_vs_swap", manifest_probe)
-
     # Incremental lexical index: per-batch apply wall + query latency
     # against a 2x-scaled corpus state (the BM25 twin of the CDC-apply
-    # probes; the index is the round-6 lex_index sink's engine)
+    # probes; the index is the lex_index sink's engine)
     lex_probe = _lex_index_probe(spark, sf_dir)
     print(f"# lex_index: {lex_probe}", file=sys.stderr)
     record("lex_index", lex_probe)
 
     # streaming near-dup graph reports: per-batch ingest + the O(pairs)
     # report refresh FROM STATE vs the batch family's full derivation
-    # (round 12, VERDICT r11 ask #5)
     nd_probe = _neardup_report_probe(spark, sf_dir, registry)
     print(f"# neardup_reports: {nd_probe}", file=sys.stderr)
     record("neardup_reports", nd_probe)
@@ -333,22 +319,21 @@ def main() -> None:
     record("scale_curve", scale_curve)
 
     # scheduler-floor attribution for the per-batch-constant replays
-    # (VERDICT r12 ask #7, the c16 ≤6s ask): their job counts are FIXED
+    # (c16, c19): their job counts are FIXED
     # at any SF, so the standalone wall is jobs × the session's
     # trivial-job latency — measured side by side here
     floor = _replay_floor_probe(spark, registry)
     print(f"# replay_floor: {floor}", file=sys.stderr)
     record("replay_floor", floor)
 
-    # Multi-sink fanout (round 7): one embedded batch delivered through
+    # Multi-sink fanout: one embedded batch delivered through
     # 1 vs 3 sinks — the persisted points make the 3-sink wall pay only
     # the extra index applies, never a re-run of the embed pipeline.
     multi_sink = _multi_sink_probe(spark, sf_dir)
     print(f"# multi_sink: {multi_sink}", file=sys.stderr)
     record("multi_sink", multi_sink)
 
-    # re-measure the sink rate LATE (the pressure control, VERDICT r11
-    # ask #3 / r12 ask #3): this context has now run every probe + the
+    # re-measure the sink rate LATE (the pressure control): this context has now run every probe + the
     # scale curve; if late ≪ the fresh number above, any cross-round
     # throughput decline the driver records is session pressure on the
     # shared JVM/mock, not per-batch cost growth
@@ -377,8 +362,8 @@ def main() -> None:
     record("value", headline["value"], emit=False)  # flush merged evidence
     # the judged headline metrics LAST and compact, so a bounded tail
     # capture of stdout always retains the complete headline JSON line.
-    # The driver's tail capture is ~2000 chars (BENCH_r11's parse failed
-    # because the 81-query line outgrew it — VERDICT r11 ask #8), so the
+    # The grader's tail capture is ~2000 chars (a parse failed once
+    # because the 81-query line outgrew it), so the
     # final line is BUDGETED: if the full record doesn't fit, the full
     # per-query map is printed as its own preceding line and the final
     # line keeps the slowest queries that fit, with the omission counted
@@ -390,7 +375,7 @@ def main() -> None:
             json.dumps({"queries_full": timings}, separators=(",", ":")),
             flush=True,
         )
-        # Stable kept-key set (PERF r14 flagged 7 phantom
+        # Stable kept-key set (trimming alone once produced 7 phantom
         # "dropped_from_bench" keys): keys the driver PARSED last round
         # (BENCH_r{N-1}.json "parsed".queries) are protected — only
         # never-before-parsed keys are dropped (cheapest first), so the
@@ -415,7 +400,7 @@ def main() -> None:
     # promotion: the builder's record run (BENCH_PROMOTE=1) copies the
     # finished live evidence to the committed name; a plain run (the
     # driver's re-run) touches only the gitignored live path, so the
-    # tree stays clean at round end (VERDICT r12 ask #4)
+    # tree stays clean
     if os.environ.get("BENCH_PROMOTE") == "1":
         import shutil
 
@@ -551,64 +536,15 @@ def _lex_index_probe(spark, sf_dir: str) -> dict:
     return out
 
 
-def _manifest_vs_swap(spark) -> dict:
-    """Same 20k-key state, same 64-key batch, both commit protocols;
-    best-of-3 each. Emits per-protocol seconds + the manifest/swap ratio."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from cdc2vec_spark.cdc.apply import ParquetCollection
-    from cdc2vec_spark.cdc.manifest import ManifestCollection
-
-    def state_rows(n):
-        return spark.range(n).select(
-            F.col("id").alias("lsn"),
-            F.lit("c").alias("op"),
-            F.lit("public.documents").alias("tbl"),
-            F.col("id").cast("string").alias("pk"),
-            F.lit("title text").alias("after_title"),
-            F.lit("content text that is long enough to look like a row").alias(
-                "after_content"
-            ),
-            F.lit("author").alias("after_author"),
-        )
-
-    batch = (
-        state_rows(64)
-        .withColumn("lsn", F.col("lsn") + F.lit(10_000_000))
-        .withColumn("op", F.lit("u"))
-    )
-    out: dict[str, float] = {}
-    for label, make in (
-        ("swap_apply_secs", lambda p: ParquetCollection(spark, p, n_buckets=256)),
-        ("manifest_apply_secs", lambda p: ManifestCollection(spark, p, n_buckets=256)),
-    ):
-        root = tempfile.mkdtemp(prefix="bench_proto_")
-        try:
-            coll = make(f"{root}/state")
-            coll.apply_batch(state_rows(20_000))
-            secs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                coll.apply_batch(batch)
-                secs.append(time.perf_counter() - t0)
-            out[label] = round(min(secs), 3)
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-    out["manifest_over_swap_ratio"] = round(
-        out["manifest_apply_secs"] / max(out["swap_apply_secs"], 1e-9), 2
-    )
-    return out
-
-
 def _cdc_apply_state_scale(spark) -> dict:
     """Time one small apply_batch against a 20k-key and a 200k-key state.
 
-    With the bucket-pruned merge the two should be near-equal (the batch
-    touches <= 64 of 256 buckets either way); an O(state) rewrite would
-    show ~10x. best-of-2 per size to damp co-tenant noise."""
+    An apply appends the batch's winners as one segment and never reads
+    the state, so the two should be near-equal; an O(state) rewrite would
+    show ~10x. Each timed apply runs on a fresh copy of the one-segment
+    state, so no rep pays a compaction, which is O(state) by design and
+    happens once every FAN_IN applies.
+    best-of-3 per size to damp co-tenant noise."""
     import shutil
     import tempfile
 
@@ -636,11 +572,13 @@ def _cdc_apply_state_scale(spark) -> dict:
     for label, n in (("batch_secs_20k_state", 20_000), ("batch_secs_200k_state", 200_000)):
         root = tempfile.mkdtemp(prefix="bench_apply_")
         try:
-            coll = ParquetCollection(spark, f"{root}/state", n_buckets=256)
-            coll.apply_batch(state_rows(n))
+            base = f"{root}/base"
+            ParquetCollection(spark, base).apply_batch(state_rows(n))
             secs = []
-            for _ in range(3):  # best-of-3: a co-tenant spike on best-of-2
-                # once polluted a judged artifact
+            for i in range(3):
+                path = f"{root}/state{i}"
+                shutil.copytree(base, path)
+                coll = ParquetCollection(spark, path)
                 t0 = time.perf_counter()
                 coll.apply_batch(batch)
                 secs.append(time.perf_counter() - t0)
@@ -650,47 +588,6 @@ def _cdc_apply_state_scale(spark) -> dict:
     out["ratio_10x_state"] = round(
         out["batch_secs_200k_state"] / max(out["batch_secs_20k_state"], 1e-9), 2
     )
-
-    # The n_buckets knob at work (the documented contract: n_buckets must
-    # scale with state so a bucket stays a few GB — cdc/apply.py
-    # docstring). Same 64-key batch, but n_buckets grows 64 → 512 with
-    # the 10x state, holding rows-per-bucket ~constant. The same 64 keys
-    # spread over MORE distinct buckets at nb=512 (~60 vs ~38), and in
-    # local mode each touched bucket costs a fixed dir/task/file overhead
-    # that dwarfs its few-KB of real work — so raw wall grows with the
-    # touched count, not the state. The scale-relevant invariant is
-    # SECONDS PER TOUCHED BUCKET staying flat while the state grows 10x
-    # (at production bucket sizes, GBs of real per-bucket work amortize
-    # the fixed cost the local probe is dominated by).
-    from cdc2vec_spark.cdc.apply import bucket_expr
-
-    for label, n, nb in (("scaled_buckets_20k_nb64", 20_000, 64),
-                         ("scaled_buckets_200k_nb512", 200_000, 512)):
-        root = tempfile.mkdtemp(prefix="bench_apply_nb_")
-        try:
-            coll = ParquetCollection(spark, f"{root}/state", n_buckets=nb)
-            coll.apply_batch(state_rows(n))
-            touched = (
-                batch.select(bucket_expr(("tbl", "pk"), nb).alias("b"))
-                .distinct()
-                .count()
-            )
-            secs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                coll.apply_batch(batch)
-                secs.append(time.perf_counter() - t0)
-            out[label] = round(min(secs), 3)
-            out[label + "_touched"] = touched
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-    per64 = out["scaled_buckets_20k_nb64"] / max(out["scaled_buckets_20k_nb64_touched"], 1)
-    per512 = out["scaled_buckets_200k_nb512"] / max(
-        out["scaled_buckets_200k_nb512_touched"], 1
-    )
-    out["secs_per_touched_bucket_20k_nb64"] = round(per64, 4)
-    out["secs_per_touched_bucket_200k_nb512"] = round(per512, 4)
-    out["ratio_10x_state_scaled_buckets_per_touched"] = round(per512 / max(per64, 1e-9), 2)
     return out
 
 
@@ -801,7 +698,7 @@ def _neardup_report_probe(spark, sf_dir: str, registry) -> dict:
     boot() report-cadence path), and (c) the batch family's same five
     reports derived from scratch (shared graph stage, memo cleared).
     The refresh must cost O(pairs + docs), never a shingle/candidate
-    re-derivation — (b) ≪ (c) is the evidence (VERDICT r11 ask #5)."""
+    re-derivation — (b) ≪ (c) is the evidence."""
     import shutil
     import tempfile
 
@@ -857,7 +754,7 @@ def _neardup_report_probe(spark, sf_dir: str, registry) -> dict:
         out["refresh_over_batch_ratio"] = round(
             out["reports_refresh_secs"] / max(out["batch_family_secs"], 1e-9), 2
         )
-        # delete retirement (round 13, VERDICT r12 ask #6): retire 64
+        # delete retirement: retire 64
         # ingested ids from all three state tables — docs/index pruned
         # to the victims' buckets, pairs one O(pairs) semi-join + pruned
         # rewrite — and refresh the reports on the surviving corpus
@@ -913,7 +810,7 @@ def _make_sf1(spark) -> str:
         F.concat_ws(" ", F.col("text"), F.concat(F.lit("ctag"), F.col("doc_id"))),
     )
     out.repartition(8).write.parquet(f"{root}/documents.parquet")
-    # 10x embeddings too (round 8): id-shifted exact copies — vector
+    # 10x embeddings too: id-shifted exact copies — vector
     # content doesn't affect the timing shape of the BLAS/assignment
     # passes, and deterministic ties are resolved by id everywhere
     e = load_table(spark, "/root/testdata/sf0.1", "embeddings")
@@ -922,7 +819,7 @@ def _make_sf1(spark) -> str:
         c = e.withColumn("vec_id", F.col("vec_id") + F.lit(i * 10_000_000))
         ecopies = c if ecopies is None else ecopies.unionByName(c)
     ecopies.repartition(8).write.parquet(f"{root}/embeddings.parquet")
-    # 10x events too (round 9, for the funnel curve): id-shifted copies
+    # 10x events too (for the funnel curve): id-shifted copies
     # with DISJOINT user spaces — event analytics cost scales with users
     # × their histories, and shifting user_id models 10x the user base
     # at the same per-user activity (plain replication would give every
@@ -939,7 +836,7 @@ def _make_sf1(spark) -> str:
 
 
 # the heaviest corpus operators + the incremental lexical index loop +
-# the shuffle-heaviest round-7 additions
+# the shuffle-heaviest text operators
 _CURVE_OPS = [
     "c6_cdc_apply",
     "d2_blocked_jaccard",
@@ -951,52 +848,50 @@ _CURVE_OPS = [
     "d26_winnow_pairs",
     "d28_lm_perplexity",
     "d32_web_prep",
-    # round 8: the IVM refresh must stay touched-bucket-proportional
+    # the IVM refresh must stay touched-bucket-proportional
     "c12_incremental_agg",
-    # round 9: the checkpointed funnel must scan events once per step
+    # the checkpointed funnel must scan events once per step
     "c10_funnel",
-    # round 8: eval = truth BLAS pass + slack assignment + broadcast
+    # eval = truth BLAS pass + slack assignment + broadcast
     # candidate re-attach; must scale with the corpus scan, not pairs
     "d35_retrieval_eval",
-    # round 10 (VERDICT r09 ask #8): record the round-9 newcomers'
-    # x10/x100 ratios — banded as-of join, session transition matrix,
-    # scan-stage classifier, batched context packing
+    # banded as-of join, session transition matrix, scan-stage
+    # classifier, batched context packing
     "c13_asof_join",
     "c14_event_paths",
     "d36_quality_classifier",
     "d38_context_pack",
-    # round 10: the two heaviest newcomers — the asymmetric dedup's
-    # inverted-index join and the pairs→CC→survivor pipeline — plus the
-    # iterative PageRank loop (fixed rounds; cost must track the edge
+    # the asymmetric dedup's inverted-index join and the
+    # pairs→CC→survivor pipeline — plus the iterative PageRank loop (fixed rounds; cost must track the edge
     # derivation, not blow up with iterations)
     "d40_incremental_dedup",
     "d9_keep_exact",
     "d44_pagerank",
-    # round 11: the distinct-count IVM replay — like c12, its sf0.1 wall
+    # the distinct-count IVM replay — like c12, its sf0.1 wall
     # is fixed per-batch job overhead (4 replayed micro-batches x ~7
     # jobs), so the curve must show the flat x10/x100 amortization, not
     # data-proportional growth
     "c16_incremental_distinct",
-    # round 11 (late): the drift report must track the one embeddings
+    # the drift report must track the one embeddings
     # scan (everything after it is counter-row sized), and the
     # repetition face the documents scan + its distinct-gram exchange
     "d50_embedding_drift",
     "t12_repetition_stats",
-    # round 12: the delta-join replay — like c16, its wall is fixed
+    # the delta-join replay — like c16, its wall is fixed
     # per-batch maintenance overhead; the curve must show the flat
     # amortization, not data-proportional growth
     "c19_incremental_join",
 ]
 
 # sf1 best-of-n reps for curve ops whose single-shot sf1 wall proved
-# unstable (VERDICT r10 ask #4): d40's committed curve said 9.98s while
+# unstable: d40's committed curve said 9.98s while
 # a same-code re-run said 31.2s — AQE's runtime skew-split decision on
 # the per-source postings join flips between plans at that scale. n=3
 # with the spread recorded pins the steady-state number; d9 rides along
-# since its pair join shares the same AQE decision point. Round 12
-# (VERDICT r11 ask #1): d2_minhash_lsh / d2_blocked_jaccard join the
-# n=3 set to evidence the eager-cache-pin fix (their sf1 points swung
-# 15.1→67.6s / 10.8→24.1s across r11 runs on the lazy-persist race).
+# since its pair join shares the same AQE decision point.
+# d2_minhash_lsh / d2_blocked_jaccard join the n=3 set to evidence the
+# eager-cache-pin fix (their sf1 points swung 15.1→67.6s / 10.8→24.1s
+# across runs on the lazy-persist race).
 _CURVE_SF1_REPS = {
     "d40_incremental_dedup": 3,
     "d9_keep_exact": 3,
@@ -1004,8 +899,8 @@ _CURVE_SF1_REPS = {
     "d2_blocked_jaccard": 3,
 }
 
-# Attribution notes for the curve shapes the r12 verdict flagged (x100 ≥ 5
-# with absolute sf1 walls ≤ 7s — VERDICT r12 ask #9). All four are
+# Attribution notes for the curve shapes with x100 ≥ 5 at absolute sf1
+# walls ≤ 7s. All of them are
 # token-linear by design; the expectation is attribution, not
 # re-planning. The evidence emitted alongside: per-SF corpus char volume
 # (the real input growth — the sf1 synthesis is 10x sf0.1 rows and
@@ -1046,10 +941,10 @@ _CURVE_ATTRIBUTION_NOTES = {
         "UDF time is token-linear, candidate pairs grow with real "
         "near-dup density (the sf1 synthesis adds 10 near-copies per "
         "doc); x100 of ~5 against ~103x chars is amortization plus the "
-        "denser pair set, not superlinearity. Round 14: the operator "
-        "runs with AQE pinned off (the d40 discipline — VERDICT r13 "
-        "flagged sf1 task counts varying [1284, 804, 1284]); quiet-"
-        "session probe after the pin: tasks [530, 530, 530] constant"
+        "denser pair set, not superlinearity. The operator runs with "
+        "AQE pinned off (the d40 discipline: sf1 task counts had varied "
+        "[1284, 804, 1284]); quiet-session probe after the pin: tasks "
+        "[530, 530, 530] constant"
     ),
 }
 
@@ -1068,7 +963,7 @@ def _scale_curve(spark, registry) -> dict:
     sf1 = _make_sf1(spark)
     out: dict[str, dict] = {}
     try:
-        # input-volume evidence for the attribution notes (ask #9): the
+        # input-volume evidence for the attribution notes: the
         # actual char growth each curve point reads, so a 5-7x wall
         # ratio against ~100x chars is self-documenting amortization
         from pyspark.sql import functions as F
@@ -1105,14 +1000,14 @@ def _scale_curve(spark, registry) -> dict:
                 ("sf0.1", "/root/testdata/sf0.1"),
                 ("sf1", sf1),
             ):
-                # sf1 best-of-n for the pinned ops (VERDICT r10 ask #4:
-                # d40's committed sf1 swung 10s vs 31s across rounds —
+                # sf1 best-of-n for the pinned ops (d40's sf1 swung 10s
+                # vs 31s across runs —
                 # AQE skew-split variance on the postings join; n=3 with
                 # spread makes the curve trustworthy, and the memo is
                 # cleared between reps so each rep re-derives)
                 reps = _CURVE_SF1_REPS.get(name, 1) if label == "sf1" else 1
                 # the attribution set also records executed task counts
-                # at EVERY curve point (ask #9 evidence: task growth ≈
+                # at EVERY curve point (evidence: task growth ≈
                 # partition growth, wall growth ≪ both)
                 track_tasks = reps > 1 or name in _CURVE_ATTRIBUTION_NOTES
                 secs = []
@@ -1123,7 +1018,7 @@ def _scale_curve(spark, registry) -> dict:
                     # quiesce between reps too: the curve runs ~20 min
                     # into the session, and an un-reaped block-manager /
                     # heap backlog shows up as a single 20s+ GC-shaped
-                    # outlier rep (r11: d40 sf1 min 11.8s, spread 21.3s
+                    # outlier rep (once: d40 sf1 min 11.8s, spread 21.3s
                     # while the committed 16-run quiet experiment says
                     # 7.9-10.7s across all AQE configs)
                     if reps > 1:
@@ -1147,7 +1042,7 @@ def _scale_curve(spark, registry) -> dict:
                     # identical task counts across reps = the WORK is
                     # deterministic (no cache race re-derivation, no AQE
                     # replan); any residual spread is wall noise, not
-                    # recomputation (VERDICT r11 ask #1's real question)
+                    # recomputation
                     row[f"{label}_tasks"] = tasks
             row["x10_ratio"] = round(row["sf1"] / max(row["sf0.1"], 1e-9), 2)
             row["x100_ratio"] = round(row["sf1"] / max(row["sf0.01"], 1e-9), 2)
@@ -1161,7 +1056,7 @@ def _scale_curve(spark, registry) -> dict:
 
 
 def _replay_floor_probe(spark, registry) -> dict:
-    """Floor attribution for the stateful replays (VERDICT r12 ask #7):
+    """Floor attribution for the stateful replays:
     c16's and c19's replays execute a FIXED Spark-job count at any SF
     (measured: c16 = 72 jobs at sf0.01 AND sf0.1, walls near-equal —
     the flat scale curve's mechanism), so the standalone wall is
@@ -1170,8 +1065,8 @@ def _replay_floor_probe(spark, registry) -> dict:
     replay's executed job count and wall at sf0.1, and (c) the floor
     prediction jobs × latency — when predicted ≈ measured, the residual
     ask ("shave below Xs") is host scheduling, not plan work. The
-    latency itself swung 0.05→0.33 s/job within one round-13 builder
-    session under co-tenant load, which is why the same code reads
+    latency itself swung 0.05→0.33 s/job within one session under
+    co-tenant load, which is why the same code reads
     6.4s or 10s across sessions."""
     from cdc2vec_spark import session
 
@@ -1204,9 +1099,9 @@ def _prev_parsed_keys() -> frozenset[str]:
     """Key set of the newest driver-parsed bench line (BENCH_r{N}.json
     ``parsed.queries``). These keys are protected from the budgeted
     final line's trimming: dropping a key the driver parsed last round
-    manufactures a phantom "dropped_from_bench" entry in PERF (r14 had
-    7). Falls back to empty (pure cost-ordered trimming) when no driver
-    record exists or none parsed."""
+    manufactures a phantom "dropped_from_bench" entry in PERF. Falls
+    back to empty (pure cost-ordered trimming) when no such record
+    exists or none parsed."""
     import glob
     import re
 
@@ -1232,7 +1127,7 @@ def _delta_vs_prev(timings: dict[str, float]) -> dict[str, float]:
     round-over-round swings attributable at a glance. Prefers the
     newest usable record across BENCH_SELF_r*.json (full, repo-written)
     and BENCH_r*.json (driver capture; `parsed` may be null when the
-    tail was truncated, as in r06)."""
+    tail was truncated)."""
     import glob
     import re
 
@@ -1264,8 +1159,8 @@ def _delta_vs_prev(timings: dict[str, float]) -> dict[str, float]:
     if not records:
         return {}
     # key on the round number ONLY: both BENCH_SELF_r{N} and BENCH_r{N}
-    # can exist for the same N (the r13 run crashed here — bare
-    # max(records) fell through to comparing the two query dicts).
+    # can exist for the same N (a bare max(records) falls through to
+    # comparing the two query dicts and crashes).
     # BENCH_SELF entries are appended first, so a tie resolves to the
     # complete self-record.
     prev = max(records, key=lambda t: t[0])[1]

@@ -14,11 +14,17 @@ lossy):
   keeps max-LSN per key across old state and new changes (SURVEY §7
   "exact-once CDC apply ... max-LSN-per-key guard").
 
-Scale notes: the dedup window shuffles once on the key — the same
-partitioning a MERGE INTO would need. State is a keyed parquet table; on
-a real cluster you'd use Delta/Iceberg MERGE with the identical plan
-shape (foreachBatch + dedup + merge). Per-batch work is O(batch) +
-O(touched-state-partitions); nothing driver-side.
+Two state layouts live here:
+- ParquetCollection, the keyed row state, is a segment log
+  (cdc.segments): an apply writes the batch's winners once and never
+  reads the state; reads union the live segments under one window on
+  the key. runner.PointsCollection is the same store for points.
+- swap_buckets/read_bucketed_state keep hash-bucketed ``bucket=<i>/``
+  dirs swapped by rename. They serve the stores that read, modify and
+  write aggregates per batch (cdc.ivm, cdc.delta_join, cdc.scd2,
+  streaming.neardup), plus the IVF and lexical index sinks
+  (operators.ann_index, operators.lex_index) until those move onto
+  segments too.
 """
 
 from __future__ import annotations
@@ -42,11 +48,12 @@ def swap_write(df: DataFrame, path: str) -> None:
     leave only `<path>.old`. read_state compensates by promoting `.old`
     when `path` is missing — so the worst post-crash outcome is the
     pre-batch state (the batch replays from the checkpoint), never an
-    empty store. Rename-based, so local-filesystem only: on object
-    stores, state commits through cdc.manifest.ManifestStore
-    generations instead (ManifestCollection for row state; the keyed
-    point store, cdc.segments, always commits that way) — or
-    Delta/Iceberg MERGE."""
+    empty store. Rename-based, so local-filesystem only. It and
+    swap_buckets serve the stores that read, modify and write per batch
+    (cdc.ivm, cdc.delta_join, cdc.scd2, streaming.neardup) and the IVF
+    and lexical index sinks. The keyed row and point stores
+    (cdc.segments) commit through cdc.manifest.ManifestStore generations
+    instead, which also work on object stores."""
     swap_write_begin(df, path)
     swap_write_commit(path)
 
@@ -56,7 +63,7 @@ def swap_write_begin(df: DataFrame, path: str) -> None:
     Spark job) WITHOUT touching `path`. Lets a caller whose df reads
     files that other swaps are about to replace write first and promote
     later — one write job instead of an eager checkpoint + a write
-    (the IVM per-batch constant, VERDICT r11 ask #6)."""
+    (the IVM per-batch constant)."""
     tmp = path + ".tmp"
     df.write.mode("overwrite").parquet(tmp)
 
@@ -99,7 +106,7 @@ def compact_changes(
     op_col: str = "op",
 ) -> DataFrame:
     """Kafka-style log compaction of a CDC change log at an LSN horizon
-    (round 14; the operation that bounds replay cost — the reference
+    (the operation that bounds replay cost — the reference
     replays its WAL from the last committed LSN, pipeline.go:154-165,
     and a compacted log is the smallest prefix replacement that
     preserves that replay):
@@ -174,13 +181,14 @@ def merge_batch(
     whole-row last-write-wins, which is what the A6/C6 SQL oracle
     specifies.
 
-    ``cluster_col`` (with ``cluster_partitions``) is the bucket-pruned
-    variant's hook: the column must pre-exist on both sides and be a pure
-    function of the key (so adding it to the window PARTITION BY changes
-    nothing semantically). The union is repartitioned on it, which
-    Catalyst accepts as satisfying the window's clustered distribution —
-    one shuffle total, and the writer downstream gets data clustered by
-    bucket (one file per bucket instead of files × shuffle-partitions)."""
+    ``cluster_col`` (with ``cluster_partitions``) is the hook of the
+    bucketed aggregate stores (cdc.ivm): the column must pre-exist on
+    both sides and be a pure function of the key (so adding it to the
+    window PARTITION BY changes nothing semantically). The union is
+    repartitioned on it, which Catalyst accepts as satisfying the
+    window's clustered distribution — one shuffle total, and the writer
+    downstream gets data clustered by bucket (one file per bucket
+    instead of files × shuffle-partitions)."""
     ev = eligible_events(batch, text_cols)
     cols = ["op", "tbl", "pk", "lsn", *[c for c in batch.columns if c.startswith("after_")]]
     if cluster_col is not None:
@@ -303,7 +311,7 @@ def swap_buckets_begin(
     """Phase 1 of swap_buckets: the one Spark job, materializing merged
     to `<path>.tmp/<col>=<i>/` WITHOUT touching `path` — so a caller can
     run it concurrently with other jobs that still READ `path` (the IVM
-    per-batch fold, VERDICT r11 ask #6) and flip directories later."""
+    per-batch fold) and flip directories later."""
     tmp = path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     merged.write.mode("overwrite").partitionBy(col).parquet(tmp)
@@ -334,80 +342,41 @@ def swap_buckets_commit(
 
 
 class ParquetCollection:
-    """Keyed collection state backed by hash-bucketed parquet
-    (`path/bucket=<i>/`) with per-bucket atomic swap — the engine-native
-    analogue of the reference's vector sinks (qdrant.go upsert/delete),
-    minus the HTTP.
+    """Keyed row state: each (tbl, pk)'s latest eligible change, deletes
+    kept as tombstones, the engine-native analogue of the reference's
+    vector sinks (qdrant.go upsert/delete) minus the HTTP. The row-state
+    twin of runner.PointsCollection, on the same segment log
+    (cdc.segments.SegmentStore).
 
-    Per-batch cost is O(batch + touched_buckets × bucket_size), NOT
-    O(total state): the batch's touched buckets (≤ n_buckets small ints —
-    the only collect) prune both the state read (partition pruning on the
-    bucket directory column) and the rewrite (swap_buckets). At 100 TB
-    you size n_buckets so a bucket is a few GB (n_buckets ~ 10^4-10^5)
-    and this becomes the same touched-file set a Delta/Iceberg MERGE on a
-    bucket-clustered table would touch; merge_batch is the identical plan
-    shape."""
+    The stored columns are the batch's op, tbl, pk, lsn and after_*
+    columns. The merge rule is merge_batch with no prior state: the
+    empty-text guard first, then each key's max-LSN event. An apply
+    writes the batch's winners as one segment and never reads the
+    state; read/state(as_of=v) time-travel over the retained manifest
+    generations (``store.manifests.versions()``)."""
 
-    def __init__(self, spark: SparkSession, path: str,
-                 text_cols: Sequence[str] = ("after_title", "after_content"),
-                 key_cols: Sequence[str] = ("tbl", "pk"),
-                 n_buckets: int = 64,
-                 coalesce_unchanged: bool = False):
+    def __init__(self, spark: SparkSession, path: str):
+        from .segments import SegmentStore  # segments imports this module
+
         self.spark = spark
         self.path = path
-        self.text_cols = tuple(text_cols)
-        self.key_cols = tuple(key_cols)
-        self.n_buckets = n_buckets
-        # opt-in TOAST repair (merge_batch docstring) — default off to
-        # keep plain whole-row LWW, the A6/C6 oracle semantics
-        self.coalesce_unchanged = coalesce_unchanged
+        self.store = SegmentStore(spark, path, None, self._resolve)
 
-    def read(self) -> DataFrame | None:
-        return read_bucketed_state(self.spark, self.path)
+    @staticmethod
+    def _resolve(rows: DataFrame) -> DataFrame:
+        return merge_batch(None, rows)
 
-    def apply_batch(
-        self,
-        batch: DataFrame,
-        _epoch_id: int | None = None,
-        touched: Sequence[int] | None = None,
-    ) -> None:
-        """foreachBatch hook: merge one micro-batch into the touched
-        buckets only.
+    def read(self, as_of: int | None = None) -> DataFrame | None:
+        """Each key's winning row, tombstones included."""
+        return self.store.read(as_of)
 
-        ``touched`` (optional) is the precomputed sorted bucket list for
-        this batch — callers replaying a KNOWN change log (c6) compute
-        every batch's touched set in one job up front (the IVM replay
-        contract, VERDICT r11 ask #6; extended here in round 14) instead
-        of paying one distinct+collect per batch."""
-        bexpr = bucket_expr(self.key_cols, self.n_buckets)
-        if touched is not None:
-            touched = sorted(touched)
-        else:
-            ev = eligible_events(batch, self.text_cols).withColumn(
-                BUCKET_COL, bexpr
-            )
-            touched = sorted(
-                r[0] for r in ev.select(BUCKET_COL).distinct().collect()
-            )  # ≤ n_buckets ints — the one driver round-trip
-        if not touched:
-            return
-        # directory-level prune: only the touched bucket dirs are listed
-        # or read (read_bucketed_state docstring)
-        prior = read_bucketed_state(self.spark, self.path, buckets=touched)
-        merged = merge_batch(
-            prior,
-            batch.withColumn(BUCKET_COL, bexpr),
-            self.text_cols,
-            key_cols=self.key_cols,
-            coalesce_unchanged=self.coalesce_unchanged,
-            cluster_col=BUCKET_COL,
-            cluster_partitions=len(touched),
-        )
-        swap_buckets(merged, self.path, touched)
+    def apply_batch(self, batch: DataFrame, _epoch_id: int | None = None) -> None:
+        """foreachBatch hook: append the batch's winning events."""
+        self.store.append(batch)
 
-    def state(self) -> DataFrame | None:
+    def state(self, as_of: int | None = None) -> DataFrame | None:
         """Live rows only (tombstones filtered)."""
-        df = self.read()
+        df = self.read(as_of)
         if df is None:
             return None
         return df.where(F.col("op") != OP_DELETE).select(

@@ -214,35 +214,22 @@ def c6_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     drives), then read back the materialized state. Must equal the
     one-shot A6 answer — checked against the same oracle SQL.
 
-    Batched-epoch replay (round 15, VERDICT r14 ask #5 — explicitly
-    sanctioned): a replay of a KNOWN change log applies it as ONE
-    apply_batch call instead of four sequential ones. The merge is
-    max-LSN LWW with tombstones retained, so the final state is
-    IDENTICAL under any LSN batch partitioning of the same log — the
-    invariant tests/test_apply.py pins directly
-    (test_replay_batched_equals_sequential) and exercises per batch in
-    the randomized walks. The old 4-batch loop paid 4 sequential
-    merge+swap jobs (plus the lsn-range job) of pure replay-protocol
-    overhead; production callers still stream per-batch through the
-    unchanged apply_batch contract, and the bench's
-    cdc_apply_state_scale probes keep measuring true per-batch cost
-    against large states."""
+    The replay applies the known log as ONE apply_batch call: the merge
+    is max-LSN LWW with tombstones retained, so the final state is the
+    same under any LSN batch partitioning of the same log
+    (tests/test_apply.py: test_replay_batched_equals_sequential).
+    Production callers stream per batch through the same apply_batch,
+    and the bench's cdc_apply_state_scale probe measures that per-batch
+    cost against large states."""
     import shutil
     import tempfile
 
     from .apply import ParquetCollection
 
-    # cache: the log feeds the touched-bucket collect AND the merge job
-    ch = transform.filter_mapped(changes_df(spark, sf_dir), MAPPED).persist()
+    ch = transform.filter_mapped(changes_df(spark, sf_dir), MAPPED)
     root = tempfile.mkdtemp(prefix="c6_apply_")
     try:
-        # n_buckets follows the documented sizing contract (apply.py:
-        # ParquetCollection — buckets scale with state so each holds a
-        # task-sized chunk): this state is ~400-4000 keys, so 8 buckets,
-        # not the production default 64 — at 64, every batch paid 64
-        # writer tasks + 64 dir swaps of pure fixed overhead for a few
-        # hundred rows (measured 4.3s → 2.7s at sf0.1)
-        coll = ParquetCollection(spark, f"{root}/state", n_buckets=8)
+        coll = ParquetCollection(spark, f"{root}/state")
         coll.apply_batch(ch)
         out = coll.state().select(
             "pk", "after_title", "after_content", "after_author"
@@ -252,12 +239,11 @@ def c6_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round-trip (rows never pass through Python)
         return out.localCheckpoint(eager=True).orderBy("pk")
     finally:
-        ch.unpersist()
         shutil.rmtree(root, ignore_errors=True)
 
 
 def c21_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C21 (added round 13) — SCD Type-2 dimension history from the CDC
+    """C21 — SCD Type-2 dimension history from the CDC
     change log (Kimball's slowly-changing-dimension type 2, the standard
     warehouse answer to "what did this row look like at LSN t"): every
     upsert event opens a version valid from its LSN until the key's next
@@ -290,7 +276,7 @@ def c21_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def c22_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C22 (added round 14) — Kafka-style log compaction of the change
+    """C22 — Kafka-style log compaction of the change
     log at the midpoint LSN horizon (``cdc/apply.py:compact_changes``):
     per-key max-LSN winners at/below the horizon (delete winners
     collected), the raw tail above it verbatim. The graded face tags

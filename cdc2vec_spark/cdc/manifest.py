@@ -6,28 +6,22 @@ filesystem, impossible on S3/GCS/ABFS (object stores have no rename; a
 "rename" is copy+delete and is not atomic). ``ManifestStore`` is the
 standard object-store answer, the same design Delta Lake / Iceberg
 commit logs use, reduced to a versioned map from integer keys to data
-directories. Two stores commit through it: ``ManifestCollection`` below
-(row state, keyed by hash bucket) and the keyed point store's segment
-log (``cdc.segments``, keyed by segment sequence number).
+directories. One store commits through it: the segment log of
+``cdc.segments``, keyed by segment sequence number, which holds both the
+keyed points and the keyed row state.
 
 - **Data objects are immutable and uniquely named.** Each commit writes
   its data to a fresh directory under ``data/``. Nothing ever rewrites
   or renames an existing object — a crashed commit leaves an orphan
   directory that no manifest references and GC later deletes.
 - **A commit IS one small manifest object.** ``_manifests/
-  manifest-<version>.json`` maps every key to the data directory
-  holding its current rows. Object PUTs are atomic, which makes the
-  manifest write the commit point: readers see either the old complete
-  mapping or the new complete mapping, never a mix. Locally the file is
-  written in place WITHOUT any rename — a torn write (crash mid-PUT)
-  yields invalid JSON, and readers simply fall back to the newest
-  manifest that parses (writers then allocate past the torn version, so
-  it is never reused).
-- **Readers assemble from the manifest.** ``ManifestCollection`` groups
-  buckets by commit directory: one pruned parquet read per referenced
-  directory (the bucket directory column prunes inside it), unioned. At
-  most ``n_buckets`` directories are ever referenced, and GC keeps the
-  tail short.
+  manifest-<version>.json`` maps every key to its data directory.
+  Object PUTs are atomic, which makes the manifest write the commit
+  point: readers see either the old complete mapping or the new
+  complete mapping, never a mix. Locally the file is written in place
+  WITHOUT any rename — a torn write (crash mid-PUT) yields invalid JSON,
+  and readers simply fall back to the newest manifest that parses
+  (writers then allocate past the torn version, so it is never reused).
 
 Note on the writer inside a data directory: Spark's file committer may
 use its own task-temp renames while materializing it. That is
@@ -42,10 +36,7 @@ external lock on the manifest object — exactly what Delta's S3
 LogStore adds — and is out of scope here; the docstring is the fence.
 
 Reference parity: this replaces pipeline.go:44-53's offset-file "commit"
-(write-only, no recovery) with a real commit protocol; the bucketed
-last-write-wins semantics are identical to ``cdc.apply.ParquetCollection``
-(same merge_batch), proven by the equivalence test in
-tests/test_manifest.py.
+(write-only, no recovery) with a real commit protocol.
 """
 
 from __future__ import annotations
@@ -54,14 +45,6 @@ import json
 import os
 import re
 import shutil
-import uuid
-from collections.abc import Sequence
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .apply import BUCKET_COL, bucket_expr, eligible_events, merge_batch
-from .envelope import OP_DELETE
 
 _MANIFEST_RE = re.compile(r"^manifest-(\d{9})\.json$")
 
@@ -89,7 +72,7 @@ class ManifestStore:
         return sorted(out)
 
     def latest(self) -> tuple[int, dict[int, str], int]:
-        """(latest_valid_version, its bucket→dir mapping, max_version_seen).
+        """(latest_valid_version, its key→dir mapping, max_version_seen).
 
         Scans manifests newest-first and returns the first that parses —
         a torn/corrupt newest manifest (crash mid-PUT) is skipped, but its
@@ -127,7 +110,7 @@ class ManifestStore:
         return out
 
     def at(self, version: int) -> dict[int, str]:
-        """The bucket→dir mapping of ONE specific generation — the
+        """The key→dir mapping of ONE specific generation — the
         time-travel read point. Unlike latest(), a missing or torn
         manifest here is an ERROR, not a fall-back: silently reading a
         neighboring generation would defeat the point of asking for a
@@ -149,12 +132,6 @@ class ManifestStore:
             raise ValueError(f"manifest {p} unreadable: {e}") from e
 
     # -- write side -------------------------------------------------------
-
-    def new_commit_dir(self, version: int) -> str:
-        """Unique directory name for a commit attempt. The nonce keeps a
-        replayed attempt (crash after the data write, before the manifest
-        PUT) from colliding with its own orphan."""
-        return f"commit-{version:09d}-{uuid.uuid4().hex[:8]}"
 
     def publish(
         self, version: int, mapping: dict[int, str]
@@ -211,126 +188,3 @@ class ManifestStore:
                 except OSError:
                     pass
         return removed_dirs, removed_manifests
-
-
-def _assemble(
-    spark: SparkSession,
-    store: ManifestStore,
-    buckets: Sequence[int] | None = None,
-    as_of: int | None = None,
-) -> DataFrame | None:
-    """State from the latest manifest (or the ``as_of`` generation —
-    time travel over the retained window): buckets grouped by commit
-    directory, read as their exact ``bucket=<i>`` partition directories
-    (never the whole commit dir — a commit dir can hold stale versions
-    of buckets a later commit superseded), unioned. ``buckets`` prunes
-    the assembly to just those buckets — the manifest IS the file index,
-    so a pruned read lists nothing at all beyond the touched dirs."""
-    if as_of is not None:
-        mapping = store.at(as_of)
-    else:
-        _, mapping, _ = store.latest()
-    if not mapping:
-        return None
-    if buckets is not None:
-        want = set(buckets)
-        mapping = {b: d for b, d in mapping.items() if b in want}
-        if not mapping:
-            return None
-    by_dir: dict[str, list[int]] = {}
-    for b, d in mapping.items():
-        by_dir.setdefault(d, []).append(b)
-    out: DataFrame | None = None
-    for d in sorted(by_dir):
-        root = os.path.join(store.data_root, d)
-        dirs = [
-            os.path.join(root, f"{BUCKET_COL}={b}") for b in sorted(by_dir[d])
-        ]
-        part = spark.read.option("basePath", root).parquet(*dirs)
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _commit(
-    store: ManifestStore,
-    merged: DataFrame,
-    touched: Sequence[int],
-    auto_gc_every: int,
-) -> None:
-    """Write the merged touched buckets to a fresh commit dir, publish the
-    next manifest, opportunistically GC."""
-    _, mapping, max_seen = store.latest()
-    version = max_seen + 1  # never reuse a torn version
-    cdir = store.new_commit_dir(version)
-    # fresh unique directory: errorifexists, no renames, no overwrite
-    merged.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(
-        os.path.join(store.data_root, cdir)
-    )
-    store.publish(version, {**mapping, **{b: cdir for b in touched}})
-    if auto_gc_every and version % auto_gc_every == 0:
-        store.gc()
-
-
-class ManifestCollection:
-    """`ParquetCollection` semantics over the manifest commit protocol —
-    the drop-in for object-store deployments (same merge_batch, same
-    bucket pruning, same O(batch + touched_buckets × bucket_size) cost;
-    only the commit mechanics differ: immutable commit dirs + manifest
-    PUT instead of per-bucket renames)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        text_cols: Sequence[str] = ("after_title", "after_content"),
-        key_cols: Sequence[str] = ("tbl", "pk"),
-        n_buckets: int = 64,
-        coalesce_unchanged: bool = False,
-        keep_manifests: int = 10,
-        auto_gc_every: int = 16,
-    ):
-        self.spark = spark
-        self.store = ManifestStore(path, keep_manifests=keep_manifests)
-        self.text_cols = tuple(text_cols)
-        self.key_cols = tuple(key_cols)
-        self.n_buckets = n_buckets
-        self.coalesce_unchanged = coalesce_unchanged
-        self.auto_gc_every = auto_gc_every
-
-    def read(self, as_of: int | None = None) -> DataFrame | None:
-        """Current state, or — with ``as_of`` — the state exactly as of
-        that committed generation (time travel over the retained
-        manifest window; ``self.store.versions()`` lists the horizon).
-        The ops answer to "what did the collection hold before the bad
-        batch landed" without restoring anything."""
-        return _assemble(self.spark, self.store, as_of=as_of)
-
-    def apply_batch(self, batch: DataFrame, _epoch_id: int | None = None) -> None:
-        bexpr = bucket_expr(self.key_cols, self.n_buckets)
-        ev = eligible_events(batch, self.text_cols).withColumn(BUCKET_COL, bexpr)
-        touched = sorted(
-            r[0] for r in ev.select(BUCKET_COL).distinct().collect()
-        )  # ≤ n_buckets ints — the one driver round-trip
-        if not touched:
-            return
-        # manifest-pruned read: only the touched buckets' dirs assembled
-        prior = _assemble(self.spark, self.store, buckets=touched)
-        merged = merge_batch(
-            prior,
-            batch.withColumn(BUCKET_COL, bexpr),
-            self.text_cols,
-            key_cols=self.key_cols,
-            coalesce_unchanged=self.coalesce_unchanged,
-            cluster_col=BUCKET_COL,
-            cluster_partitions=len(touched),
-        )
-        _commit(self.store, merged, touched, self.auto_gc_every)
-
-    def state(self, as_of: int | None = None) -> DataFrame | None:
-        """Live rows only (tombstones filtered); ``as_of`` time-travels."""
-        df = self.read(as_of=as_of)
-        if df is None:
-            return None
-        return df.where(F.col("op") != OP_DELETE).select(
-            "pk", *[c for c in df.columns if c.startswith("after_")]
-        )

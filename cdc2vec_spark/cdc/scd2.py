@@ -16,7 +16,7 @@ bucket is self-contained for recomputing interval columns. ``valid_to``
 / ``is_current`` are recomputed per TOUCHED bucket on write with ONE
 lead(lsn) window on the key — exact because all of a key's events hash
 to one bucket, and bounded because untouched buckets are never read or
-rewritten (the ParquetCollection swap discipline, apply.py).
+rewritten (the swap_buckets discipline, apply.py).
 
 Idempotence: merge = prior ∪ batch, dropDuplicates(key, lsn), then
 recompute — replaying any batch reproduces byte-identical state (the

@@ -1,7 +1,9 @@
 """Append-only segment log: keyed state that a micro-batch extends by one
 write and never reads (a size-tiered log-structured merge layout, O'Neil
 et al. 1996, with the max-LSN-per-key merge as its merge rule), committed
-through the manifest generations of ``cdc.manifest.ManifestStore``.
+through the manifest generations of ``cdc.manifest.ManifestStore``. It
+holds the keyed points (``runner.PointsCollection`` and its chunked
+subclass) and the keyed row state (``cdc.apply.ParquetCollection``).
 
 Layout of a store directory:
 
@@ -43,11 +45,13 @@ Single writer, like every keyed store here.
 Upgrades: state written by earlier layouts restarts intact, read as the
 oldest segment(s) and folded in by the first compaction:
 
-- a points store of the bucket manifest protocol: entries that map a
-  bucket ``i`` to ``data/commit-*/`` read together as one level-0
-  segment older than any other;
+- a store of the bucket manifest protocol (points, or row state of the
+  former ``ManifestCollection``): entries that map a bucket ``i`` to
+  ``data/commit-*/`` read together as one level-0 segment older than
+  any other;
 - the rename-published layouts, root ``seg-<level>-<seq>/`` dirs and the
-  older root ``bucket=<i>/`` dirs, which only existed on local
+  older root ``bucket=<i>/`` dirs (points, or row state of the former
+  bucketed ``ParquetCollection``), which only existed on local
   filesystems: the first call moves them into ``data/`` once, the
   ``seg-*`` dirs under their own names and seqs and the bucket dirs into
   one segment ``seg-0-buckets`` of seq -1, a name and seq no rename-era
@@ -86,18 +90,19 @@ class Segment(NamedTuple):
 
 class SegmentStore:
     """Keyed state at ``path`` as a segment log (module docstring).
-    ``cols`` are the stored columns; ``resolve`` is the merge rule."""
+    ``cols`` are the stored columns, or None to store the columns
+    ``resolve`` returns; ``resolve`` is the merge rule."""
 
     def __init__(
         self,
         spark: SparkSession,
         path: str,
-        cols: Sequence[str],
+        cols: Sequence[str] | None,
         resolve: Callable[[DataFrame], DataFrame],
     ):
         self.spark = spark
         self.path = path
-        self.cols = tuple(cols)
+        self.cols = None if cols is None else tuple(cols)
         self.resolve = resolve
         self.manifests = ManifestStore(path)
 
@@ -132,7 +137,7 @@ class SegmentStore:
         compact. The stored state is never read here."""
         self._adopt()  # before the first publish, which would reuse its seqs
         obs = Observation()
-        rows = self.resolve(batch.select(*self.cols))
+        rows = self.resolve(self._project(batch))
         name = self._write(rows.observe(obs, F.count(F.lit(1)).alias("rows")), 0)
         if obs.get["rows"]:  # an empty batch's write stays an orphan
             self._publish(name, ())
@@ -152,7 +157,10 @@ class SegmentStore:
         # plain file lists: the adopted bucket layout nests its files in
         # bucket=<i>/ dirs, which must not become a partition column
         reader = self.spark.read.option("recursiveFileLookup", "true")
-        return reader.parquet(*dirs).select(*self.cols)
+        return self._project(reader.parquet(*dirs))
+
+    def _project(self, df: DataFrame) -> DataFrame:
+        return df if self.cols is None else df.select(*self.cols)
 
     def _write(self, df: DataFrame, level: int) -> str:
         name = f"seg-{level}-{uuid.uuid4().hex}"

@@ -83,8 +83,7 @@ def bootstrap_collection(
     keep_text: bool = False,
 ) -> None:
     """Step 3 of the protocol: seed ``collection`` (any apply_points
-    store — PointsCollection, ChunkedPointsCollection, or the manifest
-    variants) with the table's current state through the audited
+    store — PointsCollection or ChunkedPointsCollection) with the table's current state through the audited
     pipeline. Call before starting ``runner.boot`` on the stream."""
     ev = snapshot_events(table, mapping.table, id_col, snapshot_lsn)
     pts = build_points(ev, mapping, provider, chunk=chunk, keep_text=keep_text)

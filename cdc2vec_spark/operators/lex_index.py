@@ -19,8 +19,8 @@ ANN index uses (Lucene's delete-bitmap idea):
 - per-document lengths live in ``bucket=-2`` (one row per doc version)
   so BM25's corpus stats (N, avgdl) come from a two-column scan.
 
-Per-batch cost is O(batch + touched_buckets × bucket_size) — identical
-contract to ParquetCollection/IncrementalIvfIndex. Query-time scoring
+Per-batch cost is O(batch + touched_buckets × bucket_size) — the
+swap_buckets contract IncrementalIvfIndex also keeps. Query-time scoring
 is the same fixed-point micro-nat BM25 as ``text.bm25_topk`` (exact
 integer ranking), so a freshly-built index must reproduce the batch
 operator bit-for-bit and the post-CDC index must match a DuckDB oracle
@@ -95,8 +95,8 @@ class IncrementalLexicalIndex:
         self.auto_compact_ratio = auto_compact_ratio
         self.auto_compact_min = auto_compact_min
         # Compaction-trigger counters, maintained from Observation
-        # metrics piggybacked on each merge write (round-7: replaces the
-        # two fresh count jobs per micro-batch). None = unknown (this
+        # metrics piggybacked on each merge write (no fresh count jobs
+        # per micro-batch). None = unknown (this
         # writer hasn't observed the partition yet) → one lazy count,
         # amortized once per writer lifetime. Valid because the index is
         # single-writer by contract (one foreachBatch stream).
@@ -277,7 +277,7 @@ class IncrementalLexicalIndex:
         # piggyback the compaction-trigger counters on the merge write:
         # the tombstone and docstat partitions are REPLACED whenever
         # touched, so the merged frame's per-partition row counts ARE the
-        # post-swap totals — no extra count jobs (round-7, VERDICT r06 #3)
+        # post-swap totals — no extra count jobs
         obs = Observation()
         merged = merged.observe(
             obs,
@@ -608,5 +608,4 @@ ORDER BY score_micro DESC, id LIMIT 10
 """
 
 QUERIES = {"d18_cdc_bm25": d18_cdc_bm25}
-# round-7 rotation: individually graded (was composite-delivered in r06)
 ORACLES = {"d18_cdc_bm25": D18_ORACLE_SQL}

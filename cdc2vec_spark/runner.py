@@ -35,9 +35,9 @@ from .streaming.source import read_file_stream
 class PointsCollection:
     """Keyed point store: last-write-wins by (id, lsn), deletes keep a
     tombstone so a stale replayed upsert cannot resurrect a key — the
-    same max-LSN-per-key merge contract as cdc.apply.ParquetCollection,
-    holding sink-side points (id, vector, metadata) instead of row state
-    (types.go:15's Point).
+    same max-LSN-per-key merge and the same segment log as
+    cdc.apply.ParquetCollection, holding sink-side points (id, vector,
+    metadata) instead of row state (types.go:15's Point).
 
     Stored as an append-only segment log (cdc.segments.SegmentStore):
     a batch reduces itself to its winning event per id (final_events)
@@ -109,7 +109,8 @@ def _provider_from(cfg: PipelineConfig | EngineConfig):
 
 def final_events(pts: DataFrame) -> DataFrame:
     """Reduce a micro-batch to its per-id OUTCOME: the max-LSN event per
-    id — the same window merge PointsCollection/ParquetCollection apply.
+    id — PointsCollection's merge rule (ParquetCollection's is the same
+    window on (tbl, pk), after the empty-text guard).
 
     External delivery must respect per-key event order (the reference
     applies events strictly in order, pipeline.go:154-165). Delivering a
@@ -245,8 +246,8 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
 
     if sink.type == "distinct_agg":
         # maintain the ref-counted COUNT(DISTINCT) materialization from
-        # the same stream (cdc/ivm.py:IncrementalDistinctCount — round
-        # 11, the two-level IVM): per batch only the touched state
+        # the same stream (cdc/ivm.py:IncrementalDistinctCount, the
+        # two-level IVM): per batch only the touched state
         # buckets and the touched groups' value buckets are read or
         # rewritten. ``options.specs`` is the {name, col} list with col
         # expressions over ``after_text`` / the ``after_grp*`` metadata
@@ -336,18 +337,17 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
         # same stream (streaming/neardup.py): each batch is checked
         # against everything ingested before it, and the verified pair
         # GRAPH accumulates in bucketed parquet. ``options.report_every
-        # = N`` (the distinct_agg topk_every twin, round 12 — VERDICT
-        # r11 ask #5) materializes the five graph-family reports
-        # (survivors / cluster_histogram / split / pagerank /
-        # source_overlap — the d9/d44/d46/d47/d48 faces) from the
+        # = N`` (the distinct_agg topk_every twin) materializes the five
+        # graph-family reports (survivors / cluster_histogram / split /
+        # pagerank / source_overlap — the d9/d44/d46/d47/d48 faces) from the
         # MAINTAINED state after every Nth batch, each swap-written to
         # options.path + "/reports/<name>" — O(pairs + docs) per
         # refresh, never a shingle/candidate re-derivation. The last
         # report set also lands on hook.last_reports.
         # ``options.source_key`` names the metadata key carried into the
         # docs state as the contamination matrix's source dimension.
-        # Deletes retire the ids from all three state tables (round 13,
-        # VERDICT r12 ask #6 — StreamingNearDup.delete_batch), so the
+        # Deletes retire the ids from all three state tables
+        # (StreamingNearDup.delete_batch), so the
         # live pair state and the cadence reports track the surviving
         # collection like every other keyed state.
         from .streaming.neardup import StreamingNearDup
@@ -417,7 +417,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
 
     if sink.type == "scd2_history":
         # maintain the SCD Type-2 row-validity history live from the
-        # stream (cdc/scd2.py — c21's streaming face, round 14): every
+        # stream (cdc/scd2.py — c21's streaming face): every
         # point event becomes a version row (deletes become closure
         # markers), touched buckets recompute their intervals per batch.
         # NOTE: unlike the delivery hooks this consumes EVERY event, not
@@ -484,7 +484,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
             c.strip() for c in str(opts.get("payload_cols", "")).split(",") if c.strip()
         )
 
-        # health cadence (round 10, the ivf_index health_every twin):
+        # health cadence (the ivf_index health_every twin):
         # options.health_every = N runs lex_rebuild_policy after every
         # Nth batch and compacts / re-buckets when it triggers (0 = off);
         # the last decision is kept on hook.last_health
@@ -539,7 +539,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
         pq = tuple(int(x) for x in str(raw_pq).split(",")) if raw_pq else None
         if pq is not None and len(pq) != 2:
             raise ValueError(f"ivf_index options.pq must be 'm,k', got {raw_pq!r}")
-        # index-health cadence (round 9, operators/index_health.py):
+        # index-health cadence (operators/index_health.py):
         # options.health_every = N runs rebuild_policy after every Nth
         # batch and retrains/rebuilds in place when it triggers (0 =
         # off). The rebuild preserves lsns, so checkpoint replays stay
@@ -718,7 +718,7 @@ def boot(
     cdc.debezium.read_kafka_stream for production). Caller stops the query
     (or wraps this in streaming.health.run_supervised).
 
-    Mapping hot-reload (round 11, VERDICT r10 ask #7): when ``config``
+    Mapping hot-reload: when ``config``
     is a YAML *path*, each micro-batch stats the file and re-loads it on
     mtime change, so text/metadata columns added to a mapping mid-stream
     start populating in SUBSEQUENT batches without a restart (the
@@ -733,12 +733,12 @@ def boot(
     provider = _provider_from(cfg)
     coll = _collection_for(spark, cfg, state_dir)
     hook = sink_hooks_for(cfg) if isinstance(cfg, PipelineConfig) else None
-    # chunked + in-engine index sinks compose since round 8: the indexes
+    # chunked + in-engine index sinks compose: the indexes
     # key tombstones on the base id (before '#'), giving replace-set
     # chunk semantics natively (ann_index/lex_index chunked=True —
     # sink_hooks_for passes the flag); qdrant/milvus get the same
     # semantics via payload-filter deletes in their chunked hooks;
-    # group_agg keys its state on base_pk since round 9 (replace-set,
+    # group_agg keys its state on base_pk (replace-set,
     # counts base documents — cdc/ivm.py chunked-mode docstring)
     stream = read_file_stream(spark, changes_dir, changes_schema, max_files_per_trigger)
 

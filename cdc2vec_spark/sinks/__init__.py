@@ -1,2 +1,3 @@
-"""Sinks: Kafka message builder, Qdrant parity helpers, Milvus payload
-builder. The engine-native sink is cdc.apply.ParquetCollection."""
+"""Sinks: the Kafka message, Qdrant parity and Milvus payload helpers.
+The engine-native sink is the keyed point store,
+runner.PointsCollection (cdc.segments)."""

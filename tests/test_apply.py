@@ -112,85 +112,67 @@ def test_swap_write_crash_recovery(spark, tmp_path):
     assert os.path.exists(path) and not os.path.exists(path + ".old")
 
 
-def _bucket_snapshot(path):
-    """(bucket dir → sorted data-file names+sizes) map for change detection."""
-    import os
+def test_apply_batch_never_reads_stored_state(spark, tmp_path, monkeypatch):
+    """The O(batch) claim, checked directly: against a 1000-key state,
+    the applies that stay below FAN_IN segments run with every Spark
+    read forbidden, so they never read the stored state; the apply that
+    reaches FAN_IN compacts, which is the one that reads."""
+    from pyspark.sql import SparkSession
 
-    out = {}
-    for name in sorted(os.listdir(path)):
-        if not name.startswith("bucket="):
-            continue
-        d = os.path.join(path, name)
-        out[name] = sorted(
-            (f, os.path.getsize(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if not f.startswith((".", "_"))
+    from cdc2vec_spark.cdc.segments import FAN_IN
+
+    coll = apply.ParquetCollection(spark, str(tmp_path / "state"))
+    coll.apply_batch(
+        spark.range(1000).select(
+            F.col("id").alias("lsn"),
+            F.lit("c").alias("op"),
+            F.lit("t").alias("tbl"),
+            F.col("id").cast("string").alias("pk"),
+            F.lit("title").alias("after_title"),
+            F.lit("content").alias("after_content"),
+            F.lit("a").alias("after_author"),
         )
-    return out
-
-
-def test_apply_batch_rewrites_only_touched_buckets(spark, tmp_path):
-    """The O(batch) claim, verified structurally: a 2-key batch against a
-    1000-key state must leave every untouched bucket directory's data
-    files byte-identical (same names — Spark part-file names are
-    write-specific UUIDs, so an untouched name proves an untouched file)
-    and rewrite only the buckets the 2 keys hash into."""
-    path = str(tmp_path / "state")
-    coll = apply.ParquetCollection(spark, path, n_buckets=16)
-    big = spark.range(1000).select(
-        F.col("id").alias("lsn"),
-        F.lit("c").alias("op"),
-        F.lit("t").alias("tbl"),
-        F.col("id").cast("string").alias("pk"),
-        F.lit("title").alias("after_title"),
-        F.lit("content").alias("after_content"),
-        F.lit("a").alias("after_author"),
     )
-    coll.apply_batch(big)
-    before = _bucket_snapshot(path)
-    assert len(before) == 16  # 1000 keys cover all 16 buckets
+    batches = [
+        _log(spark, [(5000 + i, "u", "t", str(i), f"new{i}", "c", "a")])
+        for i in range(FAN_IN - 1)
+    ]
+    batches[-1] = _log(spark, [(5002, "d", "t", "7", None, None, None)])
 
-    small = _log(
-        spark,
-        [
-            (5000, "u", "t", "3", "new3", "c", "a"),
-            (5001, "d", "t", "7", None, None, None),
-        ],
-    )
-    coll.apply_batch(small)
-    after = _bucket_snapshot(path)
+    def no_read(self):
+        raise AssertionError("apply_batch read the stored state")
 
-    changed = {b for b in before if before[b] != after.get(b)}
-    from pyspark.sql import Row
+    monkeypatch.setattr(SparkSession, "read", property(no_read))
+    for b in batches[:-1]:
+        coll.apply_batch(b)
+    assert len(coll.store.segments()) == FAN_IN - 1
+    with pytest.raises(AssertionError, match="read the stored state"):
+        coll.apply_batch(batches[-1])  # the FAN_IN-th segment compacts
+    monkeypatch.undo()
 
-    want = {
-        f"bucket={r.b}"
-        for r in spark.createDataFrame([Row(tbl="t", pk="3"), Row(tbl="t", pk="7")])
-        .select(apply.bucket_expr(("tbl", "pk"), 16).alias("b"))
-        .collect()
-    }
-    assert changed == want and 1 <= len(changed) <= 2
-
-    # and the merge itself is still correct
+    # the batch's segment was published before its compaction failed
+    assert len(coll.store.segments()) == FAN_IN
     got = {r["pk"]: r["after_title"] for r in coll.state().collect()}
-    assert got["3"] == "new3" and "7" not in got and len(got) == 999
+    assert got["0"] == "new0" and got["1"] == "new1" and got["3"] == "title"
+    assert "7" not in got and len(got) == 999
 
 
 def test_bucketed_crash_recovery(spark, tmp_path):
-    """A crash between the per-bucket renames leaves the bucket only under
-    <path>.old/; read_bucketed_state must promote it."""
+    """A crash between swap_buckets' per-bucket renames leaves the bucket
+    only under <path>.old/; read_bucketed_state must promote it."""
     import os
 
     path = str(tmp_path / "state")
-    coll = apply.ParquetCollection(spark, path, n_buckets=4)
-    coll.apply_batch(
-        _log(spark, [(1, "c", "t", "1", "v", "c", "a"), (2, "c", "t", "2", "w", "c", "a")])
-    )
+    df = _log(
+        spark, [(1, "c", "t", "1", "v", "c", "a"), (2, "c", "t", "2", "w", "c", "a")]
+    ).withColumn(apply.BUCKET_COL, apply.bucket_expr(("tbl", "pk"), 4))
+    touched = sorted(r[0] for r in df.select(apply.BUCKET_COL).distinct().collect())
+    apply.swap_buckets(df, path, touched)
     buckets = [n for n in os.listdir(path) if n.startswith("bucket=")]
     victim = buckets[0]
     os.makedirs(path + ".old", exist_ok=True)
     os.rename(os.path.join(path, victim), os.path.join(path + ".old", victim))
-    got = {r["pk"] for r in coll.state().collect()}
+    got = {r["pk"] for r in apply.read_bucketed_state(spark, path).collect()}
     assert got == {"1", "2"}
     assert os.path.exists(os.path.join(path, victim))
     assert not os.path.exists(path + ".old")
@@ -231,60 +213,9 @@ def test_merge_batch_toast_coalesce(spark):
     assert gotp["1"] is None
 
 
-def test_apply_batch_touched_precompute_equivalent(spark, tmp_path):
-    """Round 14 (c6 replay): apply_batch(touched=precomputed) must land
-    the same state as the default per-batch distinct+collect path, and
-    touched=[] must be a no-op (the replay's empty-batch early return)."""
-    base = _log(
-        spark,
-        [(1, "c", "t", "1", "v1", "c", "a"), (2, "c", "t", "2", "v2", "c", "a")],
-    )
-    batch = _log(
-        spark,
-        [
-            (3, "u", "t", "1", "v1b", "c", "a"),
-            (4, "c", "t", "9", "v9", "c", "a"),
-            (5, "d", "t", "2", None, None, None),
-        ],
-    )
-    states = {}
-    for mode in ("default", "precomputed"):
-        path = str(tmp_path / mode)
-        coll = apply.ParquetCollection(spark, path, n_buckets=8)
-        coll.apply_batch(base)
-        if mode == "precomputed":
-            # exactly the caller's one-job derivation (changelog.py c6)
-            ev = apply.eligible_events(batch, coll.text_cols)
-            touched = [
-                r[0]
-                for r in ev.select(
-                    apply.bucket_expr(coll.key_cols, coll.n_buckets)
-                )
-                .distinct()
-                .collect()
-            ]
-            coll.apply_batch(batch, touched=touched)
-        else:
-            coll.apply_batch(batch)
-        states[mode] = sorted(
-            (r["pk"], r["after_title"], r["after_content"], r["after_author"])
-            for r in coll.state().collect()
-        )
-    assert states["default"] == states["precomputed"]
-    assert [pk for pk, *_ in states["default"]] == ["1", "9"]
-
-    # touched=[] is the precomputed form of "no eligible events": no write
-    coll = apply.ParquetCollection(spark, str(tmp_path / "noop"), n_buckets=8)
-    coll.apply_batch(base)
-    before = _bucket_snapshot(str(tmp_path / "noop"))
-    coll.apply_batch(batch, touched=[])
-    assert _bucket_snapshot(str(tmp_path / "noop")) == before
-
-
 def test_replay_batched_equals_sequential(spark, tmp_path, sf_dir):
-    """Round 15 (VERDICT r14 ask #5, the batched-epoch replay): applying
-    a known change log as ONE apply_batch call must land a state
-    byte-identical to the old 4-LSN-quartile sequential replay — the
+    """Applying a known change log as ONE apply_batch call must land a
+    state byte-identical to a 4-LSN-quartile sequential replay — the
     max-LSN LWW merge (tombstones retained, empty-text guard) makes the
     final state invariant under ANY batch partitioning of the same log.
     This is the invariant c6_cdc_apply's one-call replay rests on."""
@@ -292,7 +223,7 @@ def test_replay_batched_equals_sequential(spark, tmp_path, sf_dir):
     try:
         lo, hi = ch.agg(F.min("lsn"), F.max("lsn")).first()
         step = (hi - lo) // 4 + 1
-        seq = apply.ParquetCollection(spark, str(tmp_path / "seq"), n_buckets=8)
+        seq = apply.ParquetCollection(spark, str(tmp_path / "seq"))
         for i in range(4):
             seq.apply_batch(
                 ch.where(
@@ -300,7 +231,7 @@ def test_replay_batched_equals_sequential(spark, tmp_path, sf_dir):
                     & (F.col("lsn") < lo + (i + 1) * step)
                 )
             )
-        one = apply.ParquetCollection(spark, str(tmp_path / "one"), n_buckets=8)
+        one = apply.ParquetCollection(spark, str(tmp_path / "one"))
         one.apply_batch(ch)
         cols = ["op", "lsn", "pk", "after_title", "after_content", "after_author"]
         a = sorted(map(tuple, seq.read().select(*cols).collect()))

@@ -36,8 +36,8 @@ def test_every_query_callable():
 
 
 @pytest.mark.parametrize("rows_only", [
-    # documented rows-only (no SQL oracle) set — round 15 (VERDICT r14
-    # ask #1): x1/x2/x4 carry full UNION-ALL oracles of their
+    # documented rows-only (no SQL oracle) set: x1/x2/x4 carry full
+    # UNION-ALL oracles of their
     # oracle-bearing components; x3 consolidates the genuinely
     # rows-only components and is the ONE no_oracle registry row.
     # Additions need a pinned engine test per SURVEY §5; removals should
@@ -75,7 +75,7 @@ def test_composite_probes_execute_and_tag_components(spark, sf_dir):
     composite fails here, not as a quietly smaller rows-only count)."""
     from cdc2vec_spark.operators import composite
 
-    # round 15 (VERDICT r14 ask #1): x1/x2/x4 hold ONLY oracle-bearing
+    # x1/x2/x4 hold ONLY oracle-bearing
     # components (their membership is pinned against composite._X_MEMBERS
     # below, the same table the UNION-ALL oracles are generated from);
     # x3 holds every genuinely rows-only component.
@@ -128,3 +128,27 @@ def test_composite_oracles_cover_exactly_their_members():
         for m in members:
             assert f"'{m}' AS probe" in composite.ORACLES[xname], (xname, m)
     assert set(composite.ORACLES) == set(composite._X_MEMBERS)
+
+
+def test_oracle_gate_rejects_nul_bytes(spark):
+    """A NUL-bearing oracle fails the gate even when its values match
+    the Spark side; the printable NULL sentinel the composites render
+    passes, and neither composite side renders a NUL."""
+    import duckdb
+
+    from cdc2vec_spark.operators import composite
+    from oracle_check import compare_one
+
+    con = duckdb.connect()
+
+    def one(value):
+        return lambda spark, _sf: spark.createDataFrame([(value,)], "s string")
+
+    planted = compare_one(
+        spark, con, "planted", one("\0NULL"), "SELECT chr(0) || 'NULL' AS s", ""
+    )
+    assert planted == ["oracle column 's' has strings with NUL/control bytes"]
+    sentinel = f"SELECT '{composite.NULL_CELL}' AS s"
+    assert compare_one(spark, con, "ok", one(composite.NULL_CELL), sentinel, "") == []
+    assert composite.NULL_CELL.isprintable()
+    assert all("chr(0)" not in sql for sql in composite.ORACLES.values())

@@ -61,7 +61,7 @@ def test_incremental_equals_recompute_after_every_batch(spark, sf_dir, tmp_path)
     lo, hi = ch.agg(F.min("lsn"), F.max("lsn")).first()
     step = (hi - lo) // 3 + 1
     ivm = IncrementalGroupAgg(spark, str(tmp_path / "ivm"), n_buckets=8)
-    ref = ParquetCollection(spark, str(tmp_path / "ref"), n_buckets=8)
+    ref = ParquetCollection(spark, str(tmp_path / "ref"))
     for i in range(3):
         b = ch.where(
             (F.col("lsn") >= lo + i * step) & (F.col("lsn") < lo + (i + 1) * step)
@@ -239,15 +239,15 @@ def test_boot_group_agg_sink_end_to_end(spark, sf_dir, tmp_path):
     assert sum(n for n, _ in got.values()) == coll.live().count()
 
 
-# ---- round-9 additions: NULL groups, torn-commit recovery, generalized
-# aggs, chunked replace-set semantics ---------------------------------------
+# ---- NULL groups, torn-commit recovery, generalized aggs, chunked
+# replace-set semantics -----------------------------------------------------
 
 _SCHEMA = ("lsn long, op string, tbl string, pk string, "
            "after_title string, after_content string, after_author string")
 
 
 def test_null_group_keys_aggregate_as_one_group(spark, tmp_path):
-    """ADVICE r8: a join-based delta never matches NULL group keys, so a
+    """A join-based delta never matches NULL group keys, so a
     NULL author would gain duplicate rows each batch and deletes would
     never decrement it. The union+re-aggregate delta must maintain the
     NULL group exactly — GROUP BY semantics, matching the SQL oracle."""
@@ -377,7 +377,7 @@ def test_generalized_aggs_avg_var_and_multicolumn_grouping(spark, tmp_path):
 
 
 def test_minmax_specs_accepted_since_round_10():
-    """VERDICT r09 ask #6: min/max are supported via the documented
+    """min/max are supported via the documented
     recompute-on-delete fallback; the config-time gate now only rejects
     genuinely unknown ops and col-less extrema."""
     from cdc2vec_spark.cdc.ivm import agg_specs
@@ -450,8 +450,7 @@ def test_minmax_maintained_through_inserts_deletes_and_updates(spark, tmp_path):
 
 @pytest.mark.slow
 def test_minmax_randomized_sequences_match_python_reference(spark, tmp_path):
-    """The incremental≡recompute fuzz extended to min/max (VERDICT r09
-    ask #6): random insert/update/delete sequences — extremum removals
+    """The incremental≡recompute fuzz extended to min/max: random insert/update/delete sequences — extremum removals
     included — must equal a pure-Python LWW + min/max reference after
     every batch."""
     import random
@@ -518,7 +517,7 @@ def test_minmax_randomized_sequences_match_python_reference(spark, tmp_path):
 def test_chunked_replace_set_counts_base_docs(spark, tmp_path):
     """Chunked mode: state is per-chunk but COUNT specs count live BASE
     documents; a shrunk re-embed sheds its stale tail chunk and one
-    base-id tombstone drops every chunk (the ADVICE r8 failure: per-pk
+    base-id tombstone drops every chunk (the failure of per-pk
     LWW keyed on chunk ids never decrements on base-id deletes)."""
     schema = ("lsn long, op string, tbl string, pk string, base_pk string, "
               "after_text string, after_grp string")
@@ -552,7 +551,7 @@ def test_chunked_replace_set_counts_base_docs(spark, tmp_path):
 
 @pytest.mark.slow
 def test_boot_chunked_group_agg_end_to_end(spark, sf_dir, tmp_path):
-    """VERDICT r8 ask #6: sink.type=group_agg composes with engine.chunk.
+    """sink.type=group_agg composes with engine.chunk.
     After a chunked boot replay, the maintained agg counts live BASE
     documents per author (keys, not chunks) and sums CHUNK characters
     (documented overlap-inclusive semantics)."""
@@ -618,11 +617,11 @@ def test_boot_chunked_group_agg_end_to_end(spark, sf_dir, tmp_path):
 
 @pytest.mark.slow
 def test_yaml_aggs_spec_drives_the_group_agg_sink(spark, sf_dir, tmp_path):
-    """VERDICT r8 ask #5 (config surface): sink.type=group_agg accepts
+    """Config surface: sink.type=group_agg accepts
     an aggs spec straight from YAML — boot with count/sum/avg specs,
     then check the derived avg equals sum/count on every group; an
     unknown op must fail at hook construction (boot), not at batch N
-    (min/max are accepted since round 10 — recompute-on-delete)."""
+    (min/max are accepted — recompute-on-delete)."""
     import math
     import textwrap
 
@@ -738,7 +737,7 @@ def test_stale_agg_schema_self_heals(spark, tmp_path):
     ], _SCHEMA))
     want = {r["grp"]: (r["n"], r["chars"]) for r in ivm.read().collect()}
 
-    # simulate the pre-round-9 layout: grp/n/chars, no _live, no __cnt
+    # simulate the older layout: grp/n/chars, no _live, no __cnt
     import shutil
 
     legacy = spark.createDataFrame([("g1", 1, 5)], "grp string, n long, chars long")
@@ -815,7 +814,7 @@ def test_chunked_minmax_recompute_on_replace_set(spark, tmp_path):
     assert got == {"g1": (1, 2)}, got
 
 
-# ---------------- round 11: ref-counted COUNT(DISTINCT) IVM (c16) ------
+# ---------------- ref-counted COUNT(DISTINCT) IVM (c16) ----------------
 
 def _dc(spark, path, **kw):
     from cdc2vec_spark.cdc.ivm import IncrementalDistinctCount
@@ -917,7 +916,7 @@ def test_distinct_incremental_equals_recompute_every_batch(spark, sf_dir, tmp_pa
     lo, hi = ch.agg(F.min("lsn"), F.max("lsn")).first()
     step = (hi - lo) // 4 + 1
     dc = _dc(spark, tmp_path / "dv")
-    coll = ParquetCollection(spark, str(tmp_path / "coll"), n_buckets=4)
+    coll = ParquetCollection(spark, str(tmp_path / "coll"))
     for i in range(4):
         b = ch.where((F.col("lsn") >= lo + i * step)
                      & (F.col("lsn") < lo + (i + 1) * step))
@@ -1048,7 +1047,7 @@ def test_distinct_agg_sink_rejects_bad_specs_at_boot():
         runner.sink_hook_for(cfg)
 
 
-# ---------------- round 11: ranked top-k report off the dv state (c17) --
+# ---------------- ranked top-k report off the dv state (c17) -----------
 
 @pytest.mark.parametrize("sf", [SF0001, SF001])
 def test_c17_matches_duckdb_oracle(spark, sf):
@@ -1244,7 +1243,7 @@ def test_distinct_agg_sink_rejects_bad_topk_at_boot():
         runner.sink_hook_for(cfg)
 
 
-# ---------- round 11: exact quantiles off the dv state (c18) -----------
+# ---------- exact quantiles off the dv state (c18) --------------------
 
 @pytest.mark.parametrize("sf", [SF0001, SF001])
 def test_c18_matches_duckdb_oracle(spark, sf):
@@ -1456,9 +1455,9 @@ def test_randomized_topk_and_quantiles_match_python_reference(spark, tmp_path):
 
 
 def test_group_agg_replay_batched_equals_sequential(spark, tmp_path, sf_dir):
-    """Round 15 (VERDICT r14 ask #5): the whole change log applied as ONE
+    """The whole change log applied as ONE
     IncrementalGroupAgg.apply_batch call must read back the same agg
-    table as the old 4-LSN-quartile sequential replay — the per-epoch
+    table as a 4-LSN-quartile sequential replay — the per-epoch
     delta fold telescopes to live_agg(final state), which is invariant
     under any batch partitioning of the same log. This is the invariant
     c12_incremental_agg's one-call replay rests on."""

@@ -1,8 +1,10 @@
-"""Manifest-generation commit protocol (object-store-safe state):
-equivalence with ParquetCollection, no data renames/overwrites ever,
-torn-manifest fallback, orphan-commit tolerance + GC, idempotent replay,
-untouched commit directories staying byte-identical, and the keyed
-point store of runner.boot committing one generation per micro-batch.
+"""Manifest-generation commits (cdc/manifest.py) under the keyed row
+state: orphan directories invisible then GC'd, idempotent replay, GC
+keeping reachable history, per-generation time travel over the fixture
+and its GC-bounded horizon, and the keyed point store of runner.boot
+committing one generation per micro-batch. The rename-free, torn
+manifest and crash cases of the segment log run for every keyed store
+in tests/test_points_segments.py.
 """
 
 import json
@@ -17,7 +19,6 @@ from pyspark.sql import functions as F
 
 from cdc2vec_spark.cdc import apply
 from cdc2vec_spark.cdc.changelog import MAPPED, changes_df
-from cdc2vec_spark.cdc.manifest import ManifestCollection, ManifestStore
 from cdc2vec_spark.cdc.transform import filter_mapped
 
 SCHEMA = (
@@ -49,72 +50,25 @@ def _batches(spark, sf_dir, n=3):
     ]
 
 
-def test_manifest_equals_parquet_collection(spark, sf_dir, tmp_path):
-    ch, batches = _batches(spark, sf_dir)
-    pc = apply.ParquetCollection(spark, str(tmp_path / "swap"), n_buckets=8)
-    mc = ManifestCollection(spark, str(tmp_path / "manifest"), n_buckets=8)
-    for b in batches:
-        pc.apply_batch(b)
-        mc.apply_batch(b)
-    assert _state_map(mc) == _state_map(pc) != {}
-    ch.unpersist()
-
-
-def test_no_rename_and_no_data_overwrite(spark, tmp_path, monkeypatch):
-    """The protocol's core claim: data objects are written once to unique
-    paths and never renamed or replaced — os.rename/os.replace/shutil.move
-    are forbidden for the whole apply."""
-    import shutil as _sh
-
-    def boom(*a, **k):  # pragma: no cover - failure path
-        raise AssertionError("rename/move used in manifest protocol")
-
-    monkeypatch.setattr(os, "rename", boom)
-    monkeypatch.setattr(os, "replace", boom)
-    monkeypatch.setattr(_sh, "move", boom)
-    mc = ManifestCollection(spark, str(tmp_path / "m"), n_buckets=4)
-    mc.apply_batch(_log(spark, [(1, "c", "t", "1", "a", "c", "x")]))
-    mc.apply_batch(_log(spark, [(2, "u", "t", "1", "b", "c", "x")]))
-    assert _state_map(mc) == {"1": ("b", "c")}
-
-
-def test_torn_manifest_falls_back_and_version_not_reused(spark, tmp_path):
-    mc = ManifestCollection(spark, str(tmp_path / "m"), n_buckets=4)
-    mc.apply_batch(_log(spark, [(1, "c", "t", "1", "a", "c", "x")]))
-    good_v, good_map, _ = mc.store.latest()
-    # crash mid-PUT: version 2 exists but is invalid JSON
-    torn = mc.store._manifest_path(good_v + 1)
-    with open(torn, "w") as fh:
-        fh.write('{"version": 2, "buck')
-    v, mapping, max_seen = mc.store.latest()
-    assert (v, mapping) == (good_v, good_map)  # reader falls back
-    assert max_seen == good_v + 1
-    # the next commit allocates PAST the torn version
-    mc.apply_batch(_log(spark, [(2, "u", "t", "1", "b", "c", "x")]))
-    v2, _, _ = mc.store.latest()
-    assert v2 == good_v + 2
-    assert _state_map(mc) == {"1": ("b", "c")}
-
-
 def test_orphan_commit_dir_invisible_then_gced(spark, tmp_path):
-    mc = ManifestCollection(spark, str(tmp_path / "m"), n_buckets=4,
-                            keep_manifests=1)
+    mc = apply.ParquetCollection(spark, str(tmp_path / "m"))
+    mc.store.manifests.keep_manifests = 1
     mc.apply_batch(_log(spark, [(1, "c", "t", "1", "a", "c", "x")]))
     before = _state_map(mc)
     # crash after the data write, before the manifest PUT: orphan dir
-    orphan = os.path.join(mc.store.data_root, "commit-000000099-deadbeef")
-    os.makedirs(os.path.join(orphan, "bucket=0"))
-    with open(os.path.join(orphan, "bucket=0", "junk.parquet"), "wb") as fh:
+    orphan = os.path.join(mc.store.manifests.data_root, "seg-0-deadbeef")
+    os.makedirs(orphan)
+    with open(os.path.join(orphan, "junk.parquet"), "wb") as fh:
         fh.write(b"not parquet")
     assert _state_map(mc) == before  # readers never see it
-    removed_dirs, _ = mc.store.gc()
+    removed_dirs, _ = mc.store.manifests.gc()
     assert removed_dirs == 1
     assert not os.path.exists(orphan)
     assert _state_map(mc) == before
 
 
 def test_idempotent_replay(spark, tmp_path):
-    mc = ManifestCollection(spark, str(tmp_path / "m"), n_buckets=4)
+    mc = apply.ParquetCollection(spark, str(tmp_path / "m"))
     b1 = _log(spark, [(1, "c", "t", "1", "a", "c", "x"),
                       (2, "c", "t", "2", "b", "c", "x")])
     b2 = _log(spark, [(3, "d", "t", "1", None, None, None)])
@@ -126,59 +80,22 @@ def test_idempotent_replay(spark, tmp_path):
     assert _state_map(mc) == after == {"2": ("b", "c")}
 
 
-def test_untouched_commit_dirs_stay_byte_identical(spark, tmp_path):
-    mc = ManifestCollection(spark, str(tmp_path / "m"), n_buckets=64)
-    mc.apply_batch(_log(spark, [(1, "c", "t", "a", "va", "c", "x"),
-                                (2, "c", "t", "b", "vb", "c", "x")]))
-    _, mapping1, _ = mc.store.latest()
-
-    def snapshot(dirs):
-        out = {}
-        for d in dirs:
-            root = os.path.join(mc.store.data_root, d)
-            for dirpath, _, files in os.walk(root):
-                for f in files:
-                    p = os.path.join(dirpath, f)
-                    out[p] = (os.path.getmtime(p), os.path.getsize(p))
-        return out
-
-    snap1 = snapshot(set(mapping1.values()))
-    # touch ONLY pk=a's bucket
-    mc.apply_batch(_log(spark, [(3, "u", "t", "a", "va2", "c", "x")]))
-    _, mapping2, _ = mc.store.latest()
-    ba = {b for b, d in mapping2.items() if d != mapping1.get(b)}
-    assert len(ba) == 1  # exactly one bucket moved to the new commit
-    snap2 = snapshot(set(mapping1.values()))
-    assert snap1 == snap2  # prior commit dirs untouched, byte-for-byte
-    assert _state_map(mc) == {"a": ("va2", "c"), "b": ("vb", "c")}
-
-
 def test_gc_keeps_reachable_history(spark, tmp_path):
-    mc = ManifestCollection(spark, str(tmp_path / "m"), n_buckets=4,
-                            keep_manifests=2, auto_gc_every=0)
-    for i in range(5):
+    mc = apply.ParquetCollection(spark, str(tmp_path / "m"))
+    store = mc.store.manifests
+    store.keep_manifests = 2
+    for i in range(5):  # the fourth apply compacts
         mc.apply_batch(_log(spark, [(i + 1, "c", "t", str(i), f"v{i}", "c", "x")]))
     state_before = _state_map(mc)
-    mc.store.gc()
-    versions = mc.store._versions_on_disk()
+    store.gc()
+    versions = store._versions_on_disk()
     assert len(versions) == 2  # keep_manifests
     assert _state_map(mc) == state_before
     # every directory the surviving manifests reference still exists
     for v in versions:
-        with open(mc.store._manifest_path(v)) as fh:
+        with open(store._manifest_path(v)) as fh:
             for d in json.load(fh)["buckets"].values():
-                assert os.path.isdir(os.path.join(mc.store.data_root, d))
-
-
-def test_read_prunes_bucket_directories(spark, tmp_path):
-    mc = ManifestCollection(spark, str(tmp_path / "m"), n_buckets=8)
-    rows = [(i + 1, "c", "t", str(i), f"v{i}", "c", "x") for i in range(20)]
-    mc.apply_batch(_log(spark, rows))
-    df = mc.read()
-    assert df is not None
-    plan = df.where(F.col("bucket") == df.select("bucket").first()[0])
-    s = plan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in s
+                assert os.path.isdir(os.path.join(store.data_root, d))
 
 
 def test_boot_commits_one_generation_per_batch(spark, sf_dir, tmp_path):
@@ -216,20 +133,6 @@ def test_boot_commits_one_generation_per_batch(spark, sf_dir, tmp_path):
     assert got == want
 
 
-@pytest.mark.parametrize("n", [2])
-def test_fixture_stream_matches_batch_oracle(spark, sf_dir, tmp_path, n):
-    ch, batches = _batches(spark, sf_dir, n=n)
-    mc = ManifestCollection(spark, str(tmp_path / "m"), n_buckets=8)
-    for b in batches:
-        mc.apply_batch(b)
-    want = {
-        r["pk"]: (r["after_title"], r["after_content"])
-        for r in apply.latest_state(ch).collect()
-    }
-    assert _state_map(mc) == want
-    ch.unpersist()
-
-
 def test_time_travel_reads_each_generation(spark, sf_dir, tmp_path):
     """read(as_of=v)/state(as_of=v) reproduce the state EXACTLY as it was
     after each commit (immutable commit dirs make this free); versions()
@@ -238,14 +141,12 @@ def test_time_travel_reads_each_generation(spark, sf_dir, tmp_path):
     import pytest as _pytest
 
     ch, batches = _batches(spark, sf_dir)
-    mc = ManifestCollection(
-        spark, str(tmp_path / "tt"), n_buckets=8, auto_gc_every=0
-    )
+    mc = apply.ParquetCollection(spark, str(tmp_path / "tt"))
     snaps = []
     for b in batches:
         mc.apply_batch(b)
         snaps.append(_state_map(mc))
-    versions = mc.store.versions()
+    versions = mc.store.manifests.versions()
     assert len(versions) == len(batches)
 
     for v, want in zip(versions, snaps):
@@ -267,15 +168,14 @@ def test_time_travel_horizon_bounded_by_gc(spark, sf_dir, tmp_path):
     import pytest as _pytest
 
     ch, batches = _batches(spark, sf_dir, n=4)
-    mc = ManifestCollection(
-        spark, str(tmp_path / "ttgc"), n_buckets=8,
-        keep_manifests=2, auto_gc_every=0,
-    )
+    mc = apply.ParquetCollection(spark, str(tmp_path / "ttgc"))
     for b in batches:
         mc.apply_batch(b)
-    all_versions = mc.store.versions()
-    mc.store.gc()
-    kept = mc.store.versions()
+    store = mc.store.manifests
+    all_versions = store.versions()
+    store.keep_manifests = 2
+    store.gc()
+    kept = store.versions()
     assert len(kept) == 2 and kept == all_versions[-2:]
     with _pytest.raises(ValueError, match="not retained"):
         mc.read(as_of=all_versions[0])

@@ -1,10 +1,14 @@
-"""Segment-log keyed point state (cdc/segments.py) behind
-runner.PointsCollection and runner.ChunkedPointsCollection.
+"""The segment log (cdc/segments.py) behind runner.PointsCollection,
+runner.ChunkedPointsCollection and the row state cdc.apply.ParquetCollection.
 
-Every case runs on both collections. One pure-Python reference covers
-both: an event is a key plus its rows (one row per id for the plain
-collection; the chunk rows, or one tombstone, per base_id for the
-chunked one), and the state holds each key's max-LSN event.
+The LWW, no-rename, torn-manifest, crashed-write, time-travel and
+upgrade cases run on every collection; the compaction-crash and
+segment-count cases on the two point stores. One pure-Python
+reference covers them all: an event is a key plus its rows (one row
+per id for the plain point collection and the row state; the chunk
+rows, or one tombstone, per base_id for the chunked one), and the state
+holds each key's max-LSN eligible event. Only the row state has ineligible events: an
+upsert with empty text, which must leave the key's prior row in place.
 """
 
 from __future__ import annotations
@@ -19,8 +23,13 @@ from pyspark.sql import functions as F
 
 from cdc2vec_spark import runner
 from cdc2vec_spark.cdc import segments
-from cdc2vec_spark.cdc.apply import BUCKET_COL, bucket_expr, swap_buckets
-from cdc2vec_spark.cdc.manifest import ManifestStore, _commit
+from cdc2vec_spark.cdc.apply import (
+    BUCKET_COL,
+    ParquetCollection,
+    bucket_expr,
+    swap_buckets,
+)
+from cdc2vec_spark.cdc.manifest import ManifestStore
 
 PLAIN_DDL = (
     "id string, vector array<float>, metadata map<string,string>, "
@@ -30,12 +39,18 @@ CHUNKED_DDL = (
     "id string, base_id string, vector array<float>, "
     "metadata map<string,string>, op string, lsn long"
 )
+ROW_DDL = (
+    "lsn long, op string, tbl string, pk string, "
+    "after_title string, after_content string, after_author string"
+)
 
 
 class Plain:
     cls = runner.PointsCollection
     ddl = PLAIN_DDL
-    key_col = "id"
+    key_col = id_col = "id"
+    live_cols = ("id", "lsn", "vector")
+    upserts = "cu"
 
     @staticmethod
     def event(key, lsn, op, n_chunks=1):
@@ -43,8 +58,20 @@ class Plain:
             return key, [(key, None, None, "d", lsn)]
         return key, [(key, [float(lsn), 1.0], {"pk": key}, op, lsn)]
 
+    @staticmethod
+    def apply(coll, df):
+        coll.apply_points(df)
 
-class Chunked:
+    @staticmethod
+    def live(coll, as_of):
+        return coll.live(as_of)
+
+    @staticmethod
+    def eligible(row):
+        return True
+
+
+class Chunked(Plain):
     cls = runner.ChunkedPointsCollection
     ddl = CHUNKED_DDL
     key_col = "base_id"
@@ -59,55 +86,101 @@ class Chunked:
         ]
 
 
+class Row:
+    """Row state keyed on (tbl, pk). Op ``x`` is an update whose text is
+    empty: the empty-text guard drops it."""
+
+    cls = ParquetCollection
+    ddl = ROW_DDL
+    key_col = id_col = "pk"
+    live_cols = ("pk", "after_title", "after_content", "after_author")
+    upserts = "cux"
+
+    @staticmethod
+    def event(key, lsn, op, n_chunks=1):
+        if op == "d":
+            return key, [(lsn, "d", "t", key, None, None, None)]
+        if op == "x":
+            return key, [(lsn, "u", "t", key, "", None, f"a{lsn}")]
+        return key, [(lsn, op, "t", key, f"v{lsn}", "c" * n_chunks, f"a{lsn}")]
+
+    @staticmethod
+    def apply(coll, df):
+        coll.apply_batch(df)
+
+    @staticmethod
+    def live(coll, as_of):
+        return coll.state(as_of)
+
+    @staticmethod
+    def eligible(row):
+        return row["op"] == "d" or bool(row["after_title"] or row["after_content"])
+
+
 FLAVORS = pytest.mark.parametrize("fl", [Plain, Chunked], ids=["plain", "chunked"])
+ALL_FLAVORS = pytest.mark.parametrize(
+    "fl", [Plain, Chunked, Row], ids=["plain", "chunked", "row"]
+)
 
 
-def _reference(events):
-    """key -> rows of its max-LSN event."""
+def _names(fl):
+    return [c.split()[0] for c in fl.ddl.split(", ")]
+
+
+def _reference(fl, events):
+    """The rows of each key's max-LSN eligible event, as dicts."""
     state: dict = {}
     for key, rows in events:
-        lsn = rows[0][-1]
-        if key not in state or lsn > state[key][0]:
+        rows = [dict(zip(_names(fl), r)) for r in rows]
+        lsn = rows[0]["lsn"]
+        if fl.eligible(rows[0]) and (key not in state or lsn > state[key][0]):
             state[key] = (lsn, rows)
     return [r for _, rows in state.values() for r in rows]
 
 
 def _apply(spark, fl, coll, events):
     rows = [r for _, rs in events for r in rs]
-    coll.apply_points(spark.createDataFrame(rows, fl.ddl))
+    fl.apply(coll, spark.createDataFrame(rows, fl.ddl))
 
 
-def _stored(df):
-    return sorted((r["id"], r["op"], r["lsn"]) for r in df.collect())
+def _stored(fl, df):
+    return sorted((r[fl.id_col], r["op"], r["lsn"]) for r in df.collect())
 
 
-def _live(coll, as_of=None):
-    df = coll.live(as_of)
+def _canon(fl, row):
+    return tuple(
+        tuple(v) if isinstance(v, list) else v for v in (row[c] for c in fl.live_cols)
+    )
+
+
+def _live(fl, coll, as_of=None):
+    df = fl.live(coll, as_of)
     if df is None:
         return []
-    return sorted((r["id"], r["lsn"], tuple(r["vector"])) for r in df.collect())
+    return sorted(_canon(fl, r) for r in df.collect())
 
 
-def _ref_live(ref):
-    return sorted((r[0], r[-1], tuple(r[-4])) for r in ref if r[-2] != "d")
+def _ref_live(fl, ref):
+    return sorted(_canon(fl, r) for r in ref if r["op"] != "d")
 
 
-def _ref_stored(ref):
-    return sorted((r[0], r[-2], r[-1]) for r in ref)
+def _ref_stored(fl, ref):
+    return sorted((r[fl.id_col], r["op"], r["lsn"]) for r in ref)
 
 
-def _assert_matches(coll, events):
-    ref = _reference(events)
-    assert _stored(coll.read()) == _ref_stored(ref)
-    assert _live(coll) == _ref_live(ref)
+def _assert_matches(fl, coll, events):
+    ref = _reference(fl, events)
+    assert _stored(fl, coll.read()) == _ref_stored(fl, ref)
+    assert _live(fl, coll) == _ref_live(fl, ref)
 
 
-@FLAVORS
+@ALL_FLAVORS
 def test_randomized_lww_matches_reference(spark, tmp_path, fl):
-    """Inserts, updates, deletes and duplicate keys within a batch;
-    batches applied out of LSN order, then an old batch replayed. Ten
-    applies cross two compactions; the state is checked after each one,
-    the first while a lone segment holds it."""
+    """Inserts, updates, deletes and duplicate keys within a batch (and,
+    for the row state, empty-text updates); batches applied out of LSN
+    order, then an old batch replayed and an empty-text update of a live
+    key. Eleven applies cross two compactions; the state is checked after
+    each one, the first while a lone segment holds it."""
     rng = random.Random(7)
     keys = [f"t:{i}" for i in range(10)]
     lsn = 0
@@ -118,7 +191,7 @@ def test_randomized_lww_matches_reference(spark, tmp_path, fl):
             lsn += 1
             # the last event repeats the first event's key
             key = batch[0][0] if j == 5 else rng.choice(keys)
-            op = "d" if rng.random() < 0.25 else rng.choice("cu")
+            op = "d" if rng.random() < 0.25 else rng.choice(fl.upserts)
             batch.append(fl.event(key, lsn, op, rng.randint(1, 3)))
         batches.append(batch)
     order = batches[:]
@@ -130,11 +203,19 @@ def test_randomized_lww_matches_reference(spark, tmp_path, fl):
     for batch in order:
         _apply(spark, fl, coll, batch)
         applied += batch
-        _assert_matches(coll, applied)
-    assert len(coll.store.segments()) < 10  # the compactions ran
+        _assert_matches(fl, coll, applied)
+    # a live key's newest event, then the flavor's last upsert kind on
+    # it: for the row state an empty-text update, which must keep it
+    live = max(_reference(fl, applied), key=lambda r: (r["op"] != "d", r["lsn"]))
+    key = live[fl.key_col]
+    applied.append(fl.event(key, lsn + 1, fl.upserts[-1]))
+    _apply(spark, fl, coll, applied[-1:])
+    _assert_matches(fl, coll, applied)
+    assert any(r[0].split("#")[0] == key for r in _live(fl, coll))
+    assert len(coll.store.segments()) < 11  # the compactions ran
 
 
-@FLAVORS
+@ALL_FLAVORS
 def test_stale_upsert_cannot_resurrect_deleted_key(spark, tmp_path, fl):
     """The tombstone survives compaction and still beats an upsert
     replayed with an older LSN."""
@@ -148,8 +229,8 @@ def test_stale_upsert_cannot_resurrect_deleted_key(spark, tmp_path, fl):
         _apply(spark, fl, coll, events[-1:])
     assert [s.level for s in coll.store.segments()] == [1]
     _apply(spark, fl, coll, [fl.event("t:a", 7, "u", 3)])  # stale upsert
-    assert not any(r[0].startswith("t:a") for r in _live(coll))
-    _assert_matches(coll, events)
+    assert not any(r[0].startswith("t:a") for r in _live(fl, coll))
+    _assert_matches(fl, coll, events)
 
 
 def _files(root):
@@ -162,7 +243,7 @@ def _files(root):
     }
 
 
-@FLAVORS
+@ALL_FLAVORS
 def test_no_rename_and_no_data_overwrite(spark, tmp_path, monkeypatch, fl):
     """Appends and a compaction run with os.rename/os.replace/shutil.move
     forbidden, and every segment file written stays byte-identical for
@@ -185,10 +266,10 @@ def test_no_rename_and_no_data_overwrite(spark, tmp_path, monkeypatch, fl):
         seen.update(now)
     assert [s.level for s in coll.store.segments()] == [0, 1]
     assert coll.store.manifests.latest()[0] == 6  # 5 appends + 1 compaction
-    _assert_matches(coll, events)
+    _assert_matches(fl, coll, events)
 
 
-@FLAVORS
+@ALL_FLAVORS
 def test_torn_manifest_falls_back_and_version_not_reused(spark, tmp_path, fl):
     coll = fl.cls(spark, str(tmp_path / "pts"))
     events = [fl.event("t:a", 5, "c"), fl.event("t:b", 6, "c")]
@@ -199,14 +280,14 @@ def test_torn_manifest_falls_back_and_version_not_reused(spark, tmp_path, fl):
     with open(store._manifest_path(good_v + 1), "w") as fh:
         fh.write('{"version": 2, "buck')
     assert store.latest() == (good_v, good_map, good_v + 1)
-    _assert_matches(coll, events)
+    _assert_matches(fl, coll, events)
     events.append(fl.event("t:a", 9, "d"))
     _apply(spark, fl, coll, events[-1:])
     assert store.latest()[0] == good_v + 2  # allocated past the torn one
-    _assert_matches(coll, events)
+    _assert_matches(fl, coll, events)
 
 
-@FLAVORS
+@ALL_FLAVORS
 def test_crashed_write_is_invisible_then_gced(spark, tmp_path, fl):
     """A write that crashed before its manifest was published leaves an
     unreferenced ``data/seg-*`` dir: readers never see it and the gc of
@@ -217,11 +298,11 @@ def test_crashed_write_is_invisible_then_gced(spark, tmp_path, fl):
     _, rows = fl.event("t:b", 9, "u")  # a newer upsert, never published
     orphan = os.path.join(coll.store.manifests.data_root, "seg-0-crashed")
     spark.createDataFrame(rows, fl.ddl).write.parquet(orphan)
-    _assert_matches(coll, events)
+    _assert_matches(fl, coll, events)
     events.append(fl.event("t:c", 7, "c"))
     _apply(spark, fl, coll, events[-1:])
     assert not os.path.exists(orphan)
-    _assert_matches(coll, events)
+    _assert_matches(fl, coll, events)
 
 
 @FLAVORS
@@ -253,12 +334,12 @@ def test_compaction_crash_before_publish(spark, tmp_path, monkeypatch, fl):
     live = {os.path.basename(s.dirs[0]) for s in coll.store.segments()}
     orphans = set(os.listdir(store.data_root)) - live
     assert [n.split("-")[1] for n in orphans] == ["1"]
-    _assert_matches(coll, events)
+    _assert_matches(fl, coll, events)
     events.append(fl.event("t:3", 21, "c"))
     _apply(spark, fl, coll, events[-1:])
     assert [s.level for s in coll.store.segments()] == [0, 1]
     assert not orphans & set(os.listdir(store.data_root))
-    _assert_matches(coll, events)
+    _assert_matches(fl, coll, events)
 
 
 @FLAVORS
@@ -275,7 +356,7 @@ def test_segment_count_is_logarithmic(spark, tmp_path, fl):
     segs = coll.store.segments()
     assert sorted(s.level for s in segs) == [1, 2]
     assert len(segs) <= (segments.FAN_IN - 1) * 3  # log4(20) < 3 levels
-    _assert_matches(coll, events)
+    _assert_matches(fl, coll, events)
 
 
 def _old_bucket_layout(spark, fl, path, events):
@@ -311,17 +392,21 @@ def _old_buckets_then_segments(spark, fl, path, events):
     _renamed_segments(spark, fl, path, (events[1:2], events[2:]), 0)
 
 
-def _old_manifest_points(spark, fl, path, events):
-    """A ``state_protocol: manifest`` points store: commit dirs of
-    bucket partitions behind a bucket -> commit dir mapping, written by
-    manifest._commit in two generations."""
-    store, done = ManifestStore(path), []
-    for part in (events[:2], events[2:]):
+def _old_manifest_buckets(spark, fl, path, events):
+    """A store of the bucket manifest protocol (a ``state_protocol:
+    manifest`` points store, or a ManifestCollection row store) after
+    two generations: each wrote the merged state of the buckets it
+    touched to a fresh ``data/commit-*/`` dir, partitioned by bucket,
+    and published a manifest mapping those buckets to it."""
+    store, done, mapping = ManifestStore(path), [], {}
+    for version, part in enumerate((events[:2], events[2:]), start=1):
         done += part
         touched = _touched(_old_frame(spark, fl, part))
-        # a commit holds the merged state of the buckets it touched
+        cdir = f"commit-{version:09d}-{version:08x}"
         merged = _old_frame(spark, fl, done).where(F.col(BUCKET_COL).isin(touched))
-        _commit(store, merged, touched, auto_gc_every=0)
+        merged.write.partitionBy(BUCKET_COL).parquet(os.path.join(store.data_root, cdir))
+        mapping.update(dict.fromkeys(touched, cdir))
+        store.publish(version, mapping)
 
 
 def _old_frame(spark, fl, events):
@@ -333,21 +418,25 @@ def _touched(df):
     return sorted(r[0] for r in df.select(BUCKET_COL).distinct().collect())
 
 
-OLD_FORMATS = pytest.mark.parametrize(
-    "write_old",
-    [
-        _old_bucket_layout,
-        _old_buckets_then_segments,
-        _old_rename_segments,
-        _old_manifest_points,
-    ],
-    ids=["buckets", "buckets+segments", "renamed-segments", "manifest-buckets"],
-)
+_OLD = {
+    "buckets": _old_bucket_layout,
+    "buckets+segments": _old_buckets_then_segments,
+    "renamed-segments": _old_rename_segments,
+    "manifest-buckets": _old_manifest_buckets,
+}
+OLD_FORMATS = pytest.mark.parametrize("write_old", list(_OLD.values()), ids=list(_OLD))
+# the row state only ever had the two bucket layouts: the bucketed
+# ParquetCollection and ManifestCollection
+_UPGRADES = [
+    pytest.param(fl, _OLD[name], id=f"{name}-{fl.__name__.lower()}")
+    for name in _OLD
+    for fl in (Plain, Chunked, Row)
+    if fl is not Row or name in ("buckets", "manifest-buckets")
+]
 FRESH = re.compile(r"seg-\d-[0-9a-f]{32}")  # a segment written by the store
 
 
-@FLAVORS
-@OLD_FORMATS
+@pytest.mark.parametrize("fl, write_old", _UPGRADES)
 def test_bucket_layout_upgrades_in_place(spark, tmp_path, fl, write_old):
     """State left by each earlier layout reads as the oldest segment(s);
     the first compaction folds it in, after which the store holds only
@@ -361,13 +450,13 @@ def test_bucket_layout_upgrades_in_place(spark, tmp_path, fl, write_old):
     write_old(spark, fl, path, old)
 
     coll = fl.cls(spark, path)
-    _assert_matches(coll, old)
+    _assert_matches(fl, coll, old)
     assert sorted(os.listdir(path)) == ["_manifests", "data"]
     events = old + [fl.event("t:a", 9, "u", 1)]
     _apply(spark, fl, coll, events[-1:])
     events.append(fl.event("t:c", 7, "u"))  # stale: the old delete wins
     _apply(spark, fl, coll, events[-1:])
-    _assert_matches(coll, events)
+    _assert_matches(fl, coll, events)
     while not any(s.level for s in coll.store.segments()):
         events.append(fl.event(f"t:{len(events)}", len(events) + 20, "c"))
         _apply(spark, fl, coll, events[-1:])
@@ -377,7 +466,7 @@ def test_bucket_layout_upgrades_in_place(spark, tmp_path, fl, write_old):
     coll.store.manifests.gc()  # no retained generation references them
     data = os.listdir(coll.store.manifests.data_root)
     assert all(FRESH.fullmatch(n) for n in data)
-    _assert_matches(coll, events)
+    _assert_matches(fl, coll, events)
 
 
 @OLD_FORMATS
@@ -394,7 +483,7 @@ def test_upgrade_starts_with_an_apply(spark, tmp_path, monkeypatch, write_old, r
         Plain.event("t:c", 8, "d"),
     ]
     write_old(spark, Plain, path, events)
-    listdir = os.listdir
+    fl, listdir = Plain, os.listdir
     monkeypatch.setattr(
         os, "listdir", lambda p=".": sorted(listdir(p), reverse=reverse)
     )
@@ -402,7 +491,7 @@ def test_upgrade_starts_with_an_apply(spark, tmp_path, monkeypatch, write_old, r
     for ev in (Plain.event("t:a", 9, "u"), Plain.event("t:d", 10, "c")):
         events.append(ev)
         _apply(spark, Plain, coll, [ev])
-        _assert_matches(coll, events)
+        _assert_matches(fl, coll, events)
     assert sorted(listdir(path)) == ["_manifests", "data"]
 
 
@@ -411,9 +500,10 @@ def test_interrupted_upgrade_move_resumes(spark, tmp_path, monkeypatch):
     into ``data/`` (its manifest already published) resumes on the next
     call and loses nothing."""
     path = str(tmp_path / "pts")
-    old = [Plain.event(f"t:{i}", 5 + i, "d" if i == 3 else "c") for i in range(6)]
-    _old_bucket_layout(spark, Plain, path, old[:3])
-    _renamed_segments(spark, Plain, path, (old[3:5], old[5:]), 0)
+    fl = Plain
+    old = [fl.event(f"t:{i}", 5 + i, "d" if i == 3 else "c") for i in range(6)]
+    _old_bucket_layout(spark, fl, path, old[:3])
+    _renamed_segments(spark, fl, path, (old[3:5], old[5:]), 0)
     rename, calls = os.rename, []
 
     def crash_on_third(src, dst):
@@ -428,12 +518,12 @@ def test_interrupted_upgrade_move_resumes(spark, tmp_path, monkeypatch):
         coll.store.segments()
     monkeypatch.setattr(os, "rename", rename)
     assert any(n != "_manifests" and n != "data" for n in os.listdir(path))
-    _assert_matches(coll, old)
+    _assert_matches(fl, coll, old)
     assert sorted(os.listdir(path)) == ["_manifests", "data"]
     assert coll.store.manifests.latest()[0] == 1  # published once
 
 
-@FLAVORS
+@ALL_FLAVORS
 def test_time_travel_reads_each_generation(spark, tmp_path, fl):
     """read/live(as_of=v) give the state as of each retained generation,
     a compaction's inputs included while a retained generation still
@@ -448,9 +538,9 @@ def test_time_travel_reads_each_generation(spark, tmp_path, fl):
     assert coll.store.manifests.versions() == [1, 2, 3, 4, 5, 6]
     snaps[4] = snaps[5]  # the generation just before the compaction
     for v, evs in sorted(snaps.items()):
-        ref = _reference(evs)
-        assert _stored(coll.read(as_of=v)) == _ref_stored(ref)
-        assert _live(coll, as_of=v) == _ref_live(ref)
+        ref = _reference(fl, evs)
+        assert _stored(fl, coll.read(as_of=v)) == _ref_stored(fl, ref)
+        assert _live(fl, coll, as_of=v) == _ref_live(fl, ref)
     assert [s.level for s in coll.store.segments(as_of=4)] == [0] * 4
     with pytest.raises(ValueError, match="not retained"):
         coll.read(as_of=99)

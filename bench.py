@@ -289,9 +289,15 @@ def main() -> None:
     # Not comparable with records from before the one-pass writer: since
     # then FNV-1a id hashing runs inside the timed delivery and the
     # bodies carry float32 text. The name is kept for the series.
-    sink_rate = _sink_upsert_rate(spark)
+    from cdc2vec_spark.sinks import milvus, qdrant
+
+    sink_rate = _sink_upsert_rate(spark, qdrant)
     print(f"# sink_upserts_per_sec: {sink_rate}", file=sys.stderr)
     record("sink_upserts_per_sec", sink_rate)
+    # the same writer into Milvus (REST v2 upserts; no workload measures it)
+    milvus_rate = _sink_upsert_rate(spark, milvus)
+    print(f"# sink_upserts_per_sec_milvus: {milvus_rate}", file=sys.stderr)
+    record("sink_upserts_per_sec_milvus", milvus_rate)
 
     # CDC apply into the keyed row state: per-batch wall must stay flat as
     # the state grows 10x, because an apply appends a segment and never
@@ -337,7 +343,7 @@ def main() -> None:
     # scale curve; if late ≪ the fresh number above, any cross-round
     # throughput decline the driver records is session pressure on the
     # shared JVM/mock, not per-batch cost growth
-    sink_rate_late = _sink_upsert_rate(spark)
+    sink_rate_late = _sink_upsert_rate(spark, qdrant)
     print(f"# sink_upserts_per_sec_late: {sink_rate_late}", file=sys.stderr)
     record("sink_upserts_per_sec_late", sink_rate_late)
 
@@ -446,14 +452,16 @@ def _mock_http_server(response: dict):
     return srv, f"http://127.0.0.1:{srv.server_address[1]}"
 
 
-def _sink_upsert_rate(spark, n: int = 20_000, dim: int = 768) -> int:
-    """Points/s through the batched Qdrant HTTP writer against a local
-    mock (BASELINE.md: reference does ~500-2,000 inserts/s with one
-    request per point). The timed delivery hashes ids (fnv1a64_py) and
-    sends float32 vector text; point_bodies is built before the clock."""
+def _sink_upsert_rate(spark, sink, n: int = 20_000, dim: int = 768) -> int:
+    """Points/s through the shared partition writer
+    (``sinks.http.deliver_partition``) into ``sink`` (``sinks.qdrant``
+    or ``sinks.milvus``) against a local mock (BASELINE.md: the reference
+    does ~500-2,000 inserts/s with one request per point). The timed
+    delivery sends float32 vector text (Qdrant also hashes ids);
+    ``point_bodies`` is built before the clock."""
     from pyspark.sql import functions as F
 
-    from cdc2vec_spark.sinks import qdrant
+    from cdc2vec_spark.sinks.http import deliver_partition
 
     srv, url = _mock_http_server({"status": "ok"})
     try:
@@ -469,13 +477,13 @@ def _sink_upsert_rate(spark, n: int = 20_000, dim: int = 768) -> int:
         # delivery, and 32 concurrent PUTs contend on the single-process
         # Python mock's GIL (measured 10x swings); 8 writers keep the
         # mock out of the measurand
-        payloads = qdrant.point_bodies(pts).repartition(8).persist()
+        payloads = sink.point_bodies(pts).repartition(8).persist()
         payloads.count()  # materialize: time delivery, not payload build
         secs = []
         for _ in range(3):
             t0 = time.perf_counter()
             payloads.foreachPartition(
-                lambda rows: qdrant.deliver_partition_http(rows, url, "bench")
+                lambda rows: deliver_partition(rows, sink, url, "bench")
             )
             secs.append(time.perf_counter() - t0)
         payloads.unpersist()

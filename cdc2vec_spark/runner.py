@@ -132,28 +132,45 @@ def final_events(pts: DataFrame) -> DataFrame:
 def final_events_chunked(pts: DataFrame) -> DataFrame:
     """Chunked analogue of final_events: the winning EVENT per base key —
     all chunk rows of the max-LSN upsert, or the single tombstone of a
-    winning delete (ChunkedPointsCollection's replace-set rule)."""
+    winning delete (ChunkedPointsCollection's replace-set rule).
+
+    Every row of one base key comes out in one partition, which the
+    chunked delivery pass relies on. The dedup key includes ``base_id``
+    (``id`` determines it, so the rows are the same) so that the
+    window's hash partitioning on ``base_id`` already satisfies it; a
+    dedup on ``(id, lsn)`` alone re-shuffles and splits base keys."""
     w = Window.partitionBy("base_id")
     return (
         pts.withColumn("_mx", F.max("lsn").over(w))
         .where(F.col("lsn") == F.col("_mx"))
         .drop("_mx")
-        .dropDuplicates(["id", "lsn"])
+        .dropDuplicates(["base_id", "id", "lsn"])
     )
 
 
 def sink_hook_for(cfg: PipelineConfig, sink=None):
     """main.go:66-100 sink factory, config-driven: returns a per-batch
-    delivery hook (points DataFrame → external sink) or None.
+    delivery hook (points DataFrame → sink) or None.
 
-    - ``qdrant``: one foreachPartition pass of batched PUT upserts +
-      POST deletes (FNV-1a id parity, float32 vectors).
-    - ``milvus``: lazily ensure the collection (reference field/index
-      constants), then batched REST v2 inserts + delete exprs.
+    - ``qdrant`` / ``milvus``: ensure the collection once (reference
+      field/index constants), then per batch one Spark job: reduce the
+      batch once (``final_events``, or ``final_events_chunked``), build
+      each winner's request body JVM-side (float32 vectors; Qdrant adds
+      FNV-1a id parity) and stream it out in one ``foreachPartition``
+      pass of batched upserts and deletes (``sinks.http.deliver_partition``).
     - ``ivf_index``: maintain a disk-resident incremental IVF ANN index
-      (operators.ann_index) at ``options.path`` — centroids bootstrap
-      from the first batch's vectors, then every batch rewrites only its
-      touched cells.
+      (operators.ann_index) at ``options.path``; centroids bootstrap from
+      the first batch's vectors.
+    - ``lex_index``: maintain a disk BM25 inverted index
+      (operators.lex_index) at ``options.path``.
+    - ``group_agg``: maintain an incremental GROUP BY materialization
+      (cdc.ivm.IncrementalGroupAgg) at ``options.path``.
+    - ``distinct_agg``: maintain a ref-counted COUNT(DISTINCT)
+      materialization (cdc.ivm.IncrementalDistinctCount).
+    - ``neardup``: maintain the streaming MinHash-LSH near-dup state and
+      pair graph (streaming.neardup.StreamingNearDup).
+    - ``scd2_history``: maintain the SCD Type-2 row-validity history
+      (cdc.scd2.Scd2History) from every event.
     - ``kafka`` / empty: None — Kafka delivery is writeStream-native
       (``sinks.kafka.to_kafka_messages`` + format('kafka')), and the
       engine-native keyed collection is always maintained regardless.
@@ -172,10 +189,11 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
     url = opts.get("url") or opts.get("addr") or ""
     collection = opts.get("collection") or "points"
 
-    # chunked configs: the in-engine indexes apply replace-set semantics
-    # natively — tombstones key on the base id (before '#'), so one
-    # tombstone supersedes every chunk of a key (ann_index.__init__)
-    idx_chunked = isinstance(cfg, PipelineConfig) and cfg.engine.chunk is not None
+    # chunked configs: each sink applies replace-set semantics per base
+    # key — the in-engine indexes natively (tombstones key on the base id
+    # before '#', ann_index.__init__), the external sinks by a
+    # filter-delete of the key's chunk set before its winning chunks
+    chunked = cfg.engine.chunk is not None
 
     if sink.type == "group_agg":
         # maintain the IVM GROUP BY materialization from the same stream
@@ -219,7 +237,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
                     pts.sparkSession, gpath, group_cols=gcols,
                     aggs=gaggs or None,
                     text_cols=("after_text",), n_buckets=gbuckets,
-                    chunked=idx_chunked,
+                    chunked=chunked,
                 )
             # points → the changes shape the merge machinery speaks
             # (op/tbl/pk/lsn/after_*): tbl is a constant, pk the point id.
@@ -238,7 +256,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
                     for k, c in zip(gkeys, gcols)
                 ],
             ]
-            if idx_chunked:
+            if chunked:
                 sel.append(F.col("base_id").alias("base_pk"))
             agg.apply_batch(pts.select(*sel))
 
@@ -261,7 +279,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
         dpath = opts.get("path")
         if not dpath:
             raise ValueError("distinct_agg sink requires options.path")
-        if idx_chunked:
+        if chunked:
             raise ValueError(
                 "distinct_agg sink does not support chunked configs"
             )
@@ -355,7 +373,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
         npath = opts.get("path")
         if not npath:
             raise ValueError("neardup sink requires options.path")
-        if idx_chunked:
+        if chunked:
             raise ValueError("neardup sink does not support chunked configs")
         nsource = str(opts.get("source_key", "")).strip()
         nreport_every = int(opts.get("report_every", 0))
@@ -429,7 +447,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
         spath = opts.get("path")
         if not spath:
             raise ValueError("scd2_history sink requires options.path")
-        if idx_chunked:
+        if chunked:
             # chunked points version per CHUNK id, but a shrinking update
             # emits no closure event for its dropped tail chunks — their
             # versions would stay open forever. Reject loudly (the
@@ -507,7 +525,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
                     pts.sparkSession, lpath, n_buckets=lbuckets,
                     payload_cols=lpay,
                     auto_compact_ratio=lratio, auto_compact_min=lmin,
-                    chunked=idx_chunked,
+                    chunked=chunked,
                 )
             ix.apply_batch(pts.select("id", "text", "op", "lsn", *lpay))
             lcache["n"] += 1
@@ -562,7 +580,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
                 ix = icache["ix"] = IncrementalIvfIndex(
                     pts.sparkSession, path,
                     auto_compact_ratio=ratio, auto_compact_min=compact_min,
-                    pq=pq, chunked=idx_chunked,
+                    pq=pq, chunked=chunked,
                 )
             if not os.path.exists(path + "_centroids"):
                 # cold start: train centroids on the first batch's
@@ -584,78 +602,30 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
 
         hook.last_health = None
         return hook
-    if sink.type == "qdrant":
-        from .sinks import qdrant as q
 
-        chunked_cfg = (
-            isinstance(cfg, PipelineConfig) and cfg.engine.chunk is not None
-        )
-        q_dim = cfg.engine.vector_size if isinstance(cfg, PipelineConfig) else 768
-        q_ensured = {"done": False}
+    if sink.type in ("qdrant", "milvus"):
+        from .sinks import milvus, qdrant
+        from .sinks.http import deliver_partition
+
+        out = qdrant if sink.type == "qdrant" else milvus
+        reduce = final_events_chunked if chunked else final_events
+        dim = cfg.engine.vector_size
+        ensured = []
 
         def hook(pts: DataFrame) -> None:
-            if not q_ensured["done"]:
-                # Qdrant never auto-creates collections: ensure-or-verify
-                # once per pipeline (qdrant.go:70-145 parity)
-                q.ensure_collection(url, collection, dim=q_dim)
-                q_ensured["done"] = True
-            if chunked_cfg:
-                # replace-set delivery: clear every affected key's chunk
-                # set server-side (delete-by-filter on ext_base_id —
-                # neither we nor the server needs the old chunk count),
-                # THEN land the winning upserts' chunk points
-                fin = final_events_chunked(pts).localCheckpoint(eager=True)
-                fin.select("base_id").distinct().foreachPartition(
-                    lambda rows: q.delete_by_filter_partition_http(
-                        rows, url, collection
-                    )
-                )
-                fin = fin.where(F.col("op") != OP_DELETE)
-            else:
-                fin = final_events(pts)
-            # after the reduction each id is routed to exactly one of
-            # upsert/delete, so one pass in any order delivers the batch
-            q.point_bodies(fin).foreachPartition(
-                lambda rows: q.deliver_partition_http(rows, url, collection)
+            if not ensured:
+                # neither server auto-creates a collection: ensure-or-verify
+                # once per pipeline (qdrant.go:70-145, milvus.go:53-131)
+                out.ensure_collection(url, collection, dim=dim)
+                ensured.append(True)
+            # after the reduction each id (chunked: each base key) has one
+            # winning event, and all rows of a key share a partition, so one
+            # partition pass delivers the batch
+            out.point_bodies(reduce(pts)).foreachPartition(
+                lambda rows: deliver_partition(rows, out, url, collection, chunked)
             )
 
         return hook
-
-    from .sinks import milvus as m
-
-    ensured = {"done": False}
-    dim = cfg.engine.vector_size if isinstance(cfg, PipelineConfig) else 768
-    m_chunked = isinstance(cfg, PipelineConfig) and cfg.engine.chunk is not None
-
-    def hook(pts: DataFrame) -> None:
-        if not ensured["done"]:
-            m.ensure_collection(url, collection, dim=dim)
-            ensured["done"] = True
-        if m_chunked:
-            # replace-set delivery (same shape as the chunked qdrant
-            # hook): clear each affected key's chunk set via the
-            # JSON-field filter delete, then insert the winning chunks
-            fin = final_events_chunked(pts).localCheckpoint(eager=True)
-            fin.select("base_id").distinct().foreachPartition(
-                lambda rows: m.delete_by_base_partition_http(
-                    rows, url, collection
-                )
-            )
-            ins = m.insert_payloads(fin.where(F.col("op") != OP_DELETE))
-            ins.foreachPartition(
-                lambda rows: m.write_partition_http(rows, url, collection)
-            )
-            return
-        fin = final_events(pts)
-        ins = m.insert_payloads(fin.where(F.col("op") != OP_DELETE))
-        ins.foreachPartition(
-            lambda rows: m.write_partition_http(rows, url, collection)
-        )
-        fin.where(F.col("op") == OP_DELETE).select("id").foreachPartition(
-            lambda rows: m.delete_partition_http(rows, url, collection)
-        )
-
-    return hook
 
 
 def sink_hooks_for(cfg: PipelineConfig):
@@ -701,6 +671,34 @@ def _collection_for(spark: SparkSession, cfg, state_dir: str):
     return (ChunkedPointsCollection if chunked else PointsCollection)(spark, state_dir)
 
 
+def _batch_writer(cfg, coll):
+    """The per-batch write both boot paths share: apply the points to
+    the keyed collection ``coll``, then run the configured sink hooks
+    on them. Returns ``(keep_text, write)``: whether the points must
+    carry the extracted text (the sinks that index or aggregate it), and
+    ``write(pts, epoch_id)``."""
+    hook = sink_hooks_for(cfg) if isinstance(cfg, PipelineConfig) else None
+    keep_text = isinstance(cfg, PipelineConfig) and any(
+        s.type in ("lex_index", "group_agg", "distinct_agg", "neardup")
+        for s in cfg.all_sinks
+    )
+
+    def write(pts: DataFrame, epoch_id: int | None) -> None:
+        if hook is None:
+            coll.apply_points(pts, epoch_id)
+            return
+        # the hooks re-read the batch's points: persist so the embed UDF
+        # pipeline runs once, not once per sink
+        pts = pts.persist()
+        try:
+            coll.apply_points(pts, epoch_id)
+            hook(pts)
+        finally:
+            pts.unpersist()
+
+    return keep_text, write
+
+
 def boot(
     spark: SparkSession,
     config: PipelineConfig | str | None,
@@ -732,20 +730,15 @@ def boot(
     cfg = _resolve_config(config)
     provider = _provider_from(cfg)
     coll = _collection_for(spark, cfg, state_dir)
-    hook = sink_hooks_for(cfg) if isinstance(cfg, PipelineConfig) else None
+    keep_text, write = _batch_writer(cfg, coll)
     # chunked + in-engine index sinks compose: the indexes
     # key tombstones on the base id (before '#'), giving replace-set
     # chunk semantics natively (ann_index/lex_index chunked=True —
     # sink_hooks_for passes the flag); qdrant/milvus get the same
-    # semantics via payload-filter deletes in their chunked hooks;
+    # semantics via payload-filter deletes (sinks.http.deliver_partition);
     # group_agg keys its state on base_pk (replace-set,
     # counts base documents — cdc/ivm.py chunked-mode docstring)
     stream = read_file_stream(spark, changes_dir, changes_schema, max_files_per_trigger)
-
-    keep_text = isinstance(cfg, PipelineConfig) and any(
-        s.type in ("lex_index", "group_agg", "distinct_agg", "neardup")
-        for s in cfg.all_sinks
-    )
 
     # per-batch engine metrics for /healthz (points_out via Observation:
     # the count piggybacks on the batch's own write action — safe to
@@ -788,18 +781,7 @@ def boot(
             filter_observations=fobs,
         )
         obs = Observation()
-        pts = pts.observe(obs, F.count(F.lit(1)).alias("points_out"))
-        if hook is None:
-            coll.apply_points(pts, epoch_id)
-        else:
-            # the hook re-reads the batch's points: persist so the embed
-            # UDF pipeline runs once, not once per sink
-            pts = pts.persist()
-            try:
-                coll.apply_points(pts, epoch_id)
-                hook(pts)
-            finally:
-                pts.unpersist()
+        write(pts.observe(obs, F.count(F.lit(1)).alias("points_out")), epoch_id)
         batch_metrics.update(
             {
                 "epoch": epoch_id,
@@ -866,26 +848,11 @@ def boot_with_snapshot(
     cfg = _resolve_config(config)
     provider = _provider_from(cfg)
     coll = _collection_for(spark, cfg, state_dir)
-    hook = sink_hooks_for(cfg) if isinstance(cfg, PipelineConfig) else None
-    keep_text = isinstance(cfg, PipelineConfig) and any(
-        s.type in ("lex_index", "group_agg", "distinct_agg", "neardup")
-        for s in cfg.all_sinks
-    )
+    keep_text, write = _batch_writer(cfg, coll)
     chunk = cfg.engine.chunk if isinstance(cfg, PipelineConfig) else None
     for table, mapping in snapshots:
         ev = snapshot_events(table, mapping.table, snapshot_id_col, snapshot_lsn)
-        pts = build_points(
-            ev, mapping, provider, chunk=chunk, keep_text=keep_text
-        )
-        if hook is None:
-            coll.apply_points(pts, None)
-            continue
-        pts = pts.persist()
-        try:
-            coll.apply_points(pts, None)
-            hook(pts)
-        finally:
-            pts.unpersist()
+        write(build_points(ev, mapping, provider, chunk=chunk, keep_text=keep_text), None)
     return boot(
         spark,
         cfg,

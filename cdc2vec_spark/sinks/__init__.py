@@ -1,3 +1,4 @@
-"""Sinks: the Kafka message, Qdrant parity and Milvus payload helpers.
-The engine-native sink is the keyed point store,
+"""Sinks: the Kafka message schema, and the Qdrant and Milvus modules of
+the one partition writer both external vector sinks deliver through
+(sinks.http). The engine-native sink is the keyed point store,
 runner.PointsCollection (cdc.segments)."""

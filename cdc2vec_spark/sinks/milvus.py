@@ -1,42 +1,40 @@
-"""Milvus sink parity (/root/reference/internal/sink/milvus/).
+"""Milvus sink parity (the reference's internal/sink/milvus/).
 
 The reference creates a collection with fields (id varchar(512) pk,
 vector float_vector(dim), payload json), HNSW index M=16 ef=200, metric
-IP (milvus.go:53-131) and then *Inserts* — not upserts — so updates
-duplicate rows (milvus.go:134-158, documented divergence in SURVEY §2.1
-K3). Our engine does true upsert via the keyed collection merge upstream.
+IP (milvus.go:53-131) and then *Inserts* — not upserts — so an updated
+key, or any resent insert, becomes a second entity with the same primary
+key (milvus.go:134-158, documented divergence in SURVEY §2.1 K3). We
+send REST v2 upserts, so a key updated in a later batch and a request
+replayed by a retry or a micro-batch replay both converge to one entity.
 
-The reference speaks the gRPC SDK; the Spark-side writer here speaks
-Milvus's public REST v2 surface (/v2/vectordb/...) so it can run from
-``foreachPartition`` with one pooled HTTP connection per partition —
-batched, vs the reference's one-RPC-per-point loop. ``ensure_collection``
-reproduces milvus.go's ensure() flow (has → create schema → create HNSW
-index → load) with the same field/index constants. No Milvus server
-exists in this environment; tests drive a mock server end-to-end.
+The reference speaks the gRPC SDK; this module speaks Milvus's public
+REST v2 surface (/v2/vectordb/...) as the sink module of the shared
+partition writer (``sinks.http.deliver_partition``), batched vs the
+reference's one-RPC-per-point loop:
 
-gRPC decision (round 7, VERDICT r06 "missing" #2): we deliberately do
-NOT ship a pymilvus/gRPC writer. Rationale: (a) pymilvus is not
-installable in this environment, so an import-guarded writer would be
-permanently untested dead code — worse than absent; (b) REST v2 and the
-gRPC SDK hit the same Milvus proxy endpoints (Insert/Delete/
-CreateCollection/CreateIndex/Load) with identical consistency semantics
-at the default Bounded level — the transport changes serialization, not
-delivery guarantees; (c) per-partition pooled HTTP keeps the writer
-dependency-free on executors, which matters on a 1000-executor cluster
-(no pymilvus wheel distribution). A deployment that needs gRPC-only
-features (e.g. per-request consistency overrides) can wrap pymilvus
-behind this module's three writer functions (ensure_collection,
-write_partition_http, delete_partition_http); the interface was shaped
-for that swap.
+- ``point_bodies`` — each final event's entity JSON (float32 vector +
+  payload), built columnar in the JVM;
+- ``upsert`` / ``delete_ids`` / ``delete_bases`` — the batched requests
+  the writer sends;
+- ``ensure_collection`` — milvus.go's ensure() flow (has → create schema
+  → create HNSW index → load) with the same field/index constants.
+
+REST rather than gRPC keeps executors dependency-free (no pymilvus wheel
+to ship), and both transports reach the same proxy endpoints with the
+same default consistency semantics. A gRPC sink would be another module
+with the same endpoints. The test suite has no Milvus server; tests
+drive a mock server end-to-end.
 """
 
 from __future__ import annotations
 
 import json as _json
-import urllib.request
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .http import point_rows, send_json
 
 COLLECTION_FIELDS = {
     "id": "varchar(512), primary key",  # milvus.go:70-78
@@ -46,22 +44,25 @@ COLLECTION_FIELDS = {
 INDEX = {"type": "HNSW", "M": 16, "efConstruction": 200, "metric": "IP"}  # milvus.go:99-118
 
 
-def insert_payloads(points: DataFrame) -> DataFrame:
-    """points(id, vector, metadata) → (id, vector, payload_json) rows —
-    the three column values of one Milvus insert (milvus.go:134-150).
-    Chunked points (a ``base_id`` column present) carry ``ext_base_id``
-    inside the payload JSON so base_delete_expr can clear a key's whole
-    chunk set server-side."""
+def point_bodies(fin: DataFrame) -> DataFrame:
+    """A batch's final events (id, vector, metadata, op[, base_id]) →
+    (id, op[, base_id], body), built JVM-side with no Python pass. An
+    upsert's ``body`` is its entity JSON, {"id", "vector", "payload"}
+    (the three column values of milvus.go:134-150), with the vector as
+    float32 — the reference sends ``[]float32``. Chunked points (a
+    ``base_id`` column present) carry ``ext_base_id`` inside the payload
+    so base_delete_expr can clear a key's whole chunk set server-side.
+    A delete's body is null."""
     payload = F.col("metadata")
-    if "base_id" in points.columns:
+    if "base_id" in fin.columns:
         payload = F.map_concat(
             payload, F.create_map(F.lit("ext_base_id"), F.col("base_id"))
         )
-    return points.select(
+    return point_rows(fin, F.struct(
         F.col("id"),
-        F.col("vector"),
-        F.to_json(payload).alias("payload_json"),
-    )
+        F.col("vector").cast("array<float>").alias("vector"),
+        payload.alias("payload"),
+    ))
 
 
 def _quote(s: str) -> str:
@@ -88,18 +89,13 @@ def base_delete_expr(bases: list[str]) -> str:
 
 
 def _post(url: str, path: str, body: dict, timeout_s: float) -> dict:
-    # transient failures retry with backoff (sinks/http.py); Milvus
-    # upsert/delete bodies are idempotent, ensure-collection tolerates
+    # transient failures retry with backoff (sinks/http.py): upsert and
+    # delete bodies are idempotent, ensure-collection tolerates
     # already-exists — at-least-once is safe everywhere _post is used
-    from .http import send_with_retry
-
-    req = urllib.request.Request(
-        url.rstrip("/") + path,
-        data=_json.dumps(body).encode(),
-        headers={"Content-Type": "application/json"},
-        method="POST",
+    return _json.loads(
+        send_json(url.rstrip("/") + path, _json.dumps(body).encode(), timeout_s)
+        or b"{}"
     )
-    return _json.loads(send_with_retry(req, timeout_s) or b"{}")
 
 
 def ensure_collection(
@@ -143,10 +139,8 @@ def ensure_collection(
                         "indexName": "vector",
                         "metricType": metric,  # milvus.go:99: default IP
                         # REST v2 documents indexType as a SIBLING of
-                        # metricType; nesting it inside params made a real
-                        # server fall back to AUTOINDEX (round-5 ADVICE —
-                        # the flow is mock-verified only, so the wrong
-                        # nesting went unnoticed)
+                        # metricType; nested inside params a real server
+                        # falls back to AUTOINDEX
                         "indexType": index_type,  # HNSW
                         "params": {
                             "M": INDEX["M"],
@@ -162,66 +156,40 @@ def ensure_collection(
     return not exists
 
 
-# Points per HTTP request — same rationale as sinks.qdrant: an unbounded
-# per-partition body reaches hundreds of MB at dim 768 and real servers
-# reject it (Milvus REST caps request size); 2048 ≈ 6 MB.
+# Points per HTTP request — same rationale and cap as sinks.qdrant: an
+# unbounded per-partition body reaches hundreds of MB at dim 768 and real
+# servers reject it (Milvus REST caps request size).
 MAX_POINTS_PER_REQUEST = 2048
+# Base keys per delete request: each term is ~40 chars and Milvus caps
+# expression length.
+MAX_BASE_TERMS = 256
+# Per-request timeout in seconds.
+TIMEOUT_S = 20.0
 
 
-def _chunks(it, n: int):
-    buf = []
-    for x in it:
-        buf.append(x)
-        if len(buf) >= n:
-            yield buf
-            buf = []
-    if buf:
-        yield buf
-
-
-def write_partition_http(
-    rows, url: str, collection: str, timeout_s: float = 20.0,
-    max_points: int = MAX_POINTS_PER_REQUEST,
-) -> None:
-    """foreachPartition writer over ``insert_payloads`` rows: chunked
-    POST /v2/vectordb/entities/insert requests of ≤ ``max_points`` rows
-    (milvus.go:134-158 inserts one point per RPC; same 20s timeout).
-    Insert — not upsert — is the reference's documented behavior; dedup
-    happens upstream in the keyed collection merge."""
-    payload_rows = (
-        {
-            "id": r["id"],
-            "vector": [float(x) for x in r["vector"]],
-            "payload": _json.loads(r["payload_json"] or "{}"),
-        }
-        for r in rows
+def upsert(url: str, collection: str, rows) -> None:
+    """POST /v2/vectordb/entities/upsert of ``point_bodies`` upsert rows,
+    joined as sent with no per-row JSON pass (milvus.go:134-158 inserts
+    one point per RPC)."""
+    send_json(
+        url.rstrip("/") + "/v2/vectordb/entities/upsert",
+        ('{"collectionName":%s,"data":[%s]}' % (
+            _json.dumps(collection), ",".join(r["body"] for r in rows)
+        )).encode(),
+        TIMEOUT_S,
     )
-    for data in _chunks(payload_rows, max_points):
-        _post(url, "/v2/vectordb/entities/insert",
-              {"collectionName": collection, "data": data}, timeout_s)
 
 
-def delete_partition_http(
-    rows, url: str, collection: str, timeout_s: float = 20.0,
-    max_points: int = MAX_POINTS_PER_REQUEST,
-) -> None:
-    """foreachPartition delete: chunked filter-expression
-    POST /v2/vectordb/entities/delete requests (milvus.go:160-177 sends
-    one single-id expr per RPC; an unbounded in-list is its own hazard —
-    Milvus caps expression length)."""
-    for ids in _chunks((r["id"] for r in rows), max_points):
-        _post(url, "/v2/vectordb/entities/delete",
-              {"collectionName": collection, "filter": delete_expr(ids)}, timeout_s)
+def delete_ids(url: str, collection: str, ids: list[str]) -> None:
+    """POST /v2/vectordb/entities/delete with one ``id in [...]``
+    expression (milvus.go:160-177 sends one single-id expr per RPC)."""
+    _post(url, "/v2/vectordb/entities/delete",
+          {"collectionName": collection, "filter": delete_expr(ids)}, TIMEOUT_S)
 
 
-def delete_by_base_partition_http(
-    rows, url: str, collection: str, timeout_s: float = 20.0,
-    max_terms: int = 256,
-) -> None:
-    """foreachPartition delete over (base_id) rows via JSON-field filter
-    expressions (base_delete_expr). ``max_terms`` is small: each term is
-    ~40 chars and Milvus caps expression length."""
-    for bases in _chunks((r["base_id"] for r in rows), max_terms):
-        _post(url, "/v2/vectordb/entities/delete",
-              {"collectionName": collection, "filter": base_delete_expr(bases)},
-              timeout_s)
+def delete_bases(url: str, collection: str, bases: list[str]) -> None:
+    """POST /v2/vectordb/entities/delete with one base_delete_expr:
+    clears every chunk entity of the listed base keys."""
+    _post(url, "/v2/vectordb/entities/delete",
+          {"collectionName": collection, "filter": base_delete_expr(bases)},
+          TIMEOUT_S)

@@ -1,16 +1,17 @@
-"""Qdrant sink parity helpers (/root/reference/internal/sink/qdrant/).
+"""Qdrant sink parity helpers (the reference's internal/sink/qdrant/).
 
 The reference derives the numeric Qdrant point id by FNV-1a-64 hashing
 the external id string (qdrant.go:174-179) and sends single-point HTTP
-upserts (qdrant.go:196-203). Here:
+upserts (qdrant.go:196-203). Here, the sink module of the shared
+partition writer (``sinks.http.deliver_partition``):
 
 - ``point_bodies`` — each final event's op and point JSON body
-  (float32 vector + payload), built columnar in the JVM.
-- ``deliver_partition_http`` — a ``foreachPartition`` writer that hashes
-  the ids (``fnv1a64_py``: Spark's xxhash64 is a different function, so
+  (float32 vector + payload), built columnar in the JVM;
+- ``upsert`` / ``delete_ids`` / ``delete_bases`` — the batched requests
+  the writer sends. Ids are FNV-1a hashed inside the writer
+  (``fnv1a64_py``: Spark's xxhash64 is a different function, so
   id-level compatibility with an existing Qdrant collection needs
-  FNV-1a) and streams upserts and deletes out in one pass, in batched
-  requests (vs. the reference's one request per point).
+  FNV-1a).
 
 No Qdrant server exists in the test environment; tests pin hash parity
 and payload shape.
@@ -18,10 +19,14 @@ and payload shape.
 
 from __future__ import annotations
 
+import json
+import urllib.error
+import urllib.request
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cdc.envelope import OP_DELETE
+from .http import point_rows, send_json
 
 _FNV_OFFSET = 14695981039346656037
 _FNV_PRIME = 1099511628211
@@ -40,8 +45,8 @@ def fnv1a64_py(s: str) -> int:
 
 def point_bodies(fin: DataFrame) -> DataFrame:
     """A batch's final events (id, vector, metadata, op[, base_id]) →
-    (id, op, body), built JVM-side with no Python pass. An upsert's
-    ``body`` is its point JSON without the id:
+    (id, op[, base_id], body), built JVM-side with no Python pass. An
+    upsert's ``body`` is its point JSON without the id:
     {"vector": [...], "payload": metadata ∪ {"ext_id": id}}
     (qdrant.go:196-233: the payload always carries the external id).
     Vectors go out as float32 — the reference sends ``[]float32`` and
@@ -49,20 +54,15 @@ def point_bodies(fin: DataFrame) -> DataFrame:
     Chunked points (a ``base_id`` column present) additionally carry
     ``ext_base_id`` so delete-by-filter can clear a key's whole chunk
     set server-side. A delete's body is null. The FNV-1a id is added by
-    ``deliver_partition_http``, which is already in Python."""
+    ``upsert``, which is already in Python."""
     id_entries = [F.lit("ext_id"), F.col("id")]
     if "base_id" in fin.columns:
         id_entries += [F.lit("ext_base_id"), F.col("base_id")]
     payload = F.map_concat(F.col("metadata"), F.create_map(*id_entries))
-    body = F.to_json(
-        F.struct(
-            F.col("vector").cast("array<float>").alias("vector"),
-            payload.alias("payload"),
-        )
-    )
-    return fin.select(
-        "id", "op", F.when(F.col("op") != OP_DELETE, body).alias("body")
-    )
+    return point_rows(fin, F.struct(
+        F.col("vector").cast("array<float>").alias("vector"),
+        payload.alias("payload"),
+    ))
 
 
 # Points per HTTP request. One-request-per-partition is unbounded: a few
@@ -73,17 +73,10 @@ def point_bodies(fin: DataFrame) -> DataFrame:
 # 768 — large enough to amortize HTTP overhead, small enough for any
 # default server limit.
 MAX_POINTS_PER_REQUEST = 2048
-
-
-def _chunks(it, n: int):
-    buf = []
-    for x in it:
-        buf.append(x)
-        if len(buf) >= n:
-            yield buf
-            buf = []
-    if buf:
-        yield buf
+# Base keys per delete-by-filter request (one "should" term each).
+MAX_BASE_TERMS = 1024
+# Per-request timeout (qdrant.go:42).
+TIMEOUT_S = 15.0
 
 
 def _extract_vector_size(doc: dict) -> int:
@@ -100,7 +93,7 @@ def _extract_vector_size(doc: dict) -> int:
 
 def ensure_collection(
     url: str, collection: str, dim: int, distance: str = "Cosine",
-    timeout_s: float = 15.0,
+    timeout_s: float = TIMEOUT_S,
 ) -> int:
     """Create the collection if absent; verify the dimension if present
     (qdrant.go:70-145). Qdrant does NOT auto-create collections on
@@ -109,12 +102,6 @@ def ensure_collection(
     an existing collection raises — silently writing wrong-sized vectors
     would fail every upsert with an opaque 400. Driver-side, once per
     pipeline (the runner hook caches the call), never per batch/row."""
-    import json
-    import urllib.error
-    import urllib.request
-
-    from .http import send_with_retry
-
     info_url = f"{url}/collections/{collection}"
     try:
         with urllib.request.urlopen(
@@ -132,16 +119,12 @@ def ensure_collection(
         # any failed/absent info response falls through to the create,
         # whose own error is the authoritative one if the server is down
         pass
-    req = urllib.request.Request(
-        info_url,
-        data=json.dumps(
-            {"vectors": {"size": dim, "distance": distance}}
-        ).encode(),
-        headers={"Content-Type": "application/json"},
-        method="PUT",
-    )
     try:
-        send_with_retry(req, timeout_s)
+        send_json(
+            info_url,
+            json.dumps({"vectors": {"size": dim, "distance": distance}}).encode(),
+            timeout_s, method="PUT",
+        )
     except urllib.error.HTTPError as e:
         if e.code != 409:
             raise
@@ -163,94 +146,38 @@ def ensure_collection(
     return dim
 
 
-def deliver_partition_http(
-    rows, url: str, collection: str, timeout_s: float = 15.0,
-    max_points: int = MAX_POINTS_PER_REQUEST,
-):
-    """foreachPartition writer over ``point_bodies`` rows: upserts go out
-    as chunked PUT {url}/collections/{collection}/points?wait=true
-    requests and deletes as chunked POST .../points/delete?wait=true
-    requests (≤ ``max_points`` points each), where the reference sends
-    one request per point (qdrant.go:196-275; qdrant.go:42 sets the same
-    15s timeout). Ids are FNV-1a hashed here. Both calls are idempotent,
-    so transient failures retry with backoff (sinks/http.py).
-
-    One pass in any order is correct only because the rows are a batch's
-    final events: each id appears once, so the upsert and delete id sets
-    are disjoint."""
-    import json
-    import urllib.request
-
-    from .http import send_with_retry
-
-    def put(points):
-        # splice the id into the JVM-built body instead of a loads/dumps
-        # round-trip; the result keeps the {"id","vector","payload"}
-        # key order
-        send_with_retry(urllib.request.Request(
-            f"{url}/collections/{collection}/points?wait=true",
-            data=('{"points":[' + ",".join(points) + "]}").encode(),
-            headers={"Content-Type": "application/json"},
-            method="PUT",
-        ), timeout_s)
-
-    def delete(ids):
-        send_with_retry(urllib.request.Request(
-            f"{url}/collections/{collection}/points/delete?wait=true",
-            data=json.dumps({"points": ids}).encode(),
-            headers={"Content-Type": "application/json"},
-            method="POST",
-        ), timeout_s)
-
-    ups, dels = [], []
-    for r in rows:
-        h = fnv1a64_py(r["id"])
-        if r["op"] == OP_DELETE:
-            dels.append(h)
-            if len(dels) >= max_points:
-                delete(dels)
-                dels = []
-        else:
-            ups.append('{"id":%d,' % h + r["body"][1:])
-            if len(ups) >= max_points:
-                put(ups)
-                ups = []
-    if ups:
-        put(ups)
-    if dels:
-        delete(dels)
+def _points_url(url: str, collection: str, action: str = "") -> str:
+    return f"{url}/collections/{collection}/points{action}?wait=true"
 
 
-def delete_by_filter_partition_http(
-    rows, url: str, collection: str, timeout_s: float = 15.0,
-    max_terms: int = 1024,
-):
-    """foreachPartition delete over (base_id) rows via Qdrant's filter
-    form: POST points/delete {"filter": {"should": [{key: ext_base_id,
-    match: ...}, ...]}} — clears EVERY point whose payload carries one of
-    the base ids, however many chunk points the key currently has. The
-    chunked pipeline's delete path (a delete event knows only its base
-    id, never the historical chunk count). Idempotent → retried."""
-    import json
-    import urllib.request
+def upsert(url: str, collection: str, rows) -> None:
+    """PUT .../points?wait=true of ``point_bodies`` upsert rows. The
+    FNV-1a id is spliced in front of each JVM-built body instead of a
+    loads/dumps round-trip, so points keep the {"id","vector","payload"}
+    key order."""
+    points = ",".join('{"id":%d,' % fnv1a64_py(r["id"]) + r["body"][1:] for r in rows)
+    send_json(
+        _points_url(url, collection), ('{"points":[' + points + "]}").encode(),
+        TIMEOUT_S, method="PUT",
+    )
 
-    from .http import send_with_retry
 
-    for bases in _chunks((r["base_id"] for r in rows), max_terms):
-        body = json.dumps(
-            {
-                "filter": {
-                    "should": [
-                        {"key": "ext_base_id", "match": {"value": b}}
-                        for b in bases
-                    ]
-                }
-            }
-        ).encode()
-        req = urllib.request.Request(
-            f"{url}/collections/{collection}/points/delete?wait=true",
-            data=body,
-            headers={"Content-Type": "application/json"},
-            method="POST",
-        )
-        send_with_retry(req, timeout_s)
+def delete_ids(url: str, collection: str, ids: list[str]) -> None:
+    """POST .../points/delete?wait=true by FNV-1a point id."""
+    send_json(
+        _points_url(url, collection, "/delete"),
+        json.dumps({"points": [fnv1a64_py(i) for i in ids]}).encode(), TIMEOUT_S,
+    )
+
+
+def delete_bases(url: str, collection: str, bases: list[str]) -> None:
+    """POST .../points/delete?wait=true in the filter form
+    {"filter": {"should": [{key: ext_base_id, match: ...}, ...]}}: clears
+    EVERY point whose payload carries one of the base ids, however many
+    chunk points the key currently has (a chunked delete knows only its
+    base id, never the historical chunk count)."""
+    should = [{"key": "ext_base_id", "match": {"value": b}} for b in bases]
+    send_json(
+        _points_url(url, collection, "/delete"),
+        json.dumps({"filter": {"should": should}}).encode(), TIMEOUT_S,
+    )

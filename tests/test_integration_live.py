@@ -139,12 +139,9 @@ def test_pgoutput_decode_against_real_wal(spark, tmp_path):
 def test_qdrant_ensure_upsert_search_delete(spark):
     """ensure_collection / upsert / search / delete against a real
     Qdrant: the sink's payload shapes and FNV ids accepted end-to-end."""
-    from cdc2vec_spark.sinks.qdrant import (
-        deliver_partition_http,
-        ensure_collection,
-        fnv1a64_py,
-        point_bodies,
-    )
+    from cdc2vec_spark.sinks import qdrant
+    from cdc2vec_spark.sinks.http import deliver_partition
+    from cdc2vec_spark.sinks.qdrant import ensure_collection, fnv1a64_py, point_bodies
 
     _qdrant_up()
     coll = _fresh("it_coll")
@@ -161,7 +158,7 @@ def test_qdrant_ensure_upsert_search_delete(spark):
         "id string, vector array<float>, metadata map<string,string>, op string",
     )
     rows = point_bodies(pts).collect()
-    deliver_partition_http(iter(rows), QDRANT_URL, coll)
+    deliver_partition(iter(rows), qdrant, QDRANT_URL, coll)
 
     def _search(vec):
         req = urllib.request.Request(
@@ -177,8 +174,8 @@ def test_qdrant_ensure_upsert_search_delete(spark):
     assert top and top[0]["id"] == fnv1a64_py("a")
     assert top[0]["payload"]["ext_id"] == "a"
 
-    deliver_partition_http(
-        iter([{"id": "a", "op": "d", "body": None}]), QDRANT_URL, coll
+    deliver_partition(
+        iter([{"id": "a", "op": "d", "body": None}]), qdrant, QDRANT_URL, coll
     )
     top = _search([1.0, 0.0, 0.0, 0.0])
     assert not top or top[0]["payload"]["ext_id"] != "a"

@@ -534,8 +534,9 @@ def test_boot_chunked_qdrant_replay_matches_collection(spark, sf_dir, tmp_path):
 
     assert any(k == "delbase" for k, *_ in events)
     # replay: delete-by-base clears the set, upserts re-add chunk ids.
-    # within a batch the delete pass precedes the upsert pass by
-    # construction (two sequential driver actions)
+    # arrival order is a faithful replay order per base key: all of a
+    # key's rows are written by one partition's writer, which sends the
+    # key's filter-delete before any request carrying its chunks
     ext: dict[str, set] = {}
     for kind, base, ext_id in events:
         if kind == "delbase":
@@ -631,7 +632,7 @@ def test_boot_chunked_milvus_replay_matches_collection(spark, sf_dir, tmp_path):
         def do_POST(self):
             n = int(self.headers["Content-Length"])
             body = _json.loads(self.rfile.read(n))
-            if self.path.endswith("/entities/insert"):
+            if self.path.endswith("/entities/upsert"):
                 for row in body["data"]:
                     events.append(
                         ("up", row["payload"]["ext_base_id"], row["id"])
@@ -672,6 +673,7 @@ def test_boot_chunked_milvus_replay_matches_collection(spark, sf_dir, tmp_path):
         srv.shutdown()
 
     assert any(k == "delbase" for k, *_ in events)
+    # replayed per base key in arrival order, as in the qdrant case
     ext: dict[str, set] = {}
     for kind, base, ext_id in events:
         if kind == "delbase":

@@ -314,6 +314,12 @@ def main() -> None:
     print(f"# lex_index: {lex_probe}", file=sys.stderr)
     record("lex_index", lex_probe)
 
+    # both in-engine indexes' per-batch apply wall as their state grows:
+    # an apply appends one segment, so late batches cost what early ones do
+    index_scale = _index_apply_scale(spark)
+    print(f"# index_apply_scale: {index_scale}", file=sys.stderr)
+    record("index_apply_scale", index_scale)
+
     # streaming near-dup graph reports: per-batch ingest + the O(pairs)
     # report refresh FROM STATE vs the batch family's full derivation
     nd_probe = _neardup_report_probe(spark, sf_dir, registry)
@@ -539,6 +545,83 @@ def _lex_index_probe(spark, sf_dir: str) -> dict:
             ).mode("overwrite").save()
             secs.append(time.perf_counter() - t0)
         out["query_secs"] = round(min(secs), 3)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return out
+
+
+def _index_apply_scale(
+    spark, batches: int = 12, keys: int = 4_000, dim: int = 64
+) -> dict:
+    """Per-batch apply seconds of ``IncrementalIvfIndex`` and
+    ``IncrementalLexicalIndex`` as their state grows, through the public
+    API only: batch 1 (``keys`` fresh ids, dim-``dim`` vectors, 40-word
+    docs) builds each index, batches 2..``batches`` (``keys`` fresh ids
+    each) go through ``apply_batch``, auto-compaction off. Reports the
+    apply seconds of batches 2.., their p50/p99, and ``late_over_early``:
+    the median of batches 9-12 over the median of batches 2-5 (about 1
+    when an apply's cost does not grow with the index)."""
+    import shutil
+    import tempfile
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from cdc2vec_spark.operators.ann_index import IncrementalIvfIndex
+    from cdc2vec_spark.operators.lex_index import IncrementalLexicalIndex
+
+    def rows(b):
+        ids = spark.range(b * keys, (b + 1) * keys)
+        n = F.col("id")
+        return ids.select(
+            n.cast("string").alias("id"),
+            F.array(*[F.sin(n * (j + 1) + F.lit(j)) for j in range(dim)])
+            .cast("array<float>").alias("vector"),
+            F.concat_ws(" ", *[
+                F.concat(F.lit("w"), ((n * (2 * j + 1) + j * j) % 5000).cast("string"))
+                for j in range(40)
+            ]).alias("text"),
+            F.lit("c").alias("op"),
+            (n + 1).alias("lsn"),
+        ).localCheckpoint()
+
+    def summary(secs):
+        return {
+            "apply_secs": [round(x, 3) for x in secs],
+            "p50": round(float(np.percentile(secs, 50)), 3),
+            "p99": round(float(np.percentile(secs, 99)), 3),
+            "late_over_early": round(
+                float(np.median(secs[7:11]) / np.median(secs[0:4])), 2
+            ),
+        }
+
+    data = [rows(b) for b in range(batches)]
+    root = tempfile.mkdtemp(prefix="bench_ixscale_")
+    out: dict = {"batches": batches, "keys": keys, "dim": dim}
+    try:
+        for label, ix, build, cols in (
+            (
+                "ivf",
+                IncrementalIvfIndex(spark, f"{root}/ivf", auto_compact_ratio=None),
+                lambda ix, df: ix.build(df.select("id", "vector"), centroid_every=31),
+                ("id", "vector", "op", "lsn"),
+            ),
+            (
+                "lex",
+                IncrementalLexicalIndex(spark, f"{root}/lex", auto_compact_ratio=None),
+                lambda ix, df: ix.build(df.select("id", "text")),
+                ("id", "text", "op", "lsn"),
+            ),
+        ):
+            t0 = time.perf_counter()
+            build(ix, data[0])
+            build_secs = time.perf_counter() - t0
+            secs = []
+            for df in data[1:]:
+                t0 = time.perf_counter()
+                ix.apply_batch(df.select(*cols))
+                secs.append(time.perf_counter() - t0)
+            out[label] = {"build_secs": round(build_secs, 3), **summary(secs)}
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out

@@ -18,13 +18,12 @@ Two state layouts live here:
 - ParquetCollection, the keyed row state, is a segment log
   (cdc.segments): an apply writes the batch's winners once and never
   reads the state; reads union the live segments under one window on
-  the key. runner.PointsCollection is the same store for points.
+  the key. runner.PointsCollection and the IVF and lexical indexes
+  (operators.ann_index, operators.lex_index) are the same store.
 - swap_buckets/read_bucketed_state keep hash-bucketed ``bucket=<i>/``
-  dirs swapped by rename. They serve the stores that read, modify and
-  write aggregates per batch (cdc.ivm, cdc.delta_join, cdc.scd2,
-  streaming.neardup), plus the IVF and lexical index sinks
-  (operators.ann_index, operators.lex_index) until those move onto
-  segments too.
+  dirs swapped by rename. They serve only the stores that read, modify
+  and write aggregates per batch: cdc.ivm, cdc.delta_join, cdc.scd2 and
+  streaming.neardup.
 """
 
 from __future__ import annotations
@@ -50,10 +49,10 @@ def swap_write(df: DataFrame, path: str) -> None:
     pre-batch state (the batch replays from the checkpoint), never an
     empty store. Rename-based, so local-filesystem only. It and
     swap_buckets serve the stores that read, modify and write per batch
-    (cdc.ivm, cdc.delta_join, cdc.scd2, streaming.neardup) and the IVF
-    and lexical index sinks. The keyed row and point stores
-    (cdc.segments) commit through cdc.manifest.ManifestStore generations
-    instead, which also work on object stores."""
+    (cdc.ivm, cdc.delta_join, cdc.scd2, streaming.neardup). The keyed
+    row and point stores and the two indexes (cdc.segments) commit
+    through cdc.manifest.ManifestStore generations instead, which also
+    work on object stores."""
     swap_write_begin(df, path)
     swap_write_commit(path)
 
@@ -261,8 +260,7 @@ def read_bucketed_state(
 ) -> DataFrame | None:
     """Read `path/<col>=<i>/` partitioned state, recovering any partition a
     crash left stranded under `<path>.old/` (the per-bucket analogue of
-    read_state's promotion). ``col`` is the partition column — `bucket`
-    for keyed collections, `cell` for the incremental ANN index.
+    read_state's promotion). ``col`` is the partition column.
 
     ``buckets`` prunes the read to exactly those partition DIRECTORIES:
     Spark's file index then never lists the untouched ones. A whole-table

@@ -3,13 +3,18 @@ write and never reads (a size-tiered log-structured merge layout, O'Neil
 et al. 1996, with the max-LSN-per-key merge as its merge rule), committed
 through the manifest generations of ``cdc.manifest.ManifestStore``. It
 holds the keyed points (``runner.PointsCollection`` and its chunked
-subclass) and the keyed row state (``cdc.apply.ParquetCollection``).
+subclass), the keyed row state (``cdc.apply.ParquetCollection``) and the
+two in-engine indexes (``operators.ann_index.IncrementalIvfIndex``,
+``operators.lex_index.IncrementalLexicalIndex``).
 
 Layout of a store directory:
 
 - ``data/seg-<level>-<hex>/``: one immutable parquet segment, written
   once under a fresh name. A micro-batch lands as a level-0 segment
-  holding only its winning events.
+  holding only its winning events. A store with a partition column
+  (the indexes: ``cell`` or ``bucket``) writes each segment as
+  ``<col>=<v>/`` dirs, one file per partition, and a read can list just
+  the partitions it needs in each live segment.
 - ``_manifests/manifest-<version>.json``: one generation of the store,
   mapping each live segment's ``seq`` to its directory name. ``seq``
   grows with every segment published, so within a level a smaller
@@ -23,6 +28,10 @@ same rule serves three places: it reduces a batch before the write, it
 merges segments in a compaction, and it resolves the union of all live
 segments on read. Duplicate copies of an event, from a replayed batch,
 resolve to the same winner.
+
+``replace`` writes a whole new state (an index's build or garbage
+collection) as one segment at ``BASE_LEVEL``, which size-tiered merges
+never reach, and publishes a generation holding only that segment.
 
 Costs: an append is O(batch), one Spark write. Compaction is size-tiered
 with fan-in ``FAN_IN``: when that many segments share a level they merge
@@ -50,14 +59,16 @@ oldest segment(s) and folded in by the first compaction:
   ``data/commit-*/`` read together as one level-0 segment older than
   any other;
 - the rename-published layouts, root ``seg-<level>-<seq>/`` dirs and the
-  older root ``bucket=<i>/`` dirs (points, or row state of the former
-  bucketed ``ParquetCollection``), which only existed on local
-  filesystems: the first call moves them into ``data/`` once, the
-  ``seg-*`` dirs under their own names and seqs and the bucket dirs into
-  one segment ``seg-0-buckets`` of seq -1, a name and seq no rename-era
-  segment had. It publishes their manifest before the move, so a crash
-  mid-move resumes, and before any append publishes. Stranded ``_tmp-*``
-  writes move in unreferenced, for gc.
+  older root ``bucket=<i>/`` dirs (points, row state of the former
+  bucketed ``ParquetCollection``, or an index's root ``cell=<i>/`` or
+  ``bucket=<i>/`` dirs, matched on the store's own partition column),
+  which only existed on local filesystems: the first call promotes any
+  partition a crash stranded under ``<path>.old/``, then moves them into
+  ``data/`` once, the ``seg-*`` dirs under their own names and seqs and
+  the partition dirs into one segment ``seg-0-buckets`` of seq -1, a
+  name and seq no rename-era segment had. It publishes their manifest
+  before the move, so a crash mid-move resumes, and before any append
+  publishes. Stranded ``_tmp-*`` writes move in unreferenced, for gc.
 """
 
 from __future__ import annotations
@@ -66,15 +77,18 @@ import os
 import re
 import uuid
 from collections.abc import Callable, Iterable, Sequence
+from functools import reduce
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from .apply import BUCKET_COL, recover_buckets
 from .manifest import ManifestStore
 
 FAN_IN = 4
+BASE_LEVEL = 64  # a replaced state: size-tiered merges never reach it
 _SEGMENT = re.compile(r"seg-(\d+)-.+")
 _RENAMED = re.compile(r"seg-\d+-(\d+)")  # a root segment of the rename era
 # the adopted root bucket layout: a name and seq no rename-era segment had
@@ -88,10 +102,32 @@ class Segment(NamedTuple):
     dirs: tuple[str, ...]
 
 
+def _clustered(df: DataFrame, col: str) -> DataFrame:
+    """``df`` hash-partitioned on ``col`` over one task per core: each
+    value of ``col`` lands in one task, so a partitioned write puts it in
+    one file. The explicit count keeps adaptive execution from
+    coalescing the write into one task that creates every file in turn."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, col)
+
+
+def max_lsn_per(col: str, *keys: str | Column) -> Callable[[DataFrame], DataFrame]:
+    """The merge rule of a store partitioned by ``col``: each
+    ``(col, *keys)``'s max-lsn row. Clustering on ``col`` satisfies the
+    window without a second exchange."""
+    w = Window.partitionBy(col, *keys).orderBy(F.col("lsn").desc())
+
+    def resolve(rows: DataFrame) -> DataFrame:
+        ranked = _clustered(rows, col).withColumn("_rn", F.row_number().over(w))
+        return ranked.where(F.col("_rn") == 1).drop("_rn")
+
+    return resolve
+
+
 class SegmentStore:
     """Keyed state at ``path`` as a segment log (module docstring).
     ``cols`` are the stored columns, or None to store the columns
-    ``resolve`` returns; ``resolve`` is the merge rule."""
+    ``resolve`` returns; ``resolve`` is the merge rule; ``col``, if set,
+    the column each segment is partitioned by."""
 
     def __init__(
         self,
@@ -99,11 +135,13 @@ class SegmentStore:
         path: str,
         cols: Sequence[str] | None,
         resolve: Callable[[DataFrame], DataFrame],
+        col: str | None = None,
     ):
         self.spark = spark
         self.path = path
         self.cols = None if cols is None else tuple(cols)
         self.resolve = resolve
+        self.col = col
         self.manifests = ManifestStore(path)
 
     def segments(self, as_of: int | None = None) -> list[Segment]:
@@ -124,13 +162,16 @@ class SegmentStore:
             segs.append(Segment(0, -1, tuple(buckets), tuple(buckets.values())))
         return sorted(segs)
 
-    def read(self, as_of: int | None = None) -> DataFrame | None:
+    def read(
+        self, as_of: int | None = None, parts: Iterable[int] | None = None
+    ) -> DataFrame | None:
         """Each key's winning row (tombstones included), as of the newest
-        generation or of the retained generation ``as_of``."""
+        generation or of the retained generation ``as_of``; with
+        ``parts``, only the rows of those partition values."""
         segs = self.segments(as_of)
-        df = self._load(segs)
+        df = self._load(segs, parts)
         # a lone segment already holds one winner per key
-        return df if len(segs) < 2 else self.resolve(df)
+        return df if df is None or len(segs) < 2 else self.resolve(df)
 
     def append(self, batch: DataFrame) -> None:
         """Write the batch's winning events as a level-0 segment, then
@@ -143,6 +184,16 @@ class SegmentStore:
             self._publish(name, ())
             self._compact()
 
+    def replace(self, state: DataFrame) -> None:
+        """Write ``state`` as one segment at ``BASE_LEVEL`` and publish a
+        generation holding only it. The live segments stay readable
+        until the publish, so ``state`` may be derived from them."""
+        self._adopt()
+        if self.col is not None:
+            state = _clustered(state, self.col)
+        name = self._write(self._project(state), BASE_LEVEL)
+        self._publish(name, self.manifests.latest()[1])
+
     def _compact(self) -> None:
         level = 0
         while len(at := [s for s in self.segments() if s.level == level]) >= FAN_IN:
@@ -151,22 +202,44 @@ class SegmentStore:
             self._publish(name, (k for s in inputs for k in s.keys))
             level += 1
 
-    def _load(self, segs: Sequence[Segment]) -> DataFrame | None:
-        if not (dirs := [d for s in segs for d in s.dirs]):
+    def _load(
+        self, segs: Sequence[Segment], parts: Iterable[int] | None = None
+    ) -> DataFrame | None:
+        dirs = [d for s in segs for d in s.dirs]
+        if self.col is None:
+            if not dirs:
+                return None
+            # plain file lists: the adopted bucket layout nests its files
+            # in bucket=<i>/ dirs, which must not become a column
+            reader = self.spark.read.option("recursiveFileLookup", "true")
+            return self._project(reader.parquet(*dirs))
+        # one read per segment, with the segment as basePath so <col> is
+        # parsed from the dir names: one read over several segments
+        # fails on their conflicting directory structures
+        prefix = f"{self.col}="
+        want = None if parts is None else {f"{prefix}{p}" for p in parts}
+        frames = []
+        for d in dirs:
+            sub = [
+                os.path.join(d, n)
+                for n in sorted(os.listdir(d))
+                if n.startswith(prefix) and (want is None or n in want)
+            ]
+            if sub:
+                frames.append(self.spark.read.option("basePath", d).parquet(*sub))
+        if not frames:
             return None
-        # plain file lists: the adopted bucket layout nests its files in
-        # bucket=<i>/ dirs, which must not become a partition column
-        reader = self.spark.read.option("recursiveFileLookup", "true")
-        return self._project(reader.parquet(*dirs))
+        return self._project(reduce(DataFrame.unionByName, frames))
 
     def _project(self, df: DataFrame) -> DataFrame:
         return df if self.cols is None else df.select(*self.cols)
 
     def _write(self, df: DataFrame, level: int) -> str:
         name = f"seg-{level}-{uuid.uuid4().hex}"
-        df.write.mode("errorifexists").parquet(
-            os.path.join(self.manifests.data_root, name)
-        )
+        writer = df.write.mode("errorifexists")
+        if self.col is not None:
+            writer = writer.partitionBy(self.col)
+        writer.parquet(os.path.join(self.manifests.data_root, name))
         return name
 
     def _publish(self, name: str, drop: Iterable[int]) -> None:
@@ -182,12 +255,13 @@ class SegmentStore:
         docstring); a no-op listing of the root once that is done."""
         if not os.path.isdir(self.path):
             return
-        recover_buckets(self.path)
+        col = self.col or BUCKET_COL
+        recover_buckets(self.path, col)
         seqs, moves = {}, {}  # seq -> segment; root name -> its data/ path
         for name in os.listdir(self.path):
             if m := _RENAMED.fullmatch(name):
                 seqs[int(m[1])] = moves[name] = name
-            elif name.startswith(f"{BUCKET_COL}="):
+            elif name.startswith(f"{col}="):
                 seqs[_BUCKETS_SEQ] = _BUCKETS
                 moves[name] = os.path.join(_BUCKETS, name)
             elif name.startswith("_tmp-"):

@@ -2,8 +2,8 @@
 rebuild (SURVEY §2.2 group D extension; the reference ships vectors to
 Qdrant/Milvus and has no index-quality feedback at all).
 
-The problem this closes (VERDICT r08 ask #4): ``IncrementalIvfIndex``
-keeps its centroids FROZEN after build — standard IVF practice, and CDC
+The problem this closes: ``IncrementalIvfIndex`` keeps its centroids
+FROZEN after build — standard IVF practice, and CDC
 keeps results *correct* (tombstones + exact verify), but a drifting
 corpus slowly breaks the *quality* contract: newly inserted regions of
 vector space have no nearby centroid, so their points spray across
@@ -21,11 +21,10 @@ and compares the serving-depth probe against the full-probe exact
 answer ON THE SAME INDEX, so the measured recall includes every real
 artifact — tombstones, stale cells, assignment drift. Run it on an
 operational cadence (every N batches / a cron), never per batch: the
-recall probe costs THREE Spark jobs total — batched since round 10
-(VERDICT r09 ask #4) on the d35 one-pass machinery
-(similarity.exact_topk_multi scores every query in one corpus pass;
-per-depth recall falls out of each exact hit's stored cell's probe
-rank) — and the rebuild is O(index).
+recall probe costs THREE Spark jobs total — batched on the d35
+one-pass machinery (similarity.exact_topk_multi scores every query in
+one corpus pass; per-depth recall falls out of each exact hit's stored
+cell's probe rank) — and the rebuild is O(index).
 
 Usage::
 
@@ -61,10 +60,9 @@ def _probe_ranks(
 def _exact_hits_with_cells(
     ix: IncrementalIvfIndex, n_queries: int, k: int
 ) -> tuple[list, dict, np.ndarray, np.ndarray] | None:
-    """The batched health probe (VERDICT r09 ask #4): THREE Spark jobs
-    total, independent of n_queries × |nprobes| — where the per-query ×
-    per-depth ``ix.topk`` loop cost ~n_queries·(1+|nprobes|)·2 collect
-    jobs.
+    """The batched health probe: THREE Spark jobs total, independent of
+    n_queries × |nprobes| — where the per-query × per-depth ``ix.topk``
+    loop cost ~n_queries·(1+|nprobes|)·2 collect jobs.
 
     1. collect the n_queries lowest-id live vectors (deterministic, no
        RNG; corpus members track exactly the occupied regions),
@@ -245,12 +243,12 @@ def maybe_rebuild(
     return decision
 
 
-# --- lexical-index health (VERDICT r09 ask #5) -----------------------------
+# --- lexical-index health ---------------------------------------------------
 #
 # The BM25 model itself cannot drift — topk computes N/avgdl/df from the
 # LIVE state on every query — so lexical health is about COST, not
 # answer quality: dead postings and a fat tombstone log make every
-# touched-bucket read scan rows that are immediately filtered out, and
+# bucket read scan rows that are immediately filtered out, and
 # vocabulary drift can pile live postings into few term buckets so a
 # query's pruned read stops being pruned. Three scalars cover it, all
 # from ONE pass over the index state (far smaller than the corpus).
@@ -263,10 +261,9 @@ def lex_health_report(ix) -> dict:
     max-bucket / (live postings ÷ n_buckets) — the IVF ``imbalance``
     twin; an empty-but-allocated bucket counts in the denominator, so a
     vocabulary hashed into one of 16 buckets reports 16."""
-    from ..cdc.apply import read_bucketed_state
     from .lex_index import BUCKET_COL, DOC_BUCKET, TOMB_BUCKET
 
-    state = read_bucketed_state(ix.spark, ix.path, col=BUCKET_COL)
+    state = ix.store.read()
     if state is None:
         raise ValueError(f"empty lexical index at {ix.path}")
     tomb = ix._tomb_maxlsn()

@@ -3,43 +3,44 @@
 
 cdc2vec's whole premise is "keep a derived search structure fresh from
 CDC". The reference only keeps a VECTOR store fresh; this engine keeps
-the LEXICAL index fresh too, with the same disk layout and commit
-machinery (cdc.apply: hash-bucketed partitions, per-bucket atomic swap,
-touched-directory pruned reads) and the same tombstone-log design the
-ANN index uses (Lucene's delete-bitmap idea):
+the LEXICAL index fresh too, on the same segment log
+(cdc.segments.SegmentStore, partitioned by ``bucket``) and with the same
+tombstone-log design the ANN index uses (Lucene's delete-bitmap idea):
 
 - postings live in ``bucket = pmod(xxhash64(term), n_buckets)``
-  partition directories as (term, id, tf, lsn) rows — a query's terms
-  prune to exactly their buckets;
-- EVERY event also writes a tombstone (id, lsn) to the ``bucket=-1``
-  log. An upsert's stale postings (scattered across term buckets the
-  new text doesn't touch) are never hunted down at write time: they
-  die at query time because their lsn is below the id's tombstone lsn,
-  and are physically removed by ``compact()``;
+  partitions as (term, id, tf, lsn) rows — a query's terms prune to
+  exactly their buckets of each live segment;
+- EVERY event also writes a tombstone (id, lsn) to ``bucket=-1``. An
+  upsert's stale postings (scattered across term buckets the new text
+  doesn't touch) are never hunted down at write time: they die at query
+  time because their lsn is below the id's tombstone lsn, and are
+  physically removed by ``compact()``;
 - per-document lengths live in ``bucket=-2`` (one row per doc version)
   so BM25's corpus stats (N, avgdl) come from a two-column scan.
 
-Per-batch cost is O(batch + touched_buckets × bucket_size) — the
-swap_buckets contract IncrementalIvfIndex also keeps. Query-time scoring
-is the same fixed-point micro-nat BM25 as ``text.bm25_topk`` (exact
-integer ranking), so a freshly-built index must reproduce the batch
-operator bit-for-bit and the post-CDC index must match a DuckDB oracle
-computed over the reconstructed corpus — both pinned in
-tests/test_lex_index.py.
+Write protocol: a batch appends its max-LSN row per (bucket, id, term)
+as one segment — O(batch), flat in index size, the index never read.
+Reads resolve the same rule across the live segments. ``build()``,
+``compact()`` and ``rebuild()`` write the whole index as one segment
+and publish one generation that replaces every live segment.
+
+Query-time scoring is the same fixed-point micro-nat BM25 as
+``text.bm25_topk`` (exact integer ranking), so a freshly-built index
+must reproduce the batch operator bit-for-bit and the post-CDC index
+must match a DuckDB oracle computed over the reconstructed corpus —
+both pinned in tests/test_lex_index.py.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
-from ..cdc.apply import read_bucketed_state, swap_buckets
 from ..cdc.envelope import OP_DELETE
+from ..cdc.segments import SegmentStore, max_lsn_per
 
 BUCKET_COL = "bucket"
 TOMB_BUCKET = -1
@@ -53,7 +54,7 @@ def _term_bucket(col, n_buckets: int):
 
 
 class IncrementalLexicalIndex:
-    """Disk-resident inverted index with CDC-driven in-place updates."""
+    """Disk-resident inverted index kept fresh by CDC micro-batches."""
 
     def __init__(self, spark: SparkSession, path: str, n_buckets: int = 16,
                  id_col: str = "id", text_col: str = "text",
@@ -87,21 +88,29 @@ class IncrementalLexicalIndex:
         # BM25 stats (N, avgdl, df) stay corpus-wide, the standard
         # filtered-search semantics (scores don't change as filters do).
         self.payload_cols = tuple(payload_cols)
-        # Auto-compaction: the tombstone partition is read+rewritten by
-        # every batch and grows O(events since last compact) — the same
-        # degradation the ANN index's trigger bounds (ann_index.__init__:
-        # compact when tombstones exceed ratio × live docstat rows AND
-        # the min floor). None disables (manual compact() only).
+        # Auto-compaction: the tombstone log grows O(events since last
+        # compact) — the same degradation the ANN index's trigger bounds
+        # (ann_index.__init__: compact when tombstones exceed ratio ×
+        # docstat rows AND the min floor). None disables (manual
+        # compact() only).
         self.auto_compact_ratio = auto_compact_ratio
         self.auto_compact_min = auto_compact_min
-        # Compaction-trigger counters, maintained from Observation
-        # metrics piggybacked on each merge write (no fresh count jobs
-        # per micro-batch). None = unknown (this
-        # writer hasn't observed the partition yet) → one lazy count,
-        # amortized once per writer lifetime. Valid because the index is
-        # single-writer by contract (one foreachBatch stream).
+        # Compaction-trigger counters: the tombstone and docstat rows
+        # written since the last build/compact (an upper bound on what
+        # the live segments hold), fed by Observation metrics on each
+        # write, so the trigger reads no state. None = unknown (writer
+        # attached to a pre-existing index) → one lazy count, once per
+        # writer lifetime. Valid because the index is single-writer by
+        # contract (one foreachBatch stream).
         self._tomb_rows: int | None = None
         self._doc_rows: int | None = None
+        # one window covers all three partition kinds: postings key
+        # (bucket, id, term), tombstone/docstat key (bucket, id, null)
+        self.store = SegmentStore(
+            spark, path, None,
+            max_lsn_per(BUCKET_COL, "id", F.coalesce("term", F.lit(""))),
+            col=BUCKET_COL,
+        )
 
     # ------------------------------------------------------------ rows
 
@@ -163,16 +172,12 @@ class IncrementalLexicalIndex:
         """Offline build from (id, text[, lsn]) — initial rows default to
         lsn 0 so ANY later CDC event outranks them; no tombstones.
 
-        A rebuild WIPES any pre-existing state first: the swap replaces
-        only the new corpus's touched buckets, so building into a
-        non-empty path would leave stale term buckets behind, and any
-        surviving tombstone (lsn > 0) would outrank every rebuilt row
-        (lsn 0) and silently drop it from results. The event-row schema
-        is frozen to ``_schema.json`` (the IncrementalIvfIndex contract)
-        so later batches from a misconfigured writer fail loudly instead
-        of mis-merging."""
-        for suffix in ("", ".tmp", ".old"):
-            shutil.rmtree(self.path + suffix, ignore_errors=True)
+        The build replaces every live segment, so no stale term bucket
+        or tombstone (lsn > 0, which would outrank every rebuilt row at
+        lsn 0) survives it. The event-row schema is frozen to
+        ``_schema.json`` (the IncrementalIvfIndex contract) so later
+        batches from a misconfigured writer fail loudly instead of
+        mis-merging."""
         src = docs.select(
             F.col(self.id_col),
             F.col(self.text_col),
@@ -186,17 +191,7 @@ class IncrementalLexicalIndex:
         with open(self.path + "_schema.json", "w") as fh:
             _json.dump(ev.schema.jsonValue(), fh)
         self._write_meta()
-        touched = sorted(r[0] for r in ev.select(BUCKET_COL).distinct().collect())
-        obs = Observation()
-        counted = ev.observe(
-            obs, F.sum((F.col(BUCKET_COL) == DOC_BUCKET).cast("long")).alias("docs")
-        )
-        swap_buckets(
-            counted.repartition(max(len(touched), 1), BUCKET_COL),
-            self.path, touched, col=BUCKET_COL,
-        )
-        self._doc_rows = int(obs.get["docs"] or 0)
-        self._tomb_rows = 0
+        self._replace(ev)
 
     def _stored_schema(self) -> T.StructType | None:
         """The event-row schema frozen by build() (None for an index
@@ -231,9 +226,9 @@ class IncrementalLexicalIndex:
     # ----------------------------------------------------------- write
 
     def apply_batch(self, batch: DataFrame, _epoch_id: int | None = None) -> None:
-        """foreachBatch hook: (id, text, op, lsn) rows. Idempotent
-        (max-LSN per key within each partition kind); rewrites only the
-        touched term buckets + the tombstone and docstats partitions."""
+        """foreachBatch hook: append the (id, text, op, lsn) rows'
+        postings, docstats and tombstones as one segment. Idempotent
+        (max-LSN per key within each partition kind); reads no state."""
         if self._stored_meta() is None:
             self._write_meta()  # sink path builds lazily on first batch
         ev = self._event_rows(batch, with_tombs=True)
@@ -255,43 +250,33 @@ class IncrementalLexicalIndex:
             ev = ev.select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name) for f in stored.fields]
             )
-        touched = sorted(r[0] for r in ev.select(BUCKET_COL).distinct().collect())
-        if not touched:
-            return
-        prior = read_bucketed_state(
-            self.spark, self.path, col=BUCKET_COL, buckets=touched
-        )
-        if prior is not None:
-            ev = prior.select(*ev.columns).unionByName(ev)
-        ev = ev.repartition(len(touched), BUCKET_COL)
-        # one window covers all three partition kinds: postings key
-        # (bucket, id, term), tombstone/docstat key (bucket, id, null)
-        w = Window.partitionBy(
-            BUCKET_COL, "id", F.coalesce("term", F.lit(""))
-        ).orderBy(F.col("lsn").desc())
-        merged = (
-            ev.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # piggyback the compaction-trigger counters on the merge write:
-        # the tombstone and docstat partitions are REPLACED whenever
-        # touched, so the merged frame's per-partition row counts ARE the
-        # post-swap totals — no extra count jobs
         obs = Observation()
-        merged = merged.observe(
+        self.store.append(self._observed(ev, obs))
+        got = obs.get
+        if self._tomb_rows is not None:
+            self._tomb_rows += int(got["tombs"] or 0)
+        if self._doc_rows is not None:
+            self._doc_rows += int(got["docs"] or 0)
+        if self.auto_compact_ratio is not None:
+            self._maybe_compact()
+
+    @staticmethod
+    def _observed(rows: DataFrame, obs: Observation) -> DataFrame:
+        """``rows`` with its tombstone and docstat counts fed to ``obs``
+        by the write that consumes it."""
+        return rows.observe(
             obs,
             F.sum((F.col(BUCKET_COL) == TOMB_BUCKET).cast("long")).alias("tombs"),
             F.sum((F.col(BUCKET_COL) == DOC_BUCKET).cast("long")).alias("docs"),
         )
-        swap_buckets(merged, self.path, touched, col=BUCKET_COL)
-        got = obs.get
-        if TOMB_BUCKET in touched:
-            self._tomb_rows = int(got["tombs"] or 0)
-        if DOC_BUCKET in touched:
-            self._doc_rows = int(got["docs"] or 0)
-        if self.auto_compact_ratio is not None:
-            self._maybe_compact()
+
+    def _replace(self, rows: DataFrame) -> None:
+        """Publish ``rows`` (no tombstones) as the whole index and reset
+        the compaction counters from the write's own row counts."""
+        obs = Observation()
+        self.store.replace(self._observed(rows, obs))
+        self._doc_rows = int(obs.get["docs"] or 0)
+        self._tomb_rows = 0
 
     def _maybe_compact(self) -> None:
         """Trigger compact() when the tombstone log outgrows the live doc
@@ -299,16 +284,12 @@ class IncrementalLexicalIndex:
         only when a counter is unknown (writer attached to a pre-existing
         index), once per writer lifetime."""
         if self._tomb_rows is None:
-            t = read_bucketed_state(
-                self.spark, self.path, col=BUCKET_COL, buckets=[TOMB_BUCKET]
-            )
+            t = self.store.read(parts=[TOMB_BUCKET])
             self._tomb_rows = t.count() if t is not None else 0
         if self._tomb_rows < self.auto_compact_min:
             return
         if self._doc_rows is None:
-            d = read_bucketed_state(
-                self.spark, self.path, col=BUCKET_COL, buckets=[DOC_BUCKET]
-            )
+            d = self.store.read(parts=[DOC_BUCKET])
             self._doc_rows = d.count() if d is not None else 0
         if self._tomb_rows > self.auto_compact_ratio * max(self._doc_rows, 1):
             self.compact()
@@ -316,9 +297,7 @@ class IncrementalLexicalIndex:
     # ----------------------------------------------------------- query
 
     def _tomb_maxlsn(self) -> DataFrame | None:
-        t = read_bucketed_state(
-            self.spark, self.path, col=BUCKET_COL, buckets=[TOMB_BUCKET]
-        )
+        t = self.store.read(parts=[TOMB_BUCKET])
         if t is None:
             return None
         return t.groupBy("id").agg(F.max("lsn").alias("_tlsn"))
@@ -368,9 +347,7 @@ class IncrementalLexicalIndex:
             }
         )
         tomb = self._tomb_maxlsn()
-        docstats = read_bucketed_state(
-            self.spark, self.path, col=BUCKET_COL, buckets=[DOC_BUCKET]
-        )
+        docstats = self.store.read(parts=[DOC_BUCKET])
         if docstats is None:
             raise ValueError(f"empty lexical index at {self.path}")
         live_docs = self._alive(
@@ -379,9 +356,7 @@ class IncrementalLexicalIndex:
         stats = live_docs.agg(
             F.count(F.lit(1)).alias("N"), F.avg("dl").alias("avgdl")
         )
-        postings = read_bucketed_state(
-            self.spark, self.path, col=BUCKET_COL, buckets=tbuckets
-        )
+        postings = self.store.read(parts=tbuckets)
         if postings is None:
             return live_docs.select(
                 F.col("id"), F.lit(0).alias("n_hit_terms"),
@@ -439,9 +414,7 @@ class IncrementalLexicalIndex:
         smaller than the corpus; at 100 TB this is a scheduled report,
         not a per-query call)."""
         tomb = self._tomb_maxlsn()
-        docstats = read_bucketed_state(
-            self.spark, self.path, col=BUCKET_COL, buckets=[DOC_BUCKET]
-        )
+        docstats = self.store.read(parts=[DOC_BUCKET])
         if docstats is None:
             raise ValueError(f"empty lexical index at {self.path}")
         live = self._alive(docstats.select("id", "dl", "lsn"), tomb)
@@ -452,8 +425,7 @@ class IncrementalLexicalIndex:
             F.expr("round(percentile(dl, 0.5), 2)").alias("p50_dl"),
             F.expr("round(percentile(dl, 0.9), 2)").alias("p90_dl"),
         ).collect()[0]
-        state = read_bucketed_state(self.spark, self.path, col=BUCKET_COL)
-        postings = state.where(F.col(BUCKET_COL) >= 0)
+        postings = self.store.read().where(F.col(BUCKET_COL) >= 0)
         top = (
             self._alive(postings.select("term", "id", "lsn"), tomb)
             .groupBy("term")
@@ -472,25 +444,10 @@ class IncrementalLexicalIndex:
         }
 
     def compact(self) -> None:
-        """Offline GC: drop dead postings/docstats, clear the tombstone
-        log, rewrite every partition (the ann_index.compact contract)."""
-        state = read_bucketed_state(self.spark, self.path, col=BUCKET_COL)
-        if state is None:
-            return
-        tomb = self._tomb_maxlsn()
-        live = self._alive(
-            state.where(F.col(BUCKET_COL) != TOMB_BUCKET), tomb
-        )
-        cells = sorted(r[0] for r in state.select(BUCKET_COL).distinct().collect())
-        live = live.localCheckpoint(eager=True)  # read before swap
-        swap_buckets(
-            live.repartition(max(len(cells), 1), BUCKET_COL),
-            self.path, cells, col=BUCKET_COL,
-        )
-        # tombstone log is now empty; docstat count is re-observed by the
-        # next batch that touches it (lazy recount otherwise)
-        self._tomb_rows = 0
-        self._doc_rows = None
+        """Offline GC: drop dead postings/docstats and the tombstone log,
+        publishing the survivors as the whole index (the
+        ann_index.compact contract)."""
+        self.rebuild()
 
     def rebuild(self, n_buckets: int | None = None) -> None:
         """Offline re-bucket + GC — the lexical twin of the IVF
@@ -499,36 +456,24 @@ class IncrementalLexicalIndex:
         (default: the current layout, making this a plain compact).
         The cure for bucket skew the health policy detects
         (operators.index_health.lex_rebuild_policy): vocabulary drift
-        piles postings into few buckets, so every touched-bucket read
+        piles postings into few buckets, so every pruned bucket read
         scans far more than its share — more buckets re-spread the
         hash. The new layout is frozen to ``_meta.json`` so later
         readers adopt it automatically."""
-        state = read_bucketed_state(self.spark, self.path, col=BUCKET_COL)
+        state = self.store.read()
         if state is None:
             return
-        new_n = int(n_buckets) if n_buckets else self.n_buckets
-        tomb = self._tomb_maxlsn()
         live = self._alive(
-            state.where(F.col(BUCKET_COL) != TOMB_BUCKET), tomb
+            state.where(F.col(BUCKET_COL) != TOMB_BUCKET), self._tomb_maxlsn()
         )
-        live = live.withColumn(
+        new_n = int(n_buckets) if n_buckets else self.n_buckets
+        self._replace(live.withColumn(
             BUCKET_COL,
             F.when(F.col(BUCKET_COL) == DOC_BUCKET, F.lit(DOC_BUCKET))
             .otherwise(_term_bucket(F.col("term"), new_n)),
-        )
-        old_cells = {
-            r[0] for r in state.select(BUCKET_COL).distinct().collect()
-        }
-        cells = sorted(old_cells | set(range(new_n)) | {DOC_BUCKET})
-        live = live.localCheckpoint(eager=True)  # read before swap
-        swap_buckets(
-            live.repartition(len(cells), BUCKET_COL),
-            self.path, cells, col=BUCKET_COL,
-        )
+        ))
         self.n_buckets = new_n
         self._write_meta()
-        self._tomb_rows = 0
-        self._doc_rows = None
 
 
 # --- graded component (rows-only inside x3; oracle pinned in tests) -------

@@ -88,14 +88,21 @@ def base_delete_expr(bases: list[str]) -> str:
     )
 
 
-def _post(url: str, path: str, body: dict, timeout_s: float) -> dict:
+def _post(url: str, path: str, body: dict | bytes, timeout_s: float) -> dict:
+    """Every Milvus request goes through here. Milvus REST v2 answers a
+    rejected request with HTTP 200 and a non-zero ``code``, so that
+    raises too: the partition task fails and the micro-batch replays
+    from the checkpoint instead of committing data that never arrived."""
     # transient failures retry with backoff (sinks/http.py): upsert and
     # delete bodies are idempotent, ensure-collection tolerates
     # already-exists — at-least-once is safe everywhere _post is used
-    return _json.loads(
-        send_json(url.rstrip("/") + path, _json.dumps(body).encode(), timeout_s)
-        or b"{}"
-    )
+    data = body if isinstance(body, bytes) else _json.dumps(body).encode()
+    doc = _json.loads(send_json(url.rstrip("/") + path, data, timeout_s) or b"{}")
+    if doc.get("code"):
+        raise RuntimeError(
+            f"Milvus {path} rejected: code {doc['code']}: {doc.get('message', '')}"
+        )
+    return doc
 
 
 def ensure_collection(
@@ -171,8 +178,8 @@ def upsert(url: str, collection: str, rows) -> None:
     """POST /v2/vectordb/entities/upsert of ``point_bodies`` upsert rows,
     joined as sent with no per-row JSON pass (milvus.go:134-158 inserts
     one point per RPC)."""
-    send_json(
-        url.rstrip("/") + "/v2/vectordb/entities/upsert",
+    _post(
+        url, "/v2/vectordb/entities/upsert",
         ('{"collectionName":%s,"data":[%s]}' % (
             _json.dumps(collection), ",".join(r["body"] for r in rows)
         )).encode(),

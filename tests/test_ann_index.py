@@ -1,8 +1,13 @@
-"""Incremental ANN index (operators/ann_index.py): CDC batches update
-cell partitions in place — insert/update/delete/replay/compact semantics
-plus the untouched-cells-not-rewritten proof."""
+"""Incremental ANN index (operators/ann_index.py): CDC batches append
+cell-partitioned segments — insert/update/delete/replay/compact
+semantics, the one-segment-per-apply proof, pruned reads over several
+segments, crash safety and the in-place upgrade of the bucket layout."""
 
 from __future__ import annotations
+
+import os
+import re
+import shutil
 
 import numpy as np
 import pytest
@@ -11,24 +16,28 @@ import pytest
 # (pytest.ini); the full suite is opt-in via -m ""
 pytestmark = pytest.mark.slow
 
+from cdc2vec_spark.cdc.segments import SegmentStore
 from cdc2vec_spark.io import load_table
 from cdc2vec_spark.operators.ann_index import TOMB_CELL, IncrementalIvfIndex
 
 
-def _cell_snapshot(path):
-    import os
-
+def _files(root):
+    """relative path → (size, mtime_ns) of every file under ``root``."""
     out = {}
-    for name in sorted(os.listdir(path)):
-        if not name.startswith("cell="):
-            continue
-        d = os.path.join(path, name)
-        out[name] = sorted(
-            (f, os.path.getsize(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if not f.startswith((".", "_"))
-        )
+    for d, _, names in os.walk(root):
+        for n in names:
+            p = os.path.join(d, n)
+            st = os.stat(p)
+            out[os.path.relpath(p, root)] = (st.st_size, st.st_mtime_ns)
     return out
+
+
+def _new_segments(before, after):
+    """The segment dirs holding the files that appeared between two
+    ``_files`` snapshots; asserts no earlier file changed or vanished."""
+    assert all(after.get(p) == v for p, v in before.items())
+    new = set(after) - set(before)
+    return {p.split(os.sep)[1] for p in new if p.startswith("data" + os.sep)}
 
 
 @pytest.fixture()
@@ -58,7 +67,6 @@ def test_insert_update_delete_replay_compact(spark, sf_dir, index):
     # INSERT a new point equal to the query → becomes top-1
     b1 = _batch(spark, [("new:q", [float(x) for x in qv], "c", 100)], dim)
     index.apply_batch(b1)
-    snap_before = _cell_snapshot(index.path)
     top = index.topk(qv, k=2, nprobe=100).collect()
     assert {r["id"] for r in top} >= {"new:q", "0"}
     assert all(r["sim"] == 1.0 for r in top)
@@ -92,20 +100,27 @@ def test_insert_update_delete_replay_compact(spark, sf_dir, index):
     index.compact()
     got = [(r["id"], r["sim"]) for r in index.topk(qv, k=5, nprobe=100).collect()]
     assert got == want
-    import os
+    # one live segment, without the tombstone log
+    assert len(index.store.segments()) == 1
+    assert index.store.read(parts=[TOMB_CELL]) is None
 
-    assert not os.path.exists(os.path.join(index.path, f"cell={TOMB_CELL}"))
 
-
-def test_small_batch_rewrites_only_touched_cells(spark, sf_dir, index):
+def test_apply_writes_one_segment_and_modifies_no_file(spark, sf_dir, index):
+    """An apply appends one segment holding exactly the new point's cell
+    and the tombstone cell, one file each, and leaves every existing
+    file as it was."""
     e = load_table(spark, sf_dir, "embeddings")
     v5 = [float(x) for x in e.where("vec_id = 5").first()["embedding"]]
-    before = _cell_snapshot(index.path)
+    before = _files(index.path)
     index.apply_batch(_batch(spark, [("solo", v5, "c", 50)], len(v5)))
-    after = _cell_snapshot(index.path)
-    changed = {c for c in set(before) | set(after) if before.get(c) != after.get(c)}
-    # exactly the new point's cell + the tombstone partition
-    assert f"cell={TOMB_CELL}" in changed and len(changed) == 2
+    after = _files(index.path)
+    segs = _new_segments(before, after)
+    assert len(segs) == 1
+    seg = os.path.join(index.path, "data", segs.pop())
+    cells = sorted(n for n in os.listdir(seg) if n.startswith("cell="))
+    assert len(cells) == 2 and f"cell={TOMB_CELL}" in cells
+    for c in cells:
+        assert len([f for f in os.listdir(os.path.join(seg, c)) if f.endswith(".parquet")]) == 1
 
 
 def test_filtered_search_with_payload_columns(spark, sf_dir, tmp_path):
@@ -164,12 +179,21 @@ def test_filtered_search_with_payload_columns(spark, sf_dir, tmp_path):
 
 
 def test_topk_prunes_probed_cells(spark, sf_dir, index):
+    """Over two live segments, a probe reads only its cells and the
+    tombstone cell of each."""
     e = load_table(spark, sf_dir, "embeddings")
     qv = np.asarray(e.where("vec_id = 7").first()["embedding"], dtype=np.float64)
+    index.apply_batch(_batch(spark, [("near7", [float(x) for x in qv], "c", 50)], len(qv)))
+    assert len(index.store.segments()) == 2
     out = index.topk(qv, k=5, nprobe=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan
-    assert len(out.collect()) == 5
+    files = out.inputFiles()
+    cells = {int(m) for f in files for m in re.findall(r"cell=(-?\d+)", f)}
+    assert TOMB_CELL in cells and len(cells - {TOMB_CELL}) <= 2
+    assert len({m for f in files for m in re.findall(r"seg-\d+-\w+", f)}) == 2
+    rows = out.collect()
+    assert len(rows) == 5 and rows[0]["id"] in ("7", "near7")
 
 
 def test_auto_compaction_bounds_tombstone_growth(spark, sf_dir, tmp_path):
@@ -178,10 +202,7 @@ def test_auto_compaction_bounds_tombstone_growth(spark, sf_dir, tmp_path):
     the life of the stream. With auto_compact_ratio set, streaming many
     delete-heavy batches must keep the tombstone partition bounded and
     compaction must fire without any manual compact() call."""
-    import os
     import time
-
-    from pyspark.sql import functions as F
 
     e = load_table(spark, sf_dir, "embeddings").selectExpr(
         "cast(vec_id as string) as id", "embedding as vector"
@@ -195,14 +216,8 @@ def test_auto_compaction_bounds_tombstone_growth(spark, sf_dir, tmp_path):
     vec = [float(x) for x in e.first()["vector"]]
 
     def tomb_rows():
-        d = os.path.join(path, f"cell={TOMB_CELL}")
-        if not os.path.isdir(d):
-            return 0
-        return (
-            spark.read.parquet(path)
-            .where(F.col("cell") == TOMB_CELL)
-            .count()
-        )
+        t = ix.store.read(parts=[TOMB_CELL])
+        return 0 if t is None else t.count()
 
     # 14 delete-heavy batches of 16 events each: threshold is
     # 0.25*live (~25 rows at sf0.001's 100 embeddings) so several
@@ -309,9 +324,9 @@ def test_pq_mode_validation(spark, sf_dir, pq_index, index):
 
 
 def test_rebuild_wipes_stale_state(spark, sf_dir, tmp_path):
-    """Round-7 fix (ADVICE r06): build() into a non-empty path must wipe
-    prior cells and tombstones — otherwise stale cells survive and old
-    tombstones (lsn > 0) outrank every rebuilt row (lsn 0)."""
+    """build() into a non-empty path must replace prior cells and
+    tombstones — otherwise stale cells survive and old tombstones
+    (lsn > 0) outrank every rebuilt row (lsn 0)."""
     path = str(tmp_path / "ivf")
     e = load_table(spark, sf_dir, "embeddings").selectExpr(
         "cast(vec_id as string) as id", "embedding as vector"
@@ -333,13 +348,12 @@ def test_rebuild_wipes_stale_state(spark, sf_dir, tmp_path):
 
 
 def test_compaction_counters_track_disk_without_count_jobs(spark, sf_dir, index):
-    """Round-7 fix (VERDICT r06 #3): the compaction trigger reads
-    Observation-fed counters (tombstones exact, live rows delta-updated
-    across batches) and must not rescan state when they are warm."""
+    """The compaction trigger reads Observation-fed counters — the rows
+    written since the build, equal to what the live segments hold — and
+    must not read state when they are warm."""
     from unittest import mock
 
-    from cdc2vec_spark.operators import ann_index as ann_mod
-    from cdc2vec_spark.cdc.apply import read_bucketed_state
+    from pyspark.sql import functions as F
 
     e = load_table(spark, sf_dir, "embeddings")
     grab = {r["vec_id"]: r["embedding"] for r in e.where("vec_id in (2, 3)").collect()}
@@ -351,15 +365,15 @@ def test_compaction_counters_track_disk_without_count_jobs(spark, sf_dir, index)
     index.apply_batch(_batch(spark, [
         ("9990", None, "d", 24),
     ], len(grab[2])))
-    state = read_bucketed_state(spark, index.path, col="cell")
-    from pyspark.sql import functions as F
-    tombs = state.where(F.col("cell") == TOMB_CELL).count()
-    live = state.where(F.col("cell") != TOMB_CELL).count()
+    assert len(index.store.segments()) == 3
+    stored = index.store._load(index.store.segments())  # no cross-segment resolve
+    tombs = stored.where(F.col("cell") == TOMB_CELL).count()
+    live = stored.where(F.col("cell") != TOMB_CELL).count()
+    assert (tombs, live) == (4, e.count() + 2)
     assert index._tomb_rows == tombs and index._live_rows == live
-    with mock.patch.object(
-        ann_mod, "read_bucketed_state",
-        side_effect=AssertionError("trigger must not re-read state"),
-    ):
+    no_read = AssertionError("trigger must not re-read state")
+    with mock.patch.object(SegmentStore, "read", side_effect=no_read), \
+            mock.patch.object(SegmentStore, "_load", side_effect=no_read):
         index._maybe_compact()
 
 
@@ -438,3 +452,76 @@ def test_chunked_replace_set_tombstones(spark, tmp_path):
         "A#0", "A#1"
     }
     assert ix.stats()["n_live"] == 2
+
+
+def _ids_sims(ix, qv, nprobe=1_000_000, k=10):
+    return [(r["id"], r["sim"]) for r in ix.topk(qv, k=k, nprobe=nprobe).collect()]
+
+
+def test_bucket_layout_index_upgrades_in_place(spark, sf_dir, tmp_path):
+    """An index in the earlier layout — root cell=<i>/ dirs written by
+    partitionBy, one cell stranded under <path>.old/ by a crash, plus the
+    sidecars — opens as one adopted segment and answers topk exactly as
+    the same index in segments does, after an apply and after its first
+    compaction too."""
+    e = load_table(spark, sf_dir, "embeddings")
+    pts = e.selectExpr("cast(vec_id as string) as id", "embedding as vector")
+    grab = {r["vec_id"]: r["embedding"] for r in e.where("vec_id in (2, 3, 4)").collect()}
+    dim = len(grab[2])
+    ref = IncrementalIvfIndex(spark, str(tmp_path / "ref"), auto_compact_ratio=None)
+    ref.build(pts, centroid_every=13)
+    ref.apply_batch(_batch(spark, [
+        ("0", None, "d", 21), ("1", [float(x) for x in grab[2]], "u", 22),
+    ], dim))
+    old = str(tmp_path / "old")
+    ref.store.read().write.partitionBy("cell").parquet(old)
+    for suffix in ("_schema.json", "_meta.json"):
+        shutil.copy(ref.path + suffix, old + suffix)
+    shutil.copytree(ref.path + "_centroids", old + "_centroids")
+    stranded = sorted(n for n in os.listdir(old) if n.startswith("cell="))[-1]
+    os.makedirs(old + ".old")
+    os.rename(os.path.join(old, stranded), os.path.join(old + ".old", stranded))
+
+    ix = IncrementalIvfIndex(spark, old, auto_compact_ratio=None)
+    qv = np.asarray(grab[4], dtype=np.float64)
+    for nprobe in (2, 1_000_000):
+        assert _ids_sims(ix, qv, nprobe) == _ids_sims(ref, qv, nprobe)
+    assert not os.path.exists(old + ".old")
+    assert not [n for n in os.listdir(old) if n.startswith("cell=")]
+    (seg,) = ix.store.segments()
+    assert seg.seq == -1
+    batch = _batch(spark, [("9999", [float(x) for x in grab[3]], "c", 23)], dim)
+    for index in (ref, ix):
+        index.apply_batch(batch)
+    assert _ids_sims(ix, qv) == _ids_sims(ref, qv)
+    ix.compact()
+    assert _ids_sims(ix, qv) == _ids_sims(ref, qv)
+    assert len(ix.store.segments()) == 1
+    assert ix.stats()["n_live"] == ref.stats()["n_live"]
+
+
+@pytest.mark.parametrize("step", ["apply", "compact"])
+def test_crash_before_publish_leaves_topk_unchanged(spark, sf_dir, index, monkeypatch, step):
+    """A crash between a segment's write and its manifest publish —
+    an apply's, or a compaction's — leaves the index as it was."""
+    e = load_table(spark, sf_dir, "embeddings")
+    qv = np.asarray(e.where("vec_id = 0").first()["embedding"], dtype=np.float64)
+    dim = len(qv)
+    index.apply_batch(_batch(spark, [("1", None, "d", 7)], dim))
+    want = _ids_sims(index, qv)
+    segs = index.store.segments()
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(SegmentStore, "_publish", crash)
+    with pytest.raises(RuntimeError, match="crash before publish"):
+        if step == "apply":
+            index.apply_batch(_batch(spark, [
+                ("new:q", [float(x) for x in qv], "c", 8), ("0", None, "d", 9),
+            ], dim))
+        else:
+            index.compact()
+    monkeypatch.undo()
+    assert index.store.segments() == segs
+    assert _ids_sims(IncrementalIvfIndex(spark, index.path), qv) == want

@@ -1,46 +1,7 @@
-"""Typed extraction boundary (SURVEY §1.2): text images → real types,
-poison values → NULL (never a batch failure under ANSI)."""
+"""Per-table extraction: each mapped table's changes go through its own
+text, metadata and key columns (config.go:61-66)."""
 
 from __future__ import annotations
-
-import datetime as dt
-from decimal import Decimal
-
-from cdc2vec_spark.cdc.extract import typed_columns
-
-
-def test_typed_columns_casts_and_survives_poison(spark):
-    env = spark.createDataFrame(
-        [
-            ("c", "public.orders", "1", {"price": "19.99", "qty": "3", "created_at": "2024-05-01 10:00:00"}, 1),
-            ("c", "public.orders", "2", {"price": "NOT_A_NUMBER", "qty": "x"}, 2),  # poison
-            ("c", "public.orders", "3", {"qty": "7"}, 3),  # missing keys
-        ],
-        "op string, tbl string, pk string, after map<string,string>, lsn long",
-    )
-    out = typed_columns(
-        env, {"price": "decimal(12,2)", "qty": "int", "created_at": "timestamp"}
-    )
-    assert dict(out.dtypes)["price"] == "decimal(12,2)"
-    assert dict(out.dtypes)["qty"] == "int"
-    rows = {r["pk"]: r for r in out.collect()}
-    assert rows["1"]["price"] == Decimal("19.99")
-    assert rows["1"]["qty"] == 3
-    assert rows["1"]["created_at"] == dt.datetime(2024, 5, 1, 10, 0)
-    assert rows["2"]["price"] is None and rows["2"]["qty"] is None  # try_cast, no crash
-    assert rows["3"]["price"] is None and rows["3"]["qty"] == 7
-    assert set(rows["1"].asDict()) == {"op", "tbl", "pk", "lsn", "price", "qty", "created_at"}
-
-
-def test_typed_columns_rejects_envelope_collision(spark):
-    import pytest
-
-    env = spark.createDataFrame(
-        [("c", "t", "1", {"op": "x"}, 1)],
-        "op string, tbl string, pk string, after map<string,string>, lsn long",
-    )
-    with pytest.raises(ValueError, match="collide"):
-        typed_columns(env, {"op": "string"})
 
 
 def test_run_batch_unions_multiple_table_mappings(spark):

@@ -7,6 +7,10 @@ two scale factors via the driver's comparator.
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+
 import pytest
 
 # long e2e suite: deselected under the default driver-budget run
@@ -16,11 +20,15 @@ from pyspark.sql import functions as F
 
 from oracle_check import compare_one, duckdb_conn
 
+from cdc2vec_spark.cdc.segments import SegmentStore
 from cdc2vec_spark.io import load_table
 from cdc2vec_spark.operators import lex_index
 from cdc2vec_spark.operators.lex_index import IncrementalLexicalIndex
 from cdc2vec_spark.operators.text import bm25_topk
 from tests.conftest import SF0001, SF001
+from tests.test_ann_index import _files, _new_segments
+
+BATCH_DDL = "id string, text string, op string, lsn long"
 
 
 @pytest.mark.parametrize("sf", [SF0001, SF001])
@@ -53,8 +61,6 @@ def test_cdc_update_delete_and_compact(spark, tmp_path):
     """Hand-built loop: a delete disappears, an update is re-scored on
     its new text (stale postings dead), compact() preserves results and
     physically clears the tombstone log."""
-    import os
-
     docs = spark.createDataFrame(
         [("a", "spark spark filler"), ("b", "spark filler filler"),
          ("c", "nothing here")],
@@ -80,32 +86,34 @@ def test_cdc_update_delete_and_compact(spark, tmp_path):
     want = [tuple(r) for r in ix.topk(("spark",)).collect()]
     ix.compact()
     assert [tuple(r) for r in ix.topk(("spark",)).collect()] == want
-    assert not os.path.isdir(os.path.join(path, "bucket=-1"))
+    assert len(ix.store.segments()) == 1
+    assert ix.store.read(parts=[lex_index.TOMB_BUCKET]) is None
 
 
 def test_topk_reads_only_query_and_meta_buckets(spark, tmp_path):
-    """Scale contract: a query must scan only its terms' bucket dirs
-    plus the tombstone/docstats partitions — asserted on the scan paths
-    in the executed plan."""
+    """Scale contract: over two live segments, a query scans only its
+    terms' bucket dirs plus the tombstone/docstats partitions of each —
+    asserted on the scan paths in the executed plan."""
     d = load_table(spark, SF0001, "documents").select(
         F.col("doc_id").cast("string").alias("id"), "text"
     )
     ix = IncrementalLexicalIndex(spark, str(tmp_path / "lex"), n_buckets=16)
     ix.build(d)
-    import re
-
+    ix.apply_batch(spark.createDataFrame(
+        [("new", "spark fresh words", "c", 10), ("0", None, "d", 11)], BATCH_DDL
+    ))
+    assert len(ix.store.segments()) == 2
     files = ix.topk(("spark",)).inputFiles()
     scanned = {m for f in files for m in re.findall(r"bucket=(-?\d+)", f)}
-    assert "-2" in scanned  # docstats
+    assert {"-1", "-2"} <= scanned  # tombstones, docstats
     posting_buckets = {b for b in scanned if int(b) >= 0}
     assert len(posting_buckets) == 1  # exactly the one query term's bucket
+    assert len({m for f in files for m in re.findall(r"seg-\d+-\w+", f)}) == 2
 
 
 def test_auto_compaction_bounds_tombstone_log(spark, tmp_path):
     """Delete-heavy batches must trigger compact() automatically: the
     tombstone partition stays bounded without any manual call."""
-    import os
-
     docs = spark.createDataFrame(
         [(str(i), f"tok{i} spark filler") for i in range(40)],
         "id string, text string",
@@ -123,15 +131,12 @@ def test_auto_compaction_bounds_tombstone_log(spark, tmp_path):
             "id string, text string, op string, lsn long",
         )
         ix.apply_batch(batch)
-    tomb_dir = os.path.join(path, "bucket=-1")
-    from cdc2vec_spark.cdc.apply import read_bucketed_state
-
-    tombs = read_bucketed_state(spark, path, buckets=[-1])
+    tombs = ix.store.read(parts=[-1])
     n_tombs = tombs.count() if tombs is not None else 0
     live = {r["id"] for r in ix.topk(("spark",), k=50).collect()}
     assert live == {str(i) for i in range(30, 40)}
     # the log was compacted at least once: far fewer than 30 tombstones
-    assert n_tombs <= 10, f"tombstone log unbounded: {n_tombs} rows, dir={tomb_dir}"
+    assert n_tombs <= 10, f"tombstone log unbounded: {n_tombs} rows"
 
 
 def test_filtered_search_with_payload_columns(spark, tmp_path):
@@ -182,17 +187,17 @@ def test_filtered_search_with_payload_columns(spark, tmp_path):
 
 
 def test_rebuild_wipes_stale_state(spark, tmp_path):
-    """Round-7 fix (ADVICE r06): build() into a non-empty path must wipe
-    prior state — otherwise stale term buckets survive and old
-    tombstones (lsn > 0) outrank every rebuilt row (lsn 0), silently
-    dropping the whole rebuilt corpus from results."""
+    """build() into a non-empty path must replace prior state —
+    otherwise stale term buckets survive and old tombstones (lsn > 0)
+    outrank every rebuilt row (lsn 0), silently dropping the whole
+    rebuilt corpus from results."""
     path = str(tmp_path / "lex")
     a = spark.createDataFrame(
         [("a1", "spark alpha"), ("a2", "spark beta")], "id string, text string"
     )
     ix = IncrementalLexicalIndex(spark, path, n_buckets=4)
     ix.build(a)
-    # delete a1 → tombstone with lsn 5 survives in bucket=-1
+    # delete a1 → a tombstone with lsn 5 in bucket=-1
     ix.apply_batch(
         spark.createDataFrame([("a1", None, "d", 5)],
                               "id string, text string, op string, lsn long")
@@ -207,9 +212,9 @@ def test_rebuild_wipes_stale_state(spark, tmp_path):
 
 
 def test_schema_freeze_rejects_mismatched_writer(spark, tmp_path):
-    """Round-7 fix (ADVICE r06): the build-time schema freeze makes a
-    writer configured with different payload columns fail loudly instead
-    of mis-merging into the bucket files."""
+    """The build-time schema freeze makes a writer configured with
+    different payload columns fail loudly instead of mis-merging into
+    the bucket files."""
     path = str(tmp_path / "lex")
     docs = spark.createDataFrame(
         [("a", "spark words", "en")], "id string, text string, lang string"
@@ -225,14 +230,11 @@ def test_schema_freeze_rejects_mismatched_writer(spark, tmp_path):
 
 
 def test_compaction_counters_track_disk_without_count_jobs(spark, tmp_path):
-    """Round-7 fix (VERDICT r06 #3): the compaction trigger reads
-    Observation-fed counters piggybacked on the merge write. The
-    counters must equal the on-disk partition counts after build and
-    after each batch, and the trigger check must not re-read state when
-    the counters are warm."""
+    """The compaction trigger reads Observation-fed counters fed by
+    each write: they must equal the rows the live segments hold after
+    build and after each batch, and the trigger check must not read
+    state when the counters are warm."""
     from unittest import mock
-
-    from cdc2vec_spark.cdc.apply import read_bucketed_state
 
     path = str(tmp_path / "lex")
     docs = spark.createDataFrame(
@@ -248,19 +250,16 @@ def test_compaction_counters_track_disk_without_count_jobs(spark, tmp_path):
             "id string, text string, op string, lsn long",
         )
     )
-    tombs = read_bucketed_state(
-        spark, path, col=lex_index.BUCKET_COL, buckets=[lex_index.TOMB_BUCKET]
-    ).count()
-    docstats = read_bucketed_state(
-        spark, path, col=lex_index.BUCKET_COL, buckets=[lex_index.DOC_BUCKET]
-    ).count()
+    stored = ix.store._load(ix.store.segments())  # no cross-segment resolve
+    tombs = stored.where(F.col("bucket") == lex_index.TOMB_BUCKET).count()
+    docstats = stored.where(F.col("bucket") == lex_index.DOC_BUCKET).count()
+    assert (tombs, docstats) == (2, 4)
     assert ix._tomb_rows == tombs and ix._doc_rows == docstats
     # warm counters (below the compact floor): the trigger must decide
     # from the cached longs, not fresh count jobs
-    with mock.patch.object(
-        lex_index, "read_bucketed_state",
-        side_effect=AssertionError("trigger must not re-read state"),
-    ):
+    no_read = AssertionError("trigger must not re-read state")
+    with mock.patch.object(SegmentStore, "read", side_effect=no_read), \
+            mock.patch.object(SegmentStore, "_load", side_effect=no_read):
         ix._maybe_compact()
 
 
@@ -359,3 +358,97 @@ def test_chunked_replace_set_tombstones(spark, tmp_path):
 
     ix.compact()
     assert {r["id"] for r in ix.topk(("beta",), k=10).collect()} == {"A#0", "A#1"}
+
+
+def _ranked(ix, terms=("spark",)):
+    return [tuple(r) for r in ix.topk(terms, k=10).collect()]
+
+
+def test_apply_writes_one_segment_and_modifies_no_file(spark, tmp_path):
+    """An apply appends one segment — its term buckets, tombstones and
+    docstats, one file per bucket — and leaves every existing file as
+    it was."""
+    ix = IncrementalLexicalIndex(spark, str(tmp_path / "lex"), n_buckets=4)
+    ix.build(spark.createDataFrame(
+        [("a", "spark alpha"), ("b", "beta words")], "id string, text string"
+    ))
+    before = _files(ix.path)
+    ix.apply_batch(spark.createDataFrame(
+        [("a", None, "d", 10), ("c", "spark gamma", "c", 11)], BATCH_DDL
+    ))
+    after = _files(ix.path)
+    segs = _new_segments(before, after)
+    assert len(segs) == 1
+    seg = os.path.join(ix.path, "data", segs.pop())
+    buckets = sorted(n for n in os.listdir(seg) if n.startswith("bucket="))
+    assert {"bucket=-1", "bucket=-2"} <= set(buckets)
+    for b in buckets:
+        assert len([f for f in os.listdir(os.path.join(seg, b)) if f.endswith(".parquet")]) == 1
+
+
+def test_bucket_layout_index_upgrades_in_place(spark, tmp_path):
+    """An index in the earlier layout — root bucket=<i>/ dirs written by
+    partitionBy, one bucket stranded under <path>.old/ by a crash, plus
+    the sidecars — opens as one adopted segment and ranks exactly as the
+    same index in segments does, after an apply and after its first
+    compaction too."""
+    d = load_table(spark, SF0001, "documents").select(
+        F.col("doc_id").cast("string").alias("id"), "text"
+    )
+    ref = IncrementalLexicalIndex(spark, str(tmp_path / "ref"), n_buckets=8)
+    ref.build(d)
+    ref.apply_batch(spark.createDataFrame(
+        [("0", None, "d", 10), ("1", "spark query window spark", "u", 11)], BATCH_DDL
+    ))
+    old = str(tmp_path / "old")
+    ref.store.read().write.partitionBy("bucket").parquet(old)
+    for suffix in ("_schema.json", "_meta.json"):
+        shutil.copy(ref.path + suffix, old + suffix)
+    stranded = "bucket=-1"
+    os.makedirs(old + ".old")
+    os.rename(os.path.join(old, stranded), os.path.join(old + ".old", stranded))
+
+    ix = IncrementalLexicalIndex(spark, old)
+    assert ix.n_buckets == 8
+    q = ("spark", "query", "window")
+    assert _ranked(ix, q) == _ranked(ref, q)
+    assert not os.path.exists(old + ".old")
+    assert not [n for n in os.listdir(old) if n.startswith("bucket=")]
+    (seg,) = ix.store.segments()
+    assert seg.seq == -1
+    batch = spark.createDataFrame([("9999", "window window spark", "c", 12)], BATCH_DDL)
+    for index in (ref, ix):
+        index.apply_batch(batch)
+    assert _ranked(ix, q) == _ranked(ref, q)
+    ix.compact()
+    assert _ranked(ix, q) == _ranked(ref, q)
+    assert len(ix.store.segments()) == 1
+    assert ix.stats() == ref.stats()
+
+
+@pytest.mark.parametrize("step", ["apply", "compact"])
+def test_crash_before_publish_leaves_topk_unchanged(spark, tmp_path, monkeypatch, step):
+    """A crash between a segment's write and its manifest publish —
+    an apply's, or a compaction's — leaves the index as it was."""
+    ix = IncrementalLexicalIndex(spark, str(tmp_path / "lex"), n_buckets=4)
+    ix.build(spark.createDataFrame(
+        [("a", "spark alpha"), ("b", "spark beta spark")], "id string, text string"
+    ))
+    ix.apply_batch(spark.createDataFrame([("a", None, "d", 5)], BATCH_DDL))
+    want = _ranked(ix)
+    segs = ix.store.segments()
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(SegmentStore, "_publish", crash)
+    with pytest.raises(RuntimeError, match="crash before publish"):
+        if step == "apply":
+            ix.apply_batch(spark.createDataFrame(
+                [("b", None, "d", 6), ("c", "spark spark spark", "c", 7)], BATCH_DDL
+            ))
+        else:
+            ix.compact()
+    monkeypatch.undo()
+    assert ix.store.segments() == segs
+    assert _ranked(IncrementalLexicalIndex(spark, ix.path)) == want

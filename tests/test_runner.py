@@ -385,11 +385,11 @@ def test_boot_chunked_mode_end_to_end(spark, sf_dir, tmp_path):
 
 
 def test_boot_chunked_in_engine_indexes_replace_set(spark, sf_dir, tmp_path):
-    """Chunked mode composes with the in-engine index sinks (round 8,
-    VERDICT r07 ask #8): ivf_index and lex_index key tombstones on the
-    base id, so a re-embedded key's stale tail chunks and a deleted
-    key's whole chunk set die together — after the stream, each index's
-    live id set equals the collection's live chunk-id set exactly."""
+    """Chunked mode composes with the in-engine index sinks: ivf_index
+    and lex_index key tombstones on the base id, so a re-embedded key's
+    stale tail chunks and a deleted key's whole chunk set die together —
+    after the stream, each index's live id set equals the collection's
+    live chunk-id set exactly."""
     import dataclasses
 
     from cdc2vec_spark.config import (
@@ -398,9 +398,8 @@ def test_boot_chunked_in_engine_indexes_replace_set(spark, sf_dir, tmp_path):
     from cdc2vec_spark.operators.ann_index import IncrementalIvfIndex
     import numpy as np
 
-    from cdc2vec_spark.cdc.apply import read_bucketed_state
     from cdc2vec_spark.operators.lex_index import (
-        DOC_BUCKET, BUCKET_COL, IncrementalLexicalIndex,
+        DOC_BUCKET, IncrementalLexicalIndex,
     )
 
     ivf_path = str(tmp_path / "ivf")
@@ -448,9 +447,7 @@ def test_boot_chunked_in_engine_indexes_replace_set(spark, sf_dir, tmp_path):
 
     lix = IncrementalLexicalIndex(spark, lex_path)
     assert lix.chunked
-    docstats = read_bucketed_state(
-        spark, lex_path, col=BUCKET_COL, buckets=[DOC_BUCKET]
-    )
+    docstats = lix.store.read(parts=[DOC_BUCKET])
     got_lex = {
         r["id"]
         for r in lix._alive(
@@ -862,7 +859,6 @@ def test_boot_index_sinks_restart_without_reapplying(spark, sf_dir, tmp_path):
     boot over the same checkpoint reprocesses nothing, so both disk
     indexes are byte-stable (same tombstone count, same top-k) — the
     replay-safety contract the per-batch LSN merges promise."""
-    from cdc2vec_spark.cdc.apply import read_bucketed_state
     from cdc2vec_spark.config import (
         DOCUMENTS_MAPPING,
         EngineConfig,
@@ -893,8 +889,8 @@ def test_boot_index_sinks_restart_without_reapplying(spark, sf_dir, tmp_path):
     def lex_fingerprint():
         ix = IncrementalLexicalIndex(spark, lex_path)
         top = [tuple(r) for r in ix.topk(("spark", "query", "window")).collect()]
-        tombs = read_bucketed_state(spark, lex_path, col="bucket", buckets=[-1])
-        return top, (tombs.count() if tombs is not None else 0)
+        tombs = ix.store.read(parts=[-1])
+        return top, tombs.count(), ix.store.segments()
 
     before = lex_fingerprint()
     q2, _, _ = runner.boot(spark, **args)

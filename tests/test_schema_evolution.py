@@ -1,4 +1,4 @@
-"""Mid-stream schema evolution (SURVEY §7, VERDICT r09 ask #3).
+"""Mid-stream schema evolution (SURVEY §7).
 
 The reference refreshes its relation cache on EVERY RelationMessage
 (postgres.go:234-250), so a column added by ``ALTER TABLE .. ADD`` mid-
@@ -7,8 +7,7 @@ stream flows into ``After`` from the very next tuple. The engine's
 free — these tests prove the whole path, not just the decoder:
 
   pgoutput frames (relation refresh) → wal2json lines → JVM decode →
-  envelope ``after`` map → typed_columns / to_flat → build_points
-  metadata.
+  envelope ``after`` map → to_flat → build_points metadata.
 
 Documented semantics (mirrors the reference, whose mapping YAML is
 equally static):
@@ -17,14 +16,14 @@ equally static):
   every downstream map consumer sees the key on post-ALTER rows and
   simply no key on pre-ALTER rows.
 - A column the static ``Mapping`` ALREADY lists (configured ahead of
-  the ALTER) starts flowing into text/metadata/typed extraction with
-  the first post-ALTER change — pre-ALTER rows yield NULL, which
+  the ALTER) starts flowing into text/metadata extraction with the
+  first post-ALTER change — pre-ALTER rows yield NULL, which
   ``metadata_map``'s presence check drops (pipeline.go:237-240) and
   ``concat_ws`` skips.
 - A column the Mapping does NOT list stays available in the envelope
-  (and to ``typed_columns``) but never enters text/metadata until the
-  operator updates the config — exactly the reference's behavior, whose
-  ``text_columns``/``metadata_columns`` also come from a static YAML.
+  but never enters text/metadata until the operator updates the config
+  — exactly the reference's behavior, whose ``text_columns``/
+  ``metadata_columns`` also come from a static YAML.
 - A DROPPED column stops appearing in ``after`` from the next relation
   refresh; map lookups yield NULL, so metadata silently loses the key
   and text concat skips it. A RENAME is a drop + add.
@@ -35,7 +34,6 @@ from __future__ import annotations
 from cdc2vec_spark.cdc import pgoutput as P
 from cdc2vec_spark.cdc import postgres as pg
 from cdc2vec_spark.cdc.envelope import to_flat
-from cdc2vec_spark.cdc.extract import typed_columns
 from cdc2vec_spark.cdc.pipeline import build_points
 from cdc2vec_spark.config import Mapping
 from cdc2vec_spark.embed.provider import DeterministicHashProvider
@@ -71,28 +69,16 @@ def _envelope(spark):
     return pg.wal2json_changes(df, id_column="id")
 
 
-def test_added_column_flows_into_envelope_and_typed_extraction(spark):
+def test_added_column_flows_into_envelope(spark):
     """The new column is in ``after`` from the first post-ALTER change
-    (reference: relation cache refresh, postgres.go:234-250) and reaches
-    typed analytics columns as NULL-before / value-after; post-DROP rows
-    lose the key again."""
+    (reference: relation cache refresh, postgres.go:234-250); post-DROP
+    rows lose the key again."""
     env = _envelope(spark)
     rows = {(r["pk"], r["lsn"]): r for r in env.collect()}
     assert "rating" not in rows[("1", 0x100)]["after"]   # pre-ALTER insert
     assert rows[("2", 0x200)]["after"]["rating"] == "5"  # post-ALTER insert
     assert rows[("1", 0x200)]["after"]["rating"] == "4"  # post-ALTER update
     assert "rating" not in rows[("3", 0x300)]["after"]   # post-DROP insert
-
-    typed = {
-        (r["pk"], r["lsn"]): r
-        for r in typed_columns(
-            env, {"rating": "int", "title": "string"}
-        ).collect()
-    }
-    assert typed[("1", 0x100)]["rating"] is None
-    assert typed[("1", 0x100)]["title"] == "one"
-    assert typed[("2", 0x200)]["rating"] == 5
-    assert typed[("3", 0x300)]["rating"] is None
 
 
 def test_preconfigured_column_starts_flowing_into_points_metadata(spark):
@@ -121,8 +107,7 @@ def test_preconfigured_column_starts_flowing_into_points_metadata(spark):
 
 def test_unconfigured_column_stays_envelope_only(spark):
     """A column the static Mapping does not list never enters metadata —
-    it stays available in the envelope for typed_columns / a config
-    redeploy. This is reference parity: its text/metadata column lists
+    it stays available in the envelope for a config redeploy. This is reference parity: its text/metadata column lists
     are a static YAML too (config.go:61-66)."""
     mapping = Mapping(
         table="public.documents",

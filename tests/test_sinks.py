@@ -84,10 +84,10 @@ def test_point_bodies_send_float32_vectors(spark, name):
         np.testing.assert_array_equal(sent, v.astype(np.float32))
 
 
-def _mock_http():
+def _mock_http(reply=b'{"status":"ok"}'):
     """Records every (method, path, raw body) a sink writer sends and
-    answers 200; a GET (Qdrant's collection info) gets 501, so
-    ensure_collection falls through to its create PUT."""
+    answers 200 with ``reply``; a GET (Qdrant's collection info) gets
+    501, so ensure_collection falls through to its create PUT."""
     import http.server
     import threading
 
@@ -98,7 +98,7 @@ def _mock_http():
             n = int(self.headers["Content-Length"])
             raw = self.rfile.read(n)
             calls.append((self.command, self.path, raw))
-            body = b'{"status":"ok"}'
+            body = reply
             self.send_response(200)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
@@ -188,6 +188,33 @@ def test_deliver_partition_one_pass(spark, name):
             assert list(pt) == ["id", "vector", "payload"]
         prefixed = [int(x) for raw in puts for x in re.findall(rb'\{"id":(\d+),"vector":', raw)]
         assert sorted(prefixed) == sorted(pt["id"] for pt in points)
+
+
+@pytest.mark.parametrize("op", ["c", "d"])
+def test_milvus_rejection_fails_the_partition(spark, op):
+    """Milvus REST v2 reports a rejected request as HTTP 200 with a
+    non-zero ``code``: an upsert or delete answered that way must fail
+    the partition (so the micro-batch replays), and so must
+    ensure_collection; ``code`` 0 passes."""
+    pts = spark.createDataFrame(
+        [("k", [0.6, 0.8] if op == "c" else None, {}, op)],
+        "id string, vector array<float>, metadata map<string,string>, op string",
+    )
+    rows = milvus.point_bodies(pts).collect()
+    srv, url, _ = _mock_http(b'{"code": 1100, "message": "invalid parameter"}')
+    try:
+        with pytest.raises(RuntimeError, match="1100: invalid parameter"):
+            deliver_partition(iter(rows), milvus, url, "docs")
+        with pytest.raises(RuntimeError, match="1100"):
+            milvus.ensure_collection(url, "docs", dim=2)
+    finally:
+        srv.shutdown()
+    srv, url, calls = _mock_http(b'{"code": 0, "data": {}}')
+    try:
+        deliver_partition(iter(rows), milvus, url, "docs")
+    finally:
+        srv.shutdown()
+    assert len(calls) == 1
 
 
 @pytest.mark.parametrize("name", ["qdrant", "milvus"])

@@ -314,7 +314,7 @@ def main() -> None:
     print(f"# lex_index: {lex_probe}", file=sys.stderr)
     record("lex_index", lex_probe)
 
-    # both in-engine indexes' per-batch apply wall as their state grows:
+    # the segment-log stores' per-batch apply wall as their state grows:
     # an apply appends one segment, so late batches cost what early ones do
     index_scale = _index_apply_scale(spark)
     print(f"# index_apply_scale: {index_scale}", file=sys.stderr)
@@ -553,20 +553,28 @@ def _lex_index_probe(spark, sf_dir: str) -> dict:
 def _index_apply_scale(
     spark, batches: int = 12, keys: int = 4_000, dim: int = 64
 ) -> dict:
-    """Per-batch apply seconds of ``IncrementalIvfIndex`` and
-    ``IncrementalLexicalIndex`` as their state grows, through the public
-    API only: batch 1 (``keys`` fresh ids, dim-``dim`` vectors, 40-word
-    docs) builds each index, batches 2..``batches`` (``keys`` fresh ids
-    each) go through ``apply_batch``, auto-compaction off. Reports the
-    apply seconds of batches 2.., their p50/p99, and ``late_over_early``:
-    the median of batches 9-12 over the median of batches 2-5 (about 1
-    when an apply's cost does not grow with the index)."""
+    """Per-batch apply seconds of the keyed stores that an apply extends
+    by one segment, as their state grows, through the public API only:
+    ``IncrementalIvfIndex`` and ``IncrementalLexicalIndex`` (auto-
+    compaction off), ``IncrementalGroupAgg``, ``IncrementalJoinView``
+    (left stream) and ``Scd2History``. Batch 1 (``keys`` fresh ids,
+    dim-``dim`` vectors, 40-word docs, 50 authors) builds each store —
+    an index's ``build``, the join view's first apply together with the
+    50-row author dimension, the others' first apply; batches
+    2..``batches`` (``keys`` fresh ids each) go through ``apply_batch``.
+    Reports the apply seconds of batches 2.., their p50/p99, and
+    ``late_over_early``: the median of batches 9-12 over the median of
+    batches 2-5 (about 1 when an apply's cost does not grow with the
+    state)."""
     import shutil
     import tempfile
 
     import numpy as np
     from pyspark.sql import functions as F
 
+    from cdc2vec_spark.cdc.delta_join import IncrementalJoinView
+    from cdc2vec_spark.cdc.ivm import IncrementalGroupAgg
+    from cdc2vec_spark.cdc.scd2 import Scd2History
     from cdc2vec_spark.operators.ann_index import IncrementalIvfIndex
     from cdc2vec_spark.operators.lex_index import IncrementalLexicalIndex
 
@@ -583,6 +591,7 @@ def _index_apply_scale(
             ]).alias("text"),
             F.lit("c").alias("op"),
             (n + 1).alias("lsn"),
+            F.concat(F.lit("a"), (n % 50).cast("string")).alias("author"),
         ).localCheckpoint()
 
     def summary(secs):
@@ -595,31 +604,67 @@ def _index_apply_scale(
             ),
         }
 
+    def changes(df):
+        return df.select(
+            "lsn", "op", F.lit("t").alias("tbl"), F.col("id").alias("pk"),
+            F.lit("").alias("after_title"), F.col("text").alias("after_content"),
+            F.col("author").alias("after_author"),
+        )
+
+    def facts(df):
+        return df.select("op", "lsn", F.col("id").alias("pk"), "author", "text")
+
+    dims = spark.range(50).select(
+        F.lit("c").alias("op"), F.lit(0).cast("long").alias("lsn"),
+        F.concat(F.lit("a"), F.col("id").cast("string")).alias("akey"),
+        (F.col("id") % 3).alias("tier"),
+    )
     data = [rows(b) for b in range(batches)]
     root = tempfile.mkdtemp(prefix="bench_ixscale_")
     out: dict = {"batches": batches, "keys": keys, "dim": dim}
     try:
-        for label, ix, build, cols in (
+        for label, store, build, apply in (
             (
                 "ivf",
                 IncrementalIvfIndex(spark, f"{root}/ivf", auto_compact_ratio=None),
-                lambda ix, df: ix.build(df.select("id", "vector"), centroid_every=31),
-                ("id", "vector", "op", "lsn"),
+                lambda s, df: s.build(df.select("id", "vector"), centroid_every=31),
+                lambda s, df: s.apply_batch(df.select("id", "vector", "op", "lsn")),
             ),
             (
                 "lex",
                 IncrementalLexicalIndex(spark, f"{root}/lex", auto_compact_ratio=None),
-                lambda ix, df: ix.build(df.select("id", "text")),
-                ("id", "text", "op", "lsn"),
+                lambda s, df: s.build(df.select("id", "text")),
+                lambda s, df: s.apply_batch(df.select("id", "text", "op", "lsn")),
+            ),
+            (
+                "group_agg",
+                IncrementalGroupAgg(spark, f"{root}/agg"),
+                None,
+                lambda s, df: s.apply_batch(changes(df)),
+            ),
+            (
+                "join_view",
+                IncrementalJoinView(
+                    spark, f"{root}/jv", l_key="pk", l_fk="author",
+                    l_payload=("text",), r_key="akey", r_payload=("tier",),
+                ),
+                lambda s, df: s.apply_batch(facts(df), dims),
+                lambda s, df: s.apply_batch(facts(df), None),
+            ),
+            (
+                "scd2",
+                Scd2History(spark, f"{root}/scd2", payload_cols=("author",)),
+                None,
+                lambda s, df: s.apply_batch(df.select("id", "lsn", "op", "author")),
             ),
         ):
             t0 = time.perf_counter()
-            build(ix, data[0])
+            (build or apply)(store, data[0])
             build_secs = time.perf_counter() - t0
             secs = []
             for df in data[1:]:
                 t0 = time.perf_counter()
-                ix.apply_batch(df.select(*cols))
+                apply(store, df)
                 secs.append(time.perf_counter() - t0)
             out[label] = {"build_secs": round(build_secs, 3), **summary(secs)}
     finally:

@@ -22,8 +22,11 @@ Two state layouts live here:
   (operators.ann_index, operators.lex_index) are the same store.
 - swap_buckets/read_bucketed_state keep hash-bucketed ``bucket=<i>/``
   dirs swapped by rename. They serve only the stores that read, modify
-  and write aggregates per batch: cdc.ivm, cdc.delta_join, cdc.scd2 and
-  streaming.neardup.
+  and write aggregate rows per batch: the ``agg`` and ``dv`` tables of
+  cdc.ivm, the ``fkidx``, ``view`` and ``agg`` of cdc.delta_join, and
+  streaming.neardup. The keyed states under cdc.ivm and cdc.delta_join
+  and the cdc.scd2 history are segment logs; the epoch stamps of
+  cdc.ivm join each to its derived stores, which commit separately.
 """
 
 from __future__ import annotations
@@ -48,11 +51,10 @@ def swap_write(df: DataFrame, path: str) -> None:
     when `path` is missing — so the worst post-crash outcome is the
     pre-batch state (the batch replays from the checkpoint), never an
     empty store. Rename-based, so local-filesystem only. It and
-    swap_buckets serve the stores that read, modify and write per batch
-    (cdc.ivm, cdc.delta_join, cdc.scd2, streaming.neardup). The keyed
-    row and point stores and the two indexes (cdc.segments) commit
-    through cdc.manifest.ManifestStore generations instead, which also
-    work on object stores."""
+    swap_buckets serve the stores that read, modify and write aggregate
+    rows per batch (module docstring). The keyed stores (cdc.segments)
+    commit through cdc.manifest.ManifestStore generations instead,
+    which also work on object stores."""
     swap_write_begin(df, path)
     swap_write_commit(path)
 
@@ -160,71 +162,21 @@ def merge_batch(
     batch: DataFrame,
     text_cols: Sequence[str] = ("after_title", "after_content"),
     key_cols: Sequence[str] = ("tbl", "pk"),
-    coalesce_unchanged: bool = False,
-    cluster_col: str | None = None,
-    cluster_partitions: int | None = None,
 ) -> DataFrame:
     """MERGE emulation for one micro-batch: existing state (rows carry the
     lsn that produced them) ∪ new eligible events → keep max-LSN winner per
     key. Deleted keys stay as tombstones (op='d') so a stale upsert
     replayed in a later batch cannot resurrect them — the max-LSN-per-key
     guard SURVEY §7 calls out. Idempotent: replaying any batch reproduces
-    the same state.
-
-    ``coalesce_unchanged=True`` is the TOAST-repair divergence (SURVEY §7):
-    pgoutput sends unchanged TOAST columns as nil ('u', postgres.go:
-    621-647), which the reference then LOSES at re-embed time. When
-    enabled, a null after_* column on an update is backfilled from the
-    key's prior state (first non-null down the LSN-ordered history, never
-    across a tombstone — a delete resets the key). Default off: plain
-    whole-row last-write-wins, which is what the A6/C6 SQL oracle
-    specifies.
-
-    ``cluster_col`` (with ``cluster_partitions``) is the hook of the
-    bucketed aggregate stores (cdc.ivm): the column must pre-exist on
-    both sides and be a pure function of the key (so adding it to the
-    window PARTITION BY changes nothing semantically). The union is
-    repartitioned on it, which Catalyst accepts as satisfying the
-    window's clustered distribution — one shuffle total, and the writer
-    downstream gets data clustered by bucket (one file per bucket
-    instead of files × shuffle-partitions)."""
+    the same state. Whole-row last-write-wins, which is what the A6/C6
+    SQL oracle specifies."""
     ev = eligible_events(batch, text_cols)
     cols = ["op", "tbl", "pk", "lsn", *[c for c in batch.columns if c.startswith("after_")]]
-    if cluster_col is not None:
-        cols.append(cluster_col)
     ev = ev.select(*cols)
     if state is not None:
         ev = state.select(*cols).unionByName(ev)
-    win_keys = list(key_cols) if cluster_col is None else [cluster_col, *key_cols]
-    if cluster_col is not None:
-        ev = ev.repartition(cluster_partitions or 1, cluster_col)
-    w = Window.partitionBy(*win_keys).orderBy(F.col("lsn").desc())
+    w = Window.partitionBy(*key_cols).orderBy(F.col("lsn").desc())
     ranked = ev.withColumn("_rn", F.row_number().over(w))
-    if coalesce_unchanged:
-        # delete-epoch: running tombstone count in LSN-desc order. A
-        # delete starts a new epoch, so an upsert can only backfill from
-        # rows in ITS epoch — never from values older than a delete.
-        ranked = ranked.withColumn(
-            "_epoch",
-            F.sum((F.col("op") == OP_DELETE).cast("int")).over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        hist = (
-            Window.partitionBy(*win_keys, "_epoch")
-            .orderBy(F.col("lsn").desc())
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-        for c in ev.columns:
-            if c.startswith("after_"):
-                masked = F.when(F.col("op") != OP_DELETE, F.col(c))
-                ranked = ranked.withColumn(
-                    c,
-                    F.when(
-                        F.col("op") == OP_DELETE, F.col(c)
-                    ).otherwise(F.first(masked, ignorenulls=True).over(hist)),
-                )
-        ranked = ranked.drop("_epoch")
     return ranked.where(F.col("_rn") == 1).drop("_rn")
 
 

@@ -12,32 +12,41 @@ form in Koch 2010 / DBSP) specialized to keyed LWW streams —
     ΔV = ΔL ⋈ R  ∪  L ⋈ ΔR  (∪ ΔL ⋈ ΔR, folded in because both sides
                               read their POST-merge states)
 
-Stores (all bucketed parquet under ``path``, the engine's standard
-per-bucket atomic-swap state discipline — cdc/apply.py):
+Stores under ``path``:
 
-- ``lstate``  — LWW rows of the left stream, bucketed by hash(l_key):
-  one row per key, the latest (op, lsn) image (tombstones kept so a
-  stale replay cannot resurrect).
-- ``rstate``  — same for the right stream, bucketed by hash(r_key).
+- ``lstate``  — LWW rows of the left stream: a segment log
+  (cdc.segments.SegmentStore) partitioned by ``jbucket`` = hash(l_key),
+  merged by each key's max-lsn row (tombstones kept so a stale replay
+  cannot resurrect). An apply appends the batch as one segment.
+- ``rstate``  — same for the right stream, partitioned by hash(r_key).
 - ``fkidx``   — the SECONDARY index (fk, l_key) of LIVE left rows,
   bucketed by hash(fk) — how an R-delta finds its affected left keys
   without scanning L (the dv-table discipline from the distinct IVM).
   Old mappings are retired using the left PRIOR images (the old fk of
-  a dirty key is in its pre-merge state bucket — no second index).
+  a dirty key is in its pre-append state bucket — no second index).
 - ``view``    — the materialized join rows, bucketed by hash(l_key);
   per batch only the DIRTY keys' buckets are rewritten (dirty = left
   batch keys ∪ live left keys whose fk was touched on the right).
+- ``agg``     — the optional GROUP BY over the view (c20).
 
-Crash consistency: the epoch-stamp protocol of cdc/ivm.py — left/right
-state stamps before the derived mutations, a view stamp after; a torn
-batch rebuilds fkidx + view from the two base states (O(state), rare).
+The three derived stores read, modify and write their rows per batch,
+so they keep the per-bucket atomic-swap discipline of cdc/apply.py.
 
-100 TB: every read is a touched-bucket directory prune, every write a
-per-bucket swap; the only joins are (dirty keys ⋈ their R partners) —
-batch-sized against pruned buckets. A hot dimension key (every fact
-row pointing at one R key) concentrates its fkidx bucket; size
-n_buckets to the fact side and cap/split hot keys upstream the same
-way d2's bucket caps do.
+Crash consistency: the epoch-stamp protocol of cdc/ivm.py — the base
+stamp before the two appends, a view stamp after the derived commits; a
+torn batch rebuilds fkidx + view (+ agg) from the two base states
+(``store.read()``, O(state), rare). A crash before a base state's
+manifest publish leaves that state as it was. Base states written by
+the earlier layout (root ``lstate|rstate/jbucket=<i>/`` dirs swapped in
+place) open as one adopted segment each (cdc.segments docstring).
+
+Cost per batch: O(batch) to append both base states; every other read
+is a touched-bucket prune (of each live segment for the base states),
+every derived write a per-bucket swap; the only joins are (dirty keys ⋈
+their R partners) — batch-sized against pruned buckets. A hot
+dimension key (every fact row pointing at one R key) concentrates its
+fkidx bucket; size n_buckets to the fact side and cap/split hot keys
+upstream the same way d2's bucket caps do.
 
 Reference parity note: the reference has no join operator at all
 (SURVEY §2.1 "categories with no implementation"); this is engine
@@ -46,14 +55,16 @@ surface per the BASELINE north star.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..session import memo, state_dir
 from .apply import read_bucketed_state, swap_buckets
 from .envelope import OP_DELETE
 from .ivm import _read_epoch, _write_epoch
+from .segments import SegmentStore, max_lsn_per
 
 BUCKET = "jbucket"
 
@@ -85,7 +96,7 @@ class IncrementalJoinView:
         agg_group: tuple[str, ...] = (),
         agg_sums: dict[str, str] | None = None,
     ):
-        """``agg_group``/``agg_sums`` (round 13, c20) opt into a FOURTH
+        """``agg_group``/``agg_sums`` (c20) opt into a FOURTH
         derived store: a maintained GROUP BY over the join view — the
         materialized star-rollup composing the IVM family's join views
         with its aggregates. ``agg_group`` names view columns to group
@@ -99,8 +110,6 @@ class IncrementalJoinView:
         table) — O(batch), never a view scan. Groups drained to zero
         rows drop (the c16 discipline)."""
         self.spark = spark
-        self.l_path = path + "/lstate"
-        self.r_path = path + "/rstate"
         self.fk_path = path + "/fkidx"
         self.view_path = path + "/view"
         self.agg_path = path + "/agg"
@@ -117,52 +126,19 @@ class IncrementalJoinView:
             raise ValueError("agg_sums requires agg_group")
         if l_fk in (l_key,) or r_key in self.r_payload:
             raise ValueError("join columns must be distinct from keys")
-
-    # ---------------- generic keyed LWW merge (engine envelope subset)
-
-    def _merge_lww(
-        self,
-        path: str,
-        batch: DataFrame,
-        key: str,
-        cols: tuple[str, ...],
-        touched: list[int] | None = None,
-        eager: bool = True,
-    ) -> tuple[list[int], DataFrame | None, DataFrame]:
-        """Merge a batch into the LWW state at ``path``; returns
-        (touched buckets, prior touched-bucket state, merged frame —
-        persisted and eagerly pinned; caller swaps + unpersists).
-        ``touched`` skips the per-batch distinct+collect when the
-        caller precomputed it (the replay does, one job for all
-        batches — the c16 discipline). ``eager=False`` skips the
-        persist+count pin: safe ONLY when the caller has a single
-        consumer (the deferred merge-only path, whose sole consumer is
-        the staging write of swap_buckets — the d40/d2 two-consumer
-        race cannot occur with one consumer)."""
-        ev = batch.select(
-            "op", "lsn", F.col(key), *[F.col(c) for c in cols]
-        ).withColumn(BUCKET, _bexpr((key,), self.n_buckets))
-        if touched is None:
-            touched = sorted(
-                r[0] for r in ev.select(BUCKET).distinct().collect()
-            )
-        else:
-            touched = sorted(touched)
-        if not touched:
-            return [], None, ev
-        prior = read_bucketed_state(self.spark, path, col=BUCKET, buckets=touched)
-        both = ev if prior is None else prior.select(*ev.columns).unionByName(ev)
-        w = Window.partitionBy(BUCKET, key).orderBy(F.col("lsn").desc())
-        merged = (
-            both.repartition(len(touched), BUCKET)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
+        self.l_cols = ("op", "lsn", l_key, l_fk, *self.l_payload, BUCKET)
+        self.r_cols = ("op", "lsn", r_key, *self.r_payload, BUCKET)
+        self.l_store = SegmentStore(
+            spark, path + "/lstate", self.l_cols, max_lsn_per(BUCKET, l_key), BUCKET
         )
-        if eager:
-            merged = merged.persist()
-            merged.count()  # eager pin: multiple consumers (the d40/d2 rule)
-        return touched, prior, merged
+        self.r_store = SegmentStore(
+            spark, path + "/rstate", self.r_cols, max_lsn_per(BUCKET, r_key), BUCKET
+        )
+
+    def _events(self, batch: DataFrame, key: str, cols: tuple[str, ...]) -> DataFrame:
+        """A stream's batch in its base state's columns."""
+        b = _bexpr((key,), self.n_buckets).alias(BUCKET)
+        return batch.select(*[F.col(c) for c in cols[:-1]], b)
 
     # ----------------------------------------------------- recovery
 
@@ -200,8 +176,8 @@ class IncrementalJoinView:
                 shutil.rmtree(p + ".old", ignore_errors=True)
                 shutil.rmtree(p + ".tmp", ignore_errors=True)
 
-        l_full = read_bucketed_state(self.spark, self.l_path, col=BUCKET)
-        r_full = read_bucketed_state(self.spark, self.r_path, col=BUCKET)
+        l_full = self.l_store.read()
+        r_full = self.r_store.read()
         if l_full is None:
             _drop(self.fk_path, self.view_path, self.agg_path)
             return
@@ -257,99 +233,45 @@ class IncrementalJoinView:
 
     # ---------------------------------------------------- per batch
 
-    def apply_batch_deferred(
-        self,
-        l_batch: DataFrame | None,
-        r_batch: DataFrame | None,
-        l_touched: list[int] | None = None,
-        r_touched: list[int] | None = None,
-    ) -> None:
-        """Merge-only fast path (VERDICT r12 ask #5): fold the batch
-        into the two base LWW states and DEFER the derived stores
-        (fkidx + view). epoch_view is deliberately left behind, so the
-        state reads as torn; the next ``read()`` or full
-        ``apply_batch`` rebuilds fkidx + view from the base states in
-        ONE pass — the existing torn-batch recovery, reused as the
-        deferral mechanism. For a replay that only reads the view at
-        the end, this replaces 4× (fkidx swap + dirty-key collects +
-        view swap) with one end-of-replay rebuild; per deferred batch
-        the cost is exactly two pruned merges + two bucket swaps (run
-        concurrently), no persist pin (single consumer), no secondary
-        collects. Crash-safe by construction: a crash mid-deferral
-        leaves epoch_base ≠ epoch_view, the same state the protocol
-        already recovers from."""
-        epoch = _read_epoch(self._epoch_base) + 1
-        _write_epoch(self._epoch_base, epoch)
-
-        def _side(path, batch, key, cols, touched):
-            t, _p, merged = self._merge_lww(
-                path, batch, key, cols, touched=touched, eager=False
-            )
-            if t:
-                swap_buckets(merged, path, t, col=BUCKET)
-
-        jobs = []
-        if l_batch is not None:
-            jobs.append((self.l_path, l_batch, self.l_key,
-                         (self.l_fk, *self.l_payload), l_touched))
-        if r_batch is not None:
-            jobs.append((self.r_path, r_batch, self.r_key,
-                         self.r_payload, r_touched))
-        if len(jobs) == 2:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [pool.submit(_side, *j) for j in jobs]
-                for f in futs:
-                    f.result()
-        else:
-            for j in jobs:
-                _side(*j)
-
     def apply_batch(
-        self,
-        l_batch: DataFrame | None,
-        r_batch: DataFrame | None,
-        l_touched: list[int] | None = None,
-        r_touched: list[int] | None = None,
+        self, l_batch: DataFrame | None, r_batch: DataFrame | None
     ) -> None:
         """Fold one micro-batch of each stream into the states and
         rewrite exactly the dirty view buckets. Either side may be None
-        or empty; ``l_touched``/``r_touched`` are optional precomputed
-        touched-bucket lists (the replay computes all batches' sets in
-        one job per side).
+        or empty.
 
-        Commit order: base states swap FIRST (under the epoch_base
-        stamp), then fkidx and the view are derived from the POST-merge
-        disk states — which folds the ΔL⋈ΔR term in automatically — and
-        epoch_view seals the batch. A crash anywhere between the stamps
-        leaves epoch_base ≠ epoch_view and the next call rebuilds the
-        derived stores from the base states. The two side merges are
-        INDEPENDENT (different stores) and run as concurrent jobs; the
-        small per-batch frames (dirty keys, affected keys, dirty live
-        rows) stay LAZY — their inputs are the immutable batch, the
-        post-merge states and the post-update fkidx, none of which are
-        replaced again within the call, so re-derivation is a cheap
-        pruned read and the five eager checkpoints the first cut paid
-        per batch disappear."""
+        Commit order: under the epoch_base stamp, the right state
+        appends its batch while the left side computes its touched
+        buckets' after-image; fkidx and the view are then derived from
+        the POST-batch states — which folds the ΔL⋈ΔR term in
+        automatically — while the left append runs beside them, and
+        epoch_view seals the batch once both have committed. A crash
+        anywhere between the stamps leaves epoch_base ≠ epoch_view and
+        the next call rebuilds the derived stores from the base states.
+        The small per-batch frames (dirty keys, affected keys, dirty live
+        rows) stay LAZY — their inputs are the immutable batch and
+        segments, the cached after-image and the pre-update fkidx, none
+        of which change within the call."""
         self._recover_if_torn()
         spark = self.spark
         epoch = _read_epoch(self._epoch_base) + 1
         _write_epoch(self._epoch_base, epoch)
 
         def _left():
-            # merge, capture the dirty keys' PRIOR fk buckets (must be
-            # read before the swap replaces the files), swap; returns
-            # l_merged still CACHED — the fkidx step reads it
-            lt, l_prior, l_merged = self._merge_lww(
-                self.l_path, l_batch, self.l_key,
-                (self.l_fk, *self.l_payload), touched=l_touched,
-            )
+            # the touched buckets' after-image (resolve of their prior
+            # rows ∪ the batch, cached: the fkidx and view steps read it)
+            # and the fk buckets of the dirty keys' prior live rows, whose
+            # index entries retire. The prior rows are cached too, so the
+            # two jobs that read them resolve the live segments once
+            ev = self._events(l_batch, self.l_key, self.l_cols)
+            lt = sorted(r[0] for r in ev.select(BUCKET).distinct().collect())
             if not lt:
-                return [], None, [], None
+                return [], None, [], None, None
             d_l = l_batch.select(self.l_key).distinct()
             old_b: list[int] = []
+            l_prior = self.l_store.read(parts=lt)
             if l_prior is not None:
+                l_prior = l_prior.persist()
                 old_b = sorted(
                     r[0]
                     for r in l_prior.where(F.col("op") != OP_DELETE)
@@ -357,40 +279,47 @@ class IncrementalJoinView:
                     .select(_bexpr((self.l_fk,), self.n_buckets).alias("b"))
                     .distinct().collect()
                 )
-            swap_buckets(l_merged, self.l_path, lt, col=BUCKET)
-            return lt, d_l, old_b, l_merged
+            both = ev if l_prior is None else l_prior.unionByName(ev)
+            l_merged = self.l_store.resolve(both).persist()
+            l_merged.count()  # eager pin: multiple consumers (the d40/d2 rule)
+            if l_prior is not None:
+                l_prior.unpersist()
+            return lt, d_l, old_b, l_merged, ev
 
         def _right():
-            rt, _p, r_merged = self._merge_lww(
-                self.r_path, r_batch, self.r_key, self.r_payload,
-                touched=r_touched,
-            )
-            if not rt:
-                return [], None
-            d_r = r_batch.select(F.col(self.r_key).alias("_fk")).distinct()
-            swap_buckets(r_merged, self.r_path, rt, col=BUCKET)
-            r_merged.unpersist()
-            return rt, d_r
+            ev = self._events(r_batch, self.r_key, self.r_cols)
+            if not self.r_store.append(ev):
+                return None
+            return r_batch.select(F.col(self.r_key).alias("_fk")).distinct()
 
-        dirty_l = dirty_r = l_merged = None
-        l_t: list[int] = []
-        r_t: list[int] = []
+        dirty_l = dirty_r = l_merged = l_ev = None
+        lt: list[int] = []
         old_b: list[int] = []
         if l_batch is not None and r_batch is not None:
-            from concurrent.futures import ThreadPoolExecutor
-
             with ThreadPoolExecutor(max_workers=2) as pool:
                 fl = pool.submit(_left)
                 fr = pool.submit(_right)
-                l_t, dirty_l, old_b, l_merged = fl.result()
-                r_t, dirty_r = fr.result()
+                lt, dirty_l, old_b, l_merged, l_ev = fl.result()
+                dirty_r = fr.result()
         elif l_batch is not None:
-            l_t, dirty_l, old_b, l_merged = _left()
+            lt, dirty_l, old_b, l_merged, l_ev = _left()
         elif r_batch is not None:
-            r_t, dirty_r = _right()
-        if not l_t and not r_t:
+            dirty_r = _right()
+        if dirty_l is None and dirty_r is None:
             _write_epoch(self._epoch_view, epoch)
             return
+
+        # the left append runs beside the derived stores, which read the
+        # touched buckets' after-image `l_merged` and the left segments
+        # only for other buckets; epoch_view waits for it
+        bg = ThreadPoolExecutor(max_workers=1)
+        l_append = bg.submit(self.l_store.append, l_ev) if l_ev is not None else None
+        bg.shutdown(wait=False)
+
+        def _seal() -> None:
+            if l_append is not None:
+                l_append.result()
+            _write_epoch(self._epoch_view, epoch)
 
         # ---- derived stores: the fkidx update and the dirty-view
         # rewrite are STAGED concurrently and committed together. The
@@ -402,9 +331,7 @@ class IncrementalJoinView:
         # pre-update index removes the fkidx-swap → dirty-read ordering
         # constraint, and swap_buckets_begin/commit keeps it race-free:
         # neither store's directories flip until BOTH staging jobs have
-        # fully materialized (the r11 ask-#6 two-phase discipline).
-        from concurrent.futures import ThreadPoolExecutor
-
+        # fully materialized (the two-phase discipline).
         from .apply import swap_buckets_begin, swap_buckets_commit
 
         fk_touched: list[int] = []
@@ -481,7 +408,7 @@ class IncrementalJoinView:
                 swap_buckets_commit(self.fk_path, fk_touched, col=BUCKET)
             if l_merged is not None:
                 l_merged.unpersist()
-            _write_epoch(self._epoch_view, epoch)
+            _seal()
 
         if dirty is None:
             if idx is not None:
@@ -493,8 +420,8 @@ class IncrementalJoinView:
             return
         dirty = dirty.distinct()
 
-        # ---- recompute the dirty keys' view rows from the post-merge
-        # disk states, rewrite only their view buckets
+        # ---- recompute the dirty keys' view rows from the post-append
+        # states, rewrite only their view buckets
         vb = sorted(
             r[0]
             for r in dirty.select(
@@ -509,7 +436,12 @@ class IncrementalJoinView:
                 )
             _commit_fkidx_and_finish()
             return
-        l_now = read_bucketed_state(spark, self.l_path, col=BUCKET, buckets=vb)
+        # the post-append left rows: the touched buckets' after-image,
+        # and a read of the live segments for the other dirty buckets
+        l_now = l_merged
+        rest = sorted(set(vb) - set(lt))
+        if rest and (l_rest := self.l_store.read(parts=rest)) is not None:
+            l_now = l_rest if l_now is None else l_now.unionByName(l_rest)
         l_dirty_live = (
             l_now.where(F.col("op") != OP_DELETE)
             .join(F.broadcast(dirty), self.l_key, "left_semi")
@@ -522,11 +454,7 @@ class IncrementalJoinView:
                 _bexpr((self.l_fk,), self.n_buckets).alias("b")
             ).distinct().collect()
         )
-        r_now = (
-            read_bucketed_state(spark, self.r_path, col=BUCKET, buckets=fk_b)
-            if fk_b
-            else None
-        )
+        r_now = self.r_store.read(parts=fk_b) if fk_b else None
         fresh = self._join_rows(l_dirty_live, r_now) if r_now is not None else None
         prior_view = read_bucketed_state(
             spark, self.view_path, col=BUCKET, buckets=vb
@@ -614,7 +542,7 @@ class IncrementalJoinView:
             swap_write_commit(self.agg_path)
         if l_merged is not None:
             l_merged.unpersist()
-        _write_epoch(self._epoch_view, epoch)
+        _seal()
 
     def read(self) -> DataFrame | None:
         """The maintained join view (l_key, l_fk, l_payload…, r_payload…)."""
@@ -701,13 +629,13 @@ def _replayed_join_view(spark: SparkSession, sf_dir: str) -> IncrementalJoinView
             # batched-epoch replay: ONE full apply_batch over both whole
             # logs. The maintained view/agg are identical under any batch
             # partitioning of the same logs (incremental≡recompute pinned
-            # per batch on the undeferred path in tests/test_delta_join.py,
+            # per batch in tests/test_delta_join.py,
             # including the randomized walks), and a per-batch loop's wall
             # is its fixed protocol job count, not data. The full path
             # still exercises the delta-join machinery end-to-end — fkidx
             # build, dirty-key propagation, view rewrite, composed agg
             # fold — against the whole log as one epoch; production
-            # streaming callers keep the unchanged per-batch contract.
+            # streaming callers keep the per-batch contract.
             ivj.apply_batch(lch, rch.withColumnRenamed("rlsn", "lsn"))
         finally:
             lch.unpersist()
@@ -721,7 +649,7 @@ def _replayed_join_view(spark: SparkSession, sf_dir: str) -> IncrementalJoinView
 
 
 def c19_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C19 (added round 12) — the delta-join IVM's graded face: replay
+    """C19 — the delta-join IVM's graded face: replay
     the documents change log (4 LSN-quartile batches) and the
     synthesized author-dim change log (4 batches) through
     ``IncrementalJoinView``; the maintained view must equal the batch
@@ -743,7 +671,7 @@ def c19_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def c20_incremental_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C20 (added round 13) — the composed join-AGGREGATE face: the
+    """C20 — the composed join-AGGREGATE face: the
     same two-stream replay maintains a GROUP BY over the join view (per
     author tier: live fact count + total title chars), delta-driven —
     each batch folds exactly the view rows that arrive and leave into
@@ -833,9 +761,8 @@ ORDER BY tier
 """
 
 QUERIES = {
-    # c19 individually graded since the round-13 rotation; c20 (round
-    # 13) is composite-delivered (x1) with its exact two-SF oracle in
-    # tests/test_delta_join.py — rotation candidate for round 14
+    # c19 is individually graded; c20 is composite-delivered (x1) with
+    # its exact two-SF oracle in tests/test_delta_join.py
     "c19_incremental_join": c19_incremental_join,
     "c20_incremental_join_agg": c20_incremental_join_agg,
 }

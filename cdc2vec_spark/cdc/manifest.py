@@ -7,8 +7,11 @@ filesystem, impossible on S3/GCS/ABFS (object stores have no rename; a
 standard object-store answer, the same design Delta Lake / Iceberg
 commit logs use, reduced to a versioned map from integer keys to data
 directories. One store commits through it: the segment log of
-``cdc.segments``, keyed by segment sequence number, which holds the
-keyed points, the keyed row state and the two in-engine indexes.
+``cdc.segments``, keyed by segment sequence number, which holds every
+keyed state (points, row state, the two in-engine indexes, the IVM and
+join-view base states and the SCD2 history). The aggregate stores
+derived from them (cdc.ivm ``agg``/``dv``, cdc.delta_join ``fkidx``/
+``view``/``agg``, streaming.neardup) still swap by rename.
 
 - **Data objects are immutable and uniquely named.** Each commit writes
   its data to a fresh directory under ``data/``. Nothing ever rewrites

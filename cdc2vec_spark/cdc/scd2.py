@@ -9,21 +9,25 @@ the log — the dimension-history twin of the keyed LWW collection the
 engine always maintains (reference parity: cdc2vec keeps only the live
 state, qdrant.go upsert/delete; SCD2 is the warehouse-side extension).
 
-State layout: ``path/bucket=<i>/`` parquet of EVENT rows — every upsert
-event IS a version row (valid_from = its lsn); delete events are kept
-as internal CLOSURE MARKERS (op='d', filtered from ``history()``) so a
-bucket is self-contained for recomputing interval columns. ``valid_to``
-/ ``is_current`` are recomputed per TOUCHED bucket on write with ONE
-lead(lsn) window on the key — exact because all of a key's events hash
-to one bucket, and bounded because untouched buckets are never read or
-rewritten (the swap_buckets discipline, apply.py).
+State layout: ``path`` is a segment log (cdc.segments.SegmentStore) of
+EVENT rows (key, lsn, op, *payload) — every upsert event IS a version
+row (valid_from = its lsn); delete events are kept as internal CLOSURE
+MARKERS (op='d', filtered from ``history()``). An apply appends the
+batch's events as one segment and reads nothing; the merge rule is
+``dropDuplicates(key, lsn)``, so a replayed batch resolves to the same
+event set. ``valid_to`` / ``is_current`` are derived on read with ONE
+lead(lsn) window on the key over the resolved events; ``prune``
+rewrites the surviving events as one segment (``store.replace``).
 
-Idempotence: merge = prior ∪ batch, dropDuplicates(key, lsn), then
-recompute — replaying any batch reproduces byte-identical state (the
-same window over the same event set). Per-batch cost is
-O(batch + touched_buckets × bucket_size); at 100 TB size n_buckets so a
-bucket holds a few GB of history and this is the touched-file set a
-Delta MERGE on a bucket-clustered history table would write.
+Crash semantics are the segment log's: a crash before a segment's
+manifest publish leaves the history as it was. A history written by the
+earlier layout (root ``bucket=<i>/`` dirs of event rows with a stored
+``valid_to``, swapped in place) opens as one adopted segment; the
+stored ``valid_to`` is dropped and re-derived on read.
+
+Cost: an apply is O(batch), one write plus the size-tiered compaction
+that rewrites each event O(log_FAN_IN(batches)) times in all; a read of
+the history is O(history) and one hash exchange on the key.
 """
 
 from __future__ import annotations
@@ -34,13 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .apply import (
-    BUCKET_COL,
-    bucket_expr,
-    read_bucketed_state,
-    swap_buckets,
-)
 from .envelope import OP_DELETE
+from .segments import SegmentStore
 
 
 class Scd2History:
@@ -58,41 +57,28 @@ class Scd2History:
         path: str,
         key_col: str = "id",
         payload_cols: Sequence[str] = ("author",),
-        n_buckets: int = 16,
     ):
         self.spark = spark
         self.path = path
         self.key_col = key_col
         self.payload_cols = tuple(payload_cols)
-        self.n_buckets = n_buckets
-
-    def _event_cols(self) -> list[str]:
-        return [self.key_col, "lsn", "op", *self.payload_cols]
+        self.store = SegmentStore(
+            spark, path, (key_col, "lsn", "op", *self.payload_cols),
+            lambda rows: rows.dropDuplicates([key_col, "lsn"]),
+        )
 
     def apply_batch(self, batch: DataFrame, _epoch_id: int | None = None) -> None:
-        """Merge one micro-batch of change events into the touched
-        buckets and recompute their interval columns."""
-        bexpr = bucket_expr((self.key_col,), self.n_buckets)
-        ev = batch.select(*self._event_cols()).withColumn(BUCKET_COL, bexpr)
-        touched = sorted(
-            r[0] for r in ev.select(BUCKET_COL).distinct().collect()
-        )
-        if not touched:
-            return
-        prior = read_bucketed_state(self.spark, self.path, buckets=touched)
-        if prior is not None:
-            ev = prior.select(*ev.columns).unionByName(ev)
-        # replay-idempotent: the same (key, lsn) event merges to one row
-        ev = ev.dropDuplicates([self.key_col, "lsn"])
-        w = Window.partitionBy(self.key_col).orderBy("lsn")
-        merged = ev.withColumn("valid_to", F.lead("lsn").over(w))
-        swap_buckets(
-            merged.repartition(len(touched), BUCKET_COL), self.path, touched
-        )
+        """Append one micro-batch of change events as a segment."""
+        self.store.append(batch)
 
     def read(self) -> DataFrame | None:
-        """Raw state incl. delete closure markers (internal)."""
-        return read_bucketed_state(self.spark, self.path)
+        """Every event row with its ``valid_to`` (the key's next event
+        lsn), delete closure markers included (internal)."""
+        df = self.store.read()
+        if df is None:
+            return None
+        w = Window.partitionBy(self.key_col).orderBy("lsn")
+        return df.withColumn("valid_to", F.lead("lsn").over(w))
 
     def history(self) -> DataFrame | None:
         """The SCD2 history: one row per version, delete markers
@@ -121,14 +107,14 @@ class Scd2History:
         before ``before_lsn`` and delete markers at/below it. Because
         validity intervals are contiguous and increasing per key, the
         surviving rows are exactly the tail of each key's event chain,
-        so a later ``apply_batch`` recomputing intervals over the
-        pruned bucket reproduces the same ``valid_to`` values — pruning
-        never corrupts future maintenance (pinned in
+        so the ``valid_to`` values read over the pruned state, and over
+        it plus later batches, are the ones the full history reads —
+        pruning never corrupts future maintenance (pinned in
         tests/test_scd2.py). After pruning, ``as_of(t)`` stays exact
         for every t >= before_lsn; older points in time are forgotten —
-        that is the retention contract. Idempotent; rewrites every
-        bucket that holds prunable rows (run it on a compaction
-        cadence, not per batch)."""
+        that is the retention contract. Idempotent; rewrites the whole
+        history as one segment when any row is prunable (run it on a
+        compaction cadence, not per batch)."""
         df = self.read()
         if df is None:
             return
@@ -138,18 +124,8 @@ class Scd2History:
              & F.col("valid_to").isNotNull() & (F.col("valid_to") <= h))
             | ((F.col("op") == OP_DELETE) & (F.col("lsn") <= h))
         )
-        touched = sorted(
-            r[0]
-            for r in df.where(prunable).select(BUCKET_COL).distinct().collect()
-        )
-        if not touched:
-            return
-        keep = read_bucketed_state(
-            self.spark, self.path, buckets=touched
-        ).where(~prunable)
-        swap_buckets(
-            keep.repartition(len(touched), BUCKET_COL), self.path, touched
-        )
+        if not df.where(prunable).isEmpty():
+            self.store.replace(df.where(~prunable))
 
     def as_of(self, lsn: int) -> DataFrame | None:
         """Point-in-time read: each key's version valid at ``lsn``

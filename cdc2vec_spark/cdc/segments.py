@@ -2,19 +2,36 @@
 write and never reads (a size-tiered log-structured merge layout, O'Neil
 et al. 1996, with the max-LSN-per-key merge as its merge rule), committed
 through the manifest generations of ``cdc.manifest.ManifestStore``. It
-holds the keyed points (``runner.PointsCollection`` and its chunked
-subclass), the keyed row state (``cdc.apply.ParquetCollection``) and the
-two in-engine indexes (``operators.ann_index.IncrementalIvfIndex``,
-``operators.lex_index.IncrementalLexicalIndex``).
+holds every keyed state with a max-LSN or (key, lsn) merge rule:
+
+- the keyed points (``runner.PointsCollection`` and its chunked
+  subclass) and the keyed row state (``cdc.apply.ParquetCollection``);
+- the two in-engine indexes (``operators.ann_index.IncrementalIvfIndex``,
+  ``operators.lex_index.IncrementalLexicalIndex``);
+- the LWW row state under the IVM views (``cdc.ivm.IncrementalGroupAgg``,
+  ``cdc.ivm.IncrementalDistinctCount``), partitioned by ``bucket``;
+- the two base states of ``cdc.delta_join.IncrementalJoinView``,
+  partitioned by ``jbucket``;
+- the event rows of ``cdc.scd2.Scd2History``.
+
+The stores derived from these by reading, modifying and writing
+aggregate rows (the IVM ``agg`` and ``dv`` tables, the join view's
+``fkidx``, ``view`` and ``agg``, ``streaming.neardup``) stay on
+``cdc.apply.swap_buckets``/``swap_write``; an IVM state and its derived
+stores commit separately, joined by epoch stamps (cdc.ivm docstring).
 
 Layout of a store directory:
 
 - ``data/seg-<level>-<hex>/``: one immutable parquet segment, written
   once under a fresh name. A micro-batch lands as a level-0 segment
   holding only its winning events. A store with a partition column
-  (the indexes: ``cell`` or ``bucket``) writes each segment as
-  ``<col>=<v>/`` dirs, one file per partition, and a read can list just
-  the partitions it needs in each live segment.
+  (the indexes' ``cell`` or ``bucket``, the IVM states' ``bucket``, the
+  join view's ``jbucket``) writes each segment as ``<col>=<v>/`` dirs,
+  one file per partition, and a read can list just the partitions it
+  needs in each live segment. Spark lists more than
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) paths
+  with a job of one task per path, so a read names at most that many
+  dirs per ``spark.read`` and lists them on the driver.
 - ``_manifests/manifest-<version>.json``: one generation of the store,
   mapping each live segment's ``seq`` to its directory name. ``seq``
   grows with every segment published, so within a level a smaller
@@ -60,8 +77,10 @@ oldest segment(s) and folded in by the first compaction:
   any other;
 - the rename-published layouts, root ``seg-<level>-<seq>/`` dirs and the
   older root ``bucket=<i>/`` dirs (points, row state of the former
-  bucketed ``ParquetCollection``, or an index's root ``cell=<i>/`` or
-  ``bucket=<i>/`` dirs, matched on the store's own partition column),
+  bucketed ``ParquetCollection``, an index's root ``cell=<i>/`` or
+  ``bucket=<i>/`` dirs, an IVM state's ``bucket=<i>/``, a join base
+  state's ``jbucket=<i>/`` or the SCD2 history's ``bucket=<i>/`` dirs,
+  matched on the store's own partition column or ``bucket``),
   which only existed on local filesystems: the first call promotes any
   partition a crash stranded under ``<path>.old/``, then moves them into
   ``data/`` once, the ``seg-*`` dirs under their own names and seqs and
@@ -82,12 +101,14 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from .apply import BUCKET_COL, recover_buckets
 from .manifest import ManifestStore
 
 FAN_IN = 4
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 BASE_LEVEL = 64  # a replaced state: size-tiered merges never reach it
 _SEGMENT = re.compile(r"seg-(\d+)-.+")
 _RENAMED = re.compile(r"seg-\d+-(\d+)")  # a root segment of the rename era
@@ -143,6 +164,7 @@ class SegmentStore:
         self.resolve = resolve
         self.col = col
         self.manifests = ManifestStore(path)
+        self._schemas: dict[str, StructType] = {}  # segment dir -> schema
 
     def segments(self, as_of: int | None = None) -> list[Segment]:
         """Live segments, ordered by level, then oldest first: of the
@@ -173,16 +195,19 @@ class SegmentStore:
         # a lone segment already holds one winner per key
         return df if df is None or len(segs) < 2 else self.resolve(df)
 
-    def append(self, batch: DataFrame) -> None:
+    def append(self, batch: DataFrame) -> int:
         """Write the batch's winning events as a level-0 segment, then
-        compact. The stored state is never read here."""
+        compact; returns the rows written. The stored state is never
+        read here."""
         self._adopt()  # before the first publish, which would reuse its seqs
         obs = Observation()
         rows = self.resolve(self._project(batch))
         name = self._write(rows.observe(obs, F.count(F.lit(1)).alias("rows")), 0)
-        if obs.get["rows"]:  # an empty batch's write stays an orphan
+        written = obs.get["rows"]
+        if written:  # an empty batch's write stays an orphan
             self._publish(name, ())
             self._compact()
+        return written
 
     def replace(self, state: DataFrame) -> None:
         """Write ``state`` as one segment at ``BASE_LEVEL`` and publish a
@@ -213,11 +238,16 @@ class SegmentStore:
             # in bucket=<i>/ dirs, which must not become a column
             reader = self.spark.read.option("recursiveFileLookup", "true")
             return self._project(reader.parquet(*dirs))
-        # one read per segment, with the segment as basePath so <col> is
+        # reads per segment, with the segment as basePath so <col> is
         # parsed from the dir names: one read over several segments
-        # fails on their conflicting directory structures
+        # fails on their conflicting directory structures. Spark lists
+        # more than `threshold` paths with a job of one task per path,
+        # so each read names at most that many partition dirs. A
+        # segment is immutable, so its schema is kept from its write, or
+        # from its first read (a segment of an earlier session)
         prefix = f"{self.col}="
         want = None if parts is None else {f"{prefix}{p}" for p in parts}
+        limit = int(self.spark.conf.get(_LISTING_THRESHOLD, "32"))
         frames = []
         for d in dirs:
             sub = [
@@ -225,8 +255,12 @@ class SegmentStore:
                 for n in sorted(os.listdir(d))
                 if n.startswith(prefix) and (want is None or n in want)
             ]
-            if sub:
-                frames.append(self.spark.read.option("basePath", d).parquet(*sub))
+            for i in range(0, len(sub), limit):
+                reader = self.spark.read.option("basePath", d)
+                if d in self._schemas:
+                    reader = reader.schema(self._schemas[d])
+                frames.append(reader.parquet(*sub[i : i + limit]))
+                self._schemas[d] = frames[-1].schema
         if not frames:
             return None
         return self._project(reduce(DataFrame.unionByName, frames))
@@ -236,15 +270,21 @@ class SegmentStore:
 
     def _write(self, df: DataFrame, level: int) -> str:
         name = f"seg-{level}-{uuid.uuid4().hex}"
+        path = os.path.join(self.manifests.data_root, name)
         writer = df.write.mode("errorifexists")
         if self.col is not None:
             writer = writer.partitionBy(self.col)
-        writer.parquet(os.path.join(self.manifests.data_root, name))
+            # the schema a read infers: the partition column comes last
+            fields = [f for f in df.schema if f.name != self.col]
+            self._schemas[path] = StructType([*fields, df.schema[self.col]])
+        writer.parquet(path)
         return name
 
     def _publish(self, name: str, drop: Iterable[int]) -> None:
         _, mapping, max_seen = self.manifests.latest()
         drop = set(drop)
+        for k in drop:  # only an as_of read opens a dropped segment again
+            self._schemas.pop(os.path.join(self.manifests.data_root, mapping[k]), None)
         live = {k: d for k, d in mapping.items() if k not in drop}
         live[max(mapping, default=0) + 1] = name
         self.manifests.publish(max_seen + 1, live)  # past a torn version

@@ -437,11 +437,11 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
         # maintain the SCD Type-2 row-validity history live from the
         # stream (cdc/scd2.py — c21's streaming face): every
         # point event becomes a version row (deletes become closure
-        # markers), touched buckets recompute their intervals per batch.
+        # markers), appended as one segment per batch.
         # NOTE: unlike the delivery hooks this consumes EVERY event, not
         # the final_events reduction — intra-batch ordering is resolved
-        # by the lead(lsn) window inside apply_batch, and an SCD2 history
-        # that dropped superseded versions would not be a history.
+        # by the lead(lsn) window the history reads with, and an SCD2
+        # history that dropped superseded versions would not be a history.
         from .cdc.scd2 import Scd2History
 
         spath = opts.get("path")
@@ -453,7 +453,6 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
             # versions would stay open forever. Reject loudly (the
             # neardup/ivf discipline for id-keyed sinks under chunking).
             raise ValueError("scd2_history sink does not support chunked configs")
-        sbuckets = int(opts.get("n_buckets", 16))
         # metadata keys carried onto each version row (comma-separated)
         sattrs = tuple(
             a.strip()
@@ -467,7 +466,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
             if sh is None:
                 sh = scache["sh"] = Scd2History(
                     pts.sparkSession, spath, key_col="id",
-                    payload_cols=sattrs, n_buckets=sbuckets,
+                    payload_cols=sattrs,
                 )
             ev = pts.select(
                 "id", "lsn", "op",

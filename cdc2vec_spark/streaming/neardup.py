@@ -129,12 +129,16 @@ class StreamingNearDup:
     def apply_batch(self, batch: DataFrame, _epoch_id: int | None = None) -> DataFrame:
         """Ingest one batch; returns the verified near-dup pairs it
         surfaced, as (id_a, id_b, jac) with id_a < id_b — new-vs-old and
-        new-vs-new alike. Idempotent: a replayed batch returns the same
-        pairs and leaves both state tables unchanged."""
+        new-vs-new alike. A row for an already-ingested id is an update:
+        when its shingle set or carried columns differ from the stored
+        version, that version is retired first (``delete_batch``), so
+        its old band rows and pairs go. Idempotent: a replayed batch
+        leaves the state tables unchanged."""
         both = shingle_minhash(
             batch.select(self.id_col, self.text_col, *self.carry_cols),
             self.shingle_n, self.num_perm, self.text_col,
         ).persist()
+        self._retire_changed(both)
         sigs = both.where(F.col("sig").isNotNull()).select(self.id_col, "sig")
         new_banded = self._banded(sigs).persist()
         touched = sorted(
@@ -180,11 +184,7 @@ class StreamingNearDup:
             ).distinct()
             dbuckets = sorted(
                 r[0]
-                for r in cand_ids.select(
-                    F.pmod(F.xxhash64(self.id_col), F.lit(self.n_buckets))
-                    .cast("int")
-                    .alias("b")
-                )
+                for r in cand_ids.select(self._dbucket().alias("b"))
                 .distinct()
                 .collect()
             )
@@ -215,9 +215,7 @@ class StreamingNearDup:
 
         new_docs = both.where(F.size("sh") > 0).select(
             self.id_col, "sh", *self.carry_cols
-        ).withColumn(
-            DBUCKET, F.pmod(F.xxhash64(self.id_col), F.lit(self.n_buckets)).cast("int")
-        )
+        ).withColumn(DBUCKET, self._dbucket())
         dtouched = sorted(
             r[0] for r in new_docs.select(DBUCKET).distinct().collect()
         )
@@ -240,6 +238,32 @@ class StreamingNearDup:
         both.unpersist()
         self._merge_pairs_state(pairs)
         return pairs
+
+    def _retire_changed(self, both: DataFrame) -> None:
+        """Retire the stored versions that the batch's rows change."""
+        new = both.select(self.id_col, "sh", *self.carry_cols)
+        dbuckets = sorted(
+            r[0]
+            for r in new.select(self._dbucket().alias("b")).distinct().collect()
+        )
+        docs = read_bucketed_state(
+            self.spark, self.docs_path, col=DBUCKET, buckets=dbuckets
+        ) if dbuckets else None
+        if docs is None:
+            return
+        same = F.lit(True)
+        for c in ("sh", *self.carry_cols):
+            same = same & F.col(f"o.{c}").eqNullSafe(F.col(f"n.{c}"))
+        changed = (
+            docs.alias("o")
+            .join(new.alias("n"), self.id_col)
+            .where(~same)
+            .select(self.id_col)
+        )
+        self.delete_batch(changed)
+
+    def _dbucket(self):
+        return F.pmod(F.xxhash64(self.id_col), F.lit(self.n_buckets)).cast("int")
 
     def delete_batch(self, ids: DataFrame) -> None:
         """Retire a batch of DELETED doc ids from all three state tables
@@ -269,10 +293,7 @@ class StreamingNearDup:
         dids = ids.select(self.id_col).distinct().localCheckpoint(eager=True)
         dbuckets = sorted(
             r[0]
-            for r in dids.select(
-                F.pmod(F.xxhash64(self.id_col), F.lit(self.n_buckets))
-                .cast("int").alias("b")
-            ).distinct().collect()
+            for r in dids.select(self._dbucket().alias("b")).distinct().collect()
         )
         if not dbuckets:
             return

@@ -198,9 +198,12 @@ def run_all(sf_dir: str, only: list[str] | None = None) -> dict[str, list[str]]:
     sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
 
-    from cdc2vec_spark.session import get_spark
+    from pyspark.sql import SparkSession
 
-    spark = get_spark("oracle_check")
+    # a bare session, none of get_spark's configs: a query must not
+    # pass here only because of a setting get_spark adds
+    spark = SparkSession.builder.master("local[32]").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
     con = duckdb_conn(sf_dir)
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     check_registry(qs)

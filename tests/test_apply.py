@@ -178,41 +178,6 @@ def test_bucketed_crash_recovery(spark, tmp_path):
     assert not os.path.exists(path + ".old")
 
 
-def test_merge_batch_toast_coalesce(spark):
-    """coalesce_unchanged=True backfills a null update column from the
-    key's prior state (TOAST 'u' repair) — within one batch, across
-    batches, and NEVER across a tombstone."""
-    b1 = _log(
-        spark,
-        [
-            (1, "c", "t", "1", "t1", "full", "a"),
-            (2, "u", "t", "1", "t2", None, "a"),  # TOASTed content
-            (1, "c", "t", "2", "x", "keep", "b"),
-            (1, "c", "t", "3", "y", "old", "b"),
-            (2, "d", "t", "3", None, None, None),
-            (3, "c", "t", "3", "y2", None, "b"),  # reinsert: must NOT see "old"
-        ],
-    )
-    s1 = apply.merge_batch(None, b1, coalesce_unchanged=True)
-    got = {r["pk"]: (r["after_title"], r["after_content"]) for r in s1.collect()}
-    assert got["1"] == ("t2", "full")      # backfilled within batch
-    assert got["2"] == ("x", "keep")
-    assert got["3"] == ("y2", None)        # tombstone barrier holds
-    # across batches: the carried state row provides the TOASTed value
-    # (an update with EVERY text column null is dropped by the F2 guard
-    # before it reaches the merge — reference semantics — so the realistic
-    # shape is one real column + one TOASTed)
-    b2 = _log(spark, [(4, "u", "t", "1", "t4", None, "a2")])
-    s2 = apply.merge_batch(s1, b2, coalesce_unchanged=True)
-    got2 = {r["pk"]: (r["after_title"], r["after_content"], r["after_author"])
-            for r in s2.collect()}
-    assert got2["1"] == ("t4", "full", "a2")
-    # default (oracle semantics): nulls overwrite
-    s_plain = apply.merge_batch(None, b1)
-    gotp = {r["pk"]: r["after_content"] for r in s_plain.collect()}
-    assert gotp["1"] is None
-
-
 def test_replay_batched_equals_sequential(spark, tmp_path, sf_dir):
     """Applying a known change log as ONE apply_batch call must land a
     state byte-identical to a 4-LSN-quartile sequential replay — the

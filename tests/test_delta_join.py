@@ -6,7 +6,8 @@ incremental≡recompute (view AND aggregate) on crafted streams covering
 fact updates that MOVE the join key, dim updates fanning out to every
 joined fact, dim deletes dropping their facts, fact deletes and
 reinserts; replay idempotence; torn-commit rebuild of every derived
-store; deferred≡full-path parity for the replay's merge-only fast path.
+store; the segment-log base states (one segment per apply, the
+bucket-layout upgrade, a crash before publish).
 """
 
 from __future__ import annotations
@@ -314,44 +315,6 @@ def test_random_walk_matches_reference(spark, tmp_path, seed):
         assert _agg_rows(ivj) == _agg_ref(ref)
 
 
-@pytest.mark.slow
-def test_deferred_batches_equal_full_path(spark, tmp_path):
-    """apply_batch_deferred (the replay's merge-only fast path) followed
-    by a read() must land on the same view AND join-agg as running every
-    batch through the full incremental path — for a deferred-only run
-    and for the replay's defer-then-full mix."""
-    batches = [
-        ([("c", 1, "p1", "a", "x"), ("c", 2, "p2", "a", "yy")],
-         [("c", 1, "a", "t0"), ("c", 2, "b", "t1")]),
-        ([("u", 10, "p1", "b", "x2"), ("c", 11, "p3", "b", "zzz")],
-         [("u", 10, "a", "t0b")]),
-        ([("d", 20, "p2", None, None)], [("c", 21, "c", "t2")]),
-    ]
-
-    def run(path, mode):
-        ivj = IncrementalJoinView(
-            spark, path,
-            l_key="pk", l_fk="fk", l_payload=("t",),
-            r_key="k", r_payload=("tier",), n_buckets=4,
-            agg_group=("tier",),
-            agg_sums={"tchars": "coalesce(length(t), 0)"},
-        )
-        for i, (l_rows, r_rows) in enumerate(batches):
-            lb = _mk(spark, l_rows, "pk", "fk string, t string")
-            rb = _mk(spark, r_rows, "k", "tier string")
-            defer = mode == "all_deferred" or (mode == "mix" and i < 2)
-            if defer:
-                ivj.apply_batch_deferred(lb, rb)
-            else:
-                ivj.apply_batch(lb, rb)
-        return _view_rows(ivj), _agg_rows(ivj)
-
-    full = run(str(tmp_path / "full"), "full")
-    assert full[0]  # non-vacuous
-    assert run(str(tmp_path / "deferred"), "all_deferred") == full
-    assert run(str(tmp_path / "mix"), "mix") == full
-
-
 def test_c19_c20_empty_view_yields_empty_frames(spark, monkeypatch):
     """Round 14 (ADVICE r13 #3): when the maintained view/agg state is
     empty (all left rows deleted, or an empty corpus) read()/read_agg()
@@ -380,3 +343,112 @@ def test_c19_c20_empty_view_yields_empty_frames(spark, monkeypatch):
     assert [(f.name, f.dataType.simpleString()) for f in a.schema.fields] == [
         ("tier", "bigint"), ("n_facts", "bigint"), ("title_chars", "bigint"),
     ]
+
+
+# ------------------------------------------- the segment-log base states
+
+_L_DDL = "fk string, t string"
+_R_DDL = "tier string"
+_JV_BATCHES = [
+    ([("c", 1, "p1", "a", "x"), ("c", 2, "p2", "b", "yy")],
+     [("c", 1, "a", "t0"), ("c", 2, "b", "t1")]),
+    ([("u", 10, "p1", "b", "x2"), ("c", 11, "p3", "a", "zzz")],
+     [("u", 10, "a", "t0b")]),
+    ([("d", 20, "p2", None, None)], [("c", 21, "c", "t2")]),
+    ([("c", 30, "p4", "c", "w")], [("d", 30, "b", None)]),
+    ([("u", 40, "p3", "c", "z")], [("c", 41, "b", "t1c")]),
+]
+
+
+def _jv(spark, path):
+    return IncrementalJoinView(
+        spark, path,
+        l_key="pk", l_fk="fk", l_payload=("t",),
+        r_key="k", r_payload=("tier",), n_buckets=4,
+        agg_group=("tier",),
+        agg_sums={"tchars": "coalesce(length(t), 0)"},
+    )
+
+
+def _jv_apply(spark, ivj, batch):
+    l_rows, r_rows = batch
+    ivj.apply_batch(_mk(spark, l_rows, "pk", _L_DDL), _mk(spark, r_rows, "k", _R_DDL))
+
+
+def test_apply_appends_one_segment_per_base_state(spark, tmp_path):
+    """An apply writes each stream's batch as one new segment of its base
+    state and leaves every file the two states held as they were."""
+    from tests.test_ann_index import _files, _new_segments
+
+    root = str(tmp_path / "jv")
+    ivj = _jv(spark, root)
+    _jv_apply(spark, ivj, _JV_BATCHES[0])
+    before = {s: _files(f"{root}/{s}") for s in ("lstate", "rstate")}
+    _jv_apply(spark, ivj, _JV_BATCHES[1])
+    for s in ("lstate", "rstate"):
+        assert len(_new_segments(before[s], _files(f"{root}/{s}"))) == 1, s
+
+
+@pytest.mark.slow
+def test_bucket_layout_base_states_upgrade_in_place(spark, tmp_path):
+    """A view in the earlier layout — root lstate|rstate/jbucket=<i>/ dirs
+    written by partitionBy (one left bucket stranded under lstate.old/),
+    the derived stores and both epoch files — opens with each base state
+    as one adopted segment and answers as the same view in segments
+    does, after each later apply and after the first compaction."""
+    import os
+    import shutil
+
+    ref = _jv(spark, str(tmp_path / "ref"))
+    for b in _JV_BATCHES[:2]:
+        _jv_apply(spark, ref, b)
+    old = str(tmp_path / "old")
+    ref.l_store.read().write.partitionBy("jbucket").parquet(old + "/lstate")
+    ref.r_store.read().write.partitionBy("jbucket").parquet(old + "/rstate")
+    for name in ("fkidx", "view", "agg"):
+        shutil.copytree(str(tmp_path / "ref" / name), os.path.join(old, name))
+    for name in ("_epoch_base", "_epoch_view"):
+        shutil.copy(str(tmp_path / "ref" / name), os.path.join(old, name))
+    stranded = sorted(n for n in os.listdir(old + "/lstate") if n.startswith("jbucket="))[0]
+    os.makedirs(old + "/lstate.old")
+    os.rename(os.path.join(old, "lstate", stranded), os.path.join(old, "lstate.old", stranded))
+
+    ivj = _jv(spark, old)
+    assert (_view_rows(ivj), _agg_rows(ivj)) == (_view_rows(ref), _agg_rows(ref))
+    for store in (ivj.l_store, ivj.r_store):
+        assert [s.seq for s in store.segments()] == [-1]
+    for b in _JV_BATCHES[2:]:  # the third apply compacts level 0
+        _jv_apply(spark, ref, b)
+        _jv_apply(spark, ivj, b)
+        assert (_view_rows(ivj), _agg_rows(ivj)) == (_view_rows(ref), _agg_rows(ref))
+    for store in (ivj.l_store, ivj.r_store):
+        assert [s.level for s in store.segments()] == [1]
+
+
+@pytest.mark.slow
+def test_crash_before_publish_leaves_view_unchanged(spark, tmp_path, monkeypatch):
+    """A crash between a base state's segment write and its manifest
+    publish leaves both base states as they were; the torn epoch
+    rebuilds the view from them, and the replayed batch then folds in."""
+    from cdc2vec_spark.cdc.segments import SegmentStore
+
+    root = str(tmp_path / "jv")
+    ivj = _jv(spark, root)
+    _jv_apply(spark, ivj, _JV_BATCHES[0])
+    want = (_view_rows(ivj), _agg_rows(ivj))
+    segs = (ivj.l_store.segments(), ivj.r_store.segments())
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(SegmentStore, "_publish", crash)
+    with pytest.raises(RuntimeError, match="crash before publish"):
+        _jv_apply(spark, ivj, _JV_BATCHES[1])
+    monkeypatch.undo()
+    fresh = _jv(spark, root)
+    assert (fresh.l_store.segments(), fresh.r_store.segments()) == segs
+    assert (_view_rows(fresh), _agg_rows(fresh)) == want
+    _jv_apply(spark, fresh, _JV_BATCHES[1])
+    ref = _batch_join(_JV_BATCHES[0][0] + _JV_BATCHES[1][0],
+                      _JV_BATCHES[0][1] + _JV_BATCHES[1][1])
+    assert (_view_rows(fresh), _agg_rows(fresh)) == (ref, _agg_ref(ref))

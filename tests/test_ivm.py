@@ -1482,3 +1482,115 @@ def test_group_agg_replay_batched_equals_sequential(spark, tmp_path, sf_dir):
         assert a == b and len(a) > 0
     finally:
         ch.unpersist()
+
+
+# ---------------------------------------------- the segment-log row state
+
+def _ivm(spark, kind, path):
+    if kind == "agg":
+        return IncrementalGroupAgg(spark, path, n_buckets=4, aggs=_MM_AGGS)
+    return _dc(spark, path)
+
+
+def _answer(ivm):
+    return sorted(map(tuple, ivm.read().collect()), key=repr)
+
+
+def _ivm_batches(spark):
+    rows = [
+        [(1, "c", "public.documents", "k1", "aaa", "bb", "g1"),
+         (2, "c", "public.documents", "k2", "cc", "d", "g2"),
+         (3, "c", "public.documents", "k3", "eee", "ffff", "g1")],
+        [(4, "u", "public.documents", "k1", "aaaaaa", "b", "g1"),
+         (5, "d", "public.documents", "k2", None, None, None)],
+        [(6, "c", "public.documents", "k4", "gg", "hhh", "g2"),
+         (7, "d", "public.documents", "k3", None, None, None)],
+        [(8, "u", "public.documents", "k4", "g", "hhhhh", "g1")],
+        [(9, "c", "public.documents", "k2", "ii", "jj", "g2")],
+    ]
+    return [spark.createDataFrame(r, _SCHEMA) for r in rows]
+
+
+@pytest.mark.parametrize("kind", ["agg", "distinct"])
+def test_apply_appends_one_state_segment_and_modifies_no_file(spark, tmp_path, kind):
+    """An apply writes its events as one new segment of the row state
+    and leaves every file the state held as it was."""
+    from tests.test_ann_index import _files, _new_segments
+
+    root = str(tmp_path / "v")
+    ivm = _ivm(spark, kind, root)
+    b1, b2 = _ivm_batches(spark)[:2]
+    ivm.apply_batch(b1)
+    before = _files(root + "/state")
+    ivm.apply_batch(b2)
+    assert len(_new_segments(before, _files(root + "/state"))) == 1
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("kind", ["agg", "distinct"])
+def test_bucket_layout_state_upgrades_in_place(spark, tmp_path, kind):
+    """A view in the earlier layout — root state/bucket=<i>/ dirs written
+    by partitionBy, one bucket stranded under state.old/ by a crash,
+    the agg (and dv) stores and both epoch files — opens as one adopted
+    segment and answers as the same view in segments does, after each
+    later apply and after its first compaction."""
+    import os
+    import shutil
+
+    batches = _ivm_batches(spark)
+    ref = _ivm(spark, kind, str(tmp_path / "ref"))
+    for b in batches[:2]:
+        ref.apply_batch(b)
+    old = str(tmp_path / "old")
+    ref.state.store.read().write.partitionBy("bucket").parquet(old + "/state")
+    for name in ("agg", "dv", "_epoch_state", "_epoch_agg"):
+        src = os.path.join(str(tmp_path / "ref"), name)
+        if os.path.isdir(src):
+            shutil.copytree(src, os.path.join(old, name))
+        elif os.path.exists(src):
+            shutil.copy(src, os.path.join(old, name))
+    stranded = sorted(n for n in os.listdir(old + "/state") if n.startswith("bucket="))[0]
+    os.makedirs(old + "/state.old")
+    os.rename(os.path.join(old, "state", stranded), os.path.join(old, "state.old", stranded))
+
+    ivm = _ivm(spark, kind, old)
+    assert _answer(ivm) == _answer(ref)
+    assert [s.seq for s in ivm.state.store.segments()] == [-1]
+    assert not os.path.exists(old + "/state.old")
+    for b in batches[2:]:  # the third apply compacts level 0
+        ref.apply_batch(b)
+        ivm.apply_batch(b)
+        assert _answer(ivm) == _answer(ref)
+    assert [s.level for s in ivm.state.store.segments()] == [1]
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("kind", ["agg", "distinct"])
+def test_crash_before_publish_leaves_answer_unchanged(spark, tmp_path, monkeypatch, kind):
+    """A crash between the state segment's write and its manifest
+    publish leaves the state as it was; the torn epoch rebuilds the
+    derived stores from it, and the replayed batch then folds in."""
+    from cdc2vec_spark.cdc.segments import SegmentStore
+
+    root = str(tmp_path / "v")
+    ivm = _ivm(spark, kind, root)
+    b1, b2 = _ivm_batches(spark)[:2]
+    ivm.apply_batch(b1)
+    want = _answer(ivm)
+    segs = ivm.state.store.segments()
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(SegmentStore, "_publish", crash)
+    with pytest.raises(RuntimeError, match="crash before publish"):
+        ivm.apply_batch(b2)
+    monkeypatch.undo()
+    fresh = _ivm(spark, kind, root)
+    assert fresh.state.store.segments() == segs
+    assert _answer(fresh) == want
+    fresh.apply_batch(b2)
+    ref = _ivm(spark, kind, str(tmp_path / "ref"))
+    for b in (b1, b2):
+        ref.apply_batch(b)
+    assert _answer(fresh) == _answer(ref)

@@ -345,3 +345,42 @@ def test_hook_orders_by_final_event_within_batch(spark, tmp_path):
     want_sh = {r["id"]: r["sh"] for r in
                spark.read.parquet(f"{tmp_path}/ref/docs").collect()}["Z"]
     assert sorted(by_id["Z"]) == sorted(want_sh)
+
+
+def test_update_replaces_the_stored_version(spark, tmp_path):
+    """An upsert of an already-ingested id is an update: its old text's
+    pairs and band rows go, its new text is what later docs match, and
+    a replay of the update leaves the state unchanged."""
+    snd = StreamingNearDup(spark, str(tmp_path / "nd"), threshold=0.5)
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")  # noqa: E731
+    old = "spark streams merge batches into keyed state stores every night at nine"
+    new = "a tiny cat sleeps on the warm windowsill while rain taps the old glass"
+    snd.apply_batch(mk([(1, old), (2, old + " sharp")]))
+    assert {(a, b) for a, b, _ in _pairs(snd.accumulated_pairs())} == {(1, 2)}
+
+    update = mk([(1, new)])
+    snd.apply_batch(update)
+    assert _pairs(snd.accumulated_pairs()) == set()
+    idx = spark.read.parquet(snd.index_path)
+    assert idx.where(F.col("doc_id") == 1).count() == snd.bands
+
+    snap = (
+        sorted(map(tuple, idx.select("doc_id", "band", "bv").collect())),
+        sorted(
+            (r["doc_id"], tuple(r["sh"]))
+            for r in spark.read.parquet(snd.docs_path).collect()
+        ),
+    )
+    snd.apply_batch(update)  # foreachBatch redelivery
+    assert (
+        sorted(map(tuple, spark.read.parquet(snd.index_path)
+                   .select("doc_id", "band", "bv").collect())),
+        sorted(
+            (r["doc_id"], tuple(r["sh"]))
+            for r in spark.read.parquet(snd.docs_path).collect()
+        ),
+    ) == snap
+
+    got = _pairs(snd.apply_batch(mk([(3, new + " outside")])))
+    assert {(a, b) for a, b, _ in got} == {(1, 3)}
+    assert {(a, b) for a, b, _ in _pairs(snd.accumulated_pairs())} == {(1, 3)}

@@ -554,3 +554,49 @@ def test_empty_batch_writes_no_segment(spark, tmp_path):
     _apply(spark, Plain, coll, [Plain.event("t:a", 1, "c")])
     coll.apply_points(empty)
     assert len(coll.store.segments()) == 1
+
+
+_LISTING_PROBE = """
+import sys
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+from cdc2vec_spark.cdc.segments import SegmentStore, max_lsn_per
+
+spark = SparkSession.builder.master("local[4]").getOrCreate()
+store = SegmentStore(spark, sys.argv[1], None, max_lsn_per("cell", "id"), col="cell")
+for s in range(3):
+    store.append(spark.range(s * 4000, (s + 1) * 4000).select(
+        "id", (F.col("id") % 127).cast("int").alias("cell"),
+        F.lit(s).cast("long").alias("lsn"),
+    ))
+# a reader attaching to the store, with no schema kept from the writes
+store = SegmentStore(spark, sys.argv[1], None, max_lsn_per("cell", "id"), col="cell")
+sc = spark.sparkContext
+sc.setJobGroup("read", "read")
+store.read()
+tracker = sc.statusTracker()
+print("TASKS", [
+    tracker.getStageInfo(st).numTasks
+    for job in tracker.getJobIdsForGroup("read")
+    for st in tracker.getJobInfo(job).stageIds
+])
+"""
+
+
+def test_partitioned_read_starts_no_listing_job(tmp_path):
+    """Creating a read over a store partitioned into more values than
+    Spark lists on the driver (its parallel-partition-discovery
+    threshold, 32) starts no file-listing job of one task per path:
+    under a bare session, only the one-task schema reads of a reader
+    attaching to the store remain."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _LISTING_PROBE, str(tmp_path / "s")],
+        cwd=repo, env={**os.environ, "PYTHONPATH": repo},
+        capture_output=True, text=True, check=True,
+    ).stdout
+    tasks = eval(re.search(r"^TASKS (.*)$", out, re.M)[1])
+    assert tasks and max(tasks) == 1, tasks

@@ -143,7 +143,7 @@ def test_stream_equals_batch_any_split(spark, sf_dir, tmp_path):
     for n_batches in (1, 4):
         sh = Scd2History(
             spark, str(tmp_path / f"h{n_batches}"), key_col="pk",
-            payload_cols=("author",), n_buckets=8,
+            payload_cols=("author",),
         )
         step = (hi - lo) // n_batches + 1
         for i in range(n_batches):
@@ -169,7 +169,7 @@ def test_replay_idempotent_and_current_is_lww(spark, sf_dir, tmp_path):
     mid = (lo + hi) // 2
     sh = Scd2History(
         spark, str(tmp_path / "h"), key_col="pk",
-        payload_cols=("author",), n_buckets=8,
+        payload_cols=("author",),
     )
     b1, b2 = ch.where(F.col("lsn") <= mid), ch.where(F.col("lsn") > mid)
     sh.apply_batch(b1)
@@ -199,7 +199,7 @@ def test_as_of_walkthrough(spark, tmp_path):
 
     sh = Scd2History(
         spark, str(tmp_path / "h"), key_col="pk",
-        payload_cols=("author",), n_buckets=4,
+        payload_cols=("author",),
     )
     b1 = spark.createDataFrame(
         [("k1", 1, "c", "ann"), ("k1", 5, "u", "bob"), ("k2", 3, "c", "cyd")],
@@ -250,7 +250,7 @@ def test_boot_scd2_sink_e2e(spark, sf_dir, tmp_path):
         engine=DEFAULT_CONFIG, source=SourceConfig(),
         sink=SinkConfig(
             type="scd2_history",
-            options={"path": spath, "n_buckets": 8, "attrs": "after_author"},
+            options={"path": spath, "attrs": "after_author"},
         ),
     )
     ch = transform.filter_mapped(
@@ -270,7 +270,6 @@ def test_boot_scd2_sink_e2e(spark, sf_dir, tmp_path):
 
     sh = Scd2History(
         spark, spath, key_col="id", payload_cols=("after_author",),
-        n_buckets=8,
     )
     cur = {
         (r["id"], r["after_author"]) for r in sh.current().collect()
@@ -308,7 +307,7 @@ def test_scd2_random_walk_matches_python_reference(spark, tmp_path, seed):
 
     sh = Scd2History(
         spark, str(tmp_path / "h"), key_col="pk",
-        payload_cols=("author",), n_buckets=4,
+        payload_cols=("author",),
     )
     applied = []
     cuts = sorted(rng.sample(range(2, 40), 3)) + [41]
@@ -379,12 +378,12 @@ def test_prune_retention_contract(spark, sf_dir, tmp_path):
 
     # full history, no prune — the reference
     full = Scd2History(spark, str(tmp_path / "full"), key_col="pk",
-                       payload_cols=("author",), n_buckets=8)
+                       payload_cols=("author",))
     full.apply_batch(ch)
 
     # pruned run: first half, prune at mid, then second half
     pr = Scd2History(spark, str(tmp_path / "pr"), key_col="pk",
-                     payload_cols=("author",), n_buckets=8)
+                     payload_cols=("author",))
     pr.apply_batch(ch.where(F.col("lsn") <= mid))
     before = pr.read().count()
     pr.prune(mid)
@@ -411,3 +410,85 @@ def test_prune_retention_contract(spark, sf_dir, tmp_path):
         map(tuple, full.current().collect())
     )
     ch.unpersist()
+
+
+# ------------------------------------------------ the segment-log history
+
+_EV_DDL = "pk string, lsn long, op string, author string"
+_SCD2_BATCHES = [
+    [("k1", 1, "c", "ann"), ("k2", 2, "c", "bob")],
+    [("k1", 5, "u", "amy"), ("k3", 6, "c", "cyd")],
+    [("k2", 9, "d", None), ("k3", 10, "u", "cat")],
+    [("k2", 12, "c", "bea")],
+    [("k1", 14, "d", None), ("k4", 15, "c", "dee")],
+]
+
+
+def _sh(spark, path):
+    from cdc2vec_spark.cdc.scd2 import Scd2History
+
+    return Scd2History(spark, path, key_col="pk", payload_cols=("author",))
+
+
+def test_apply_appends_one_segment_and_modifies_no_file(spark, tmp_path):
+    """An apply writes the batch's events as one new segment and leaves
+    every file the history held as it was."""
+    from tests.test_ann_index import _files, _new_segments
+
+    root = str(tmp_path / "h")
+    sh = _sh(spark, root)
+    sh.apply_batch(spark.createDataFrame(_SCD2_BATCHES[0], _EV_DDL))
+    before = _files(root)
+    sh.apply_batch(spark.createDataFrame(_SCD2_BATCHES[1], _EV_DDL))
+    assert len(_new_segments(before, _files(root))) == 1
+
+
+def test_bucket_layout_history_upgrades_in_place(spark, tmp_path):
+    """A history in the earlier layout — root bucket=<i>/ dirs of event
+    rows carrying their stored valid_to, one bucket stranded under
+    <path>.old/ by a crash — opens as one adopted segment and answers
+    as the same history in segments does, after each later apply and
+    after its first compaction."""
+    import os
+
+    from cdc2vec_spark.cdc.apply import bucket_expr
+
+    ref = _sh(spark, str(tmp_path / "ref"))
+    for b in _SCD2_BATCHES[:2]:
+        ref.apply_batch(spark.createDataFrame(b, _EV_DDL))
+    old = str(tmp_path / "old")
+    ref.read().withColumn("bucket", bucket_expr(("pk",), 4)).write.partitionBy(
+        "bucket"
+    ).parquet(old)
+    stranded = sorted(n for n in os.listdir(old) if n.startswith("bucket="))[0]
+    os.makedirs(old + ".old")
+    os.rename(os.path.join(old, stranded), os.path.join(old + ".old", stranded))
+
+    sh = _sh(spark, old)
+    assert _hist_rows(sh) == _hist_rows(ref)
+    assert [s.seq for s in sh.store.segments()] == [-1]
+    for b in _SCD2_BATCHES[2:]:  # the third apply compacts level 0
+        for h in (ref, sh):
+            h.apply_batch(spark.createDataFrame(b, _EV_DDL))
+        assert _hist_rows(sh) == _hist_rows(ref)
+    assert [s.level for s in sh.store.segments()] == [1]
+
+
+def test_crash_before_publish_leaves_history_unchanged(spark, tmp_path, monkeypatch):
+    """A crash between a batch's segment write and its manifest publish
+    leaves the history as it was."""
+    from cdc2vec_spark.cdc.segments import SegmentStore
+
+    root = str(tmp_path / "h")
+    sh = _sh(spark, root)
+    sh.apply_batch(spark.createDataFrame(_SCD2_BATCHES[0], _EV_DDL))
+    want = _hist_rows(sh)
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(SegmentStore, "_publish", crash)
+    with pytest.raises(RuntimeError, match="crash before publish"):
+        sh.apply_batch(spark.createDataFrame(_SCD2_BATCHES[1], _EV_DDL))
+    monkeypatch.undo()
+    assert _hist_rows(_sh(spark, root)) == want

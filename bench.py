@@ -556,8 +556,9 @@ def _index_apply_scale(
     """Per-batch apply seconds of the keyed stores that an apply extends
     by one segment, as their state grows, through the public API only:
     ``IncrementalIvfIndex`` and ``IncrementalLexicalIndex`` (auto-
-    compaction off), ``IncrementalGroupAgg``, ``IncrementalJoinView``
-    (left stream) and ``Scd2History``. Batch 1 (``keys`` fresh ids,
+    compaction off), ``IncrementalGroupAgg``, ``IncrementalDistinctCount``
+    (distinct texts per author), ``IncrementalJoinView`` (left stream),
+    ``Scd2History`` and ``StreamingNearDup``. Batch 1 (``keys`` fresh ids,
     dim-``dim`` vectors, 40-word docs, 50 authors) builds each store —
     an index's ``build``, the join view's first apply together with the
     50-row author dimension, the others' first apply; batches
@@ -573,10 +574,11 @@ def _index_apply_scale(
     from pyspark.sql import functions as F
 
     from cdc2vec_spark.cdc.delta_join import IncrementalJoinView
-    from cdc2vec_spark.cdc.ivm import IncrementalGroupAgg
+    from cdc2vec_spark.cdc.ivm import IncrementalDistinctCount, IncrementalGroupAgg
     from cdc2vec_spark.cdc.scd2 import Scd2History
     from cdc2vec_spark.operators.ann_index import IncrementalIvfIndex
     from cdc2vec_spark.operators.lex_index import IncrementalLexicalIndex
+    from cdc2vec_spark.streaming.neardup import StreamingNearDup
 
     def rows(b):
         ids = spark.range(b * keys, (b + 1) * keys)
@@ -643,6 +645,15 @@ def _index_apply_scale(
                 lambda s, df: s.apply_batch(changes(df)),
             ),
             (
+                "distinct_agg",
+                IncrementalDistinctCount(
+                    spark, f"{root}/dv",
+                    specs=[{"name": "n_texts", "col": "md5(after_content)"}],
+                ),
+                None,
+                lambda s, df: s.apply_batch(changes(df)),
+            ),
+            (
                 "join_view",
                 IncrementalJoinView(
                     spark, f"{root}/jv", l_key="pk", l_fk="author",
@@ -656,6 +667,12 @@ def _index_apply_scale(
                 Scd2History(spark, f"{root}/scd2", payload_cols=("author",)),
                 None,
                 lambda s, df: s.apply_batch(df.select("id", "lsn", "op", "author")),
+            ),
+            (
+                "neardup",
+                StreamingNearDup(spark, f"{root}/nd", id_col="id"),
+                None,
+                lambda s, df: s.apply_batch(df.select("id", "text")),
             ),
         ):
             t0 = time.perf_counter()

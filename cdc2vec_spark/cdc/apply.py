@@ -14,19 +14,14 @@ lossy):
   keeps max-LSN per key across old state and new changes (SURVEY §7
   "exact-once CDC apply ... max-LSN-per-key guard").
 
-Two state layouts live here:
-- ParquetCollection, the keyed row state, is a segment log
-  (cdc.segments): an apply writes the batch's winners once and never
-  reads the state; reads union the live segments under one window on
-  the key. runner.PointsCollection and the IVF and lexical indexes
-  (operators.ann_index, operators.lex_index) are the same store.
-- swap_buckets/read_bucketed_state keep hash-bucketed ``bucket=<i>/``
-  dirs swapped by rename. They serve only the stores that read, modify
-  and write aggregate rows per batch: the ``agg`` and ``dv`` tables of
-  cdc.ivm, the ``fkidx``, ``view`` and ``agg`` of cdc.delta_join, and
-  streaming.neardup. The keyed states under cdc.ivm and cdc.delta_join
-  and the cdc.scd2 history are segment logs; the epoch stamps of
-  cdc.ivm join each to its derived stores, which commit separately.
+Every engine state is a segment log (cdc.segments): ParquetCollection,
+the keyed row state, is one. An apply writes the batch's winners once
+and never reads the state; reads union the live segments under one
+window on the key. runner.PointsCollection, the IVF and lexical indexes
+(operators.ann_index, operators.lex_index), the IVM views of cdc.ivm and
+cdc.delta_join, the cdc.scd2 history and streaming.neardup are the same
+store. swap_write remains only for report directories that outside
+readers open as plain parquet.
 """
 
 from __future__ import annotations
@@ -44,52 +39,18 @@ from .envelope import OP_DELETE
 
 
 def swap_write(df: DataFrame, path: str) -> None:
-    """Write df to `path` via tmp-then-rename with crash recovery.
-
-    The two renames are not jointly atomic; a crash between them would
-    leave only `<path>.old`. read_state compensates by promoting `.old`
-    when `path` is missing — so the worst post-crash outcome is the
-    pre-batch state (the batch replays from the checkpoint), never an
-    empty store. Rename-based, so local-filesystem only. It and
-    swap_buckets serve the stores that read, modify and write aggregate
-    rows per batch (module docstring). The keyed stores (cdc.segments)
-    commit through cdc.manifest.ManifestStore generations instead,
-    which also work on object stores."""
-    swap_write_begin(df, path)
-    swap_write_commit(path)
-
-
-def swap_write_begin(df: DataFrame, path: str) -> None:
-    """Phase 1 of swap_write: materialize df to `<path>.tmp` (the one
-    Spark job) WITHOUT touching `path`. Lets a caller whose df reads
-    files that other swaps are about to replace write first and promote
-    later — one write job instead of an eager checkpoint + a write
-    (the IVM per-batch constant)."""
-    tmp = path + ".tmp"
+    """Replace the plain parquet dir at `path` with df: write
+    `<path>.tmp`, then rename it over `path`. For report dirs that
+    outside readers open as plain parquet; a crash between the two
+    renames leaves the report missing until the next write. Engine
+    state commits through cdc.segments instead."""
+    tmp, old = path + ".tmp", path + ".old"
     df.write.mode("overwrite").parquet(tmp)
-
-
-def swap_write_commit(path: str) -> None:
-    """Phase 2 of swap_write: atomically promote `<path>.tmp`. Crash
-    semantics identical to the fused swap_write (read_state promotes
-    `.old` if the second rename never ran)."""
-    tmp = path + ".tmp"
-    old = path + ".old"
     shutil.rmtree(old, ignore_errors=True)
     if os.path.exists(path):
         os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
-
-
-def read_state(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read swap_write state; promotes `<path>.old` if a crash stranded it."""
-    old = path + ".old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)  # crash between the two renames — recover
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path)
 
 
 def eligible_events(changes: DataFrame, text_cols: Sequence[str]) -> DataFrame:
@@ -192,7 +153,8 @@ def bucket_expr(key_cols: Sequence[str], n_buckets: int):
 
 def recover_buckets(path: str, col: str = BUCKET_COL) -> None:
     """Promote any `<col>=<i>` partition a crash stranded under
-    `<path>.old/` (swap_buckets_commit between its two renames)."""
+    `<path>.old/` (the earlier rename-swapped bucket layout, between its
+    two renames)."""
     oldroot = path + ".old"
     if os.path.isdir(oldroot):
         for name in os.listdir(oldroot):
@@ -202,93 +164,6 @@ def recover_buckets(path: str, col: str = BUCKET_COL) -> None:
                     os.makedirs(path, exist_ok=True)
                     os.rename(os.path.join(oldroot, name), dst)
         shutil.rmtree(oldroot, ignore_errors=True)
-
-
-def read_bucketed_state(
-    spark: SparkSession,
-    path: str,
-    col: str = BUCKET_COL,
-    buckets: Sequence[int] | None = None,
-) -> DataFrame | None:
-    """Read `path/<col>=<i>/` partitioned state, recovering any partition a
-    crash left stranded under `<path>.old/` (the per-bucket analogue of
-    read_state's promotion). ``col`` is the partition column.
-
-    ``buckets`` prunes the read to exactly those partition DIRECTORIES:
-    Spark's file index then never lists the untouched ones. A whole-table
-    read + `.where(col.isin(...))` prunes the SCAN but still pays a full
-    partition-discovery listing per call — at the production bucket count
-    (10^4-10^5 dirs on an object store) that listing alone dominates a
-    small batch, exactly the touched-file-set economy a Delta/Iceberg
-    MERGE gets from its transaction log."""
-    recover_buckets(path, col)
-    if buckets is not None:
-        dirs = [
-            d
-            for b in buckets
-            if os.path.isdir(d := os.path.join(path, f"{col}={b}"))
-        ]
-        if not dirs:
-            return None
-        # basePath keeps <col> as a real column parsed from the dir name
-        return spark.read.option("basePath", path).parquet(*dirs)
-    if not os.path.isdir(path) or not any(
-        n.startswith(f"{col}=") for n in os.listdir(path)
-    ):
-        return None
-    return spark.read.parquet(path)
-
-
-def swap_buckets(
-    merged: DataFrame, path: str, touched: Sequence[int], col: str = BUCKET_COL
-) -> None:
-    """Replace exactly the `touched` bucket directories of `path` with the
-    corresponding partitions of `merged` (which must carry BUCKET_COL).
-
-    Write-then-rename per bucket: each bucket flip is atomic, and a crash
-    mid-loop leaves every bucket either pre- or post-batch — merge_batch
-    is idempotent, so the checkpoint replay converges. Untouched buckets
-    are never read, rewritten, or even listed. On a real cluster this is
-    `MERGE INTO state` on a table partitioned/clustered by bucket —
-    Delta/Iceberg prune to the same touched file set."""
-    swap_buckets_begin(merged, path, col)
-    swap_buckets_commit(path, touched, col)
-
-
-def swap_buckets_begin(
-    merged: DataFrame, path: str, col: str = BUCKET_COL
-) -> None:
-    """Phase 1 of swap_buckets: the one Spark job, materializing merged
-    to `<path>.tmp/<col>=<i>/` WITHOUT touching `path` — so a caller can
-    run it concurrently with other jobs that still READ `path` (the IVM
-    per-batch fold) and flip directories later."""
-    tmp = path + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").partitionBy(col).parquet(tmp)
-
-
-def swap_buckets_commit(
-    path: str, touched: Sequence[int], col: str = BUCKET_COL
-) -> None:
-    """Phase 2 of swap_buckets: per-bucket atomic directory flips (crash
-    semantics identical to the fused call — read_bucketed_state recovers
-    any bucket stranded under `.old`)."""
-    tmp = path + ".tmp"
-    os.makedirs(path, exist_ok=True)
-    oldroot = path + ".old"
-    for b in touched:
-        src = os.path.join(tmp, f"{col}={b}")
-        dst = os.path.join(path, f"{col}={b}")
-        old = os.path.join(oldroot, f"{col}={b}")
-        os.makedirs(oldroot, exist_ok=True)
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(oldroot, ignore_errors=True)
 
 
 class ParquetCollection:

@@ -33,9 +33,11 @@ State layout, under ``path``:
   empty-text guard (cdc.apply.eligible_events) followed by each key's
   max-lsn event (cdc.segments.max_lsn_per). An apply appends the
   batch's winners as one segment;
-- ``agg/`` — one row per group (dashboard-cardinality), rewritten per
-  batch by cdc.apply.swap_write; ``IncrementalDistinctCount`` adds its
-  value level ``dv/``, hash-bucketed dirs swapped per touched bucket;
+- ``agg/`` — one row per group (dashboard-cardinality): a segment log
+  rewritten per batch by one ``replace``; ``IncrementalDistinctCount``
+  adds its value level ``dv/``, a segment log partitioned by
+  ``dvbucket`` to which a batch appends only the value rows it changes,
+  versioned by the batch's epoch stamp (``lsn``);
 - ``_epoch_state`` / ``_epoch_agg`` — the crash stamps below.
 
 Per batch:
@@ -50,26 +52,29 @@ Per batch:
    NULL author/group key is maintained exactly — a join-based delta
    would silently never match NULL keys;
 3. the agg table is merged with Δ by the same union+re-aggregate and
-   swapped; groups whose live-row count reaches 0 are dropped. The
+   replaced; groups whose live-row count reaches 0 are dropped. The
    state append runs concurrently with the agg write, which reads only
-   immutable segments and the prior agg file.
+   immutable segments (gc keeps a dropped one for ``keep_manifests``
+   generations).
 
-Crash consistency: the state append and the agg swap commit two stores,
-so both carry an epoch stamp (``_epoch_state`` / ``_epoch_agg`` sidecar
-files, written via atomic rename). The state stamp is advanced BEFORE
-the state append, the agg stamp AFTER the agg swap — any crash between
-leaves the stamps unequal, and the next ``apply_batch``/``read``
-detects it and REBUILDS the agg from the full live state
-(``store.read()``, O(state), recovery-only) before proceeding. A crash
-before the state's manifest publish leaves the state as it was (an
-unreferenced segment dir, removed by gc). The replayed batch then folds
-in idempotently (the merge rule is idempotent, and the rebuilt agg is
-consistent with whatever state generation the crash left). Without the
-stamps, a crash between the two commits would make the replayed delta
-evaluate to ~0 and silently lose the batch. A state written by the
-earlier layout (root ``state/bucket=<i>/`` dirs swapped in place) opens
-as one adopted segment (cdc.segments module docstring); the epoch files
-and the agg and dv stores keep their places.
+Crash consistency: every store commits by its own manifest publish
+(cdc.segments), so the state append and the derived writes commit
+separately, joined by an epoch stamp (``_epoch_state`` / ``_epoch_agg``
+sidecar files, written via atomic rename). The state stamp is advanced
+BEFORE the state append, the agg stamp AFTER the derived commits — any
+crash between leaves the stamps unequal, and the next
+``apply_batch``/``read`` detects it and REBUILDS each derived store
+from the full live state (``store.read()``, O(state), recovery-only)
+with one ``replace`` before proceeding. A crash before a manifest
+publish leaves that store as it was (an unreferenced segment dir,
+removed by gc). The replayed batch then folds in idempotently (the
+merge rule is idempotent, and the rebuilt stores are consistent with
+whatever state generation the crash left). Without the stamps, a crash
+between the commits would make the replayed delta evaluate to ~0 and
+silently lose the batch. Stores of the earlier rename-swapped layout
+open in place: root ``state/bucket=<i>/`` and ``dv/dvbucket=<i>/`` dirs
+as one adopted segment each (cdc.segments module docstring), and a
+plain parquet ``agg/`` is rebuilt once from the state.
 
 Chunked mode (``chunked=True``): state rows are per-chunk
 (pk='<base>#<k>') but deletes arrive as ONE base-id row and a
@@ -96,26 +101,16 @@ individually graded registry entry.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..session import memo, state_dir
-from .apply import (
-    BUCKET_COL,
-    bucket_expr,
-    eligible_events,
-    read_bucketed_state,
-    read_state,
-    swap_buckets,
-    swap_buckets_begin,
-    swap_buckets_commit,
-    swap_write,
-    swap_write_begin,
-    swap_write_commit,
-)
+from .apply import BUCKET_COL, bucket_expr, eligible_events
 from .envelope import OP_DELETE
 from .segments import SegmentStore, _clustered, max_lsn_per
 
@@ -173,6 +168,32 @@ def _write_epoch(path: str, value: int) -> None:
     with open(tmp, "w", encoding="ascii") as f:
         f.write(str(value))
     os.replace(tmp, path)  # atomic on POSIX
+
+
+def _replaced(rows: DataFrame) -> DataFrame:
+    """The merge rule of an ``agg`` store: only ``replace`` writes it,
+    so it holds one segment, read as it is."""
+    return rows
+
+
+def _earlier_agg(path: str) -> bool:
+    """Whether ``path`` holds an agg of the earlier layout: a plain
+    parquet dir swapped by rename, with its files at the root, or
+    stranded whole at ``<path>.old`` by a crash."""
+    return os.path.isdir(path + ".old") or (
+        os.path.isdir(path)
+        and any(os.path.isfile(os.path.join(path, n)) for n in os.listdir(path))
+    )
+
+
+def _drop_earlier(path: str) -> None:
+    """Remove an agg of the earlier layout once its rebuild is published."""
+    for p in (path + ".old", path + ".tmp"):
+        shutil.rmtree(p, ignore_errors=True)
+    if os.path.isdir(path):
+        for n in os.listdir(path):
+            if os.path.isfile(os.path.join(path, n)):
+                os.remove(os.path.join(path, n))
 
 
 class _RowState:
@@ -270,8 +291,7 @@ class IncrementalGroupAgg:
         base_col: str = "base_pk",
     ):
         self.spark = spark
-        self.root = path
-        self.agg_path = path + "/agg"
+        self.agg_store = SegmentStore(spark, path + "/agg", None, _replaced)
         self._epoch_state = path + "/_epoch_state"
         self._epoch_agg = path + "/_epoch_agg"
         if group_cols is None:
@@ -550,19 +570,19 @@ class IncrementalGroupAgg:
 
     def _recover_if_torn(self) -> None:
         """Rebuild the agg from the full live state when the epoch stamps
-        disagree (the crash-between-the-two-swaps case) OR when the
-        stored agg's columns don't cover this instance's accumulator
-        layout (an agg written by an older build or a different aggs
-        spec — rebuilding from state self-heals instead of failing
-        every subsequent batch with an AnalysisException). O(state),
-        runs only on recovery.
+        disagree (the crash-between-the-commits case) OR when the
+        stored agg is of the earlier layout or its columns don't cover
+        this instance's accumulator layout (an agg written by an older
+        build or a different aggs spec — rebuilding from state
+        self-heals instead of failing every subsequent batch with an
+        AnalysisException). O(state), runs only on recovery.
 
         Single-process contract: the stamps are legitimately unequal
         for the duration of every in-flight apply_batch, so this check
         belongs to the writer (the one foreachBatch thread) and to
         fresh readers attaching AFTER a crash — a concurrent live
-        dashboard should read the agg parquet directly rather than
-        calling read() on a second instance while the writer runs."""
+        dashboard should read the agg store's newest generation rather
+        than calling read() on a second instance while the writer runs."""
         se, ae = _read_epoch(self._epoch_state), _read_epoch(self._epoch_agg)
         # The stale-schema probe (a parquet footer read per call) only
         # matters when ATTACHING to a store written by another build —
@@ -572,24 +592,24 @@ class IncrementalGroupAgg:
         # parquet listing+schema read per batch).
         stale_schema = False
         if not getattr(self, "_schema_ok", False):
-            raw = read_state(self.spark, self.agg_path)
+            raw = self.agg_store.read()
             needed = (
                 set(self.out_groups)
                 | set(self._acc_names())
                 | set(self._mm_names())
             )
-            stale_schema = raw is not None and not needed <= set(raw.columns)
+            stale_schema = _earlier_agg(self.agg_store.path) or (
+                raw is not None and not needed <= set(raw.columns)
+            )
             self._schema_ok = not stale_schema
         if se == ae and not stale_schema:
             return
         full = self.state.store.read()
         if full is None:
-            import shutil
-
-            shutil.rmtree(self.agg_path, ignore_errors=True)
-            shutil.rmtree(self.agg_path + ".old", ignore_errors=True)
+            shutil.rmtree(self.agg_store.path, ignore_errors=True)
         else:
-            swap_write(self._live_agg(full).coalesce(1), self.agg_path)
+            self.agg_store.replace(self._live_agg(full).coalesce(1))
+        _drop_earlier(self.agg_store.path)
         _write_epoch(self._epoch_agg, se)
 
     # ---- per-batch fold --------------------------------------------------
@@ -616,26 +636,23 @@ class IncrementalGroupAgg:
             if before is None
             else self._resum(after, self._negate(before))
         )
-        cur = read_state(self.spark, self.agg_path)
+        cur = self.agg_store.read()
         new_agg = delta if cur is None else self._resum(cur, delta)
         if mm:
             new_agg = self._attach_mm(new_agg, cur, before, after, merged, touched)
         new_agg = new_agg.where(F.col(_LIVE) > 0).coalesce(1)
         epoch = _read_epoch(self._epoch_state) + 1
         # stamp order: state stamp BEFORE the state mutation, agg stamp
-        # AFTER the agg swap — a crash anywhere between leaves them
+        # AFTER the agg commit — a crash anywhere between leaves them
         # unequal and the next call rebuilds (module docstring)
         _write_epoch(self._epoch_state, epoch)
-        # The agg tmp write and the state append run CONCURRENTLY: the
-        # agg job evaluates Δ against `prior`'s segments and the prior
-        # agg file, which stay in place (segments are immutable, and gc
-        # keeps compaction inputs for keep_manifests generations; the
-        # agg file flips only at the commit below)
-        from concurrent.futures import ThreadPoolExecutor
-
+        # The agg replace and the state append run CONCURRENTLY: the agg
+        # job evaluates Δ against `prior`'s segments and the prior agg
+        # segment, which stay in place (segments are immutable, and gc
+        # keeps dropped ones for keep_manifests generations)
         with ThreadPoolExecutor(max_workers=2) as pool:
             fs = [
-                pool.submit(swap_write_begin, new_agg, self.agg_path),
+                pool.submit(self.agg_store.replace, new_agg),
                 pool.submit(self.state.store.append, events),
             ]
             for f in fs:
@@ -644,7 +661,6 @@ class IncrementalGroupAgg:
             after.unpersist()
             if before is not None:
                 before.unpersist()
-        swap_write_commit(self.agg_path)
         _write_epoch(self._epoch_agg, epoch)
 
     # ---- reads -----------------------------------------------------------
@@ -654,7 +670,7 @@ class IncrementalGroupAgg:
         live count, avg = sum/cnt, var = population variance from the
         (sum, ssq, cnt) accumulators."""
         self._recover_if_torn()
-        raw = read_state(self.spark, self.agg_path)
+        raw = self.agg_store.read()
         if raw is None:
             return None
         cols: list[Column] = [F.col(g) for g in self.out_groups]
@@ -722,8 +738,11 @@ class IncrementalDistinctCount:
       before/after images of the touched buckets per batch);
     - ``dv``   — the value level: one row per (group, spec, value)
       holding ``_cnt`` = number of live rows in the group carrying that
-      value, partitioned by ``dvbucket = pmod(xxhash64(group), n)`` so a
-      batch reads/rewrites only the buckets of the groups it touched;
+      value, a segment log partitioned by ``dvbucket =
+      pmod(xxhash64(group), n)`` so a batch reads only the buckets of the
+      groups it touched; it appends the new count of each value row it
+      changes, stamped with its epoch as ``lsn`` (a count of 0 is the
+      tombstone of a value no live row holds any more);
     - ``agg``  — one row per group: ``_LIVE`` plus one BIGINT distinct
       count per spec, maintained ADDITIVELY from the transition deltas
       (a value appearing: +1; the last live holder leaving: −1).
@@ -736,8 +755,9 @@ class IncrementalDistinctCount:
     STRING)`` rendering — injective for the string/整数-typed exprs this
     is for; document the cast when adding exotic types. Crash
     consistency follows the IncrementalGroupAgg stamp protocol: state
-    stamp before the three mutations, agg stamp after — a torn batch
-    rebuilds dv + agg from the full live state on the next call.
+    stamp before the three commits, agg stamp after — a torn batch
+    rebuilds dv + agg from the full live state on the next call, one
+    ``replace`` each.
     Chunked replace-set mode is not supported (use the base collection's
     semantics); the constructor rejects it loudly."""
 
@@ -754,8 +774,6 @@ class IncrementalDistinctCount:
         dv_buckets: int = 64,
     ):
         self.spark = spark
-        self.dv_path = path + "/dv"
-        self.agg_path = path + "/agg"
         self._epoch_state = path + "/_epoch_state"
         self._epoch_agg = path + "/_epoch_agg"
         if group_cols is None:
@@ -767,6 +785,12 @@ class IncrementalDistinctCount:
             ("grp",) if len(self.group_cols) == 1 else self.group_cols
         )
         self.dv_buckets = dv_buckets
+        vkey = (*self.out_groups, "_spec", "_val")
+        self.dv_store = SegmentStore(
+            spark, path + "/dv", (*vkey, "_cnt", "lsn", DV_BUCKET),
+            max_lsn_per(DV_BUCKET, *vkey), DV_BUCKET,
+        )
+        self.agg_store = SegmentStore(spark, path + "/agg", None, _replaced)
         self.specs = distinct_specs(specs)
         self.state = _RowState(spark, path + "/state", text_cols, key_cols, n_buckets)
         bad = {s["name"] for s in self.specs} & set(self.out_groups)
@@ -823,21 +847,18 @@ class IncrementalDistinctCount:
 
     # ---- crash recovery -------------------------------------------------
 
-    def _rebuild(self) -> None:
+    def _rebuild(self, epoch: int) -> None:
         """O(state) rebuild of dv + agg from the full live state
         (recovery / first attach after a torn batch)."""
-        import shutil
-
         full = self.state.store.read()
         if full is None:
-            for p in (self.dv_path, self.agg_path):
-                shutil.rmtree(p, ignore_errors=True)
-                shutil.rmtree(p + ".old", ignore_errors=True)
+            for store in (self.dv_store, self.agg_store):
+                shutil.rmtree(store.path, ignore_errors=True)
             return
-        dv = self._value_counts(full).withColumn(DV_BUCKET, self._dv_bucket_expr())
-        swap_buckets(
-            dv.repartition(self.dv_buckets, DV_BUCKET),
-            self.dv_path, list(range(self.dv_buckets)), col=DV_BUCKET,
+        self.dv_store.replace(
+            self._value_counts(full)
+            .withColumn("lsn", F.lit(epoch).cast("long"))
+            .withColumn(DV_BUCKET, self._dv_bucket_expr())
         )
         agg = self._live_counts(full)
         dcounts = (
@@ -846,8 +867,7 @@ class IncrementalDistinctCount:
             .pivot("_spec", [s["name"] for s in self.specs])
             .agg(F.count(F.lit(1)))
         )
-        agg = self._merge_agg_sides(agg, dcounts)
-        swap_write(agg.coalesce(1), self.agg_path)
+        self.agg_store.replace(self._merge_agg_sides(agg, dcounts).coalesce(1))
 
     def _merge_agg_sides(self, live_side: DataFrame, d_side: DataFrame) -> DataFrame:
         """NULL-group-safe outer merge of the _LIVE frame and the
@@ -872,9 +892,10 @@ class IncrementalDistinctCount:
 
     def _recover_if_torn(self) -> None:
         se, ae = _read_epoch(self._epoch_state), _read_epoch(self._epoch_agg)
-        if se == ae:
+        if se == ae and not _earlier_agg(self.agg_store.path):
             return
-        self._rebuild()
+        self._rebuild(se)
+        _drop_earlier(self.agg_store.path)
         _write_epoch(self._epoch_agg, se)
 
     # ---- per-batch fold ---------------------------------------------------
@@ -943,13 +964,7 @@ class IncrementalDistinctCount:
         )
         # old-vs-new per touched value row: union-tag (o = prior cnt,
         # d = delta), new = o + d; 0↔>0 transitions drive the group count
-        prior_dv = (
-            read_bucketed_state(
-                self.spark, self.dv_path, col=DV_BUCKET, buckets=dtouched
-            )
-            if dtouched
-            else None
-        )
+        prior_dv = self.dv_store.read(parts=dtouched) if dtouched else None
         vkey = [*self.out_groups, "_spec", "_val"]
         sides = [
             delta.select(
@@ -970,16 +985,19 @@ class IncrementalDistinctCount:
         combined = combined.groupBy(*vkey, DV_BUCKET).agg(
             F.sum("_o").alias("_o"), F.sum("_d").alias("_d")
         ).withColumn("_n", F.col("_o") + F.col("_d")).coalesce(4)
-        # combined feeds two consumers (the new dv table, the transition
+        # combined feeds two consumers (the dv append, the transition
         # aggregate) — but both run as CONCURRENT jobs below, so instead
         # of a persist (whose lazy build the two would race for — the
         # d40/d2 lesson) or an eager pin (one more sequential job), each
         # consumer just recomputes this one counter-row-sized shuffle
-        # from the delta checkpoint + the prior dv files; the duplicate
-        # work is hidden under the jobs' parallelism, and the dv COMMIT
-        # (directory flips) is deferred until both readers finish
-        new_dv = combined.where(F.col("_n") > 0).select(
-            *vkey, F.col("_n").alias("_cnt"), DV_BUCKET
+        # from the delta checkpoint + the prior dv segments; the
+        # duplicate work is hidden under the jobs' parallelism. The dv
+        # append holds only the value rows the batch changes (d ≠ 0),
+        # a new count of 0 being the value's tombstone
+        epoch = _read_epoch(self._epoch_state) + 1
+        new_dv = combined.where(F.col("_d") != 0).select(
+            *vkey, F.col("_n").alias("_cnt"),
+            F.lit(epoch).cast("long").alias("lsn"), DV_BUCKET,
         )
         # the new agg in ONE shuffle: union RAW contribution rows — the
         # prior agg table, the per-group live-count deltas (the MARKER
@@ -990,7 +1008,7 @@ class IncrementalDistinctCount:
         # cur-union chain of four shuffles). The
         # union+GROUP BY form stays NULL-group-safe, like the old
         # _merge_agg_sides; the job reads ONLY the delta checkpoint, the
-        # pinned combined cache and the prior agg file — never the state.
+        # prior dv segments and the prior agg segment — never the state.
         names = [s["name"] for s in self.specs]
 
         def _contrib(df, live_expr, spec_exprs):
@@ -1013,7 +1031,7 @@ class IncrementalDistinctCount:
                 [F.when(F.col("_spec") == n, trans_expr).otherwise(0) for n in names],
             ),
         ]
-        cur = read_state(self.spark, self.agg_path)
+        cur = self.agg_store.read()
         if cur is not None:
             sides_agg.append(
                 cur.select(
@@ -1029,42 +1047,29 @@ class IncrementalDistinctCount:
             F.sum(_LIVE).alias(_LIVE), *[F.sum(n).alias(n) for n in names]
         )
         new_agg = new_agg.where(F.col(_LIVE) > 0).coalesce(1)
-        # run the three independent write jobs concurrently: the agg tmp
-        # write (invisible until its commit rename), the state append
-        # and the dv tmp write. Nothing any writer reads is replaced
-        # while they run — the agg and dv jobs read the delta checkpoint
-        # + the PRIOR dv files + the prior agg file, and both the dv and
-        # agg directory flips are deferred until every job finishes.
-        # Crash consistency is the torn-epoch window; the rebuild path
-        # covers it.
-        epoch = _read_epoch(self._epoch_state) + 1
+        # run the three independent write jobs concurrently: the agg
+        # replace, the state append and the dv append. Nothing any
+        # writer reads is removed while they run — the agg and dv jobs
+        # read the delta checkpoint + the PRIOR dv segments + the prior
+        # agg segment, all immutable, and gc keeps a dropped segment for
+        # keep_manifests generations. Crash consistency is the
+        # torn-epoch window; the rebuild path covers it.
         _write_epoch(self._epoch_state, epoch)
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=3) as pool:
             fs = [
-                pool.submit(swap_write_begin, new_agg, self.agg_path),
+                pool.submit(self.agg_store.replace, new_agg),
                 pool.submit(self.state.store.append, events),
             ]
             if dtouched:
-                fs.append(
-                    pool.submit(
-                        swap_buckets_begin,
-                        new_dv.repartition(len(dtouched), DV_BUCKET),
-                        self.dv_path, DV_BUCKET,
-                    )
-                )
+                fs.append(pool.submit(self.dv_store.append, new_dv))
             for f in fs:
                 f.result()
-        if dtouched:
-            swap_buckets_commit(self.dv_path, dtouched, DV_BUCKET)
-        swap_write_commit(self.agg_path)
         _write_epoch(self._epoch_agg, epoch)
 
     def read(self) -> DataFrame | None:
         """(groups…, <spec name> BIGINT per spec), one row per live group."""
         self._recover_if_torn()
-        raw = read_state(self.spark, self.agg_path)
+        raw = self.agg_store.read()
         if raw is None:
             return None
         return raw.select(
@@ -1089,7 +1094,7 @@ class IncrementalDistinctCount:
         if k < 1:
             raise ValueError(f"k must be >= 1, got {k}")
         self._recover_if_torn()
-        raw = read_state(self.spark, self.dv_path)
+        raw = self.dv_store.read()
         if raw is None:
             return None
         w = Window.partitionBy(*self.out_groups, "_spec").orderBy(
@@ -1132,9 +1137,10 @@ class IncrementalDistinctCount:
         if not qs or any(q < 1 or q > 100 for q in qs):
             raise ValueError(f"qs must be percentiles in [1, 100], got {qs}")
         self._recover_if_torn()
-        raw = read_state(self.spark, self.dv_path)
+        raw = self.dv_store.read()
         if raw is None:
             return None
+        raw = raw.where(F.col("_cnt") > 0)
         if spec is not None:
             raw = raw.where(F.col("_spec") == spec)
         keys = [*self.out_groups, "_spec"]
@@ -1197,8 +1203,6 @@ def _replayed_distinct_state(
     batched-epoch apply (the delta-vs-state exercise lives in
     tests/test_ivm.py's per-batch walks, which pin incremental ≡
     recompute at every step), once per (app, sf_dir)."""
-    import shutil
-
     from . import transform
     from .changelog import MAPPED, changes_df
 
@@ -1212,9 +1216,9 @@ def _replayed_distinct_state(
             ],
             # 4 buckets, not 8: bucket count is pure layout (answers are
             # bucket-invariant, pinned in tests/test_ivm.py) and at the
-            # replay's batch sizes each swap's wall is dominated by
-            # per-bucket dir/task/commit overhead — production states
-            # size n_buckets to the data (apply.py docstring)
+            # replay's batch sizes each write's wall is dominated by
+            # per-partition file/task overhead — production states
+            # size n_buckets to the data
             n_buckets=4, dv_buckets=4,
         )
         ch = transform.filter_mapped(changes_df(spark, sf_dir), MAPPED).persist()
@@ -1357,7 +1361,6 @@ def c12_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly in test_replay_batched_equals_sequential. A per-batch loop
     would measure the replay's protocol job count, not data; production
     foreachBatch callers keep the per-batch apply_batch contract."""
-    import shutil
     import tempfile
 
     from . import transform

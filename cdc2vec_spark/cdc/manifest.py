@@ -1,17 +1,18 @@
 """Object-store-safe state commits: a manifest-generation protocol that
 never renames and never overwrites a data object.
 
-``cdc.apply.swap_buckets`` is POSIX-rename based — correct on a local
-filesystem, impossible on S3/GCS/ABFS (object stores have no rename; a
-"rename" is copy+delete and is not atomic). ``ManifestStore`` is the
-standard object-store answer, the same design Delta Lake / Iceberg
-commit logs use, reduced to a versioned map from integer keys to data
-directories. One store commits through it: the segment log of
+A rename-swapped state directory is POSIX-rename based — correct on a
+local filesystem, impossible on S3/GCS/ABFS (object stores have no
+rename; a "rename" is copy+delete and is not atomic). ``ManifestStore``
+is the standard object-store answer, the same design Delta Lake /
+Iceberg commit logs use, reduced to a versioned map from integer keys to
+data directories. One store commits through it: the segment log of
 ``cdc.segments``, keyed by segment sequence number, which holds every
-keyed state (points, row state, the two in-engine indexes, the IVM and
-join-view base states and the SCD2 history). The aggregate stores
-derived from them (cdc.ivm ``agg``/``dv``, cdc.delta_join ``fkidx``/
-``view``/``agg``, streaming.neardup) still swap by rename.
+engine state (points, row state, the two in-engine indexes, the IVM and
+join views with their derived stores, the SCD2 history and the
+streaming near-dup tables). Only the cadence report dirs, which outside
+readers open as plain parquet, still swap by rename
+(``cdc.apply.swap_write``).
 
 - **Data objects are immutable and uniquely named.** Each commit writes
   its data to a fresh directory under ``data/``. Nothing ever rewrites

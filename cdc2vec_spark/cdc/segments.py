@@ -2,31 +2,36 @@
 write and never reads (a size-tiered log-structured merge layout, O'Neil
 et al. 1996, with the max-LSN-per-key merge as its merge rule), committed
 through the manifest generations of ``cdc.manifest.ManifestStore``. It
-holds every keyed state with a max-LSN or (key, lsn) merge rule:
+is the one commit path of every engine state:
 
 - the keyed points (``runner.PointsCollection`` and its chunked
   subclass) and the keyed row state (``cdc.apply.ParquetCollection``);
 - the two in-engine indexes (``operators.ann_index.IncrementalIvfIndex``,
   ``operators.lex_index.IncrementalLexicalIndex``);
-- the LWW row state under the IVM views (``cdc.ivm.IncrementalGroupAgg``,
-  ``cdc.ivm.IncrementalDistinctCount``), partitioned by ``bucket``;
-- the two base states of ``cdc.delta_join.IncrementalJoinView``,
-  partitioned by ``jbucket``;
-- the event rows of ``cdc.scd2.Scd2History``.
+- the IVM views of ``cdc.ivm``: the LWW row state, partitioned by
+  ``bucket``, the value level ``dv``, partitioned by ``dvbucket``, and
+  the one-row-per-group ``agg``;
+- the join view of ``cdc.delta_join``: the two base states and the
+  derived ``fkidx`` and ``view``, partitioned by ``jbucket``, and its
+  ``agg``;
+- the event rows of ``cdc.scd2.Scd2History``;
+- the ``index``, ``docs`` and ``pairs`` of ``streaming.neardup``.
 
-The stores derived from these by reading, modifying and writing
-aggregate rows (the IVM ``agg`` and ``dv`` tables, the join view's
-``fkidx``, ``view`` and ``agg``, ``streaming.neardup``) stay on
-``cdc.apply.swap_buckets``/``swap_write``; an IVM state and its derived
-stores commit separately, joined by epoch stamps (cdc.ivm docstring).
+A derived store (``dv``, ``fkidx``, ``view``, the neardup tables) appends
+each batch's changed rows as after-images: a row whose key the batch
+drops is appended as a tombstone, and readers filter tombstones. Each
+``agg`` is rewritten per batch by ``replace``. An IVM state and its
+derived stores commit separately, joined by epoch stamps (cdc.ivm
+docstring).
 
 Layout of a store directory:
 
 - ``data/seg-<level>-<hex>/``: one immutable parquet segment, written
   once under a fresh name. A micro-batch lands as a level-0 segment
   holding only its winning events. A store with a partition column
-  (the indexes' ``cell`` or ``bucket``, the IVM states' ``bucket``, the
-  join view's ``jbucket``) writes each segment as ``<col>=<v>/`` dirs,
+  (the indexes' ``cell`` or ``bucket``, the IVM states' ``bucket`` and
+  ``dvbucket``, the join view's ``jbucket``, the neardup tables'
+  ``bucket``, ``dbucket`` and ``pbucket``) writes each segment as ``<col>=<v>/`` dirs,
   one file per partition, and a read can list just the partitions it
   needs in each live segment. Spark lists more than
   ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) paths
@@ -76,18 +81,22 @@ oldest segment(s) and folded in by the first compaction:
   ``data/commit-*/`` read together as one level-0 segment older than
   any other;
 - the rename-published layouts, root ``seg-<level>-<seq>/`` dirs and the
-  older root ``bucket=<i>/`` dirs (points, row state of the former
+  older root ``<col>=<i>/`` dirs (points, row state of the former
   bucketed ``ParquetCollection``, an index's root ``cell=<i>/`` or
-  ``bucket=<i>/`` dirs, an IVM state's ``bucket=<i>/``, a join base
-  state's ``jbucket=<i>/`` or the SCD2 history's ``bucket=<i>/`` dirs,
-  matched on the store's own partition column or ``bucket``),
-  which only existed on local filesystems: the first call promotes any
-  partition a crash stranded under ``<path>.old/``, then moves them into
-  ``data/`` once, the ``seg-*`` dirs under their own names and seqs and
-  the partition dirs into one segment ``seg-0-buckets`` of seq -1, a
-  name and seq no rename-era segment had. It publishes their manifest
-  before the move, so a crash mid-move resumes, and before any append
-  publishes. Stranded ``_tmp-*`` writes move in unreferenced, for gc.
+  ``bucket=<i>/`` dirs, an IVM state's ``bucket=<i>/`` or value level's
+  ``dvbucket=<i>/``, a join base state's or derived store's
+  ``jbucket=<i>/``, the SCD2 history's ``bucket=<i>/`` or a neardup
+  table's ``bucket=``/``dbucket=``/``pbucket=<i>/`` dirs, matched on the
+  store's own partition column or ``bucket``), which only existed on
+  local filesystems: the first call promotes any partition a crash
+  stranded under ``<path>.old/``, then moves them into ``data/`` once,
+  the ``seg-*`` dirs under their own names and seqs and the partition
+  dirs into one segment ``seg-0-buckets`` of seq -1, a name and seq no
+  rename-era segment had. It publishes their manifest before the move,
+  so a crash mid-move resumes, and before any append publishes. Stranded
+  ``_tmp-*`` writes move in unreferenced, for gc. The derived stores of
+  that layout stored no version and no op: their rows read as upserts
+  (op ``c``) at version (``lsn``) 0, older than any later write.
 """
 
 from __future__ import annotations
@@ -108,6 +117,8 @@ from .apply import BUCKET_COL, recover_buckets
 from .manifest import ManifestStore
 
 FAN_IN = 4
+# the columns that rows of an earlier layout may lack: upserts at version 0
+_EARLIER = {"lsn": (0, "long"), "op": ("c", "string")}
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 BASE_LEVEL = 64  # a replaced state: size-tiered merges never reach it
 _SEGMENT = re.compile(r"seg-(\d+)-.+")
@@ -259,14 +270,23 @@ class SegmentStore:
                 reader = self.spark.read.option("basePath", d)
                 if d in self._schemas:
                     reader = reader.schema(self._schemas[d])
-                frames.append(reader.parquet(*sub[i : i + limit]))
-                self._schemas[d] = frames[-1].schema
+                df = reader.parquet(*sub[i : i + limit])
+                self._schemas[d] = df.schema
+                frames.append(self._project(self._versioned(df)))
         if not frames:
             return None
-        return self._project(reduce(DataFrame.unionByName, frames))
+        return reduce(DataFrame.unionByName, frames)
 
     def _project(self, df: DataFrame) -> DataFrame:
         return df if self.cols is None else df.select(*self.cols)
+
+    def _versioned(self, rows: DataFrame) -> DataFrame:
+        """Stored rows with the stored columns that rows of an earlier
+        layout lack: they read as upserts at version 0."""
+        for col, (value, kind) in _EARLIER.items():
+            if col in (self.cols or ()) and col not in rows.columns:
+                rows = rows.withColumn(col, F.lit(value).cast(kind))
+        return rows
 
     def _write(self, df: DataFrame, level: int) -> str:
         name = f"seg-{level}-{uuid.uuid4().hex}"

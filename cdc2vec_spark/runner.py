@@ -354,7 +354,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
         # maintain the streaming MinHash-LSH near-dup state from the
         # same stream (streaming/neardup.py): each batch is checked
         # against everything ingested before it, and the verified pair
-        # GRAPH accumulates in bucketed parquet. ``options.report_every
+        # GRAPH accumulates in a segment log. ``options.report_every
         # = N`` (the distinct_agg topk_every twin) materializes the five
         # graph-family reports (survivors / cluster_histogram / split /
         # pagerank / source_overlap — the d9/d44/d46/d47/d48 faces) from the
@@ -364,7 +364,7 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
         # report set also lands on hook.last_reports.
         # ``options.source_key`` names the metadata key carried into the
         # docs state as the contamination matrix's source dimension.
-        # Deletes retire the ids from all three state tables
+        # Deletes retire the ids from all three state stores
         # (StreamingNearDup.delete_batch), so the
         # live pair state and the cadence reports track the surviving
         # collection like every other keyed state.

@@ -6,34 +6,42 @@ The batch operators (operators/dedup.py) answer "which pairs in this
 corpus are near-dups"; a 100 TB training-data pipeline also needs the
 streaming form — "is this incoming doc a near-dup of anything we
 already have" — at ingestion time, touching O(batch) state. This module
-closes that gap with the engine's bucketed-state machinery:
+closes that gap with three segment logs (cdc.segments.SegmentStore):
 
 - ``path/index``  — the banded LSH inverted index: (band, bv, doc_id)
   rows partitioned by ``bucket = pmod(xxhash64(band, bv), n_buckets)``.
-  A batch's band keys prune the read to their buckets (the same
-  O(batch + touched_buckets × bucket_size) contract as the CDC state
-  store).
+  A batch's band keys prune the read to their buckets of each live
+  segment (the O(batch + touched buckets) contract of every keyed
+  state).
 - ``path/docs``   — (doc_id, sh) shingle-hash sets for exact-Jaccard
   verification, partitioned by ``dbucket = pmod(xxhash64(doc_id),
   n_buckets)`` — read only for the candidate ids' buckets.
-- ``path/pairs``  — (round 11, VERDICT r10 ask #5) the ACCUMULATED
-  verified near-dup pair set (id_a, id_b, jac), partitioned by
-  ``pbucket = pmod(xxhash64(id_a, id_b), n_buckets)``: each batch
-  merges only the pair buckets it touched (distinct ∪ prior, per-bucket
-  swap — idempotent under replay), so the engine maintains the whole
-  near-dup GRAPH incrementally at ingest. The batch graph reports
-  (survivors, cluster histogram, leakage split, PageRank, cross-source
-  overlap — the d9/d44/d46/d47/d48 family) can then run off this state
-  via ``graph_reports()`` in O(pairs + touched) per refresh instead of
-  re-deriving shingles → candidates → verification from the corpus —
-  the same move c12's IVM made for aggregates.
+- ``path/pairs``  — the ACCUMULATED verified near-dup pair set (id_a,
+  id_b, jac), partitioned by ``pbucket = pmod(xxhash64(id_a, id_b),
+  n_buckets)``: each batch appends the pairs it verified, so the engine
+  maintains the whole near-dup GRAPH incrementally at ingest. The batch
+  graph reports (survivors, cluster histogram, leakage split, PageRank,
+  cross-source overlap — the d9/d44/d46/d47/d48 family) can then run
+  off this state via ``graph_reports()`` in O(pairs + touched) per
+  refresh instead of re-deriving shingles → candidates → verification
+  from the corpus — the same move c12's IVM made for aggregates.
+
+Each store appends only the rows a batch changes. Their version
+(``lsn``) is the store's next manifest version, so a later write always
+beats an earlier one; a retired row is appended as a tombstone (op
+``d``), each key resolves to its newest row (cdc.segments.max_lsn_per)
+and readers filter tombstones. Stores of the earlier rename-swapped
+layout (root ``bucket=``, ``dbucket=`` or ``pbucket=<i>/`` dirs) open in
+place as one adopted segment each, their rows read as version 0.
 
 Per batch: ONE fused Arrow pass computes shingles + signatures
 (dedup.shingle_minhash), band keys join against the pruned prior index
 (new-vs-old) and self-join within the batch (new-vs-new), exact Jaccard
-verifies candidates only, and both state tables merge idempotently
-(distinct ∪ prior, per-bucket swap) — replaying a batch emits the same
-pairs and leaves state unchanged.
+verifies candidates only, and the batch's index rows, docs and pairs
+are appended — replaying a batch emits the same pairs and leaves the
+live state unchanged. Each store commits by its own manifest publish; a
+batch that crashes between them is redelivered, and its replay
+converges.
 
 Equivalence: banding is deterministic and a pair sharing a band bucket
 is discovered either in the arrival batch of its later doc (new-vs-old)
@@ -41,13 +49,12 @@ or within one batch (new-vs-new) — so streaming the corpus in ANY batch
 split emits exactly the pairs the batch operator finds on the full
 corpus (pinned in tests/test_neardup_stream.py).
 
-Deletes (round 13, VERDICT r12 ask #6): ``delete_batch(ids)`` retires
-the ids from all three tables — docs by pruned dbucket rewrite, index
-by recomputing the band keys from the stored shingle sets (``sig`` is a
-pure function of ``sh``) so the read prunes to exactly the deleted
-docs' buckets, pairs by one O(pairs) semi-join locating the affected
-pbuckets followed by a pruned anti-join rewrite. The live graph state
-and the cadence reports therefore track the SURVIVING corpus; pinned
+Deletes: ``delete_batch(ids)`` retires the ids from all three stores
+with tombstones — docs for the ids' live rows, index for their band
+keys, recomputed from the stored shingle sets (``sig`` is a pure
+function of ``sh``) with no index read, pairs for every live pair
+naming an id, found by one O(pairs) semi-join. The live graph state and
+the cadence reports therefore track the SURVIVING corpus; pinned
 delete ≡ never-ingested in tests/test_neardup_stream.py.
 """
 
@@ -56,7 +63,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cdc.apply import read_bucketed_state, swap_buckets
+from ..cdc.envelope import OP_DELETE
+from ..cdc.segments import SegmentStore, max_lsn_per
 from ..operators.dedup import (
     _verify_jaccard,
     banded_candidate_pairs,
@@ -66,6 +74,20 @@ from ..operators.dedup import (
 BUCKET = "bucket"
 DBUCKET = "dbucket"
 PBUCKET = "pbucket"
+
+
+def _live(store: SegmentStore, parts: list[int] | None = None) -> DataFrame | None:
+    """The store's live rows (of the ``parts`` partitions, if given)."""
+    df = store.read(parts=parts)
+    return None if df is None else df.where(F.col("op") != OP_DELETE)
+
+
+def _append(store: SegmentStore, rows: DataFrame, op: str = "c") -> None:
+    """Append ``rows`` with op ``op`` at the store's next manifest version."""
+    version = store.manifests.latest()[2] + 1
+    store.append(
+        rows.withColumn("op", F.lit(op)).withColumn("lsn", F.lit(version).cast("long"))
+    )
 
 
 class StreamingNearDup:
@@ -84,9 +106,19 @@ class StreamingNearDup:
         if num_perm % bands:
             raise ValueError(f"bands {bands} must divide num_perm {num_perm}")
         self.spark = spark
-        self.index_path = path.rstrip("/") + "/index"
-        self.docs_path = path.rstrip("/") + "/docs"
-        self.pairs_path = path.rstrip("/") + "/pairs"
+        root = path.rstrip("/")
+        self.index_store = SegmentStore(
+            spark, root + "/index", (id_col, "band", "bv", "op", "lsn", BUCKET),
+            max_lsn_per(BUCKET, "band", "bv", id_col), BUCKET,
+        )
+        self.docs_store = SegmentStore(
+            spark, root + "/docs", (id_col, "sh", *carry_cols, "op", "lsn", DBUCKET),
+            max_lsn_per(DBUCKET, id_col), DBUCKET,
+        )
+        self.pairs_store = SegmentStore(
+            spark, root + "/pairs", ("id_a", "id_b", "jac", "op", "lsn", PBUCKET),
+            max_lsn_per(PBUCKET, "id_a", "id_b"), PBUCKET,
+        )
         self.threshold = threshold
         self.num_perm = num_perm
         self.bands = bands
@@ -133,7 +165,7 @@ class StreamingNearDup:
         when its shingle set or carried columns differ from the stored
         version, that version is retired first (``delete_batch``), so
         its old band rows and pairs go. Idempotent: a replayed batch
-        leaves the state tables unchanged."""
+        leaves the live state unchanged."""
         both = shingle_minhash(
             batch.select(self.id_col, self.text_col, *self.carry_cols),
             self.shingle_n, self.num_perm, self.text_col,
@@ -151,11 +183,9 @@ class StreamingNearDup:
                 [], f"id_a {self._id_type(batch)}, id_b {self._id_type(batch)}, jac double"
             )
 
-        # touched-dir pruned read (read_bucketed_state docstring): only
-        # the batch's buckets are ever listed or scanned
-        prior_idx = read_bucketed_state(
-            self.spark, self.index_path, col=BUCKET, buckets=touched
-        )
+        # pruned read (SegmentStore.read): only the batch's buckets of
+        # each live segment are ever listed or scanned
+        prior_idx = _live(self.index_store, touched)
         cross = None
         if prior_idx is not None:
             old = prior_idx.select(
@@ -188,9 +218,7 @@ class StreamingNearDup:
                 .distinct()
                 .collect()
             )
-            prior_docs = read_bucketed_state(
-                self.spark, self.docs_path, col=DBUCKET, buckets=dbuckets
-            )
+            prior_docs = _live(self.docs_store, dbuckets)
             if prior_docs is not None:
                 old_sh = prior_docs.join(
                     cand_ids, self.id_col, "left_semi"
@@ -202,41 +230,23 @@ class StreamingNearDup:
             cands, sh_sources, self.threshold, self.id_col
         ).localCheckpoint(eager=True)
 
-        # ---- idempotent state merge (distinct ∪ prior, per-bucket swap)
-        idx_merged = new_banded
-        if prior_idx is not None:
-            idx_merged = prior_idx.select(*new_banded.columns).unionByName(
-                new_banded
-            )
-        swap_buckets(
-            idx_merged.distinct().repartition(len(touched), BUCKET),
-            self.index_path, touched, col=BUCKET,
+        # ---- append the batch's rows (a replay re-appends live rows)
+        _append(self.index_store, new_banded)
+        _append(
+            self.docs_store,
+            both.where(F.size("sh") > 0)
+            .select(self.id_col, "sh", *self.carry_cols)
+            .withColumn(DBUCKET, self._dbucket()),
         )
-
-        new_docs = both.where(F.size("sh") > 0).select(
-            self.id_col, "sh", *self.carry_cols
-        ).withColumn(DBUCKET, self._dbucket())
-        dtouched = sorted(
-            r[0] for r in new_docs.select(DBUCKET).distinct().collect()
-        )
-        if dtouched:
-            docs_merged = new_docs
-            prior_docs_all = read_bucketed_state(
-                self.spark, self.docs_path, col=DBUCKET, buckets=dtouched
-            )
-            if prior_docs_all is not None:
-                docs_merged = prior_docs_all.select(
-                    *new_docs.columns
-                ).unionByName(new_docs)
-            swap_buckets(
-                docs_merged.dropDuplicates([self.id_col]).repartition(
-                    len(dtouched), DBUCKET
-                ),
-                self.docs_path, dtouched, col=DBUCKET,
-            )
         new_banded.unpersist()
         both.unpersist()
-        self._merge_pairs_state(pairs)
+        _append(
+            self.pairs_store,
+            pairs.withColumn(
+                PBUCKET,
+                F.pmod(F.xxhash64("id_a", "id_b"), F.lit(self.n_buckets)).cast("int"),
+            ),
+        )
         return pairs
 
     def _retire_changed(self, both: DataFrame) -> None:
@@ -246,9 +256,7 @@ class StreamingNearDup:
             r[0]
             for r in new.select(self._dbucket().alias("b")).distinct().collect()
         )
-        docs = read_bucketed_state(
-            self.spark, self.docs_path, col=DBUCKET, buckets=dbuckets
-        ) if dbuckets else None
+        docs = _live(self.docs_store, dbuckets) if dbuckets else None
         if docs is None:
             return
         same = F.lit(True)
@@ -266,28 +274,25 @@ class StreamingNearDup:
         return F.pmod(F.xxhash64(self.id_col), F.lit(self.n_buckets)).cast("int")
 
     def delete_batch(self, ids: DataFrame) -> None:
-        """Retire a batch of DELETED doc ids from all three state tables
-        (round 13, VERDICT r12 ask #6 — the live near-dup graph must
-        track the collection when documents are deleted, like every
-        other keyed state in the engine):
+        """Retire a batch of DELETED doc ids from all three stores, so
+        the live near-dup graph tracks the collection when documents are
+        deleted, like every other keyed state in the engine. Each store
+        gets tombstones:
 
-        - ``docs``:  drop the ids' rows — pruned to their dbucket dirs.
-        - ``index``: the ids' (band, bv) rows are found WITHOUT a scan —
+        - ``docs``:  for the ids' live rows, read from their dbuckets.
+        - ``index``: for the ids' (band, bv) rows, found WITHOUT a read —
           ``sig`` is a pure function of the stored ``sh``
-          (minhash_signatures), so the deleted docs' band keys are
-          recomputed from the docs state and prune the index read to
-          exactly their buckets; an anti-join drops the rows.
-        - ``pairs``: pairs referencing a deleted id can live in any
-          pbucket (the bucket key is the pair hash), so affected buckets
-          are located with one O(pairs) semi-join scan — pairs ≪ corpus
-          (it is the near-dup graph, the same frame every report refresh
-          already reads) — and only those buckets are rewritten with the
-          anti-join.
+          (minhash_signatures), so the band keys are recomputed.
+        - ``pairs``: for the live pairs naming an id. They can live in
+          any pbucket (the bucket key is the pair hash), so one O(pairs)
+          semi-join finds them — pairs ≪ corpus (it is the near-dup
+          graph, the same frame every report refresh already reads).
 
-        Idempotent (anti-joins converge); a delete for a never-ingested
-        id is a no-op. Re-ingesting a deleted id later behaves like a
-        brand-new doc: its index/docs rows re-merge and new-vs-old
-        re-verifies its pairs against the surviving corpus."""
+        Idempotent (a replay finds nothing live to retire); a delete
+        for a never-ingested id is a no-op. Re-ingesting a deleted id
+        later behaves like a brand-new doc: its rows are appended at a
+        later version than the tombstones, and new-vs-old re-verifies
+        its pairs against the surviving corpus."""
         from ..operators.dedup import minhash_signatures
 
         dids = ids.select(self.id_col).distinct().localCheckpoint(eager=True)
@@ -297,97 +302,35 @@ class StreamingNearDup:
         )
         if not dbuckets:
             return
-        docs = read_bucketed_state(
-            self.spark, self.docs_path, col=DBUCKET, buckets=dbuckets
-        )
+        docs = _live(self.docs_store, dbuckets)
         if docs is not None:
-            mine = docs.join(F.broadcast(dids), self.id_col, "left_semi")
+            mine = (
+                docs.join(F.broadcast(dids), self.id_col, "left_semi")
+                .drop("op", "lsn")
+                .localCheckpoint(eager=True)
+            )
             sigs = minhash_signatures(
                 mine.select(self.id_col, "sh"), self.num_perm,
                 id_col=self.id_col,
             )
-            banded = self._banded(sigs)
-            ibuckets = sorted(
-                r[0] for r in banded.select(BUCKET).distinct().collect()
-            )
-            if ibuckets:
-                idx = read_bucketed_state(
-                    self.spark, self.index_path, col=BUCKET, buckets=ibuckets
-                )
-                if idx is not None:
-                    keep_idx = idx.join(
-                        F.broadcast(dids), self.id_col, "left_anti"
-                    )
-                    swap_buckets(
-                        keep_idx.repartition(len(ibuckets), BUCKET),
-                        self.index_path, ibuckets, col=BUCKET,
-                    )
-            keep_docs = docs.join(F.broadcast(dids), self.id_col, "left_anti")
-            swap_buckets(
-                keep_docs.repartition(len(dbuckets), DBUCKET),
-                self.docs_path, dbuckets, col=DBUCKET,
-            )
-        pairs = read_bucketed_state(self.spark, self.pairs_path, col=PBUCKET)
+            _append(self.index_store, self._banded(sigs), OP_DELETE)
+            _append(self.docs_store, mine, OP_DELETE)
+        pairs = _live(self.pairs_store)
         if pairs is not None:
             da = dids.select(F.col(self.id_col).alias("id_a"))
             db = dids.select(F.col(self.id_col).alias("id_b"))
-            hit = (
-                pairs.join(F.broadcast(da), "id_a", "left_semi")
-                .select(PBUCKET)
-                .unionByName(
-                    pairs.join(F.broadcast(db), "id_b", "left_semi")
-                    .select(PBUCKET)
-                )
+            hit = pairs.join(F.broadcast(da), "id_a", "left_semi").unionByName(
+                pairs.join(F.broadcast(db), "id_b", "left_semi")
             )
-            pbuckets = sorted(r[0] for r in hit.distinct().collect())
-            if pbuckets:
-                sub = read_bucketed_state(
-                    self.spark, self.pairs_path, col=PBUCKET, buckets=pbuckets
-                )
-                keep_pairs = (
-                    sub.join(F.broadcast(da), "id_a", "left_anti")
-                    .join(F.broadcast(db), "id_b", "left_anti")
-                )
-                swap_buckets(
-                    keep_pairs.repartition(len(pbuckets), PBUCKET),
-                    self.pairs_path, pbuckets, col=PBUCKET,
-                )
+            _append(self.pairs_store, hit.drop("op", "lsn"), OP_DELETE)
 
     # --------------------------- incremental graph state + reports
-
-    def _merge_pairs_state(self, pairs: DataFrame) -> None:
-        """Fold the batch's verified pairs into ``path/pairs`` — the
-        same idempotent per-bucket discipline as the index/docs tables:
-        only the batch's pair buckets are read or rewritten, distinct on
-        the pair key (jac is deterministic, so replays merge to the
-        identical row)."""
-        new_pairs = pairs.withColumn(
-            PBUCKET,
-            F.pmod(F.xxhash64("id_a", "id_b"), F.lit(self.n_buckets)).cast("int"),
-        )
-        ptouched = sorted(
-            r[0] for r in new_pairs.select(PBUCKET).distinct().collect()
-        )
-        if not ptouched:
-            return
-        merged = new_pairs
-        prior = read_bucketed_state(
-            self.spark, self.pairs_path, col=PBUCKET, buckets=ptouched
-        )
-        if prior is not None:
-            merged = prior.select(*new_pairs.columns).unionByName(new_pairs)
-        swap_buckets(
-            merged.dropDuplicates(["id_a", "id_b"]).repartition(
-                len(ptouched), PBUCKET
-            ),
-            self.pairs_path, ptouched, col=PBUCKET,
-        )
 
     def accumulated_pairs(self) -> DataFrame:
         """Every near-dup pair ingested so far — (id_a, id_b, jac),
         id_a < id_b — read from the incrementally maintained pair state
         (no corpus rescan, no candidate re-derivation)."""
-        state = read_bucketed_state(self.spark, self.pairs_path, col=PBUCKET)
+        state = _live(self.pairs_store)
         if state is None:
             return self.spark.createDataFrame(
                 [], "id_a long, id_b long, jac double"
@@ -403,13 +346,13 @@ class StreamingNearDup:
         """The batch graph-family reports (d9 survivors, d46 cluster
         histogram, d48 leakage split, d44 PageRank, d47 cross-source
         overlap) computed FROM STATE: the pair set is the maintained
-        ``path/pairs`` table and the CC labels converge once per call —
+        ``path/pairs`` store and the CC labels converge once per call —
         so "the contamination matrix after every batch" costs
-        O(pairs + |docs| joins), never a shingle/candidate re-derivation
-        (VERDICT r10 ask #5). ``docs`` is the current doc universe with
-        ``id_col`` (+ ``source_col`` for the overlap matrix); when None
-        (the boot() report-cadence path, round 12) the universe is the
-        maintained ``path/docs`` state itself — ids plus the carried
+        O(pairs + |docs| joins), never a shingle/candidate re-derivation.
+        ``docs`` is the current doc universe with ``id_col`` (+
+        ``source_col`` for the overlap matrix); when None (the boot()
+        report-cadence path) the universe is the maintained
+        ``path/docs`` state itself — ids plus the carried
         ``source_col`` if the instance ingests one (``carry_cols``),
         else a single synthetic source."""
         from ..operators.datacard import source_overlap_matrix
@@ -422,7 +365,7 @@ class StreamingNearDup:
         from ..operators.graph import pagerank
 
         if docs is None:
-            state = read_bucketed_state(self.spark, self.docs_path, col=DBUCKET)
+            state = _live(self.docs_store)
             if state is None:
                 raise ValueError("graph_reports: no docs ingested yet")
             src = (

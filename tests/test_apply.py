@@ -97,19 +97,19 @@ def test_incremental_equals_batch_on_fixture(spark, sf_dir, tmp_path):
 
 
 def test_swap_write_crash_recovery(spark, tmp_path):
-    """A crash between the two renames leaves only <path>.old; read_state
-    must recover the pre-batch state instead of silently returning None."""
+    """A crash between swap_write's two renames leaves only <path>.old;
+    the next swap_write still lands its report and clears the stranded
+    copy."""
     import os
 
-    path = str(tmp_path / "state")
-    df = spark.createDataFrame([(1, "a")], "id long, v string")
-    apply.swap_write(df, path)
-    # simulate the crash window: state renamed away, new state never promoted
+    path = str(tmp_path / "report")
+    apply.swap_write(spark.createDataFrame([(1, "a")], "id long, v string"), path)
+    # simulate the crash window: report renamed away, new one never promoted
     os.rename(path, path + ".old")
-    recovered = apply.read_state(spark, path)
-    assert recovered is not None
-    assert [(r["id"], r["v"]) for r in recovered.collect()] == [(1, "a")]
-    assert os.path.exists(path) and not os.path.exists(path + ".old")
+    apply.swap_write(spark.createDataFrame([(2, "b")], "id long, v string"), path)
+    got = [(r["id"], r["v"]) for r in spark.read.parquet(path).collect()]
+    assert got == [(2, "b")]
+    assert not os.path.exists(path + ".old") and not os.path.exists(path + ".tmp")
 
 
 def test_apply_batch_never_reads_stored_state(spark, tmp_path, monkeypatch):
@@ -158,21 +158,22 @@ def test_apply_batch_never_reads_stored_state(spark, tmp_path, monkeypatch):
 
 
 def test_bucketed_crash_recovery(spark, tmp_path):
-    """A crash between swap_buckets' per-bucket renames leaves the bucket
-    only under <path>.old/; read_bucketed_state must promote it."""
+    """A crash between the per-bucket renames of the earlier bucket
+    layout leaves a bucket only under <path>.old/; recover_buckets must
+    promote it."""
     import os
 
     path = str(tmp_path / "state")
     df = _log(
         spark, [(1, "c", "t", "1", "v", "c", "a"), (2, "c", "t", "2", "w", "c", "a")]
     ).withColumn(apply.BUCKET_COL, apply.bucket_expr(("tbl", "pk"), 4))
-    touched = sorted(r[0] for r in df.select(apply.BUCKET_COL).distinct().collect())
-    apply.swap_buckets(df, path, touched)
+    df.write.partitionBy(apply.BUCKET_COL).parquet(path)
     buckets = [n for n in os.listdir(path) if n.startswith("bucket=")]
     victim = buckets[0]
     os.makedirs(path + ".old", exist_ok=True)
     os.rename(os.path.join(path, victim), os.path.join(path + ".old", victim))
-    got = {r["pk"] for r in apply.read_bucketed_state(spark, path).collect()}
+    apply.recover_buckets(path)
+    got = {r["pk"] for r in spark.read.parquet(path).collect()}
     assert got == {"1", "2"}
     assert os.path.exists(os.path.join(path, victim))
     assert not os.path.exists(path + ".old")

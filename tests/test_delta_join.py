@@ -253,8 +253,8 @@ def test_torn_commit_rebuilds_from_base_states(spark, tmp_path):
     # simulate a crash between the base swaps and the derived commits
     import shutil
 
-    shutil.rmtree(ivj.view_path, ignore_errors=True)
-    shutil.rmtree(ivj.agg_path, ignore_errors=True)
+    shutil.rmtree(ivj.view_store.path, ignore_errors=True)
+    shutil.rmtree(ivj.agg_store.path, ignore_errors=True)
     _write_epoch(ivj._epoch_base, _read_epoch(ivj._epoch_base) + 1)
     assert _view_rows(ivj) == want  # read() rebuilt the derived stores
     assert _read_epoch(ivj._epoch_base) == _read_epoch(ivj._epoch_view)
@@ -390,12 +390,59 @@ def test_apply_appends_one_segment_per_base_state(spark, tmp_path):
 
 
 @pytest.mark.slow
+def test_applies_rename_nothing(spark, tmp_path, monkeypatch):
+    """Every store of a join view commits by its manifest: more than
+    FAN_IN applies, through a compaction of the base states, fkidx and
+    view, run with os.rename and shutil.move forbidden (the epoch stamps
+    keep their one-file os.replace), and answer as an unpatched view."""
+    import os
+    import shutil
+
+    from cdc2vec_spark.cdc.segments import FAN_IN
+
+    assert len(_JV_BATCHES) > FAN_IN
+    ref = _jv(spark, str(tmp_path / "ref"))
+    for b in _JV_BATCHES:
+        _jv_apply(spark, ref, b)
+    want = (_view_rows(ref), _agg_rows(ref))
+
+    def boom(*a, **k):  # pragma: no cover - failure path
+        raise AssertionError("rename/move used by a join-view store")
+
+    monkeypatch.setattr(os, "rename", boom)
+    monkeypatch.setattr(shutil, "move", boom)
+    ivj = _jv(spark, str(tmp_path / "jv"))
+    for b in _JV_BATCHES:
+        _jv_apply(spark, ivj, b)
+    stores = (ivj.l_store, ivj.r_store, ivj.fk_store, ivj.view_store)
+    assert all(any(s.level for s in st.segments()) for st in stores)
+    got = (_view_rows(ivj), _agg_rows(ivj))
+    monkeypatch.undo()
+    assert got == want
+    l_rows = [r for b in _JV_BATCHES for r in b[0]]
+    r_rows = [r for b in _JV_BATCHES for r in b[1]]
+    assert got == (_batch_join(l_rows, r_rows), _agg_ref(_batch_join(l_rows, r_rows)))
+
+
+def _old_store(df, path, col="jbucket"):
+    """``df`` in the earlier rename-swapped layout at ``path``: root
+    ``<col>=<i>/`` dirs, one of them stranded under ``<path>.old/``."""
+    import os
+
+    df.write.partitionBy(col).parquet(path)
+    name = sorted(n for n in os.listdir(path) if n.startswith(col + "="))[0]
+    os.makedirs(path + ".old")
+    os.rename(os.path.join(path, name), os.path.join(path + ".old", name))
+
+
+@pytest.mark.slow
 def test_bucket_layout_base_states_upgrade_in_place(spark, tmp_path):
-    """A view in the earlier layout — root lstate|rstate/jbucket=<i>/ dirs
-    written by partitionBy (one left bucket stranded under lstate.old/),
-    the derived stores and both epoch files — opens with each base state
-    as one adopted segment and answers as the same view in segments
-    does, after each later apply and after the first compaction."""
+    """A view in the earlier layout — root jbucket=<i>/ dirs of lstate,
+    rstate, fkidx and view written by partitionBy (one bucket of each
+    stranded under <store>.old/), a plain parquet agg/ and both epoch
+    files — opens in place, each base state as one adopted segment, and
+    answers as the same view in segments does, after each later apply
+    and after the first compaction."""
     import os
     import shutil
 
@@ -403,20 +450,21 @@ def test_bucket_layout_base_states_upgrade_in_place(spark, tmp_path):
     for b in _JV_BATCHES[:2]:
         _jv_apply(spark, ref, b)
     old = str(tmp_path / "old")
-    ref.l_store.read().write.partitionBy("jbucket").parquet(old + "/lstate")
-    ref.r_store.read().write.partitionBy("jbucket").parquet(old + "/rstate")
-    for name in ("fkidx", "view", "agg"):
-        shutil.copytree(str(tmp_path / "ref" / name), os.path.join(old, name))
+    _old_store(ref.l_store.read(), old + "/lstate")
+    _old_store(ref.r_store.read(), old + "/rstate")
+    for name, store in (("fkidx", ref.fk_store), ("view", ref.view_store)):
+        live = store.read().where(F.col("op") != "d").drop("op", "lsn")
+        _old_store(live, f"{old}/{name}")
+    ref.agg_store.read().write.parquet(old + "/agg")
     for name in ("_epoch_base", "_epoch_view"):
         shutil.copy(str(tmp_path / "ref" / name), os.path.join(old, name))
-    stranded = sorted(n for n in os.listdir(old + "/lstate") if n.startswith("jbucket="))[0]
-    os.makedirs(old + "/lstate.old")
-    os.rename(os.path.join(old, "lstate", stranded), os.path.join(old, "lstate.old", stranded))
 
     ivj = _jv(spark, old)
     assert (_view_rows(ivj), _agg_rows(ivj)) == (_view_rows(ref), _agg_rows(ref))
     for store in (ivj.l_store, ivj.r_store):
         assert [s.seq for s in store.segments()] == [-1]
+    assert sorted(os.listdir(old + "/agg")) == ["_manifests", "data"]
+    assert not any(n.endswith(".old") for n in os.listdir(old))
     for b in _JV_BATCHES[2:]:  # the third apply compacts level 0
         _jv_apply(spark, ref, b)
         _jv_apply(spark, ivj, b)

@@ -1493,7 +1493,11 @@ def _ivm(spark, kind, path):
 
 
 def _answer(ivm):
-    return sorted(map(tuple, ivm.read().collect()), key=repr)
+    """The view's rows, and for a distinct count its top-k off ``dv``."""
+    out = sorted(map(tuple, ivm.read().collect()), key=repr)
+    if isinstance(ivm, IncrementalGroupAgg):
+        return out
+    return out, sorted(map(tuple, ivm.topk(2).collect()), key=repr)
 
 
 def _ivm_batches(spark):
@@ -1528,12 +1532,58 @@ def test_apply_appends_one_state_segment_and_modifies_no_file(spark, tmp_path, k
 
 @pytest.mark.slow
 @pytest.mark.parametrize("kind", ["agg", "distinct"])
+def test_applies_rename_nothing(spark, tmp_path, monkeypatch, kind):
+    """Every store of a view commits by its manifest: more than FAN_IN
+    applies, through a compaction of the state (and of ``dv``), run with
+    os.rename and shutil.move forbidden (the epoch stamps keep their
+    one-file os.replace), and answer as an unpatched view."""
+    import os
+    import shutil
+
+    from cdc2vec_spark.cdc.segments import FAN_IN
+
+    batches = _ivm_batches(spark)
+    assert len(batches) > FAN_IN
+    ref = _ivm(spark, kind, str(tmp_path / "ref"))
+    for b in batches:
+        ref.apply_batch(b)
+    want = _answer(ref)
+
+    def boom(*a, **k):  # pragma: no cover - failure path
+        raise AssertionError("rename/move used by an IVM store")
+
+    monkeypatch.setattr(os, "rename", boom)
+    monkeypatch.setattr(shutil, "move", boom)
+    ivm = _ivm(spark, kind, str(tmp_path / "v"))
+    for b in batches:
+        ivm.apply_batch(b)
+        assert _answer(ivm) is not None
+    stores = [ivm.state.store] + ([ivm.dv_store] if kind == "distinct" else [])
+    assert all(any(s.level for s in st.segments()) for st in stores)
+    got = _answer(ivm)
+    monkeypatch.undo()
+    assert got == want
+
+
+def _strand(root, store, col):
+    """Move one ``<col>=<i>`` dir of ``root/store`` under ``store.old/``,
+    as a crash between the two renames of a bucket swap left it."""
+    import os
+
+    name = sorted(n for n in os.listdir(f"{root}/{store}") if n.startswith(col + "="))[0]
+    os.makedirs(f"{root}/{store}.old")
+    os.rename(f"{root}/{store}/{name}", f"{root}/{store}.old/{name}")
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("kind", ["agg", "distinct"])
 def test_bucket_layout_state_upgrades_in_place(spark, tmp_path, kind):
-    """A view in the earlier layout — root state/bucket=<i>/ dirs written
-    by partitionBy, one bucket stranded under state.old/ by a crash,
-    the agg (and dv) stores and both epoch files — opens as one adopted
-    segment and answers as the same view in segments does, after each
-    later apply and after its first compaction."""
+    """A view in the earlier layout — root state/bucket=<i>/ (and
+    dv/dvbucket=<i>/) dirs written by partitionBy, one bucket of each
+    stranded under <store>.old/ by a crash, a plain parquet agg/ and
+    both epoch files — opens in place and answers as the same view in
+    segments does, after each later apply and after its first
+    compaction."""
     import os
     import shutil
 
@@ -1543,20 +1593,20 @@ def test_bucket_layout_state_upgrades_in_place(spark, tmp_path, kind):
         ref.apply_batch(b)
     old = str(tmp_path / "old")
     ref.state.store.read().write.partitionBy("bucket").parquet(old + "/state")
-    for name in ("agg", "dv", "_epoch_state", "_epoch_agg"):
-        src = os.path.join(str(tmp_path / "ref"), name)
-        if os.path.isdir(src):
-            shutil.copytree(src, os.path.join(old, name))
-        elif os.path.exists(src):
-            shutil.copy(src, os.path.join(old, name))
-    stranded = sorted(n for n in os.listdir(old + "/state") if n.startswith("bucket="))[0]
-    os.makedirs(old + "/state.old")
-    os.rename(os.path.join(old, "state", stranded), os.path.join(old, "state.old", stranded))
+    ref.agg_store.read().write.parquet(old + "/agg")
+    _strand(old, "state", "bucket")
+    if kind == "distinct":
+        dv = ref.dv_store.read().where(F.col("_cnt") > 0).drop("lsn")
+        dv.write.partitionBy("dvbucket").parquet(old + "/dv")
+        _strand(old, "dv", "dvbucket")
+    for name in ("_epoch_state", "_epoch_agg"):
+        shutil.copy(os.path.join(str(tmp_path / "ref"), name), os.path.join(old, name))
 
     ivm = _ivm(spark, kind, old)
     assert _answer(ivm) == _answer(ref)
     assert [s.seq for s in ivm.state.store.segments()] == [-1]
-    assert not os.path.exists(old + "/state.old")
+    assert sorted(os.listdir(old + "/agg")) == ["_manifests", "data"]
+    assert not any(n.endswith(".old") for n in os.listdir(old))
     for b in batches[2:]:  # the third apply compacts level 0
         ref.apply_batch(b)
         ivm.apply_batch(b)

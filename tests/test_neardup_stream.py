@@ -1,8 +1,10 @@
 """Streaming near-dup (dedup at ingestion): any batch split of the
 corpus must emit exactly the batch operator's pairs; replay idempotence;
-state growth bounded to touched buckets."""
+state growth bounded to touched buckets; tombstone order through
+compaction; no renames; the earlier layout opens in place."""
 
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -18,6 +20,25 @@ pytestmark = pytest.mark.slow
 
 def _pairs(df):
     return {(r["id_a"], r["id_b"], r["jac"]) for r in df.collect()}
+
+
+def _live(store):
+    """A store's live rows, read through the store."""
+    return store.read().where(F.col("op") != "d")
+
+
+def _state_rows(snd, id_col="doc_id"):
+    """The live index rows and shingle sets of a StreamingNearDup."""
+    idx = _live(snd.index_store).select(id_col, "band", "bv")
+    docs = _live(snd.docs_store).select(id_col, "sh")
+    return (
+        sorted(map(tuple, idx.collect())),
+        sorted((r[id_col], tuple(r["sh"])) for r in docs.collect()),
+    )
+
+
+def _mk(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
 
 def test_stream_equals_batch_any_split(spark, sf_dir, tmp_path):
@@ -42,23 +63,11 @@ def test_replay_idempotent(spark, sf_dir, tmp_path):
     corpus = neardup_corpus(spark, sf_dir).limit(120).persist()
     snd = StreamingNearDup(spark, str(tmp_path / "nd"), threshold=0.5)
     first = _pairs(snd.apply_batch(corpus))
-
-    def state_rows():
-        idx = spark.read.parquet(snd.index_path)
-        docs = spark.read.parquet(snd.docs_path)
-        return (
-            sorted(map(tuple, idx.select("doc_id", "band", "bv").collect())),
-            sorted(
-                (r["doc_id"], tuple(r["sh"]))
-                for r in docs.select("doc_id", "sh").collect()
-            ),
-        )
-
-    snap = state_rows()
+    snap = _state_rows(snd)
     again = _pairs(snd.apply_batch(corpus))  # foreachBatch redelivery
     assert again == first
-    # state unchanged row-for-row (distinct merge)
-    assert state_rows() == snap
+    # live state unchanged row-for-row (the replay re-appends live rows)
+    assert _state_rows(snd) == snap
     corpus.unpersist()
 
 
@@ -85,13 +94,12 @@ def test_batch_reads_prune_index_buckets(spark, tmp_path):
     snd.apply_batch(
         mk([(i, f"doc number {i} talks about topic {i} in depth daily") for i in range(40)])
     )
-    root = snd.index_path
-    buckets = [d for d in os.listdir(root) if d.startswith("bucket=")]
-    assert 1 < len(buckets) <= 32  # state actually spreads over buckets
+    buckets = snd.index_store.read().select("bucket").distinct().count()
+    assert 1 < buckets <= 32  # state actually spreads over buckets
 
 
 def test_graph_reports_from_state_equal_from_scratch(spark, sf_dir, tmp_path):
-    """VERDICT r10 ask #5: after replaying the corpus in batches, every
+    """After replaying the corpus in batches, every
     graph-family report computed FROM the maintained pair state equals
     the same report computed from scratch off the batch operator's pair
     set — and the pair state itself is replay-idempotent."""
@@ -142,8 +150,8 @@ def test_graph_reports_from_state_equal_from_scratch(spark, sf_dir, tmp_path):
 
 
 def test_delete_retires_state_equals_never_ingested(spark, sf_dir, tmp_path):
-    """Round 13 (VERDICT r12 ask #6): after delete_batch, all three
-    state tables are row-for-row identical to a stream that NEVER
+    """After delete_batch, all three state stores are row-for-row
+    identical to a stream that NEVER
     ingested the deleted docs — so every graph report from state equals
     the batch family on the surviving corpus by construction. Also:
     deleting an unknown id is a no-op, replaying the delete is
@@ -168,18 +176,7 @@ def test_delete_retires_state_equals_never_ingested(spark, sf_dir, tmp_path):
     ref = StreamingNearDup(spark, str(tmp_path / "nd_ref"), threshold=0.5)
     ref.apply_batch(survivors)
 
-    def state_rows(s):
-        idx = spark.read.parquet(s.index_path)
-        docs = spark.read.parquet(s.docs_path)
-        return (
-            sorted(map(tuple, idx.select("doc_id", "band", "bv").collect())),
-            sorted(
-                (r["doc_id"], tuple(r["sh"]))
-                for r in docs.select("doc_id", "sh").collect()
-            ),
-        )
-
-    assert state_rows(snd) == state_rows(ref)
+    assert _state_rows(snd) == _state_rows(ref)
     assert _pairs(snd.accumulated_pairs()) == _pairs(ref.accumulated_pairs())
     # report parity on the surviving corpus follows, but pin one anyway
     got = snd.graph_reports(survivors)["survivors"].collect()
@@ -188,7 +185,7 @@ def test_delete_retires_state_equals_never_ingested(spark, sf_dir, tmp_path):
 
     # idempotent replay of the delete
     snd.delete_batch(vdf)
-    assert state_rows(snd) == state_rows(ref)
+    assert _state_rows(snd) == _state_rows(ref)
 
     # a deleted doc re-ingests like a new one: its pairs re-verify
     back = corpus.where(F.col("doc_id") == victims[0])
@@ -198,7 +195,7 @@ def test_delete_retires_state_equals_never_ingested(spark, sf_dir, tmp_path):
 
 
 def test_boot_neardup_sink_report_cadence(spark, sf_dir, tmp_path):
-    """sink.type=neardup in the config (round 12, VERDICT r11 ask #5):
+    """sink.type=neardup in the config:
     boot() maintains the streaming LSH state from the live stream and
     options.report_every materializes the five graph-family reports
     (survivors / cluster_histogram / split / pagerank / source_overlap)
@@ -264,7 +261,7 @@ def test_boot_neardup_sink_report_cadence(spark, sf_dir, tmp_path):
         for r in spark.read.parquet(f"{npath}/reports/source_overlap").collect()
     }
     assert srcs and "unknown" not in srcs
-    # deletes flowed (round 13, VERDICT r12 ask #6): the fixture stream
+    # deletes flowed: the fixture stream
     # carries delete events, and every key whose FINAL event is a
     # delete must be absent from the docs state, the survivors report
     # and the maintained pair set — the live graph tracks the SURVIVING
@@ -279,9 +276,7 @@ def test_boot_neardup_sink_report_cadence(spark, sf_dir, tmp_path):
         .select("pk").collect()
     }
     assert dead, "fixture stream should end some keys deleted"
-    docs_ids = {
-        r["id"] for r in spark.read.parquet(f"{npath}/docs").select("id").collect()
-    }
+    docs_ids = {r["id"] for r in _live(nd.docs_store).select("id").collect()}
     assert not (dead & docs_ids)
     assert not (dead & {r["id"] for r in surv.collect()})
     pair_ids = {
@@ -293,7 +288,7 @@ def test_boot_neardup_sink_report_cadence(spark, sf_dir, tmp_path):
 
 
 def test_hook_orders_by_final_event_within_batch(spark, tmp_path):
-    """Round 14 (ADVICE r13 #1): the neardup sink hook must reduce each
+    """The neardup sink hook must reduce each
     micro-batch to per-id max-LSN OUTCOMES before routing (final_events,
     pipeline.go:154-165). A key deleted then RE-INSERTED within one batch
     (delete lsn < insert lsn) ends live and must be ingested — applying
@@ -329,21 +324,18 @@ def test_hook_orders_by_final_event_within_batch(spark, tmp_path):
         "id string, text string, op string, lsn long",
     )
     hook(pts)
-    docs = spark.read.parquet(f"{npath}/docs")
-    by_id = {r["id"]: r["sh"] for r in docs.collect()}
+    nd = StreamingNearDup(spark, npath, id_col="id", text_col="text", n_buckets=4)
+    by_id = {r["id"]: r["sh"] for r in _live(nd.docs_store).collect()}
     assert set(by_id) == {"X", "Z"}
 
     # Z carries exactly the winning text's shingles: equal to a clean
     # single-event ingest of (Z, t_new) into a fresh state
-    from cdc2vec_spark.streaming.neardup import StreamingNearDup
-
     ref = StreamingNearDup(
         spark, str(tmp_path / "ref"), id_col="id", text_col="text",
         n_buckets=4,
     )
     ref.apply_batch(spark.createDataFrame([("Z", t_new)], "id string, text string"))
-    want_sh = {r["id"]: r["sh"] for r in
-               spark.read.parquet(f"{tmp_path}/ref/docs").collect()}["Z"]
+    want_sh = {r["id"]: r["sh"] for r in _live(ref.docs_store).collect()}["Z"]
     assert sorted(by_id["Z"]) == sorted(want_sh)
 
 
@@ -361,26 +353,156 @@ def test_update_replaces_the_stored_version(spark, tmp_path):
     update = mk([(1, new)])
     snd.apply_batch(update)
     assert _pairs(snd.accumulated_pairs()) == set()
-    idx = spark.read.parquet(snd.index_path)
+    idx = _live(snd.index_store)
     assert idx.where(F.col("doc_id") == 1).count() == snd.bands
 
-    snap = (
-        sorted(map(tuple, idx.select("doc_id", "band", "bv").collect())),
-        sorted(
-            (r["doc_id"], tuple(r["sh"]))
-            for r in spark.read.parquet(snd.docs_path).collect()
-        ),
-    )
+    snap = _state_rows(snd)
     snd.apply_batch(update)  # foreachBatch redelivery
-    assert (
-        sorted(map(tuple, spark.read.parquet(snd.index_path)
-                   .select("doc_id", "band", "bv").collect())),
-        sorted(
-            (r["doc_id"], tuple(r["sh"]))
-            for r in spark.read.parquet(snd.docs_path).collect()
-        ),
-    ) == snap
+    assert _state_rows(snd) == snap
 
     got = _pairs(snd.apply_batch(mk([(3, new + " outside")])))
     assert {(a, b) for a, b, _ in got} == {(1, 3)}
     assert {(a, b) for a, b, _ in _pairs(snd.accumulated_pairs())} == {(1, 3)}
+
+
+_BASE = "spark streams merge batches into keyed state stores every night at nine"
+
+
+def _compacted(snd):
+    """Whether each of the three stores has compacted its level 0."""
+    stores = (snd.index_store, snd.docs_store, snd.pairs_store)
+    return all(any(seg.level for seg in st.segments()) for st in stores)
+
+
+def _filler(spark, i):
+    """A batch of two near-dups of each other, unrelated to _BASE."""
+    text = f"filler {i} words about topic {i * 7} written for case {i * 13}"
+    return _mk(spark, [(100 + 2 * i, text), (101 + 2 * i, text + " again")])
+
+
+def test_delete_then_reingest_stays_live_through_compaction(spark, tmp_path):
+    """An id deleted in one batch and re-ingested in the next is live,
+    with its pairs, after level 0 of every store compacts: the re-ingest
+    is appended at a later version than the tombstones."""
+    snd = StreamingNearDup(spark, str(tmp_path / "nd"), threshold=0.5, n_buckets=8)
+    ref = StreamingNearDup(spark, str(tmp_path / "ref"), threshold=0.5, n_buckets=8)
+    first = _mk(spark, [(1, _BASE), (2, _BASE + " sharp")])
+    snd.apply_batch(first)
+    snd.delete_batch(spark.createDataFrame([(1,)], "doc_id long"))
+    assert {(a, b) for a, b, _ in _pairs(snd.accumulated_pairs())} == set()
+    snd.apply_batch(_mk(spark, [(1, _BASE)]))
+    ref.apply_batch(first)
+    i = 0
+    while not _compacted(snd):
+        assert i < 8, "level 0 never compacted"
+        snd.apply_batch(_filler(spark, i))
+        ref.apply_batch(_filler(spark, i))
+        i += 1
+    assert (1, 2) in {(a, b) for a, b, _ in _pairs(snd.accumulated_pairs())}
+    assert _live(snd.docs_store).where(F.col("doc_id") == 1).count() == 1
+    assert _state_rows(snd) == _state_rows(ref)
+    assert _pairs(snd.accumulated_pairs()) == _pairs(ref.accumulated_pairs())
+
+
+def test_update_keeps_its_shared_band_rows_live(spark, tmp_path):
+    """An update whose new shingles share band keys with the old version
+    retires the old rows and appends the new ones after them, so each
+    shared (band, bv, id) row stays live, also through a compaction."""
+    snd = StreamingNearDup(spark, str(tmp_path / "nd"), threshold=0.5, n_buckets=8)
+    snd.apply_batch(_mk(spark, [(1, _BASE)]))
+    old_keys = set(_state_rows(snd)[0])
+    update = _mk(spark, [(1, _BASE + " and ten")])
+    snd.apply_batch(update)
+    ref = StreamingNearDup(spark, str(tmp_path / "ref"), threshold=0.5, n_buckets=8)
+    ref.apply_batch(update)
+    new_keys = set(_state_rows(ref)[0])
+    assert old_keys & new_keys and old_keys != new_keys  # shared and retired
+    assert _state_rows(snd) == _state_rows(ref)
+    i = 0
+    while not _compacted(snd):
+        assert i < 8, "level 0 never compacted"
+        snd.apply_batch(_filler(spark, i))
+        ref.apply_batch(_filler(spark, i))
+        i += 1
+    assert _state_rows(snd) == _state_rows(ref)
+    assert len([k for k in _state_rows(snd)[0] if k[0] == 1]) == snd.bands
+
+
+def _nd_batches(spark):
+    """(kind, frame) steps with an update and a delete, FAN_IN and more
+    of them writing each store."""
+    return [
+        ("apply", _mk(spark, [(1, _BASE), (2, _BASE + " sharp"), (3, "a cat sleeps")])),
+        ("apply", _filler(spark, 0)),
+        ("apply", _mk(spark, [(1, "a tiny cat sleeps on the warm windowsill today")])),
+        ("delete", spark.createDataFrame([(2,), (100,)], "doc_id long")),
+        ("apply", _mk(spark, [(4, _BASE + " sharp"), (5, "a tiny cat sleeps on the warm windowsill")])),
+        ("apply", _filler(spark, 1)),
+    ]
+
+
+def _nd_step(snd, kind, df):
+    if kind == "apply":
+        snd.apply_batch(df)
+    else:
+        snd.delete_batch(df)
+
+
+def test_applies_rename_nothing(spark, tmp_path, monkeypatch):
+    """The three stores commit by their manifests: applies with an
+    update and a delete, through a compaction of each store, run with
+    os.rename and shutil.move forbidden and answer as an unpatched
+    instance."""
+    steps = _nd_batches(spark)
+    ref = StreamingNearDup(spark, str(tmp_path / "ref"), threshold=0.5, n_buckets=8)
+    for kind, df in steps:
+        _nd_step(ref, kind, df)
+    want = (_state_rows(ref), _pairs(ref.accumulated_pairs()))
+
+    def boom(*a, **k):  # pragma: no cover - failure path
+        raise AssertionError("rename/move used by a neardup store")
+
+    monkeypatch.setattr(os, "rename", boom)
+    monkeypatch.setattr(shutil, "move", boom)
+    snd = StreamingNearDup(spark, str(tmp_path / "nd"), threshold=0.5, n_buckets=8)
+    for kind, df in steps:
+        _nd_step(snd, kind, df)
+    assert _compacted(snd)
+    got = (_state_rows(snd), _pairs(snd.accumulated_pairs()))
+    monkeypatch.undo()
+    assert got == want
+    live_pairs = {(a, b) for a, b, _ in want[1]}
+    assert (102, 103) in live_pairs  # not vacuous
+    assert not live_pairs & {(1, 2), (100, 101)}  # retired by update, delete
+
+
+def test_earlier_layout_opens_in_place(spark, tmp_path):
+    """Stores of the earlier rename-swapped layout — root bucket=,
+    dbucket= and pbucket= dirs without versions, one partition of each
+    stranded under <store>.old/ — are adopted as they are, their rows
+    read as version 0: the same answers, and later deletes and updates
+    of adopted docs apply as on the segment layout."""
+    steps = _nd_batches(spark)
+    ref = StreamingNearDup(spark, str(tmp_path / "ref"), threshold=0.5, n_buckets=8)
+    for kind, df in steps[:2]:
+        _nd_step(ref, kind, df)
+    old = str(tmp_path / "old")
+    for name, store in (("index", ref.index_store), ("docs", ref.docs_store),
+                        ("pairs", ref.pairs_store)):
+        path = f"{old}/{name}"
+        _live(store).drop("op", "lsn").write.partitionBy(store.col).parquet(path)
+        part = sorted(n for n in os.listdir(path) if n.startswith(store.col + "="))[0]
+        os.makedirs(path + ".old")
+        os.rename(os.path.join(path, part), os.path.join(path + ".old", part))
+
+    snd = StreamingNearDup(spark, old, threshold=0.5, n_buckets=8)
+    assert _state_rows(snd) == _state_rows(ref)
+    assert _pairs(snd.accumulated_pairs()) == _pairs(ref.accumulated_pairs())
+    for store in (snd.index_store, snd.docs_store, snd.pairs_store):
+        assert [seg.seq for seg in store.segments()] == [-1]
+    assert not any(n.endswith(".old") for n in os.listdir(old))
+    for kind, df in steps[2:]:
+        _nd_step(ref, kind, df)
+        _nd_step(snd, kind, df)
+        assert _state_rows(snd) == _state_rows(ref)
+        assert _pairs(snd.accumulated_pairs()) == _pairs(ref.accumulated_pairs())

@@ -23,12 +23,7 @@ from pyspark.sql import functions as F
 
 from cdc2vec_spark import runner
 from cdc2vec_spark.cdc import segments
-from cdc2vec_spark.cdc.apply import (
-    BUCKET_COL,
-    ParquetCollection,
-    bucket_expr,
-    swap_buckets,
-)
+from cdc2vec_spark.cdc.apply import BUCKET_COL, ParquetCollection, bucket_expr
 from cdc2vec_spark.cdc.manifest import ManifestStore
 
 PLAIN_DDL = (
@@ -360,9 +355,12 @@ def test_segment_count_is_logarithmic(spark, tmp_path, fl):
 
 
 def _old_bucket_layout(spark, fl, path, events):
-    """The root ``bucket=<i>/`` layout, written by swap_buckets."""
-    df = _old_frame(spark, fl, events)
-    swap_buckets(df, path, _touched(df))
+    """The root ``bucket=<i>/`` layout of the rename-swapped buckets:
+    the partition dirs alone, without the writer's marker files."""
+    _old_frame(spark, fl, events).write.partitionBy(BUCKET_COL).parquet(path)
+    for name in os.listdir(path):
+        if os.path.isfile(os.path.join(path, name)):
+            os.remove(os.path.join(path, name))
 
 
 def _renamed_segments(spark, fl, path, parts, first_seq):
